@@ -251,15 +251,32 @@ object Crs {
       val t = math.sinh(atanh(sinPhi) - e * atanh(e * sinPhi))
       val xiP = math.atan2(t, math.cos(dLon))
       val etaP = atanh(math.sin(dLon) / math.sqrt(1 + t * t))
-      var xi = xiP; var eta = etaP
-      var j = 0
-      while (j < 6) {
-        val k = 2.0 * (j + 1)
-        xi += alpha(j) * math.sin(k * xiP) * math.cosh(k * etaP)
-        eta += alpha(j) * math.cos(k * xiP) * math.sinh(k * etaP)
-        j += 1
+      sinSeries(alpha, 1.0, xiP, etaP)
+    }
+
+    /** (xi, eta) + sign * sum_k c(k-1) sin(2k zeta) over k = 1..6, with
+      * zeta = xi + i eta, by the complex Clenshaw recurrence Karney 2011
+      * uses for the Krueger series (PROJ's tmerc sums it the same way):
+      * one sin, one cos and one exp of 2 zeta instead of four
+      * transcendental calls per term.
+      */
+    private def sinSeries(c: Array[Double], sign: Double, xi: Double, eta: Double): (Double, Double) = {
+      val s2 = math.sin(2 * xi); val c2 = math.cos(2 * xi)
+      val ex = math.exp(2 * eta); val exInv = 1 / ex
+      val sh2 = (ex - exInv) / 2; val ch2 = (ex + exInv) / 2
+      // a = 2 cos(2 zeta); b_k = c_k + a b_(k+1) - b_(k+2)
+      val ar = 2 * c2 * ch2; val ai = -2 * s2 * sh2
+      var b1r = 0.0; var b1i = 0.0; var b2r = 0.0; var b2i = 0.0
+      var k = c.length - 1
+      while (k >= 0) {
+        val br = ar * b1r - ai * b1i - b2r + c(k)
+        val bi = ar * b1i + ai * b1r - b2i
+        b2r = b1r; b2i = b1i; b1r = br; b1i = bi
+        k -= 1
       }
-      (xi, eta)
+      // sum = b_1 sin(2 zeta), sin(2 zeta) = sin 2xi cosh 2eta + i cos 2xi sinh 2eta
+      val sr = s2 * ch2; val si = c2 * sh2
+      (xi + sign * (b1r * sr - b1i * si), eta + sign * (b1r * si + b1i * sr))
     }
 
     @inline private def atanh(x: Double): Double = 0.5 * math.log((1 + x) / (1 - x))
@@ -276,14 +293,7 @@ object Crs {
     def toLonLat(x: Double, y: Double): (Double, Double) = {
       val xi = (y - falseNorthing + k0 * m0) / (k0 * bigA)
       val eta = (x - falseEasting) / (k0 * bigA)
-      var xiP = xi; var etaP = eta
-      var j = 0
-      while (j < 6) {
-        val k = 2.0 * (j + 1)
-        xiP -= beta(j) * math.sin(k * xi) * math.cosh(k * eta)
-        etaP -= beta(j) * math.cos(k * xi) * math.sinh(k * eta)
-        j += 1
-      }
+      val (xiP, etaP) = sinSeries(beta, -1.0, xi, eta)
       val sinhEtaP = math.sinh(etaP)
       val cosXiP = math.cos(xiP)
       val tauP = math.sin(xiP) / math.sqrt(sinhEtaP * sinhEtaP + cosXiP * cosXiP)

@@ -110,22 +110,24 @@ object AffineOp {
     val dstTileW = dstGm.tileWidth; val dstTileH = dstGm.tileHeight
     val dstW = dstGm.width; val dstH = dstGm.height
     TileGather.gatherWithWindows(tiles, srcGm, dstGm.numTilesX, dstGm.numTilesY,
-      windowOf, (v, b, dtj, dti, win) => {
-      val p = policies(v)
+      windowOf, (dtj: Int, dti: Int) => {
       val h = math.min(dstTileH, dstH - dtj * dstTileH)
       val w = math.min(dstTileW, dstW - dti * dstTileW)
-      val order = p.interp match {
-        case Interp.NEAREST => 0
-        case Interp.BILINEAR => 1
-        case _ => throw new IllegalArgumentException(
-          "interp_methods must be one of 0, 1, 'nearest', 'bilinear'. " +
-          "Higher order is not supported for 3D arrays in affine transforms, " +
-          "as it causes unintended blending across the non-spatial (e.g., time) dimension.")
+      (v: String, b: Int, win: Window) => {
+        val p = policies(v)
+        val order = p.interp match {
+          case Interp.NEAREST => 0
+          case Interp.BILINEAR => 1
+          case _ => throw new IllegalArgumentException(
+            "interp_methods must be one of 0, 1, 'nearest', 'bilinear'. " +
+            "Higher order is not supported for 3D arrays in affine transforms, " +
+            "as it causes unintended blending across the non-spatial (e.g., time) dimension.")
+        }
+        val data = AffineWarp.warpTile(
+          win, srcW, srcH, dti * dstTileW, dtj * dstTileH, w, h,
+          matrix, order, p.fill, p.recoverNan)
+        Tile(v, b, dtj, dti, h, w, data)
       }
-      val data = AffineWarp.warpTile(
-        win, srcW, srcH, dti * dstTileW, dtj * dstTileH, w, h,
-        matrix, order, p.fill, p.recoverNan)
-      Tile(v, b, dtj, dti, h, w, data)
     })
   }
 

@@ -20,9 +20,10 @@ import graft.model.Policies.VarPolicy
   *     (reference: reproject.py:385-423; the uniform-size padding of
   *     the dask version is unnecessary here — rows vary freely)
   *  4. one gather shuffle + per-tile kernel: transform each target
-  *     pixel center into source CRS, compute fractional source indices,
-  *     interpolate nearest/triangular/bilinear
-  *     (reference: reproject.py:268-335)
+  *     pixel center into source CRS once per target tile
+  *     (reference: reproject.py:472-496), compute fractional source
+  *     indices, and interpolate every (var, band) from them with
+  *     nearest/triangular/bilinear (reference: reproject.py:268-335)
   */
 object ReprojectOp {
 
@@ -66,7 +67,6 @@ object ReprojectOp {
     }
 
     // 4. gather + kernel
-    val srcW = srcGm2.width; val srcH = srcGm2.height
     val srcXMin = srcGm2.xMin; val srcYMax = srcGm2.yMax
     val srcXRes = srcGm2.xRes; val srcYRes = srcGm2.yRes
     val dtw = dstGm.tileWidth; val dth = dstGm.tileHeight
@@ -76,28 +76,47 @@ object ReprojectOp {
     val jUp = dstGm.isJAxisUp
 
     TileGather.gatherWithWindows(tiles2, srcGm2, dstGm.numTilesX, dstGm.numTilesY,
-      windowOf, (v, b, dtj, dti, win) => {
-      val p = policies(v)
+      windowOf, (dtj: Int, dti: Int) => {
       val h = math.min(dth, dH - dtj * dth)
       val w = math.min(dtw, dW - dti * dtw)
-      val out = new Array[Double](h * w)
-      var j = 0
-      while (j < h) {
-        val gj = dtj * dth + j
-        val dy = if (jUp) dYMin + (gj + 0.5) * dYRes else dYMax - (gj + 0.5) * dYRes
-        var i = 0
-        while (i < w) {
-          val gi = dti * dtw + i
-          val dx = dXMin + (gi + 0.5) * dXRes
-          val (sx, sy) = inv.transformPoint(dx, dy)
-          val fi = (sx - srcXMin) / srcXRes - 0.5
-          val fj = (srcYMax - sy) / srcYRes - 0.5
-          out(j * w + i) = Interp.sample(win, fi, fj, p.interp, p.fill)
-          i += 1
+      // fractional source indices of the tile's pixel centres: one
+      // transform per target pixel, shared by every (var, band)
+      lazy val srcIdx = {
+        val si = new Array[Double](h * w); val sj = new Array[Double](h * w)
+        var j = 0
+        while (j < h) {
+          val gj = dtj * dth + j
+          val dy = if (jUp) dYMin + (gj + 0.5) * dYRes else dYMax - (gj + 0.5) * dYRes
+          var i = 0
+          while (i < w) {
+            val gi = dti * dtw + i
+            val dx = dXMin + (gi + 0.5) * dXRes
+            val (sx, sy) = inv.transformPoint(dx, dy)
+            si(j * w + i) = (sx - srcXMin) / srcXRes - 0.5
+            sj(j * w + i) = (srcYMax - sy) / srcYRes - 0.5
+            i += 1
+          }
+          j += 1
         }
-        j += 1
+        (si, sj)
       }
-      Tile(v, b, dtj, dti, h, w, out)
+      (v: String, b: Int, win: Window) => {
+        val p = policies(v)
+        // an empty window samples to fill everywhere: skip the transform
+        val out =
+          if (win.w == 0 || win.h == 0) Array.fill(h * w)(p.fill)
+          else {
+            val (fi, fj) = srcIdx
+            val out = new Array[Double](h * w)
+            var k = 0
+            while (k < out.length) {
+              out(k) = Interp.sample(win, fi(k), fj(k), p.interp, p.fill)
+              k += 1
+            }
+            out
+          }
+        Tile(v, b, dtj, dti, h, w, out)
+      }
     })
   }
 
