@@ -162,7 +162,7 @@ object Bench {
     * denominator to show it. A same-code capture whose `calib_mt_ms`
     * is 2× its trend is a loud window, not a regression.
     */
-  private def calibProbe(threads: Int): (Long, Long) = {
+  private[graft] def calibProbe(threads: Int): (Long, Long) = {
     def spin(iters: Long): Long = {
       var x = 0x9e3779b97f4a7c15L
       var i = 0L
@@ -185,6 +185,19 @@ object Bench {
     }
     blackhole.addAndGet(spin(Iters / 20)) // JIT warm-up, untimed
     (timedRun(1), timedRun(threads))
+  }
+
+  /** Untimed between-run hygiene. Releases every cut retired by the
+    * faces that just executed (superseded memo generations,
+    * operator-internal survivors) — leaving them to weak-ref reclaim
+    * measured as a 2-8 s GC storm bleeding into NEIGHBORING faces on
+    * the full r17 capture — then gives the ContextCleaner a GC to find
+    * dropped weak refs and a beat to process its reference queue.
+    */
+  private[graft] def hygiene(): Unit = {
+    graft.model.Lineage.drainRetired()
+    System.gc()
+    Thread.sleep(50)
   }
 
   def main(args: Array[String]): Unit = {
@@ -224,18 +237,6 @@ object Bench {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
       (System.nanoTime() - t0) / 1e9
-    }
-
-    // give the ContextCleaner a GC to find dropped weak refs, then a
-    // beat to process its reference queue
-    def hygiene(): Unit = {
-      // release every cut retired by the faces that just executed
-      // (superseded memo generations, operator-internal survivors) —
-      // leaving them to weak-ref reclaim measured as a 2-8 s GC storm
-      // bleeding into NEIGHBORING faces on the full r17 capture
-      graft.model.Lineage.drainRetired()
-      System.gc()
-      Thread.sleep(50)
     }
 
     final case class QStat(sec: Double, minSec: Double, gcMs: Long,

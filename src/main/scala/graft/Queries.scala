@@ -78,17 +78,15 @@ object Queries {
   // it (and its tile form) per sfDir so a multi-query run (Verify/
   // Bench) scans lineitem once instead of 20+ times. The cache holds
   // 1024-row DataFrames — negligible memory, large bench win.
-  private val gridCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private val gridCache = new graft.model.Memo[(String, String), DataFrame]
   private val tileCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), org.apache.spark.sql.Dataset[graft.model.Tile]]
-  private val rectifyInputCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean),
-      (org.apache.spark.sql.Dataset[graft.model.Tile], org.apache.spark.sql.Dataset[graft.model.Tile])]
+    new graft.model.Memo[(String, String), org.apache.spark.sql.Dataset[graft.model.Tile]]
+  private val rectifyInputCache = new graft.model.Memo[(String, Boolean),
+    (org.apache.spark.sql.Dataset[graft.model.Tile], org.apache.spark.sql.Dataset[graft.model.Tile])]
 
   /** Dense 32x32 grid; missing cells -> 0.0. */
   def grid0(s: SparkSession, dir: String): DataFrame =
-    gridCache.getOrElseUpdate((dir, "grid0"), {
+    gridCache((dir, "grid0")) {
       val agg = lineitem(s, dir)
         .groupBy((col("l_orderkey") % W).as("j"), (col("l_partkey") % W).as("i"))
         .agg(sum(col("l_quantity")).as("v"))
@@ -97,14 +95,14 @@ object Queries {
       cells.join(agg, Seq("j", "i"), "left")
         .select(col("j"), col("i"), coalesce(col("v"), lit(0.0)).as("value"))
         .persist()
-    })
+    }
 
   /** Cached tile form of grid0/gridN on gmSrc. */
   def gridTiles(s: SparkSession, dir: String, useNullGrid: Boolean): org.apache.spark.sql.Dataset[graft.model.Tile] =
-    tileCache.getOrElseUpdate((dir, if (useNullGrid) "n" else "0"), {
+    tileCache((dir, if (useNullGrid) "n" else "0")) {
       val g = if (useNullGrid) gridN(s, dir) else grid0(s, dir)
       Raster.pixelsToTiles(Raster.pixelsFromDf(g), gmSrc).persist()
-    })
+    }
 
   /** Dense grid with a deterministic null pattern: (j*31+i)%17==0.
     * Window offsets {0,1,31,32} are distinct mod 17, so a 2x2 window
@@ -230,7 +228,7 @@ object Queries {
     */
   private def rectifyInputs(s: SparkSession, dir: String, anti: Boolean = false)
       : (org.apache.spark.sql.Dataset[graft.model.Tile], org.apache.spark.sql.Dataset[graft.model.Tile]) =
-    rectifyInputCache.getOrElseUpdate((dir, anti), {
+    rectifyInputCache((dir, anti)) {
       val irr = (if (anti) gmSrcAnti else gmSrc).copy(isRegular = false)
       val px = Raster.pixelsFromDf(grid0(s, dir))
       val ang = 0.1
@@ -252,7 +250,7 @@ object Queries {
             col("y").as("value")))
           .as[graft.model.Pixel], irr)
       (Raster.pixelsToTiles(px, irr).persist(), coords.persist())
-    })
+    }
 
   /** Eagerly stage every per-dir harness cache (dense grids, tile
     * forms, rectify swath inputs) OUTSIDE any timed region, so bench

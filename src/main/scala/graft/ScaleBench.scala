@@ -14,34 +14,6 @@ import org.apache.spark.sql.SparkSession
   * rounds without forensics.
   */
 object ScaleBench {
-  /** Fixed-work CPU calibration probe — the Bench.calibProbe recipe
-    * (deterministic splitmix64 spin, single-thread then all-threads).
-    */
-  private def calibProbe(threads: Int): (Long, Long) = {
-    def spin(iters: Long): Long = {
-      var x = 0x9e3779b97f4a7c15L
-      var i = 0L
-      while (i < iters) {
-        x ^= x >>> 30; x *= 0xbf58476d1ce4e5b9L
-        x ^= x >>> 27; x *= 0x94d049bb133111ebL
-        x ^= x >>> 31
-        i += 1
-      }
-      x
-    }
-    val Iters = 200000000L
-    val blackhole = new java.util.concurrent.atomic.AtomicLong
-    def timedRun(n: Int): Long = {
-      val t0 = System.nanoTime()
-      val ts = (1 to n).map(_ =>
-        new Thread(() => { blackhole.addAndGet(spin(Iters)); () }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1000000L
-    }
-    blackhole.addAndGet(spin(Iters / 20)) // JIT warm-up, untimed
-    (timedRun(1), timedRun(threads))
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
@@ -62,7 +34,7 @@ object ScaleBench {
       LlmQueries.prewarm(spark, dir)
     } catch { case _: Throwable => () }
     // calibrate immediately before the timed region (the Bench recipe)
-    val (calibStMs, calibMtMs) = calibProbe(cpus.toInt)
+    val (calibStMs, calibMtMs) = Bench.calibProbe(cpus.toInt)
     val qmap = SparkEntry.queries
     val results = names.map { name =>
       val fn = qmap(name)
@@ -71,13 +43,11 @@ object ScaleBench {
         try { fn(spark, dir).count() } catch { case _: Throwable => return -1.0 }
         (System.nanoTime() - t0) / 1e9
       }
-      System.gc(); Thread.sleep(50)
+      Bench.hygiene()
       once() // warm-up
-      // between-run hygiene (untimed), mirroring Bench: drop the
-      // previous run's checkpoint blocks before timing the next
-      val ts = Array.fill(runs) {
-        System.gc(); Thread.sleep(50); once()
-      }.sorted
+      // between-run hygiene (untimed), the Bench recipe: drain the
+      // previous run's retired checkpoint blocks before timing the next
+      val ts = Array.fill(runs) { Bench.hygiene(); once() }.sorted
       name -> (if (ts.head < 0) -1.0 else ts(runs / 2))
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")

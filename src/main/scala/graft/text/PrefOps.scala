@@ -75,23 +75,17 @@ object PrefOps {
           greatest(col("sa"), col("sb")).as("j"), col("winner"))
         .agg(count(lit(1)).as("n")), reliable = false)
 
-  /** Row bound under which [[mmCore]] runs the MM iteration LOCALLY on
-    * the collected duel-count table (the
-    * [[graft.text.TextOps.LocalCcEdgeThreshold]] hybrid): the table is
-    * (pair, winner)-sized — sources², corpus-size-free — yet every
-    * unrolled distributed round references the strength table twice,
-    * so the plan (and the executed subtree count) grew EXPONENTIALLY
-    * in `iters` (measured: a 4,389-line plan / 220 Exchanges for
-    * iters=3 at sf0.1). Locally the fit is a few thousand exact
-    * integer ops. Same arithmetic (`Math.multiplyExact`/`addExact`
-    * mirror ANSI BIGINT overflow behavior, `/` on non-negative longs
-    * mirrors `div`), pinned identical by a forced-threshold A/B spec;
-    * a duel table over the bound keeps the distributed rounds.
+  /** The MM iteration run LOCALLY on the collected duel-count table —
+    * the bounded-local path of [[mmCore]]. The table is (pair,
+    * winner)-sized — sources², corpus-size-free — yet every unrolled
+    * distributed round references the strength table twice, so the
+    * plan (and the executed subtree count) grew EXPONENTIALLY in
+    * `iters` (measured: a 4,389-line plan / 220 Exchanges for iters=3
+    * at sf0.1). Locally the fit is a few thousand exact integer ops.
+    * Same arithmetic (`Math.multiplyExact`/`addExact` mirror ANSI
+    * BIGINT overflow behavior, `/` on non-negative longs mirrors
+    * `div`), pinned identical by a forced-bound A/B spec.
     */
-  // var as a test seam: specs set it to 0 to force the distributed
-  // rounds and pin local == distributed identity
-  private[graft] var LocalDuelRowThreshold: Long = 1L << 17
-
   private def mmCoreLocal(
       duelAgg: DataFrame, iters: Int): (DataFrame, DataFrame, DataFrame) = {
     val spark = duelAgg.sparkSession
@@ -132,15 +126,15 @@ object PrefOps {
 
   /** The shared MM core over a prebuilt [[duelCut]] table:
     * (games, wins, p_final); p_final is the strength table after
-    * `iters` rounds. HYBRID: duel tables at or under
-    * [[LocalDuelRowThreshold]] rows fit locally (one count job on the
-    * materialized cut decides); larger ones keep the distributed
+    * `iters` rounds. HYBRID: duel tables that pass the
+    * [[graft.model.BoundedLocal]] gate fit locally (one count job on
+    * the materialized cut decides); larger ones keep the distributed
     * rounds.
     */
   private def mmCore(
       duelAgg: DataFrame, iters: Int): (DataFrame, DataFrame, DataFrame) = {
     require(iters >= 1 && iters <= 8, s"iters must be in [1,8], got $iters")
-    if (duelAgg.count() <= LocalDuelRowThreshold)
+    if (graft.model.BoundedLocal.fits(duelAgg.count()))
       return mmCoreLocal(duelAgg, iters)
     val pairs = duelAgg.groupBy(col("i"), col("j"))
       .agg(sum(col("n")).cast("long").as("nij"))

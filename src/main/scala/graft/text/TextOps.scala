@@ -997,36 +997,16 @@ object TextOps {
     * table, labeling every document with the smallest doc id reachable
     * through dup edges (the canonical keeper of its cluster).
     *
-    * HYBRID execution, sized from the materialized edge cut: graphs at
-    * or under [[LocalCcEdgeThreshold]] edges (~2 MB of driver memory)
-    * are solved with a driver-side union-find and the labels
-    * broadcast-joined back — the class-quotient graphs the dedup
-    * endpoints actually cluster are this size, and each distributed
-    * round costs several full Spark jobs of pure fixed overhead there
-    * (measured: the three media cluster endpoints dropped 3.1-4.1 s →
-    * 1.0-1.3 s at sf0.1). Larger graphs run the alternating
-    * large-star/small-star contraction (Kiveris et al., SoCC 2014),
-    * O(log n) rounds on any shape — the 100 TB path. Labels are
-    * identical either way (component minimum; pinned by a
-    * forced-threshold A/B spec).
+    * HYBRID execution, sized from the materialized edge cut: graphs
+    * that pass the [[graft.model.BoundedLocal]] gate are solved with a
+    * driver-side union-find and the labels broadcast-joined back — the
+    * class-quotient graphs the dedup endpoints actually cluster (audio
+    * 10x: 12.2k class pairs; image 10x: 3.2k classes) are this size.
+    * Larger graphs run the alternating large-star/small-star
+    * contraction (Kiveris et al., SoCC 2014), O(log n) rounds on any
+    * shape — the 100 TB path. Labels are identical either way
+    * (component minimum; pinned by a forced-bound A/B spec).
     */
-  /** Edge-count bound under which [[dedupClusters]] solves the
-    * component graph LOCALLY (collect + union-find + broadcast-join
-    * the labels back) instead of running the distributed
-    * star-contraction loop. 2^17 edges is ~2 MB of driver memory —
-    * bounded by construction, the repo's guarded-fold idiom — while
-    * each distributed round costs several full Spark jobs: on the
-    * class-quotient graphs the dedup endpoints actually cluster
-    * (audio 10x: 12.2k class pairs; image 10x: 3.2k classes), the
-    * iterative loop was pure fixed overhead. Graphs above the bound —
-    * corpus-scale text dedup at 100 TB — take the distributed path
-    * unchanged; labels are identical either way (component minimum).
-    */
-  // var as a test seam: specs lower it to 0 to force the distributed
-  // contraction on small graphs and pin local == distributed label
-  // identity (the oracle gate's graphs all sit under the default)
-  private[graft] var LocalCcEdgeThreshold: Long = 1L << 17
-
   def dedupClusters(
       docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id", maxIterations: Int = 50,
@@ -1035,7 +1015,7 @@ object TextOps {
     val e = initialEdgeCut(docIds, pairs, reliable)
     // the cut is already materialized — counting it is one cheap job,
     // far below a single contraction round (2 joins + cut + release)
-    if (e.count() <= LocalCcEdgeThreshold) {
+    if (graft.model.BoundedLocal.fits(e.count())) {
       val spark = docs.sparkSession
       import spark.implicits._
       val edges = e.select(col("lo"), col("hi")).as[(Long, Long)].collect()
@@ -2901,26 +2881,6 @@ object TextOps {
     * per-word sequential identical to global sequential), and one
     * `localCheckpoint` cuts the round's lineage.
     */
-  /** Vocabulary-row bound under which [[bpeLearn]] runs the merge
-    * loop DRIVER-LOCAL on the collected (word, symbols, freq) table
-    * instead of one Spark aggregation round per merge batch. 2^17
-    * distinct words is a few MB of driver memory — bounded by
-    * construction, the repo's guarded-fold idiom (the
-    * LocalCcEdgeThreshold precedent) — while each distributed round
-    * costs 2-3 full Spark jobs of fixed overhead on a
-    * vocabulary-sized table. Corpora whose DISTINCT-WORD vocabulary
-    * exceeds the bound (100 TB corpora) take the distributed batched
-    * loop unchanged. The local loop is the SEQUENTIAL reference
-    * semantics (batch == 1), which the batched path is provably
-    * identical to (see the guarded-prefix scaladoc), so outputs are
-    * bit-identical either way — pinned by a forced-threshold A/B
-    * spec. Symbol comparisons use UTF-8 byte order, mirroring
-    * Spark's UTF8String ordering exactly (Java String order differs
-    * on supplementary code points).
-    */
-  // var as a test seam: specs lower it to 0 to force the distributed
-  // loop on small fixtures and pin local == distributed
-  private[text] var LocalBpeVocabThreshold: Long = 1L << 17
 
   /** a < b in UTF-8 byte order — Spark's string ordering. */
   private[text] def utf8Lt(a: String, b: String): Boolean = {
@@ -2937,8 +2897,13 @@ object TextOps {
   }
 
   /** The driver-local sequential merge loop (batch == 1 reference
-    * semantics) over a collected vocabulary — the under-threshold
-    * path of [[bpeLearn]].
+    * semantics) over a collected vocabulary — the bounded-local
+    * path of [[bpeLearn]]. The batched path is provably identical to
+    * the sequential one (see the guarded-prefix scaladoc), so outputs
+    * are bit-identical either way — pinned by a forced-bound A/B spec.
+    * Symbol comparisons use UTF-8 byte order, mirroring Spark's
+    * UTF8String ordering exactly (Java String order differs on
+    * supplementary code points).
     */
   private def bpeLearnLocal(
       vocab: Array[(String, Array[String], Long)], merges: Int)
@@ -3012,9 +2977,9 @@ object TextOps {
       .localCheckpoint()
     // bounded-local gate: the vocabulary is already materialized, so
     // counting it is one cheap job; under the bound the whole merge
-    // loop runs on the driver (sequential reference semantics — see
-    // LocalBpeVocabThreshold) and the per-round Spark jobs disappear
-    if (words.count() <= LocalBpeVocabThreshold) {
+    // loop runs on the driver (sequential reference semantics) and
+    // the per-round Spark jobs disappear
+    if (graft.model.BoundedLocal.fits(words.count())) {
       val collected = words.collect()
       graft.model.Lineage.release(words) // dead: the loop is local now
       val (learnedL, finalWords) = bpeLearnLocal(collected, merges)

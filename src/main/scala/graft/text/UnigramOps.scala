@@ -126,24 +126,8 @@ object UnigramOps {
     * on the driver and broadcast, exactly like the BPE piece
     * inventory.
     */
-  /** Distinct-word-row bound under which [[unigramLearn]] runs the
-    * seed pass and the hard-EM rounds DRIVER-LOCAL on the collected
-    * (word, freq) table — the [[TextOps.LocalBpeVocabThreshold]]
-    * idiom: 2^17 distinct words is a few MB of driver memory, while
-    * the distributed loop costs one Spark job per seed collect and
-    * per EM round on a vocabulary-sized table. Over the bound (100 TB
-    * corpora) the distributed loop runs unchanged; outputs are
-    * bit-identical — the local seed's (freq DESC, piece ASC) order
-    * compares pieces in UTF-8 byte order exactly like Spark's
-    * orderBy, and single-character pieces are code-point-counted
-    * exactly like Spark's `length`.
-    */
-  // var as a test seam: specs lower it to 0 to force the distributed
-  // loop on small fixtures and pin local == distributed
-  private[text] var LocalUnigramWordThreshold: Long = 1L << 17
-
   /** The driver-local seed + hard-EM loop over a collected
-    * distinct-word table — the under-threshold path of
+    * distinct-word table — the bounded-local path of
     * [[unigramLearn]], operation-for-operation the distributed loop.
     */
   private def unigramLearnLocal(
@@ -221,20 +205,20 @@ object UnigramOps {
     // one corpus scan; every later job runs on the distinct words
     val words = wordTable(docs, textCol).localCheckpoint()
 
-    // bounded-local gate (the TextOps.LocalBpeVocabThreshold /
-    // LocalCcEdgeThreshold idiom): the vocabulary is already
-    // materialized, so counting it is one cheap job; under the bound
-    // the seed pass and every EM round run on the driver over the
-    // collected distinct-word table — the seed explosion, the two
-    // seed collects and one flatMap+aggregate job per round all
+    // bounded-local gate (graft.model.BoundedLocal): the vocabulary
+    // is already materialized, so counting it is one cheap job; under
+    // the bound the seed pass and every EM round run on the driver
+    // over the collected distinct-word table — the seed explosion, the
+    // two seed collects and one flatMap+aggregate job per round all
     // disappear. Corpora whose distinct-word vocabulary exceeds the
     // bound take the distributed loop unchanged; outputs are
-    // bit-identical (pinned by a forced-threshold A/B spec): the
-    // local seed sorts by (freq DESC, UTF-8 piece ASC) — exactly
-    // Spark's orderBy — and `words` (the returned artifact the
+    // bit-identical (pinned by a forced-bound A/B spec): the local
+    // seed sorts by (freq DESC, UTF-8 piece ASC) — exactly Spark's
+    // orderBy — single-character pieces are code-point-counted exactly
+    // like Spark's `length`, and `words` (the returned artifact the
     // encode/segment faces reuse) stays the same checkpoint either
     // way.
-    if (words.count() <= LocalUnigramWordThreshold)
+    if (graft.model.BoundedLocal.fits(words.count()))
       return (unigramLearnLocal(words.collect(), maxPieceLen, seedMulti, iters),
         words)
 

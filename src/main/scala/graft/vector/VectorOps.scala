@@ -1461,7 +1461,7 @@ object VectorOps {
     val edges = graft.model.Lineage.cutRetired(symmetrized(ann), reliable)
     boundedEdges(edges) match {
       case Some(arr) =>
-        // HYBRID local rounds (see LocalGraphEdgeThreshold): labels and
+        // HYBRID local rounds (see boundedEdges): labels and
         // community sizes computed on the collected array, identical to
         // the distributed rounds (A/B-pinned)
         val spark = ann.sparkSession
@@ -1510,28 +1510,15 @@ object VectorOps {
       .unionByName(ann.select(col("cand_id").as("src"), col("query_id").as("dst")))
       .distinct()
 
-  /** Edge-count bound under which the iterative kNN-graph analytics
-    * (LPA, modularity, BFS, k-core peel) run their rounds LOCALLY on
-    * the collected edge array instead of as Spark jobs — the
-    * [[graft.text.TextOps.LocalCcEdgeThreshold]] hybrid brought to the
-    * rest of the graph family: 2^17 edges is ~2 MB of driver memory
-    * (bounded by construction, the guarded-fold idiom), while each
-    * distributed round costs several full jobs of fixed overhead on
-    * exactly the probe-sized graphs the harness analytics run over.
-    * Results are pinned identical local == distributed by forced-
-    * threshold A/B specs; graphs over the bound — corpus-scale kNN at
-    * 100 TB — take the distributed rounds unchanged.
-    */
-  // var as a test seam: specs set it to 0 to force the distributed
-  // rounds on small graphs and pin local == distributed identity
-  private[graft] var LocalGraphEdgeThreshold: Long = 1L << 17
-
-  /** Collect a MATERIALIZED edge cut when it sits under
-    * [[LocalGraphEdgeThreshold]] — one cheap count job on the cut
-    * decides (the dedupClusters gate). None = stay distributed.
+  /** Collect a MATERIALIZED edge cut when it passes the
+    * [[graft.model.BoundedLocal]] gate — one cheap count job on the cut
+    * decides (the dedupClusters gate). None = stay distributed. The
+    * iterative kNN-graph analytics (LPA, modularity, BFS, k-core peel)
+    * then run their rounds on the collected array; results are pinned
+    * identical to the distributed rounds by forced-bound A/B specs.
     */
   private def boundedEdges(edges: DataFrame): Option[Array[(Long, Long)]] =
-    if (edges.count() > LocalGraphEdgeThreshold) None
+    if (!graft.model.BoundedLocal.fits(edges.count())) None
     else {
       val spark = edges.sparkSession
       import spark.implicits._
@@ -1619,7 +1606,7 @@ object VectorOps {
     val edges = graft.model.Lineage.cutRetired(symmetrized(ann), reliable)
     boundedEdges(edges) match {
       case Some(arr) =>
-        // HYBRID local scoring (see LocalGraphEdgeThreshold): the LPA
+        // HYBRID local scoring (see boundedEdges): the LPA
         // rounds AND the degree/intra aggregates run on the collected
         // array; the exact integer accounting is mirrored in BigInt
         // (identical to decimal(38,0): both are arbitrary-precision,
@@ -1700,7 +1687,7 @@ object VectorOps {
     val edges = graft.model.Lineage.cutRetired(symmetrized(ann), reliable)
     boundedEdges(edges) match {
       case Some(arr) =>
-        // HYBRID local BFS (see LocalGraphEdgeThreshold): the seed
+        // HYBRID local BFS (see boundedEdges): the seed
         // predicate is the same md5-prefix hash — java.security MD5 of
         // the decimal id string, first hex nibble 0 — so the seed set
         // is bit-identical to the distributed round's.
@@ -1950,7 +1937,7 @@ object VectorOps {
         .distinct(), reliable)
     boundedEdges(edges) match {
       case Some(arr) =>
-        // HYBRID local peel (see LocalGraphEdgeThreshold): the same
+        // HYBRID local peel (see boundedEdges): the same
         // bounded `rounds` of degree-filter-drop over the collected
         // array — a survivor with no surviving edge has degree 0 and
         // drops that round, exactly like the distributed anti-join.

@@ -166,13 +166,13 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("bpe hybrid: local merge loop == forced-distributed batched loop (A/B)") {
-    // the LocalBpeVocabThreshold contract (the LocalCcEdgeThreshold
-    // precedent): the learned merge table AND the final vocabulary
-    // symbol table must be identical whichever side of the bound the
-    // vocabulary lands on. Tie-heavy fixture with same-symbol runs
-    // (greedy leftmost semantics) and batch > 1 so the distributed
-    // side exercises the guarded-prefix acceptance against the local
-    // side's sequential reference loop.
+    // the bounded-local gate contract (the CC A/B precedent): the
+    // learned merge table AND the final vocabulary symbol table must
+    // be identical whichever side of the bound the vocabulary lands
+    // on. Tie-heavy fixture with same-symbol runs (greedy leftmost
+    // semantics) and batch > 1 so the distributed side exercises the
+    // guarded-prefix acceptance against the local side's sequential
+    // reference loop.
     val docs = docsOf(
       "aaaa bbb ab ab cd cd cd", "xy xy zz aaaa ab", "ab cd xy zz bbb")
     def artifacts() = {
@@ -182,10 +182,8 @@ class BpeTrainSpec extends AnyFunSuite {
           r.getSeq[String](1).toList, r.getLong(2))).sortBy(_._1).toSeq)
     }
     val (mL, wL) = artifacts()
-    val saved = TextOps.LocalBpeVocabThreshold
-    val (mD, wD) =
-      try { TextOps.LocalBpeVocabThreshold = 0L; artifacts() }
-      finally TextOps.LocalBpeVocabThreshold = saved
+    val ((mD, wD), moved) = graft.model.BoundedLocal.forcing(0L)(artifacts())
+    assert(moved >= 1, "the forced bound never reached the BPE gate")
     assert(mL === mD, "merge table: local diverged from distributed")
     assert(wL === wD, "final vocab: local diverged from distributed")
     assert(mL.nonEmpty && wL.nonEmpty)

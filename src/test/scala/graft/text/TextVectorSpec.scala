@@ -1310,11 +1310,11 @@ class TextVectorSpec extends AnyFunSuite {
       .toDF("doc_id")
     val local = TextOps.dedupClusters(docs, pairs)
       .as[(Long, Long)].collect().toMap
-    val saved = TextOps.LocalCcEdgeThreshold
-    val dist = try {
-      TextOps.LocalCcEdgeThreshold = 0L // force the distributed loop
+    // bound 0 forces the distributed loop
+    val (dist, moved) = graft.model.BoundedLocal.forcing(0L) {
       TextOps.dedupClusters(docs, pairs).as[(Long, Long)].collect().toMap
-    } finally TextOps.LocalCcEdgeThreshold = saved
+    }
+    assert(moved >= 1, "the forced bound never reached the CC gate")
     assert(local == dist, "local union-find diverged from star contraction")
     // spot invariants: clique collapses to its minimum; ghost edge
     // dropped (3000 stays a singleton); untouched docs self-label
@@ -2334,7 +2334,7 @@ class TextVectorSpec extends AnyFunSuite {
   }
 
   test("graph-family hybrid: local kernels == forced-distributed rounds (A/B)") {
-    // the LocalGraphEdgeThreshold contract (the CC A/B precedent):
+    // the bounded-local gate contract (the CC A/B precedent):
     // labels, depth histograms, peel rounds and the modularity score
     // must be identical whichever side of the bound the graph lands on.
     // Mixed shape: a 100-node chain (adversarial for propagation), a
@@ -2346,10 +2346,11 @@ class TextVectorSpec extends AnyFunSuite {
     val ann = (chain ++ clique ++ star ++ Seq((99L, 150L)))
       .toDF("query_id", "cand_id")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    val saved = VectorOps.LocalGraphEdgeThreshold
-    def forced[A](f: => A): A =
-      try { VectorOps.LocalGraphEdgeThreshold = 0L; f }
-      finally VectorOps.LocalGraphEdgeThreshold = saved
+    def forced[A](f: => A): A = {
+      val (r, moved) = graft.model.BoundedLocal.forcing(0L)(f)
+      assert(moved >= 1, "the forced bound never reached the graph gate")
+      r
+    }
     val lpaL = rows(VectorOps.knnLabelPropagation(ann, iters = 4))
     val lpaD = forced(rows(VectorOps.knnLabelPropagation(ann, iters = 4)))
     assert(lpaL == lpaD, "LPA local diverged from distributed")
@@ -2366,7 +2367,7 @@ class TextVectorSpec extends AnyFunSuite {
   }
 
   test("bradley-terry hybrid: local MM fit == forced-distributed rounds (A/B)") {
-    // the LocalDuelRowThreshold contract: strengths, games/wins and the
+    // the bounded-local gate contract: strengths, games/wins and the
     // upset report are identical whichever side of the bound the duel
     // table lands on. Sources s0..s4 with deterministic varying token
     // counts so wins are asymmetric and several MM rounds move p.
@@ -2375,10 +2376,11 @@ class TextVectorSpec extends AnyFunSuite {
     }.toDF("doc_id", "source", "text")
     val duels = PrefOps.duelCut(docs)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    val saved = PrefOps.LocalDuelRowThreshold
-    def forced[A](f: => A): A =
-      try { PrefOps.LocalDuelRowThreshold = 0L; f }
-      finally PrefOps.LocalDuelRowThreshold = saved
+    def forced[A](f: => A): A = {
+      val (r, moved) = graft.model.BoundedLocal.forcing(0L)(f)
+      assert(moved >= 1, "the forced bound never reached the duel gate")
+      r
+    }
     val btL = rows(PrefOps.bradleyTerryFrom(duels, iters = 3))
     val btD = forced(rows(PrefOps.bradleyTerryFrom(duels, iters = 3)))
     assert(btL == btD, "BT local fit diverged from distributed")

@@ -131,7 +131,7 @@ class UnigramSpec extends AnyFunSuite {
   }
 
   test("unigram hybrid: local seed+EM == forced-distributed loop (A/B)") {
-    // the LocalUnigramWordThreshold contract: the trained piece table
+    // the bounded-local gate contract: the trained piece table
     // must be identical whichever side of the bound the distinct-word
     // vocabulary lands on. Fixture with seed-frequency ties (so the
     // (freq DESC, piece ASC) cut order is exercised) and enough EM
@@ -143,10 +143,8 @@ class UnigramSpec extends AnyFunSuite {
       .unigramTrain(docs, maxPieceLen = 3, seedMulti = 12, iters = 2)
       .collect().map(_.toSeq).toSeq
     val local = run()
-    val saved = UnigramOps.LocalUnigramWordThreshold
-    val dist =
-      try { UnigramOps.LocalUnigramWordThreshold = 0L; run() }
-      finally UnigramOps.LocalUnigramWordThreshold = saved
+    val (dist, moved) = graft.model.BoundedLocal.forcing(0L)(run())
+    assert(moved >= 1, "the forced bound never reached the unigram gate")
     assert(local === dist, "unigram training: local diverged from distributed")
     assert(local.nonEmpty)
   }
