@@ -591,20 +591,26 @@ object TextOps {
     * full-corpus similarity join — at 100 TB the whole point of LSH is
     * that cost scales with candidates, not with corpus^2.
     *
-    * SINGLE-PASS over the corpus: one distinct (id, token) table feeds
-    * the signature build, the size aggregate, and both intersection
-    * joins. The distinct's shuffle is the shared subtree — Spark's
-    * ReuseExchange materializes it once, so the text is scanned,
-    * split, and md5-hashed exactly once however many consumers hang
-    * off it.
+    * ROW-LOCAL signatures: a document's band buckets depend only on
+    * that document, so they come from [[rowLocalBandBuckets]] — one
+    * narrow map over the text, no (id, token) shuffle and no
+    * per-document `collect_list` — and the only exchange before the
+    * candidate self-join is the bucket shuffle both of its sides share.
+    * The distinct (id, token) table feeds verification only: the size
+    * aggregate and both intersection joins read it, and Spark's
+    * ReuseExchange materializes its distinct once for all three.
+    *
+    * Ids must be integral (the kernel carries them as `long`); the
+    * output's `id_a` / `id_b` keep the type of `idCol`. Rows with a
+    * null id or a null text never pair.
     */
   def minhashLshPairs(
       docs: DataFrame, numHashes: Int, bands: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // the ONE corpus pass everything derives from
-    val tok = docs.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("w")).distinct()
-    val cand = minhashLshCandidatesFromTok(tok, numHashes, bands)
-    verifyJaccardCandidates(tok, cand, threshold)
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    val cand = candidatesFromBanded(rowLocalBandBuckets(docs, numHashes, bands, idCol, textCol))
+      .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"))
+    verifyJaccardCandidates(tokenTable(docs, idCol, textCol), cand, threshold)
   }
 
   /** DEDUP IMPACT REPORT — the per-source removal summary a data team
@@ -650,8 +656,10 @@ object TextOps {
         col("n_near_removed").cast("double") / col("n_docs"))
   }
 
-  /** The LSH CANDIDATE stage of [[minhashLshPairs]] alone — banding
-    * bucket-join output before exact verification. Exposed so the
+  /** The LSH CANDIDATE stage of [[minhashLshPairs]] alone, over a
+    * [[tokenTable]] — banding bucket-join output before exact
+    * verification (the same candidate set [[minhashLshPairs]] builds
+    * from its row-local buckets). Exposed so the
     * banding's measured quality (precision of its candidates, recall of
     * its verified pairs vs the exact join) is a queryable number, the
     * same accounting [[graft.vector.VectorOps]] does for ANN recall.
@@ -671,10 +679,6 @@ object TextOps {
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
 
-  /** (id, sig) MinHash signature rows over a [[tokenTable]] — the
-    * shared kernel of the banding route and the estimator-error
-    * report.
-    */
   /** ROW-LOCAL (id, bucket) band rows — the same tokenize → distinct
     * token-hash → masked-affine minhash → banded md5 math as
     * [[minhashBandBuckets]], computed entirely inside one row with NO
@@ -684,7 +688,8 @@ object TextOps {
     * kernel is what a STREAMING ingest probe rides (per-microbatch
     * narrow map, no stateful aggregation), and it is pinned
     * bit-identical to the batch path by DedupIndexIOSpec. Empty-token
-    * documents emit no rows, exactly like the batch route.
+    * and null-text documents emit no rows, exactly like the batch
+    * route; null-id rows emit none either, as in the batch route.
     */
   private[graft] def rowLocalBandBuckets(
       docs: DataFrame, numHashes: Int, bands: Int,
@@ -696,9 +701,11 @@ object TextOps {
     val aCoef = coefs.map(_._1).toArray
     val bCoef = coefs.map(_._2).toArray
     val rowsPerBand = numHashes / bands
-    docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
+    docs.filter(col(idCol).isNotNull && col(textCol).isNotNull)
+      .select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
+        val hex = java.util.HexFormat.of() // lowercase, like SQL md5()
         it.flatMap { case (id, text) =>
           val hsSet = new java.util.HashSet[java.lang.Long]()
           text.split(" ").foreach { w =>
@@ -732,16 +739,19 @@ object TextOps {
               var r = b * rowsPerBand
               while (r < (b + 1) * rowsPerBand) { sb.append(',').append(sig(r)); r += 1 }
               md.reset()
-              val dig = md.digest(sb.toString.getBytes("UTF-8"))
-              val hex = new StringBuilder(32)
-              dig.foreach(x => hex.append(f"${x & 0xFF}%02x"))
-              (id, hex.toString)
+              (id, hex.formatHex(md.digest(sb.toString.getBytes("UTF-8"))))
             }
           }
         }
       }.toDF("id", "bucket")
   }
 
+  /** (id, sig) MinHash signature rows over a [[tokenTable]] — the
+    * shared kernel of the banding route and the estimator-error
+    * report. Null-id rows get no signature (their typed decode would
+    * fail, and a null id pairs with nothing), as in
+    * [[rowLocalBandBuckets]].
+    */
   private[graft] def minhashSignatures(tok: DataFrame, numHashes: Int): DataFrame = {
     val spark = tok.sparkSession
     import spark.implicits._
@@ -751,7 +761,7 @@ object TextOps {
       .foreach { case ((a, b), k) => aCoef(k) = a; bCoef(k) = b }
     // signature kernel over a primitive Array[Long] of the doc's
     // distinct token hashes — tight while-loops, no per-element boxing
-    tok.select(col("id"), tokenHash(col("w")).as("h"))
+    tok.filter(col("id").isNotNull).select(col("id"), tokenHash(col("w")).as("h"))
       .groupBy(col("id")).agg(collect_list(col("h")).as("hs"))
       .as[(Long, Array[Long])]
       .map { case (id, hs) =>
@@ -879,9 +889,8 @@ object TextOps {
       docs: DataFrame, numHashes: Int, bands: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // the token table is deliberately NOT cut: its repeated references
-    // already share one exchange via ReuseExchange (the minhash
-    // single-pass contract), so materializing it only added two
-    // sequential cut jobs — measured 1.69 s -> 1.97 s when tried in
+    // already share one exchange via ReuseExchange, so materializing
+    // it only added two sequential cut jobs — measured 1.69 s -> 1.97 s when tried in
     // the r17 optimization round, reverted
     val tok = tokenTable(docs, idCol, textCol)
     // the exact pair set doubles as the verification oracle — the
@@ -2814,19 +2823,22 @@ object TextOps {
     * word's symbol array — Sennrich's reference semantics for
     * same-symbol runs ("aaa" + (a,a) -> "(aa)a"), and exactly what the
     * oracle's odd-rank-in-run selection computes relationally. Shared
-    * by the merge loop's rewrite (once per distinct word per accepted
-    * merge) — linear in the word length.
+    * by the distributed rewrite (symbol strings, once per distinct word
+    * per accepted merge) and the local loop (interned symbol ids, once
+    * per word that holds the merged pair) — linear in the word length.
     */
-  private def applyMerge(
-      syms: Array[String], l: String, r: String, merged: String): Array[String] = {
-    val out = new scala.collection.mutable.ArrayBuffer[String](syms.length)
+  private def applyMerge[@specialized(Int) T: scala.reflect.ClassTag](
+      syms: Array[T], l: T, r: T, merged: T): Array[T] = {
+    val out = new Array[T](syms.length)
+    var n = 0
     var i = 0
     while (i < syms.length) {
       if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-        out += merged; i += 2
-      } else { out += syms(i); i += 1 }
+        out(n) = merged; i += 2
+      } else { out(n) = syms(i); i += 1 }
+      n += 1
     }
-    out.toArray
+    out.take(n)
   }
 
   /** The shared BPE merge loop: returns BOTH artifacts of tokenizer
@@ -2835,7 +2847,11 @@ object TextOps {
     * merges), which IS the encoder: applying the merge list to any
     * in-vocabulary word in rank order yields exactly its final symbol
     * array, so [[bpeEncode]] can tokenize the corpus by a vocabulary
-    * join instead of re-running the merge loop per occurrence.
+    * join instead of re-running the merge loop per occurrence. The
+    * vocabulary comes back as a thunk: on the bounded-local path the
+    * Dataset is encoded from the driver's arrays only when a caller
+    * that reads it ([[bpeArtifacts]], [[wordpiecePieces]]) asks, so
+    * [[bpeTrain]], which keeps only the merge table, never pays for it.
     *
     * BATCHED ROUNDS (`batch` > 1): production tokenizers need ~30k
     * merges, and one Spark round per merge is three orders of
@@ -2883,18 +2899,9 @@ object TextOps {
     */
 
   /** a < b in UTF-8 byte order — Spark's string ordering. */
-  private[text] def utf8Lt(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d < 0
-      i += 1
-    }
-    x.length < y.length
-  }
+  private[text] def utf8Lt(a: String, b: String): Boolean =
+    java.util.Arrays.compareUnsigned(a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
 
   /** The driver-local sequential merge loop (batch == 1 reference
     * semantics) over a collected vocabulary — the bounded-local
@@ -2904,55 +2911,90 @@ object TextOps {
     * Symbol comparisons use UTF-8 byte order, mirroring Spark's
     * UTF8String ordering exactly (Java String order differs on
     * supplementary code points).
+    *
+    * INCREMENTAL pair counting (the training algorithm of Sennrich et
+    * al.'s reference implementation): symbols are interned to ints
+    * once (a merged string that equals an existing symbol interns to
+    * that symbol), and the loop keeps two structures — the weighted
+    * count of every adjacent pair, keyed by the packed (left, right)
+    * ids, and an index from each pair to the words that hold it. A
+    * round picks the winner with one scan of the counts, rewrites only
+    * the words listed under it ([[applyMerge]] on the id arrays), and
+    * moves each rewritten word's weight from its old pairs to its new
+    * ones. Per-round cost: O(words touched by the merge) plus
+    * O(distinct pairs) — no vocabulary rescan, no vocabulary copy.
+    * The index only grows (a word is listed again each time a rewrite
+    * re-adds its pairs): a word listed twice, or under a pair an
+    * earlier rewrite removed from it, is left unchanged by the merge
+    * and skipped.
     */
-  private def bpeLearnLocal(
+  private[text] def bpeLearnLocal(
       vocab: Array[(String, Array[String], Long)], merges: Int)
     : (Seq[(Long, String, String, Long)], Array[(String, Array[String], Long)]) = {
-    var cur = vocab
-    val learned = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var exhausted = false
-    while (learned.size < merges && !exhausted) {
-      val cnts = new java.util.HashMap[(String, String), Long]()
-      cur.foreach { case (_, syms, c) =>
-        var i = 0
-        while (i < syms.length - 1) {
-          cnts.merge((syms(i), syms(i + 1)), c, (a, b) => a + b)
-          i += 1
-        }
+    import scala.collection.mutable
+    val symOf = mutable.ArrayBuffer.empty[String]
+    val utf8Of = mutable.ArrayBuffer.empty[Array[Byte]]
+    val idOf = mutable.HashMap.empty[String, Int]
+    def intern(s: String): Int = idOf.getOrElseUpdate(s, {
+      symOf += s
+      utf8Of += s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      symOf.size - 1
+    })
+    val syms = vocab.map(_._2.map(intern))
+    def pair(l: Int, r: Int): Long = (l.toLong << 32) | r
+    val pairCount = mutable.LongMap.empty[Long]
+    val wordsOf = mutable.LongMap.empty[mutable.ArrayBuilder.ofInt]
+    // add (sign = 1) or remove (sign = -1) word w's weighted pairs
+    def tally(w: Int, sign: Long): Unit = {
+      val s = syms(w)
+      val c = sign * vocab(w)._3
+      var i = 0
+      while (i < s.length - 1) {
+        val k = pair(s(i), s(i + 1))
+        val n = pairCount.getOrElse(k, 0L) + c
+        if (n == 0L) pairCount -= k else pairCount(k) = n
+        if (sign > 0) wordsOf.getOrElseUpdate(k, new mutable.ArrayBuilder.ofInt) += w
+        i += 1
       }
-      if (cnts.isEmpty) exhausted = true
-      else {
-        // winner by (count DESC, left ASC, right ASC) in UTF-8 order —
-        // the identical total order the distributed orderBy evaluates
-        var best: ((String, String), Long) = null
-        cnts.forEach { (k, v) =>
-          if (best == null || v > best._2 ||
-              (v == best._2 && (utf8Lt(k._1, best._1._1) ||
-                (k._1 == best._1._1 && utf8Lt(k._2, best._1._2)))))
-            best = (k, v)
-        }
-        val ((l, r), cnt) = best
-        learned += ((learned.size + 1L, l, r, cnt))
-        val m = l + r
-        cur = cur.map { case (w, syms, c) =>
-          var has = false
-          var i = 0
-          while (!has && i < syms.length - 1) {
-            if (syms(i) == l && syms(i + 1) == r) has = true
-            i += 1
-          }
-          if (has) (w, applyMerge(syms, l, r, m), c) else (w, syms, c)
+    }
+    syms.indices.foreach(tally(_, 1L))
+    // (left ASC, right ASC) in UTF-8 order
+    def pairLt(a: Long, b: Long): Boolean = {
+      val d = java.util.Arrays.compareUnsigned(utf8Of((a >>> 32).toInt), utf8Of((b >>> 32).toInt))
+      d < 0 || (d == 0 && java.util.Arrays.compareUnsigned(utf8Of(a.toInt), utf8Of(b.toInt)) < 0)
+    }
+    val learned = mutable.ArrayBuffer.empty[(Long, String, String, Long)]
+    while (learned.size < merges && pairCount.nonEmpty) {
+      // winner by (count DESC, left ASC, right ASC) in UTF-8 order —
+      // the identical total order the distributed orderBy evaluates
+      var best = 0L
+      var bestN = 0L
+      pairCount.foreachEntry { (k, n) =>
+        if (n > bestN || (n == bestN && pairLt(k, best))) { best = k; bestN = n }
+      }
+      val l = (best >>> 32).toInt
+      val r = best.toInt
+      learned += ((learned.size + 1L, symOf(l), symOf(r), bestN))
+      val m = intern(symOf(l) + symOf(r))
+      // greedy application leaves no (l, r) behind, so the winner's
+      // count drains to zero and its word list is spent
+      for (w <- wordsOf.remove(best).get.result()) {
+        val next = applyMerge(syms(w), l, r, m)
+        if (next.length < syms(w).length) {
+          tally(w, -1L)
+          syms(w) = next
+          tally(w, 1L)
         }
       }
     }
-    (learned.toSeq, cur)
+    (learned.toSeq, vocab.indices.map(w => (vocab(w)._1, syms(w).map(symOf), vocab(w)._3)).toArray)
   }
 
   private[text] def bpeLearn(
       docs: DataFrame, merges: Int, textCol: String = "text",
       batch: Int = 1)
     : (Seq[(Long, String, String, Long)],
-       org.apache.spark.sql.Dataset[(String, Array[String], Long)]) = {
+       () => org.apache.spark.sql.Dataset[(String, Array[String], Long)]) = {
     require(merges >= 1 && merges <= 65536,
       s"merges must be in [1,65536], got $merges")
     require(batch >= 1 && batch <= 4096, s"batch must be in [1,4096], got $batch")
@@ -2983,7 +3025,7 @@ object TextOps {
       val collected = words.collect()
       graft.model.Lineage.release(words) // dead: the loop is local now
       val (learnedL, finalWords) = bpeLearnLocal(collected, merges)
-      return (learnedL, spark.createDataset(finalWords.toSeq))
+      return (learnedL, () => spark.createDataset(finalWords.toSeq))
     }
     // driver-side symbol inventory for guard 3 — initial alphabet
     // (bounded by distinct code points) + merged strings as learned
@@ -3067,7 +3109,8 @@ object TextOps {
         graft.model.Lineage.release(prevWords)
       }
     }
-    (learned.toSeq, words)
+    val finalWords = words
+    (learned.toSeq, () => finalWords)
   }
 
   /** BPE CORPUS ENCODING — tokenize the corpus under a tokenizer
@@ -3170,7 +3213,7 @@ object TextOps {
     import spark.implicits._
     val (learned, words) = bpeLearn(docs, merges, textCol, batch)
     (learned.toDF("merge_rank", "left_sym", "right_sym", "pair_count"),
-      words.toDF("w", "syms", "wc"))
+      words().toDF("w", "syms", "wc"))
   }
 
   /** The trained PIECE INVENTORY — the distinct symbols of the final
@@ -3185,7 +3228,7 @@ object TextOps {
       batch: Int = 1): Array[String] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    bpeLearn(docs, merges, textCol, batch)._2
+    bpeLearn(docs, merges, textCol, batch)._2()
       .flatMap(_._2).distinct().collect().sorted
   }
 

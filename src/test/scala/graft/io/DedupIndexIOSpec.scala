@@ -70,8 +70,13 @@ class DedupIndexIOSpec extends AnyFunSuite {
     // the streaming probe kernel must produce EXACTLY the (id, bucket)
     // rows the batch shuffle route computes — same token hashes, same
     // masked-affine minhash, same banding md5 — or a streamed shard
-    // would probe a different LSH space than the index it rolls into
-    val d = docs.filter(col("doc_id") < 300)
+    // would probe a different LSH space than the index it rolls into.
+    // A null-text row and a null-id row (carrying a real document's
+    // text) ride along: both routes must emit no rows for either
+    val head = docs.filter(col("doc_id") < 300)
+    val d = head
+      .union(head.limit(1).select(lit(null).cast("long").as("doc_id"), col("text")))
+      .union(head.limit(1).select(lit(300L).as("doc_id"), lit(null).cast("string").as("text")))
     val batch = graft.text.TextOps.minhashBandBuckets(
         graft.text.TextOps.tokenTable(d), numHashes = 64, bands = 16)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet

@@ -137,7 +137,7 @@ class BpeTrainSpec extends AnyFunSuite {
       assert(a._1 === b._1, s"trial $trial: merge tables diverged")
       def vocab(d: org.apache.spark.sql.Dataset[(String, Array[String], Long)]) =
         d.collect().map { case (w, s, c) => (w, s.toSeq, c) }.sortBy(_._1).toSeq
-      assert(vocab(a._2) === vocab(b._2), s"trial $trial: final vocabularies diverged")
+      assert(vocab(a._2()) === vocab(b._2()), s"trial $trial: final vocabularies diverged")
     }
   }
 
@@ -149,7 +149,7 @@ class BpeTrainSpec extends AnyFunSuite {
     val (m, w) = TextOps.bpeLearn(docs, 1000, "text", batch = 64)
     assert(m.nonEmpty && m.size < 1000, s"expected exhaustion, learned ${m.size}")
     assert(m.map(_._1) === (1L to m.size.toLong), "merge ranks must be consecutive")
-    val finals = w.collect()
+    val finals = w().collect()
     assert(finals.forall(_._2.length == 1),
       "exhaustion means every distinct word is one symbol")
   }
