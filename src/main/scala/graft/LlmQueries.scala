@@ -380,8 +380,9 @@ object LlmQueries {
   private val lshMemo = new Memo[String, (DataFrame, DataFrame)]
 
   private def lshStaged(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val tok = TextOps.tokenTable(docProbe(s, dir)).localCheckpoint()
-    (tok, TextOps.minhashSignatures(tok, 64).localCheckpoint())
+    val docs = docProbe(s, dir)
+    val tok = TextOps.tokenTable(docs).localCheckpoint()
+    (tok, TextOps.minhashSignatures(docs, 64).localCheckpoint())
   }
 
   // staged Jaccard pair table for the clustering family — built fresh

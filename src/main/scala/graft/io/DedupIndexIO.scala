@@ -17,6 +17,11 @@ import graft.text.TextOps
   *   <path>/tokens/         (id, w)       — the exact-verify payload
   *   <path>/dedup_index.json  {"format": 1, "num_hashes": H, "bands": B}
   *
+  * The buckets come from [[TextOps.rowLocalBandBuckets]], the one
+  * MinHash kernel that batch dedup, the in-memory incremental probe
+  * and the streaming probe also use, so every route bands documents
+  * into the same LSH space.
+  *
   * Storing the token table keeps the family's central guarantee —
   * probe results are EXACT-verified Jaccard pairs, a subset of the
   * exact join — rather than signature estimates. The sidecar pins the
@@ -30,11 +35,10 @@ object DedupIndexIO {
   def writeIndex(
       docs: DataFrame, path: String, numHashes: Int, bands: Int,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val tok = TextOps.tokenTable(docs, idCol, textCol)
-    TextOps.minhashBandBuckets(tok, numHashes, bands)
+    TextOps.rowLocalBandBuckets(docs, numHashes, bands, idCol, textCol)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/buckets")
-    tok.write.mode(SaveMode.Overwrite).parquet(s"$path/tokens")
+    TextOps.tokenTable(docs, idCol, textCol)
+      .write.mode(SaveMode.Overwrite).parquet(s"$path/tokens")
     Files.createDirectories(Paths.get(path))
     Sidecars.writeAtomic(Paths.get(s"$path/dedup_index.json"),
       s"""{"format": 1, "num_hashes": $numHashes, "bands": $bands}""")
@@ -57,9 +61,9 @@ object DedupIndexIO {
       docs: DataFrame, path: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val (numHashes, bands) = storedParams(path)
-    val tok = TextOps.tokenTable(docs, idCol, textCol)
-    tok.write.mode(SaveMode.Append).parquet(s"$path/tokens")
-    TextOps.minhashBandBuckets(tok, numHashes, bands)
+    TextOps.tokenTable(docs, idCol, textCol)
+      .write.mode(SaveMode.Append).parquet(s"$path/tokens")
+    TextOps.rowLocalBandBuckets(docs, numHashes, bands, idCol, textCol)
       .write.mode(SaveMode.Append).parquet(s"$path/buckets")
   }
 
@@ -82,27 +86,24 @@ object DedupIndexIO {
   }
 
   /** Probe the stored index with an arriving shard: the shard's band
-    * buckets (computed under the SIDEcar's parameters) equi-join the
-    * stored buckets, cross-side candidates exact-verify against the
-    * union token table. Returns (id_a = shard doc, id_b = indexed doc,
-    * jaccard) — exactly [[TextOps.incrementalLshPairs]]' output with
-    * the base side read instead of recomputed. Caller contract: shard
-    * ids are disjoint from indexed ids.
+    * buckets (computed under the SIDEcar's parameters) cross-probe the
+    * stored buckets and the candidates exact-verify against the union
+    * token table ([[TextOps.probeBuckets]]). Returns (id_a = shard
+    * doc, id_b = indexed doc, jaccard) — exactly
+    * [[TextOps.incrementalLshPairs]]' output with the base side read
+    * instead of recomputed, under the same caller contract: shard ids
+    * are disjoint from indexed ids (not checked; an equal-id pair is
+    * silently dropped).
     */
   def probeIndex(
       spark: SparkSession, path: String, incoming: DataFrame,
       threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val (numHashes, bands) = storedParams(path)
-    val baseBuckets = spark.read.parquet(s"$path/buckets")
-    val baseTok = spark.read.parquet(s"$path/tokens")
-    val tokI = TextOps.tokenTable(incoming, idCol, textCol)
-    val cand = TextOps.minhashBandBuckets(tokI, numHashes, bands)
-      .toDF("id_a", "bucket")
-      .join(baseBuckets.toDF("id_b", "bucket"), "bucket")
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    TextOps.verifyJaccardCandidates(
-      tokI.union(baseTok).distinct(), cand, threshold)
+    TextOps.probeBuckets(
+      TextOps.rowLocalBandBuckets(incoming, numHashes, bands, idCol, textCol),
+      spark.read.parquet(s"$path/buckets"),
+      TextOps.tokenTable(incoming, idCol, textCol),
+      spark.read.parquet(s"$path/tokens"), threshold)
   }
 }

@@ -536,12 +536,13 @@ object CorpusOps {
     * document, catching reworded/partially-copied benchmark material
     * that [[decontaminate]]'s verbatim hash can never see (the
     * documented failure mode of exact decontamination in practice).
-    * The train side's MinHash band buckets probe the eval side's —
-    * the [[TextOps.incrementalLshPairs]] cross-probe shape with eval
-    * as the (benchmark-sized) index — and only cross candidates are
-    * exact-verified; a train document flagged against any eval doc is
-    * anti-joined out. An eval document that also sits in the train
-    * side IS verbatim leakage (identical text ⇒ Jaccard 1) and flags.
+    * The train side's MinHash band buckets probe the eval side's with
+    * [[TextOps.probeBuckets]] — the [[TextOps.incrementalLshPairs]]
+    * cross-probe, with eval as the (benchmark-sized) index — and only
+    * cross candidates are exact-verified; a train document flagged
+    * against any eval doc is anti-joined out. An eval document that
+    * also sits in the train side IS verbatim leakage (identical text ⇒
+    * Jaccard 1) and flags.
     *
     * ID NAMESPACING: the two corpora are INDEPENDENT, so raw id values
     * may collide across sides while naming different documents. Both
@@ -551,8 +552,8 @@ object CorpusOps {
     * and corrupt the Jaccard verification — unlike
     * [[TextOps.incrementalLshPairs]], whose caller contract demands
     * disjoint ids, this operator makes no cross-corpus id assumption.
-    * (Ids must be long-castable and fit in 62 bits — the minhash
-    * kernel's existing contract plus one doubling bit.)
+    * (Ids must be byte, short, int or long and fit in 62 bits — the
+    * minhash kernel's id contract plus one doubling bit.)
     *
     * At 100 TB: banding the train side is one linear pass, the eval
     * bucket table is benchmark-sized, candidates are bucket-bounded,
@@ -562,19 +563,17 @@ object CorpusOps {
       train: DataFrame, eval: DataFrame,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.9,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    TextOps.requireIntegralId(train, idCol)
+    TextOps.requireIntegralId(eval, idCol)
     val trainTag = col(idCol).cast("long") * 2
-    val tokT = TextOps.tokenTable(
-      train.select(trainTag.as("gid"), col(textCol)), "gid", textCol)
-    val tokE = TextOps.tokenTable(
-      eval.select((col(idCol).cast("long") * 2 + 1).as("gid"),
-        col(textCol)), "gid", textCol)
-    val cand = TextOps.minhashBandBuckets(tokT, numHashes, bands)
-      .toDF("id_a", "bucket")
-      .join(TextOps.minhashBandBuckets(tokE, numHashes, bands)
-        .toDF("id_b", "bucket"), "bucket")
-      .select(col("id_a"), col("id_b")).distinct()
-    val flagged = TextOps.verifyJaccardCandidates(
-        tokT.unionByName(tokE).distinct(), cand, threshold)
+    val t = train.select(trainTag.as("gid"), col(textCol))
+    val e = eval.select((col(idCol).cast("long") * 2 + 1).as("gid"), col(textCol))
+    // the probe's self-id filter never fires: train ids are even, eval
+    // ids odd
+    val flagged = TextOps.probeBuckets(
+        TextOps.rowLocalBandBuckets(t, numHashes, bands, "gid", textCol),
+        TextOps.rowLocalBandBuckets(e, numHashes, bands, "gid", textCol),
+        TextOps.tokenTable(t, "gid", textCol), TextOps.tokenTable(e, "gid", textCol), threshold)
       .select(col("id_a").as("flag")).distinct()
     train.join(flagged, trainTag === col("flag"), "left_anti")
   }

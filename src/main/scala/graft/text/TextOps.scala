@@ -1,6 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis and deduplication operators for large-scale training-
@@ -111,16 +112,7 @@ object TextOps {
     val cand = prefix.as("a").join(prefix.as("b"),
         col("a.w") === col("b.w") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    val inter = cand
-      .join(tok.toDF("id_a", "w"), "id_a")
-      .join(tok.toDF("id_b", "w"), Seq("id_b", "w"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn("jaccard", col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    verifyJaccardCandidates(tok, cand, threshold)
   }
 
   /** Token-set CONTAINMENT join (directed): emits (id_a, id_b,
@@ -591,18 +583,18 @@ object TextOps {
     * full-corpus similarity join — at 100 TB the whole point of LSH is
     * that cost scales with candidates, not with corpus^2.
     *
-    * ROW-LOCAL signatures: a document's band buckets depend only on
-    * that document, so they come from [[rowLocalBandBuckets]] — one
-    * narrow map over the text, no (id, token) shuffle and no
-    * per-document `collect_list` — and the only exchange before the
-    * candidate self-join is the bucket shuffle both of its sides share.
-    * The distinct (id, token) table feeds verification only: the size
-    * aggregate and both intersection joins read it, and Spark's
-    * ReuseExchange materializes its distinct once for all three.
+    * Candidates come from [[rowLocalBandBuckets]] — the one MinHash
+    * kernel, a narrow map over the text with no (id, token) shuffle —
+    * so the only exchange before the candidate self-join is the bucket
+    * shuffle both of its sides share. The distinct (id, token) table
+    * feeds verification only: the size aggregate and both intersection
+    * joins read it, and Spark's ReuseExchange materializes its distinct
+    * once for all three.
     *
-    * Ids must be integral (the kernel carries them as `long`); the
-    * output's `id_a` / `id_b` keep the type of `idCol`. Rows with a
-    * null id or a null text never pair.
+    * Ids must be byte, short, int or long (the kernel carries them as
+    * `long` and rejects any other type); the output's `id_a` / `id_b`
+    * keep the type of `idCol`. Rows with a null id or a null text never
+    * pair.
     */
   def minhashLshPairs(
       docs: DataFrame, numHashes: Int, bands: Int, threshold: Double,
@@ -656,57 +648,40 @@ object TextOps {
         col("n_near_removed").cast("double") / col("n_docs"))
   }
 
-  /** The LSH CANDIDATE stage of [[minhashLshPairs]] alone, over a
-    * [[tokenTable]] — banding bucket-join output before exact
-    * verification (the same candidate set [[minhashLshPairs]] builds
-    * from its row-local buckets). Exposed so the
-    * banding's measured quality (precision of its candidates, recall of
-    * its verified pairs vs the exact join) is a queryable number, the
-    * same accounting [[graft.vector.VectorOps]] does for ANN recall.
-    */
-  private[graft] def minhashLshCandidatesFromTok(
-      tok: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    candidatesFromBanded(minhashBandBuckets(tok, numHashes, bands))
-
   /** Canonical (id_a < id_b, deduplicated) candidate pairs from an
     * (id, bucket) band table — ONE definition of the bucket self-join,
     * shared by the single-config route and the band-count sweep so the
     * sweep can never silently measure a different candidate set than
     * the operator it tunes.
     */
-  private def candidatesFromBanded(banded: DataFrame): DataFrame =
+  private[graft] def candidatesFromBanded(banded: DataFrame): DataFrame =
     banded.as("a").join(banded.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
 
-  /** ROW-LOCAL (id, bucket) band rows — the same tokenize → distinct
-    * token-hash → masked-affine minhash → banded md5 math as
-    * [[minhashBandBuckets]], computed entirely inside one row with NO
-    * groupBy: the signature of a document depends only on that
-    * document, so the tokenTable/collect_list shuffle the batch path
-    * uses is an implementation convenience, not a semantic need. This
-    * kernel is what a STREAMING ingest probe rides (per-microbatch
-    * narrow map, no stateful aggregation), and it is pinned
-    * bit-identical to the batch path by DedupIndexIOSpec. Empty-token
-    * and null-text documents emit no rows, exactly like the batch
-    * route; null-id rows emit none either, as in the batch route.
+  /** The ONE MinHash kernel: a single narrow pass over (id, text) that
+    * computes each document's signature inside its row and hands it to
+    * `emit` — no (id, token) shuffle, no per-document `collect_list`,
+    * and the same pass a streaming ingest probe rides. Ids pass
+    * [[requireIntegralId]] and are carried as `long`; rows with a null
+    * id or a null text, and texts without tokens, emit nothing.
     */
-  private[graft] def rowLocalBandBuckets(
-      docs: DataFrame, numHashes: Int, bands: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+  private def mapSignatures[T: Encoder](
+      docs: DataFrame, numHashes: Int, idCol: String, textCol: String)(
+      emit: (java.security.MessageDigest, Long, Array[Long]) => Iterator[T]): Dataset[T] = {
+    requireIntegralId(docs, idCol)
     val spark = docs.sparkSession
     import spark.implicits._
     val coefs = minhashCoefficients(numHashes)
     val aCoef = coefs.map(_._1).toArray
     val bCoef = coefs.map(_._2).toArray
-    val rowsPerBand = numHashes / bands
     docs.filter(col(idCol).isNotNull && col(textCol).isNotNull)
       .select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        val hex = java.util.HexFormat.of() // lowercase, like SQL md5()
         it.flatMap { case (id, text) =>
+          // distinct md5 token hashes of the non-empty " "-split
+          // pieces, as in `tokens`
           val hsSet = new java.util.HashSet[java.lang.Long]()
           text.split(" ").foreach { w =>
             if (w.nonEmpty) hsSet.add(tokenHashJvm(md, w))
@@ -724,63 +699,94 @@ object TextOps {
               var mn = Long.MaxValue
               var u = 0
               while (u < hs.length) {
-                val v = (a * hs(u) + b) & 0x1FFFFFFFFFFFFFFFL
+                val v = (a * hs(u) + b) & 0x1FFFFFFFFFFFFFFFL // mod 2^61 of the wrapped sum
                 if (v < mn) mn = v
                 u += 1
               }
               sig(k) = mn
               k += 1
             }
-            (0 until bands).iterator.map { b =>
-              // the EXACT banding string of bandBucketsFromSigs:
-              // concat_ws(",", "b<k>", "<v>,<v>,...") and lowercase
-              // md5 hex
-              val sb = new StringBuilder("b").append(b)
-              var r = b * rowsPerBand
-              while (r < (b + 1) * rowsPerBand) { sb.append(',').append(sig(r)); r += 1 }
-              md.reset()
-              (id, hex.formatHex(md.digest(sb.toString.getBytes("UTF-8"))))
-            }
+            emit(md, id, sig)
           }
         }
-      }.toDF("id", "bucket")
+      }
   }
 
-  /** (id, sig) MinHash signature rows over a [[tokenTable]] — the
-    * shared kernel of the banding route and the estimator-error
-    * report. Null-id rows get no signature (their typed decode would
-    * fail, and a null id pairs with nothing), as in
-    * [[rowLocalBandBuckets]].
+  /** Fails with an IllegalArgumentException naming `idCol` and its type
+    * unless the column is byte, short, int or long — the MinHash id
+    * contract: ids are carried as `long`, and a cast would silently
+    * merge a fractional or string id with another (1.0 and 1.5 would
+    * both become document 1).
     */
-  private[graft] def minhashSignatures(tok: DataFrame, numHashes: Int): DataFrame = {
-    val spark = tok.sparkSession
+  private[graft] def requireIntegralId(docs: DataFrame, idCol: String): Unit = {
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    require(idType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }, s"MinHash ids must be byte, short, int or long: column $idCol is ${idType.simpleString}")
+  }
+
+  /** The `bands` (id, bucket) rows of one signature: band b's bucket is
+    * the lowercase md5 hex of "b<b>,<v>,<v>,..." over its
+    * numHashes/bands signature values — portable across engines,
+    * unlike murmur3 (SQL spells it md5(concat_ws(",", ...))).
+    */
+  private def bandRowsOf(
+      md: java.security.MessageDigest, id: Long, sig: Array[Long], bands: Int): Iterator[(Long, String)] = {
+    val rowsPerBand = sig.length / bands
+    (0 until bands).iterator.map { b =>
+      val sb = new StringBuilder("b").append(b)
+      var r = b * rowsPerBand
+      while (r < (b + 1) * rowsPerBand) { sb.append(',').append(sig(r)); r += 1 }
+      md.reset()
+      (id, java.util.HexFormat.of().formatHex(md.digest(sb.toString.getBytes("UTF-8"))))
+    }
+  }
+
+  /** (id, bucket) band rows of every document — the indexable unit of
+    * the LSH route, computed in the same narrow pass as its signature
+    * ([[mapSignatures]]). Candidate generation is a SELF-join
+    * ([[candidatesFromBanded]]) within one corpus, or a CROSS-probe
+    * ([[probeBuckets]]) of an increment against a corpus index, computed
+    * in [[incrementalLshPairs]] or stored by [[graft.io.DedupIndexIO]].
+    */
+  private[graft] def rowLocalBandBuckets(
+      docs: DataFrame, numHashes: Int, bands: Int,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val spark = docs.sparkSession
     import spark.implicits._
-    val aCoef = new Array[Long](numHashes)
-    val bCoef = new Array[Long](numHashes)
-    minhashCoefficients(numHashes).zipWithIndex
-      .foreach { case ((a, b), k) => aCoef(k) = a; bCoef(k) = b }
-    // signature kernel over a primitive Array[Long] of the doc's
-    // distinct token hashes — tight while-loops, no per-element boxing
-    tok.filter(col("id").isNotNull).select(col("id"), tokenHash(col("w")).as("h"))
-      .groupBy(col("id")).agg(collect_list(col("h")).as("hs"))
-      .as[(Long, Array[Long])]
-      .map { case (id, hs) =>
-        val sig = new Array[Long](numHashes)
-        var k = 0
-        while (k < numHashes) {
-          val a = aCoef(k); val b = bCoef(k)
-          var mn = Long.MaxValue
-          var t = 0
-          while (t < hs.length) {
-            val v = (a * hs(t) + b) & 0x1FFFFFFFFFFFFFFFL // mod 2^61 of the wrapped sum
-            if (v < mn) mn = v
-            t += 1
-          }
-          sig(k) = mn
-          k += 1
-        }
-        (id, sig)
-      }.toDF("id", "sig")
+    mapSignatures(docs, numHashes, idCol, textCol)(bandRowsOf(_, _, _, bands)).toDF("id", "bucket")
+  }
+
+  /** (id, sig) MinHash signature rows, for consumers that read the
+    * signature itself (the estimator-error report) or band it several
+    * ways ([[lshBandSweep]]); same kernel as [[rowLocalBandBuckets]].
+    */
+  private[graft] def minhashSignatures(
+      docs: DataFrame, numHashes: Int,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    mapSignatures(docs, numHashes, idCol, textCol)((_, id, sig) => Iterator.single((id, sig)))
+      .toDF("id", "sig")
+  }
+
+  /** Band an (id, sig) signature table into (id, bucket) rows with the
+    * kernel's own banding, so a banding SWEEP derives every band count
+    * from ONE materialized signature table instead of re-running the
+    * minhash kernel per configuration.
+    */
+  private[graft] def bandBucketsFromSigs(
+      sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val spark = sigs.sparkSession
+    import spark.implicits._
+    sigs.select(col("id"), col("sig")).as[(Long, Array[Long])]
+      .mapPartitions { it =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        it.flatMap { case (id, sig) => bandRowsOf(md, id, sig, bands) }
+      }.toDF("id", "bucket")
   }
 
   /** Per-hash-position fold of a signature table — the deterministic
@@ -798,33 +804,6 @@ object TextOps {
         max(col("mn")).as("max_mn"), expr("bit_xor(mn)").as("xor_mn"))
       .orderBy(col("k"))
 
-  /** (id, bucket) band rows of the MinHash signatures — the indexable
-    * unit of the LSH route. Exposed separately so candidate generation
-    * can be SELF-join (dedup within one corpus) or CROSS-join (an
-    * increment probing an existing corpus index in
-    * [[incrementalLshPairs]] / a stored one in
-    * [[graft.io.DedupIndexIO]]).
-    */
-  private[graft] def minhashBandBuckets(
-      tok: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    bandBucketsFromSigs(minhashSignatures(tok, numHashes), numHashes, bands)
-
-  /** Band the (id, sig) signature table into (id, bucket) rows —
-    * split out of [[minhashBandBuckets]] so a banding SWEEP can derive
-    * every band count from ONE materialized signature table instead of
-    * re-running the minhash kernel per configuration.
-    */
-  private[graft] def bandBucketsFromSigs(
-      sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    sigs.select(col("id"), explode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => md5(concat_ws(",", concat(lit("b"), b.cast("string")),
-          concat_ws(",", transform(slice(col("sig"), b * rows + 1, lit(rows)),
-            v => v.cast("string"))))))).as("bucket"))
-  }
-
   /** INCREMENTAL dedup — the daily-ingestion shape: near-dup pairs
     * between an `incoming` increment and an existing `base` corpus,
     * WITHOUT re-pairing base against itself. At 100 TB this is the
@@ -834,24 +813,41 @@ object TextOps {
     * as the corpus index and read back; recomputed here since the
     * harness is stateless), the increment's buckets probe them by
     * equi-join, and only cross-side candidates are exact-verified.
-    * Caller contract: ids are disjoint across sides (enforced loudly by
-    * the != filter only dropping self-ids).
+    *
+    * Caller contract: ids are disjoint across sides. Nothing checks it:
+    * the probe's `id_a != id_b` filter silently drops a pair whose two
+    * ids are equal, and an id present on both sides gets ONE token set
+    * in verification (the union of both sides' tokens).
     *
     * Output: (id_a = incoming doc, id_b = base doc, jaccard >= t).
     */
   def incrementalLshPairs(
       base: DataFrame, incoming: DataFrame,
       numHashes: Int, bands: Int, threshold: Double,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tokB = tokenTable(base, idCol, textCol)
-    val tokI = tokenTable(incoming, idCol, textCol)
-    val cand = minhashBandBuckets(tokI, numHashes, bands).toDF("id_a", "bucket")
-      .join(minhashBandBuckets(tokB, numHashes, bands).toDF("id_b", "bucket"), "bucket")
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    probeBuckets(
+      rowLocalBandBuckets(incoming, numHashes, bands, idCol, textCol),
+      rowLocalBandBuckets(base, numHashes, bands, idCol, textCol),
+      tokenTable(incoming, idCol, textCol), tokenTable(base, idCol, textCol), threshold)
+
+  /** The bucket CROSS-PROBE of an incoming (id, bucket) table against
+    * an index (id, bucket) table, exact-verified: bucket equi-join,
+    * self-ids dropped (`id_a != id_b`), distinct candidates, then
+    * [[verifyJaccardCandidates]] over the union of both sides' (id, w)
+    * token tables (ids disjoint across sides, so the union is a
+    * partition, not a merge). Returns (id_a = incoming doc,
+    * id_b = indexed doc, jaccard) — the shared tail of
+    * [[incrementalLshPairs]], [[graft.io.DedupIndexIO.probeIndex]] and
+    * [[CorpusOps.fuzzyDecontaminate]].
+    */
+  private[graft] def probeBuckets(
+      incoming: DataFrame, index: DataFrame,
+      tokIncoming: DataFrame, tokIndex: DataFrame, threshold: Double): DataFrame = {
+    val cand = incoming.toDF("id_a", "bucket")
+      .join(index.toDF("id_b", "bucket"), "bucket")
       .filter(col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-    // verification reads each side's tokens from the union table (ids
-    // are disjoint, so the union is a partition, not a merge)
-    verifyJaccardCandidates(tokI.union(tokB).distinct(), cand, threshold)
+    verifyJaccardCandidates(tokIncoming.union(tokIndex).distinct(), cand, threshold)
   }
 
   /** Exact-Jaccard verification of a candidate pair table — the shared
@@ -903,7 +899,7 @@ object TextOps {
     // exchange across both references via ReuseExchange
     val exact = jaccardPairsFromTokens(tok, threshold)
       .select(col("id_a"), col("id_b"))
-    val cand = minhashLshCandidatesFromTok(tok, numHashes, bands)
+    val cand = candidatesFromBanded(rowLocalBandBuckets(docs, numHashes, bands, idCol, textCol))
     val verified = cand.join(exact, Seq("id_a", "id_b"), "left_semi")
     exact.agg(count(lit(1)).as("n_exact"))
       .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
@@ -951,7 +947,7 @@ object TextOps {
       s"bands must divide numHashes: $b vs $numHashes"))
     val tok = tokenTable(docs, idCol, textCol).localCheckpoint()
     graft.model.Lineage.retire(tok)
-    val sigs = minhashSignatures(tok, numHashes).localCheckpoint()
+    val sigs = minhashSignatures(docs, numHashes, idCol, textCol).localCheckpoint()
     graft.model.Lineage.retire(sigs)
     lshBandSweepFromSigs(tok, sigs, numHashes, bandsList, threshold)
   }
@@ -1380,22 +1376,12 @@ object TextOps {
   def verifyPairsNgramJaccard(
       docs: DataFrame, candidates: DataFrame, n: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sh = shingleTable(docs, n, idCol, textCol)
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
     // distinct BEFORE joining: a generator that emits the same
     // (id_a, id_b) twice (e.g. multi-table LSH) would otherwise
     // multiply `inter` and inflate jaccard past the true value
-    val inter = candidates.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .distinct()
-      .join(sh.toDF("id_a", "w"), "id_a")
-      .join(sh.toDF("id_b", "w"), Seq("id_b", "w"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.toDF("id_a", "sz_a"), "id_a")
-      .join(sizes.toDF("id_b", "sz_b"), "id_b")
-      .withColumn("jaccard", col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    verifyJaccardCandidates(shingleTable(docs, n, idCol, textCol),
+      candidates.select(col("id_a").cast("long"), col("id_b").cast("long")).distinct(),
+      threshold)
   }
 
   /** Winnowing-based near-duplicate CANDIDATES — the join that makes
@@ -2414,11 +2400,12 @@ object TextOps {
     * the same sold-with-its-accuracy contract as the ANN recall and
     * sketch queries.
     *
-    * Cost shape at scale: signatures and candidates both come from the
-    * ONE distinct (id, token) table (shared shuffle subtree, reused
-    * exchange); the exact-Jaccard verification joins only the LSH
-    * CANDIDATES back to their token sets — cost scales with candidate
-    * count, never corpus^2.
+    * Cost shape at scale: signatures come from the row-local MinHash
+    * kernel (no shuffle) and the candidates band those same
+    * signatures; the distinct (id, token) table serves only the
+    * exact-Jaccard side, which joins just the LSH CANDIDATES back to
+    * their token sets — cost scales with candidate count, never
+    * corpus^2.
     *
     * Returns (id_a, id_b, n_eq, est_j, exact_j, abs_err).
     */
@@ -2426,8 +2413,8 @@ object TextOps {
       docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val tok = tokenTable(docs, idCol, textCol)
-    val sigs = minhashSignatures(tok, numHashes)
-    val cand = minhashLshCandidatesFromTok(tok, numHashes, bands)
+    val sigs = minhashSignatures(docs, numHashes, idCol, textCol)
+    val cand = candidatesFromBanded(bandBucketsFromSigs(sigs, numHashes, bands))
     val nEq = cand
       .join(sigs.as("sa"), col("id_a") === col("sa.id"))
       .join(sigs.as("sb"), col("id_b") === col("sb.id"))

@@ -67,22 +67,39 @@ class DedupIndexIOSpec extends AnyFunSuite {
   }
 
   test("row-local band buckets are bit-identical to the batch tokenTable route") {
-    // the streaming probe kernel must produce EXACTLY the (id, bucket)
-    // rows the batch shuffle route computes — same token hashes, same
-    // masked-affine minhash, same banding md5 — or a streamed shard
-    // would probe a different LSH space than the index it rolls into.
-    // A null-text row and a null-id row (carrying a real document's
-    // text) ride along: both routes must emit no rows for either
+    // the MinHash kernel must produce EXACTLY the (id, sig) and
+    // (id, bucket) rows the token-table reference route computes —
+    // same token hashes, same masked-affine minhash, same banding md5 —
+    // or a streamed shard would probe a different LSH space than the
+    // index it rolls into. A null-text row, a null-id row (carrying a
+    // real document's text), an all-spaces document and a document of
+    // repeated words ride along: no route may emit a row for the first
+    // three, and a repeated word counts once
+    import graft.text.{TextOps, TokenTableMinhash}
     val head = docs.filter(col("doc_id") < 300)
     val d = head
       .union(head.limit(1).select(lit(null).cast("long").as("doc_id"), col("text")))
       .union(head.limit(1).select(lit(300L).as("doc_id"), lit(null).cast("string").as("text")))
-    val batch = graft.text.TextOps.minhashBandBuckets(
-        graft.text.TextOps.tokenTable(d), numHashes = 64, bands = 16)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val rowLocal = graft.text.TextOps.rowLocalBandBuckets(d, 64, 16)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      .union(head.limit(1).select(lit(301L).as("doc_id"), lit("    ").as("text")))
+      .union(head.limit(1).select(lit(302L).as("doc_id"),
+        lit("gamma  alpha beta alpha gamma alpha ").as("text")))
+    val tok = TextOps.tokenTable(d)
+    def sigRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList)).toSet
+    val refSigs = sigRows(TokenTableMinhash.signatures(tok, 64))
+    val sigs = sigRows(TextOps.minhashSignatures(d, 64))
+    assert(sigs == refSigs && sigs.nonEmpty,
+      s"kernel ${sigs.size} signatures vs reference ${refSigs.size}")
+    assert(sigs.exists(_._1 == 302L) && !sigs.exists(_._1 == 301L) && !sigs.exists(_._1 == 300L))
+    def bucketRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val batch = bucketRows(TokenTableMinhash.bandBuckets(tok, numHashes = 64, bands = 16))
+    val rowLocal = bucketRows(TextOps.rowLocalBandBuckets(d, 64, 16))
     assert(rowLocal == batch && rowLocal.nonEmpty,
       s"row-local ${rowLocal.size} rows vs batch ${batch.size}")
+    // banding a stored signature table (the sweep's route) is the same
+    // JVM banding
+    val fromSigs = bucketRows(TextOps.bandBucketsFromSigs(TextOps.minhashSignatures(d, 64), 64, 16))
+    assert(fromSigs == batch, s"banded signatures ${fromSigs.size} rows vs batch ${batch.size}")
   }
 }

@@ -1171,7 +1171,7 @@ class StreamSpec extends AnyFunSuite {
     val streamed = spark.table("index_probe").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val shard = docs.filter(col("doc_id") % 3 === 0)
-    val batchCand = graft.text.TextOps.minhashBandBuckets(
+    val batchCand = graft.text.TokenTableMinhash.bandBuckets(
         graft.text.TextOps.tokenTable(shard), 64, 16).toDF("id_a", "bucket")
       .join(spark.read.parquet(s"$ixDir/buckets").toDF("id_b", "bucket"), "bucket")
       .filter(col("id_a") =!= col("id_b"))

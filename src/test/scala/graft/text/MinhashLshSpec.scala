@@ -3,20 +3,21 @@ package graft.text
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType}
 import graft.TestSpark
 
 /** [[TextOps.minhashLshPairs]] builds its candidates from the
   * row-local band buckets. The token-table route it replaced — minhash
-  * signatures from a shuffled (id, token) table, then the same bucket
-  * self-join and verification — is kept here as the reference.
+  * signatures from a shuffled (id, token) table ([[TokenTableMinhash]]),
+  * then the same bucket self-join and verification — is the reference.
   */
 class MinhashLshSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def tokenTableRoute(docs: DataFrame, threshold: Double): DataFrame = {
     val tok = docs.select(col("doc_id").as("id"), explode(TextOps.tokens(col("text"))).as("w")).distinct()
-    TextOps.verifyJaccardCandidates(tok, TextOps.minhashLshCandidatesFromTok(tok, 64, 16), threshold)
+    TextOps.verifyJaccardCandidates(
+      tok, TextOps.candidatesFromBanded(TokenTableMinhash.bandBuckets(tok, 64, 16)), threshold)
   }
 
   private def rows(df: DataFrame): Set[(Long, Long, Double)] =
@@ -50,6 +51,24 @@ class MinhashLshSpec extends AnyFunSuite {
         s"$t ids came back as ${got.schema.simpleString}")
       val want = rows(tokenTableRoute(docs, 0.8))
       assert(rows(got) == want && want.nonEmpty, s"$t: got ${rows(got).size} pairs vs ${want.size}")
+    }
+  }
+
+  test("non-integral ids are rejected, naming the column and its type") {
+    // a cast to long would silently merge ids 1.0 and 1.5 into one
+    // document; the kernel refuses the column instead
+    val head = corpus()
+    for ((t, name) <- Seq[(DataType, String)]((DoubleType, "double"), (StringType, "string"))) {
+      val docs = head.select(col("doc_id").cast(t).as("doc_id"), col("text"))
+      val e1 = intercept[IllegalArgumentException](
+        TextOps.minhashLshPairs(docs, numHashes = 64, bands = 16, threshold = 0.8))
+      val e2 = intercept[IllegalArgumentException](
+        TextOps.incrementalLshPairs(docs.filter(col("doc_id") < 100), docs.filter(col("doc_id") >= 100),
+          numHashes = 64, bands = 16, threshold = 0.8))
+      val e3 = intercept[IllegalArgumentException](
+        CorpusOps.fuzzyDecontaminate(docs, docs.filter(col("doc_id") < 10)))
+      for (e <- Seq(e1, e2, e3))
+        assert(e.getMessage.contains("doc_id") && e.getMessage.contains(name), e.getMessage)
     }
   }
 }
