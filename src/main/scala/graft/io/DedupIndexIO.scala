@@ -17,6 +17,11 @@ import graft.text.TextOps
   *   <path>/tokens/         (id, w)       — the exact-verify payload
   *   <path>/dedup_index.json  {"format": 1, "num_hashes": H, "bands": B}
   *
+  * A probe folds `tokens/` into per-document sorted token sets as it
+  * reads it ([[TextOps.foldTokenSets]]: an id appended twice gets the
+  * union of its rows), the form verification intersects; the stored
+  * layout stays (id, w) rows, format 1.
+  *
   * The buckets come from [[TextOps.rowLocalBandBuckets]], the one
   * MinHash kernel that batch dedup, the in-memory incremental probe
   * and the streaming probe also use, so every route bands documents
@@ -87,8 +92,9 @@ object DedupIndexIO {
 
   /** Probe the stored index with an arriving shard: the shard's band
     * buckets (computed under the SIDEcar's parameters) cross-probe the
-    * stored buckets and the candidates exact-verify against the union
-    * token table ([[TextOps.probeBuckets]]). Returns (id_a = shard
+    * stored buckets and the candidates exact-verify against the shard's
+    * token sets and the stored tokens folded to sets
+    * ([[TextOps.probeBuckets]]). Returns (id_a = shard
     * doc, id_b = indexed doc, jaccard) — exactly
     * [[TextOps.incrementalLshPairs]]' output with the base side read
     * instead of recomputed, under the same caller contract: shard ids
@@ -103,7 +109,7 @@ object DedupIndexIO {
     TextOps.probeBuckets(
       TextOps.rowLocalBandBuckets(incoming, numHashes, bands, idCol, textCol),
       spark.read.parquet(s"$path/buckets"),
-      TextOps.tokenTable(incoming, idCol, textCol),
-      spark.read.parquet(s"$path/tokens"), threshold)
+      TextOps.tokenSets(incoming, idCol, textCol),
+      TextOps.foldTokenSets(spark.read.parquet(s"$path/tokens")), threshold)
   }
 }

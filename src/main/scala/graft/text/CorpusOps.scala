@@ -547,9 +547,9 @@ object CorpusOps {
     * ID NAMESPACING: the two corpora are INDEPENDENT, so raw id values
     * may collide across sides while naming different documents. Both
     * sides are remapped into disjoint long namespaces (train → 2·id,
-    * eval → 2·id + 1) before any token-table union, so a raw-id
-    * collision can never merge two documents' token sets under one key
-    * and corrupt the Jaccard verification — unlike
+    * eval → 2·id + 1) before banding and verification, so a raw-id
+    * collision can never pair a document with itself or confuse two
+    * documents' token sets — unlike
     * [[TextOps.incrementalLshPairs]], whose caller contract demands
     * disjoint ids, this operator makes no cross-corpus id assumption.
     * (Ids must be byte, short, int or long and fit in 62 bits — the
@@ -573,7 +573,7 @@ object CorpusOps {
     val flagged = TextOps.probeBuckets(
         TextOps.rowLocalBandBuckets(t, numHashes, bands, "gid", textCol),
         TextOps.rowLocalBandBuckets(e, numHashes, bands, "gid", textCol),
-        TextOps.tokenTable(t, "gid", textCol), TextOps.tokenTable(e, "gid", textCol), threshold)
+        TextOps.tokenSets(t, "gid", textCol), TextOps.tokenSets(e, "gid", textCol), threshold)
       .select(col("id_a").as("flag")).distinct()
     train.join(flagged, trainTag === col("flag"), "left_anti")
   }

@@ -19,6 +19,75 @@ object TextOps {
     */
   def tokens(text: Column): Column = array_remove(split(text, " "), "")
 
+  /** The distinct tokens of `text` sorted in [[utf8Order]]: the same
+    * non-empty " "-split pieces as [[tokens]], as a set. The MinHash
+    * kernel hashes it and exact verification intersects it, so both
+    * read one definition of a document's set.
+    */
+  private[graft] def tokenSet(text: String): Array[String] = {
+    val ws = text.split(" ")
+    java.util.Arrays.sort(ws, utf8Order)
+    // sorted, so empty pieces lead and duplicates are adjacent
+    var n = 0
+    var i = 0
+    while (i < ws.length) {
+      val w = ws(i)
+      if (w.nonEmpty && (n == 0 || w != ws(n - 1))) { ws(n) = w; n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(ws, n)
+  }
+
+  /** Spark's string order, UTF-8 byte order, computed on the UTF-16
+    * units without encoding: at the first differing unit, surrogates
+    * (U+D800..U+DFFF, which only occur as halves of code points above
+    * U+FFFF) rank above U+E000..U+FFFF. For well-formed strings that is
+    * code-point order, which UTF-8 preserves; Java's own String order
+    * differs exactly there (U+E000 sorts before U+1F600 in UTF-8 and
+    * after it in UTF-16).
+    */
+  private[graft] val utf8Order: java.util.Comparator[String] = (a: String, b: String) => {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i == n) a.length - b.length
+    else {
+      def rank(c: Char): Int =
+        if (c < 0xD800) c else if (c < 0xE000) c + 0x2000 else c - 0x800
+      rank(a.charAt(i)) - rank(b.charAt(i))
+    }
+  }
+
+  /** (id, toks) per-document token sets of (id, text) rows, toks as in
+    * [[tokenSet]] — the input of [[verifyJaccardCandidates]] for the
+    * MinHash routes, whose ids pass [[requireIntegralId]] and are
+    * carried as `long`; rows with a null id or a null text have no set.
+    * A narrow map, like the kernel: the set is built once per row and
+    * stored in it, so a join that matches a document to many candidate
+    * pairs reads the set instead of rebuilding it per match (a column
+    * expression would be re-evaluated per match inside a broadcast
+    * join's generated loop).
+    */
+  private[graft] def tokenSets(
+      docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    requireIntegralId(docs, idCol)
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.filter(col(idCol).isNotNull && col(textCol).isNotNull)
+      .select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
+      .mapPartitions(_.map { case (id, text) => (id, tokenSet(text)) })
+      .toDF("id", "toks")
+  }
+
+  /** The one fold of an (id, w) element table into per-document sets:
+    * (id, toks), toks distinct and sorted in Spark's string order (the
+    * order of [[tokenSet]]). Routes whose elements are already a table
+    * (the prefix-filter joins, shingles, a stored index) verify through
+    * it; it is their size aggregate too, since |set| = size(toks).
+    */
+  private[graft] def foldTokenSets(tok: DataFrame): DataFrame =
+    tok.groupBy(col("id")).agg(sort_array(collect_set(col("w"))).as("toks"))
+
   /** 60-bit deterministic token hash (md5 prefix). */
   def tokenHash(w: Column): Column =
     conv(substring(md5(w), 1, 15), 16, 10).cast("long")
@@ -87,21 +156,18 @@ object TextOps {
   def ngramJaccardPairs(
       docs: DataFrame, n: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    jaccardFromTok(
-      docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-        .select(col("id"), explode(shinglesOf(col("toks"), n)).as("w")).distinct(),
-      threshold)
+    jaccardFromTok(shingleTable(docs, n, idCol, textCol), threshold)
 
   /** Prefix-filtered set-similarity join over a distinct (id, w)
     * element table (see [[jaccardPairs]] for the filtering argument).
     */
   private def jaccardFromTok(tok: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    val sizes = tok.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    val sets = foldTokenSets(tok)
     val dfreq = tok.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val prefix = tok.join(dfreq, "w")
       .withColumn("rnk", row_number().over(W.partitionBy(col("id")).orderBy(col("df"), col("w"))))
-      .join(sizes, "id")
+      .join(sets.select(col("id"), size(col("toks")).as("sz")), "id")
       // ceil guarded against fp overshoot: for thresholds where t*sz is
       // an exact integer k the double product can land at k+ulp, which
       // would shrink the prefix by one and silently drop a pair at
@@ -112,7 +178,7 @@ object TextOps {
     val cand = prefix.as("a").join(prefix.as("b"),
         col("a.w") === col("b.w") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    verifyJaccardCandidates(tok, cand, threshold)
+    verifyJaccardCandidates(sets, sets, cand, threshold)
   }
 
   /** Token-set CONTAINMENT join (directed): emits (id_a, id_b,
@@ -128,11 +194,13 @@ object TextOps {
     * tokens with B, so each A probes the token index by its rare end;
     * the containing side cannot be size-pruned (containment is
     * asymmetric — B may be arbitrarily large). Candidates verify with
-    * the exact intersection, so results equal the unpruned join.
+    * the exact intersection of the folded sets ([[pairOverlap]]), so
+    * results equal the unpruned join.
     */
   def containmentPairs(tok: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    val sizes = tok.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    val sets = foldTokenSets(tok)
+    val sizes = sets.select(col("id"), size(col("toks")).as("sz"))
     val dfreq = tok.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val prefixA = tok.join(dfreq, "w")
       .withColumn("rnk", row_number().over(W.partitionBy(col("id")).orderBy(col("df"), col("w"))))
@@ -143,12 +211,7 @@ object TextOps {
     val cand = prefixA.as("a").join(tok.toDF("bid", "w"), "w")
       .filter(col("id") =!= col("bid"))
       .select(col("id").as("id_a"), col("bid").as("id_b")).distinct()
-    val inter = cand
-      .join(tok.toDF("id_a", "w"), "id_a")
-      .join(tok.toDF("id_b", "w"), Seq("id_b", "w"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.toDF("id_a", "sz_a"), "id_a")
+    pairOverlap(sets, sets, cand)
       .withColumn("containment", col("inter") / col("sz_a"))
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("containment"), 6).as("containment"))
@@ -578,18 +641,20 @@ object TextOps {
     * bucket are candidates. Buckets are md5 over the band's joined
     * signature values — portable across engines, unlike murmur3.
     *
-    * Verification joins ONLY the candidate pairs back to their token
-    * sets (two narrow joins on id + one count per pair), never the
-    * full-corpus similarity join — at 100 TB the whole point of LSH is
-    * that cost scales with candidates, not with corpus^2.
+    * Verification joins ONLY the candidate pairs back to their
+    * documents' token sets (two joins on id, then one merge per pair),
+    * never the full-corpus similarity join — at 100 TB the whole point
+    * of LSH is that cost scales with candidates, not with corpus^2.
     *
     * Candidates come from [[rowLocalBandBuckets]] — the one MinHash
     * kernel, a narrow map over the text with no (id, token) shuffle —
-    * so the only exchange before the candidate self-join is the bucket
-    * shuffle both of its sides share. The distinct (id, token) table
-    * feeds verification only: the size aggregate and both intersection
-    * joins read it, and Spark's ReuseExchange materializes its distinct
-    * once for all three.
+    * grouped by one exchange on the bucket ([[candidatesFromBanded]]),
+    * so the kernel runs once. Verification reads each document's
+    * sorted token set ([[tokenSets]], a narrow map over the text):
+    * no (id, token) table is built, shuffled or aggregated.
+    *
+    * Ids are unique per row of `docs`: a repeated id gets one set per
+    * row, not the union of its rows' tokens.
     *
     * Ids must be byte, short, int or long (the kernel carries them as
     * `long` and rejects any other type); the output's `id_a` / `id_b`
@@ -602,7 +667,8 @@ object TextOps {
     val idType = docs.select(col(idCol)).schema.head.dataType
     val cand = candidatesFromBanded(rowLocalBandBuckets(docs, numHashes, bands, idCol, textCol))
       .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"))
-    verifyJaccardCandidates(tokenTable(docs, idCol, textCol), cand, threshold)
+    val sets = tokenSets(docs, idCol, textCol)
+    verifyJaccardCandidates(sets, sets, cand, threshold)
   }
 
   /** DEDUP IMPACT REPORT — the per-source removal summary a data team
@@ -649,15 +715,27 @@ object TextOps {
   }
 
   /** Canonical (id_a < id_b, deduplicated) candidate pairs from an
-    * (id, bucket) band table — ONE definition of the bucket self-join,
+    * (id, bucket) band table — ONE definition of bucket co-membership,
     * shared by the single-config route and the band-count sweep so the
     * sweep can never silently measure a different candidate set than
-    * the operator it tunes.
+    * the operator it tunes. One exchange on `bucket` gathers each
+    * bucket's ids; the sorted ids give every id_a < id_b pair of the
+    * bucket (so the pairs do not depend on `collect_list` order), and
+    * a distinct merges pairs that share several buckets. The input is
+    * read once, so the kernel under it runs once.
     */
-  private[graft] def candidatesFromBanded(banded: DataFrame): DataFrame =
-    banded.as("a").join(banded.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
+  private[graft] def candidatesFromBanded(banded: DataFrame): DataFrame = {
+    val spark = banded.sparkSession
+    import spark.implicits._
+    banded.groupBy(col("bucket")).agg(collect_list(col("id").cast("long")).as("ids"))
+      .filter(size(col("ids")) >= 2)
+      .select(col("ids")).as[Array[Long]]
+      .flatMap { ids =>
+        java.util.Arrays.sort(ids)
+        for (i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator if ids(i) < ids(j))
+          yield (ids(i), ids(j))
+      }.toDF("id_a", "id_b").distinct()
+  }
 
   /** The ONE MinHash kernel: a single narrow pass over (id, text) that
     * computes each document's signature inside its row and hands it to
@@ -680,18 +758,15 @@ object TextOps {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, text) =>
-          // distinct md5 token hashes of the non-empty " "-split
-          // pieces, as in `tokens`
-          val hsSet = new java.util.HashSet[java.lang.Long]()
-          text.split(" ").foreach { w =>
-            if (w.nonEmpty) hsSet.add(tokenHashJvm(md, w))
-          }
-          if (hsSet.isEmpty) Iterator.empty
+          val toks = tokenSet(text)
+          if (toks.isEmpty) Iterator.empty
           else {
-            val hs = new Array[Long](hsSet.size)
-            val hit = hsSet.iterator()
+            // one md5 per distinct word: MinHash is a function of the
+            // set, and a hash collision between two words repeats a
+            // value without moving any minimum
+            val hs = new Array[Long](toks.length)
             var t = 0
-            while (hit.hasNext) { hs(t) = hit.next(); t += 1 }
+            while (t < toks.length) { hs(t) = tokenHashJvm(md, toks(t)); t += 1 }
             val sig = new Array[Long](numHashes)
             var k = 0
             while (k < numHashes) {
@@ -816,8 +891,8 @@ object TextOps {
     *
     * Caller contract: ids are disjoint across sides. Nothing checks it:
     * the probe's `id_a != id_b` filter silently drops a pair whose two
-    * ids are equal, and an id present on both sides gets ONE token set
-    * in verification (the union of both sides' tokens).
+    * ids are equal. Verification reads id_a's set from `incoming` and
+    * id_b's from `base`.
     *
     * Output: (id_a = incoming doc, id_b = base doc, jaccard >= t).
     */
@@ -828,46 +903,62 @@ object TextOps {
     probeBuckets(
       rowLocalBandBuckets(incoming, numHashes, bands, idCol, textCol),
       rowLocalBandBuckets(base, numHashes, bands, idCol, textCol),
-      tokenTable(incoming, idCol, textCol), tokenTable(base, idCol, textCol), threshold)
+      tokenSets(incoming, idCol, textCol), tokenSets(base, idCol, textCol), threshold)
 
   /** The bucket CROSS-PROBE of an incoming (id, bucket) table against
     * an index (id, bucket) table, exact-verified: bucket equi-join,
     * self-ids dropped (`id_a != id_b`), distinct candidates, then
-    * [[verifyJaccardCandidates]] over the union of both sides' (id, w)
-    * token tables (ids disjoint across sides, so the union is a
-    * partition, not a merge). Returns (id_a = incoming doc,
-    * id_b = indexed doc, jaccard) — the shared tail of
-    * [[incrementalLshPairs]], [[graft.io.DedupIndexIO.probeIndex]] and
+    * [[verifyJaccardCandidates]] with id_a's set from `setsIncoming`
+    * and id_b's from `setsIndex` (both (id, toks)). Returns
+    * (id_a = incoming doc, id_b = indexed doc, jaccard) — the shared
+    * tail of [[incrementalLshPairs]],
+    * [[graft.io.DedupIndexIO.probeIndex]] and
     * [[CorpusOps.fuzzyDecontaminate]].
     */
   private[graft] def probeBuckets(
       incoming: DataFrame, index: DataFrame,
-      tokIncoming: DataFrame, tokIndex: DataFrame, threshold: Double): DataFrame = {
+      setsIncoming: DataFrame, setsIndex: DataFrame, threshold: Double): DataFrame = {
     val cand = incoming.toDF("id_a", "bucket")
       .join(index.toDF("id_b", "bucket"), "bucket")
       .filter(col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-    verifyJaccardCandidates(tokIncoming.union(tokIndex).distinct(), cand, threshold)
+    verifyJaccardCandidates(setsIncoming, setsIndex, cand, threshold)
   }
 
-  /** Exact-Jaccard verification of a candidate pair table — the shared
-    * tail of the LSH and prefix-filter routes: two narrow joins on id,
-    * identical output to the unpruned join restricted to `cand`.
+  /** (id_a, id_b, inter, sz_a, sz_b) for each row of a candidate pair
+    * table: the pair joins id_a's (id, toks) row of `setsA` and id_b's
+    * of `setsB`, and |A ∩ B| is one linear merge of the two sorted sets
+    * comparing the strings themselves ([[graft.functions.SortedOverlap]]),
+    * so the count is exact; the sizes are the set lengths. The ONE
+    * exact set intersection: Jaccard verification, containment and the
+    * estimator-error report all read it. A pair sharing no token has
+    * inter = 0; a pair with an id missing from its side has no row.
+    * Any other column of a sets table rides along, suffixed `_a` / `_b`.
+    */
+  private[graft] def pairOverlap(setsA: DataFrame, setsB: DataFrame, cand: DataFrame): DataFrame = {
+    def side(sets: DataFrame, s: String): DataFrame =
+      sets.select(sets.columns.toSeq.map(c => col(c).as(s"${c}_$s")): _*)
+    cand
+      .join(side(setsA, "a"), "id_a")
+      .join(side(setsB, "b"), "id_b")
+      .withColumn("inter", graft.functions.TokenSets.sortedOverlap(col("toks_a"), col("toks_b")))
+      .withColumn("sz_a", size(col("toks_a")).cast("long"))
+      .withColumn("sz_b", size(col("toks_b")).cast("long"))
+      .drop("toks_a", "toks_b")
+  }
+
+  /** Exact-Jaccard verification of a distinct candidate pair table —
+    * the shared tail of the LSH and prefix-filter routes: the
+    * [[pairOverlap]] of each pair, kept when
+    * inter / (sz_a + sz_b - inter) >= threshold; identical output to
+    * the unpruned join restricted to `cand`.
     */
   private[graft] def verifyJaccardCandidates(
-      tok: DataFrame, cand: DataFrame, threshold: Double): DataFrame = {
-    val sizes = tok.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val inter = cand
-      .join(tok.toDF("id_a", "w"), "id_a")
-      .join(tok.toDF("id_b", "w"), Seq("id_b", "w")) // USING(id_b, w) = token intersection
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+      setsA: DataFrame, setsB: DataFrame, cand: DataFrame, threshold: Double): DataFrame =
+    pairOverlap(setsA, setsB, cand)
       .withColumn("jaccard", col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
 
   /** Measured LSH dedup QUALITY — one summary row pinning what the
     * banding actually buys: `n_exact` (pairs the exact prefix-filtered
@@ -922,7 +1013,7 @@ object TextOps {
     * probe here): the token table and the `numHashes`-wide signature
     * table are each materialized ONCE (`localCheckpoint`); a band
     * count then costs only its banding projection and bucket
-    * self-join. Exact verification — the sweep's expensive
+    * grouping. Exact verification — the sweep's expensive
     * token-intersection join — runs ONCE over the DISTINCT UNION of
     * every configuration's candidates (the sets overlap heavily: a
     * high-similarity pair collides under most configurations), and
@@ -1377,9 +1468,10 @@ object TextOps {
       docs: DataFrame, candidates: DataFrame, n: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // distinct BEFORE joining: a generator that emits the same
-    // (id_a, id_b) twice (e.g. multi-table LSH) would otherwise
-    // multiply `inter` and inflate jaccard past the true value
-    verifyJaccardCandidates(shingleTable(docs, n, idCol, textCol),
+    // (id_a, id_b) twice (e.g. multi-table LSH) would otherwise emit
+    // the pair twice
+    val sets = foldTokenSets(shingleTable(docs, n, idCol, textCol))
+    verifyJaccardCandidates(sets, sets,
       candidates.select(col("id_a").cast("long"), col("id_b").cast("long")).distinct(),
       threshold)
   }
@@ -2402,39 +2494,32 @@ object TextOps {
     *
     * Cost shape at scale: signatures come from the row-local MinHash
     * kernel (no shuffle) and the candidates band those same
-    * signatures; the distinct (id, token) table serves only the
-    * exact-Jaccard side, which joins just the LSH CANDIDATES back to
-    * their token sets — cost scales with candidate count, never
-    * corpus^2.
+    * signatures; each candidate joins its two documents' (token set,
+    * signature) rows once, and the exact side is the verification's
+    * own [[pairOverlap]] (a pair sharing no token has c = 0) — cost
+    * scales with candidate count, never corpus^2.
     *
     * Returns (id_a, id_b, n_eq, est_j, exact_j, abs_err).
     */
   def minhashJaccardEst(
       docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tok = tokenTable(docs, idCol, textCol)
     val sigs = minhashSignatures(docs, numHashes, idCol, textCol)
     val cand = candidatesFromBanded(bandBucketsFromSigs(sigs, numHashes, bands))
-    val nEq = cand
-      .join(sigs.as("sa"), col("id_a") === col("sa.id"))
-      .join(sigs.as("sb"), col("id_b") === col("sb.id"))
-      .select(col("id_a"), col("id_b"),
-        aggregate(zip_with(col("sa.sig"), col("sb.sig"),
-            (x, y) => when(x === y, 1L).otherwise(0L)),
-          lit(0L), (acc, v) => acc + v).as("n_eq"))
-    val sizes = tok.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val inter = cand
-      .join(tok.as("ta"), col("id_a") === col("ta.id"))
-      .join(tok.as("tb"), col("id_b") === col("tb.id") && col("ta.w") === col("tb.w"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("c"))
+    // each document's signature rides with its token set, so a pair
+    // joins one row per side for both the estimate and the exact count
+    val sigSets = tokenSets(docs, idCol, textCol).join(sigs, "id")
     val est = col("n_eq") / lit(numHashes.toDouble)
-    nEq.join(inter, Seq("id_a", "id_b"), "left").na.fill(0L, Seq("c"))
-      .join(sizes.as("za"), col("id_a") === col("za.id"))
-      .join(sizes.as("zb"), col("id_b") === col("zb.id"))
+    pairOverlap(sigSets, sigSets, cand)
+      .select(col("id_a"), col("id_b"),
+        aggregate(zip_with(col("sig_a"), col("sig_b"),
+            (x, y) => when(x === y, 1L).otherwise(0L)),
+          lit(0L), (acc, v) => acc + v).as("n_eq"),
+        col("inter").as("c"), col("sz_a"), col("sz_b"))
       .select(col("id_a"), col("id_b"), col("n_eq"),
         round(est, 6).as("est_j"),
-        round(col("c") * lit(1.0) / (col("za.sz") + col("zb.sz") - col("c")), 6).as("exact_j"),
-        round(abs(est - col("c") * lit(1.0) / (col("za.sz") + col("zb.sz") - col("c"))), 6)
+        round(col("c") * lit(1.0) / (col("sz_a") + col("sz_b") - col("c")), 6).as("exact_j"),
+        round(abs(est - col("c") * lit(1.0) / (col("sz_a") + col("sz_b") - col("c"))), 6)
           .as("abs_err"))
   }
 
@@ -2886,9 +2971,7 @@ object TextOps {
     */
 
   /** a < b in UTF-8 byte order — Spark's string ordering. */
-  private[text] def utf8Lt(a: String, b: String): Boolean =
-    java.util.Arrays.compareUnsigned(a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
+  private[text] def utf8Lt(a: String, b: String): Boolean = utf8Order.compare(a, b) < 0
 
   /** The driver-local sequential merge loop (batch == 1 reference
     * semantics) over a collected vocabulary — the bounded-local

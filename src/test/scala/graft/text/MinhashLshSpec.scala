@@ -7,17 +7,17 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
 import graft.TestSpark
 
 /** [[TextOps.minhashLshPairs]] builds its candidates from the
-  * row-local band buckets. The token-table route it replaced — minhash
-  * signatures from a shuffled (id, token) table ([[TokenTableMinhash]]),
-  * then the same bucket self-join and verification — is the reference.
+  * row-local band buckets and verifies them on per-document token
+  * sets. The token-table route it replaced — minhash signatures from a
+  * shuffled (id, token) table, a bucket self-join and a token-level
+  * intersection join ([[TokenTableMinhash]]) — is the reference.
   */
 class MinhashLshSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def tokenTableRoute(docs: DataFrame, threshold: Double): DataFrame = {
     val tok = docs.select(col("doc_id").as("id"), explode(TextOps.tokens(col("text"))).as("w")).distinct()
-    TextOps.verifyJaccardCandidates(
-      tok, TextOps.candidatesFromBanded(TokenTableMinhash.bandBuckets(tok, 64, 16)), threshold)
+    TokenTableMinhash.lshPairs(tok, 64, 16, threshold)
   }
 
   private def rows(df: DataFrame): Set[(Long, Long, Double)] =
@@ -52,6 +52,36 @@ class MinhashLshSpec extends AnyFunSuite {
       val want = rows(tokenTableRoute(docs, 0.8))
       assert(rows(got) == want && want.nonEmpty, s"$t: got ${rows(got).size} pairs vs ${want.size}")
     }
+  }
+
+  test("executed plan: the kernel runs once, no token explode, no exchange keyed on a token") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, SerializeFromObjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.ArrayType
+    object H extends AdaptiveSparkPlanHelper
+    val df = TextOps.minhashLshPairs(corpus(), numHashes = 64, bands = 16, threshold = 0.8)
+    df.collect()
+    val plan: SparkPlan = df.queryExecution.executedPlan
+    // typed maps by the rows they emit: the kernel's (id, bucket), the
+    // token sets' (id, toks)
+    val emitted = H.collect(plan) { case s: SerializeFromObjectExec => s.output.map(_.dataType) }
+    val kernels = emitted.count(_ == Seq(LongType, StringType))
+    assert(kernels == 1, s"the kernel runs $kernels times:\n$plan")
+    assert(emitted.count { case Seq(LongType, _: ArrayType) => true; case _ => false } == 1,
+      s"token sets are not built once:\n$plan")
+    val splits = H.collect(plan) { case g: GenerateExec if g.generator.toString.contains("split") => g }
+    assert(splits.isEmpty, s"a Generate explodes split(text):\n$plan")
+    val keys = H.collect(plan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.asInstanceOf[Attribute].name))
+        case _ => Nil
+      }
+    }.flatten.toSet
+    assert(keys.nonEmpty && keys.subsetOf(Set("bucket", "id_a", "id_b", "id")),
+      s"exchange keys $keys:\n$plan")
   }
 
   test("non-integral ids are rejected, naming the column and its type") {

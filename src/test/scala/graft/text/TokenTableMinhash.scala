@@ -62,4 +62,45 @@ object TokenTableMinhash {
   /** (id, bucket) band rows over a [[TextOps.tokenTable]]. */
   def bandBuckets(tok: DataFrame, numHashes: Int, bands: Int): DataFrame =
     bandBucketsFromSigs(signatures(tok, numHashes), numHashes, bands)
+
+  /** Canonical (id_a < id_b) candidates of a band table as a bucket
+    * self-join. */
+  def selfJoinCandidates(banded: DataFrame): DataFrame =
+    banded.as("a").join(banded.as("b"),
+        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
+
+  /** Exact Jaccard of distinct candidate pairs at token granularity:
+    * the token intersection is an equi-join on (id_b, w), the sizes a
+    * count per id of the distinct (id, w) table. */
+  def verify(tok: DataFrame, cand: DataFrame, threshold: Double): DataFrame = {
+    val sizes = tok.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    cand
+      .join(tok.toDF("id_a", "w"), "id_a")
+      .join(tok.toDF("id_b", "w"), Seq("id_b", "w"))
+      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
+      .join(sizes.toDF("id_a", "sz_a"), "id_a")
+      .join(sizes.toDF("id_b", "sz_b"), "id_b")
+      .withColumn("jaccard", col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+  }
+
+  /** The LSH pair route at token granularity: signatures and bands
+    * from the (id, w) table, a bucket self-join, [[verify]]. */
+  def lshPairs(tok: DataFrame, numHashes: Int, bands: Int, threshold: Double): DataFrame =
+    verify(tok, selfJoinCandidates(bandBuckets(tok, numHashes, bands)), threshold)
+
+  /** The incremental probe at token granularity: the incoming side's
+    * buckets equi-join the base side's, self ids dropped, and the
+    * candidates [[verify]] over the union of both token tables. */
+  def probePairs(
+      tokIncoming: DataFrame, tokBase: DataFrame,
+      numHashes: Int, bands: Int, threshold: Double): DataFrame = {
+    val cand = bandBuckets(tokIncoming, numHashes, bands).toDF("id_a", "bucket")
+      .join(bandBuckets(tokBase, numHashes, bands).toDF("id_b", "bucket"), "bucket")
+      .filter(col("id_a") =!= col("id_b"))
+      .select(col("id_a"), col("id_b")).distinct()
+    verify(tokIncoming.union(tokBase).distinct(), cand, threshold)
+  }
 }
