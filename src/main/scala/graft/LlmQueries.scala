@@ -2667,7 +2667,10 @@ object LlmQueries {
     // the face hash-matches the one-pass oracle; storage is invisible
     "q_sketch_store_est" -> ((s, dir) => {
       val d = docs(s, dir)
-      val st = s"/tmp/graft-sketch-${math.abs(dir.hashCode)}"
+      // one store per process: a path shared across processes lets a
+      // concurrent run replace the files under this one's read
+      val st = s"${System.getProperty("java.io.tmpdir")}/graft-sketch-" +
+        s"${ProcessHandle.current.pid}-${math.abs(dir.hashCode)}"
       graft.io.SketchIO.writeSketch(d.filter(col("doc_id") % 3 === 0), st, n = 3)
       graft.io.SketchIO.appendToSketch(d.filter(col("doc_id") % 3 === 1), st)
       graft.io.SketchIO.appendToSketch(d.filter(col("doc_id") % 3 === 2), st)

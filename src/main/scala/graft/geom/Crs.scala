@@ -59,7 +59,121 @@ object Crs {
     val e2: Double = f * (2.0 - f)
     val e: Double = math.sqrt(e2)
     val n: Double = f / (2.0 - f)
+    /** authalic and conformal latitude helpers, built once per ellipsoid */
+    lazy val aux: AuxLatitude = new AuxLatitude(this)
   }
+
+  /** The authalic and conformal auxiliary latitudes of one ellipsoid:
+    * the forward functions q(φ) (Snyder 1987 eq. 3-12), t(φ) (15-9) and
+    * m(φ) (14-15), and their inverses as the order-6 series in the third
+    * flattening n of Karney, "On auxiliary latitudes" (Survey Review
+    * 2024, arXiv:2212.05818):
+    *
+    *   φ = ξ + Σ c_k sin 2kξ  (authalic ξ, sin ξ = q / q_p)
+    *   φ = χ + Σ d_k sin 2kχ  (conformal χ = π/2 − 2 atan t)
+    *
+    * exact to double precision for Earth ellipsoids. Each sum is one
+    * Clenshaw recurrence whose sin 2x and cos 2x come from sin x and
+    * cos x, so a point costs one `atan2` and no loop. On the sphere
+    * n = 0 and φ = ξ (or χ) exactly. Unlike the Newton step on q, the
+    * series divides by no cos φ, so it stays exact up to the poles.
+    *
+    * The inverses take (sin x, cos x), never an angle: on JDK 17.0.20
+    * `math.asin` runs the fdlibm StrictMath code, not a JIT intrinsic,
+    * and costs 380-500 ns per call for |x| > 0.5 against 15-21 ns
+    * below (one thread of a 4-vCPU VM). So no `asin` of an argument
+    * that can exceed 0.5 stays on the per-point path of the projections
+    * that call this helper.
+    */
+  final class AuxLatitude(ell: Ellipsoid) extends Serializable {
+    private val e = ell.e
+    private val e2 = ell.e2
+
+    /** q(φ); on the sphere (e → 0 the log term → −2es) q = 2 sin φ.
+      * Evaluated at |sin φ| so that q is odd and q(−90°) = −q_p exactly.
+      */
+    def q(phi: Double): Double = {
+      val s = math.sin(phi)
+      if (e < 1e-12) 2 * s
+      else {
+        val a = math.abs(s)
+        math.copySign(
+          (1 - e2) * (a / (1 - e2 * a * a) - (1 / (2 * e)) * math.log((1 - e * a) / (1 + e * a))), s)
+      }
+    }
+    /** q at the pole: sin ξ = q / qp */
+    val qp: Double = q(math.Pi / 2)
+
+    /** t(φ) = tan(π/4 − φ/2) / ((1 − e sin φ)/(1 + e sin φ))^(e/2) */
+    def t(phi: Double): Double = {
+      val s = math.sin(phi)
+      math.tan(math.Pi / 4 - phi / 2) / math.pow((1 - e * s) / (1 + e * s), e / 2)
+    }
+
+    /** m(φ) = cos φ / √(1 − e² sin² φ) */
+    def m(phi: Double): Double = {
+      val s = math.sin(phi)
+      math.cos(phi) / math.sqrt(1 - e2 * s * s)
+    }
+
+    /** Row k holds the coefficients of n^k .. n^6 in the k-th term. */
+    private def series(rows: Array[Array[Double]]): Array[Double] = {
+      val n = ell.n
+      var nk = 1.0
+      rows.map { row =>
+        nk *= n
+        nk * row.foldRight(0.0)((c, acc) => c + n * acc)
+      }
+    }
+    private val authalic = series(Array(
+      Array(4.0 / 3, 4.0 / 45, -16.0 / 35, -2582.0 / 14175, 60136.0 / 467775, 28112932.0 / 212837625),
+      Array(46.0 / 45, 152.0 / 945, -11966.0 / 14175, -21016.0 / 51975, 251310128.0 / 638512875),
+      Array(3044.0 / 2835, 3802.0 / 14175, -94388.0 / 66825, -8797648.0 / 10945935),
+      Array(6059.0 / 4725, 41072.0 / 93555, -1472637812.0 / 638512875),
+      Array(768272.0 / 467775, 455935736.0 / 638512875),
+      Array(4210684958.0 / 1915538625)))
+    private val conformal = series(Array(
+      Array(2.0, -2.0 / 3, -2.0, 116.0 / 45, 26.0 / 45, -2854.0 / 675),
+      Array(7.0 / 3, -8.0 / 5, -227.0 / 45, 2704.0 / 315, 2323.0 / 945),
+      Array(56.0 / 15, -136.0 / 35, -1262.0 / 105, 73814.0 / 2835),
+      Array(4279.0 / 630, -332.0 / 35, -399572.0 / 14175),
+      Array(4174.0 / 315, -144838.0 / 6237),
+      Array(601676.0 / 22275)))
+
+    /** x + Σ c_k sin 2kx for x = atan2(sx, cx); (sx, cx) need not be
+      * normalised.
+      */
+    private def sum(c: Array[Double], sx: Double, cx: Double): Double = {
+      val r2 = sx * sx + cx * cx
+      val s2 = 2 * sx * cx / r2; val a = 2 * (cx - sx) * (cx + sx) / r2
+      // b_k = c_k + 2 cos 2x b_(k+1) − b_(k+2); the sum is b_1 sin 2x
+      var b1 = 0.0; var b2 = 0.0
+      var k = c.length - 1
+      while (k >= 0) {
+        val b = a * b1 - b2 + c(k)
+        b2 = b1; b1 = b
+        k -= 1
+      }
+      math.atan2(sx, cx) + b1 * s2
+    }
+
+    /** geodetic φ (radians) of the authalic latitude ξ = atan2(sinXi, cosXi) */
+    def phiOfAuthalic(sinXi: Double, cosXi: Double): Double = sum(authalic, sinXi, cosXi)
+
+    /** geodetic φ of sin ξ = q / qp (clamped to ±1) */
+    def phiOfAuthalic(sinXi: Double): Double = {
+      val s = math.min(1.0, math.max(-1.0, sinXi))
+      sum(authalic, s, math.sqrt((1 - s) * (1 + s)))
+    }
+
+    /** geodetic φ of t; sin χ = (1 − t²)/(1 + t²), cos χ = 2t/(1 + t²),
+      * written in 1/t past t = 1 so neither square overflows
+      */
+    def phiOfT(t: Double): Double =
+      if (t <= 1) sum(conformal, (1 - t) * (1 + t), 2 * t)
+      else { val u = 1 / t; sum(conformal, (u - 1) * (u + 1), 2 * u) }
+  }
+
   val WGS84: Ellipsoid = Ellipsoid(6378137.0, 298.257223563)
   val GRS80: Ellipsoid = Ellipsoid(6378137.0, 298.257222101)
 
@@ -325,32 +439,28 @@ object Crs {
     val isGeographic = false
     override def ellipsoid: Ellipsoid = ell
 
-    private val e = ell.e
-    private val e2 = ell.e2
+    private val aux = ell.aux
     private val lon0 = math.toRadians(lon0Deg)
     private val phi1 = math.toRadians(lat0Deg)
-
-    private def q(phi: Double): Double = {
-      val s = math.sin(phi)
-      // sphere limit (e -> 0): the log term -> -2es, so q -> 2 sin phi
-      if (e < 1e-12) 2 * s
-      else (1 - e2) * (s / (1 - e2 * s * s) - (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-    }
-    private val qp = q(math.Pi / 2)
+    private val qp = aux.qp
     private val rq = ell.a * math.sqrt(qp / 2)
-    private val beta1 = math.asin(q(phi1) / qp)
-    private val sinB1 = math.sin(beta1)
-    private val cosB1 = math.cos(beta1)
-    private val m1 = math.cos(phi1) / math.sqrt(1 - e2 * math.sin(phi1) * math.sin(phi1))
-    private val dd = ell.a * m1 / (rq * cosB1)
+    // the polar aspects (lat0 = ±90°) take the limits sin β1 = ±1,
+    // cos β1 = 0 and D = 1 exactly (Snyder's polar form ρ = a√(q_p ∓ q)):
+    // through asin, cos β1 and m1 round to unrelated tiny numbers, so
+    // their ratio D is nowhere near its limit
+    private val polar = math.abs(lat0Deg) == 90.0
+    private val beta1 = math.asin(aux.q(phi1) / qp)
+    private val sinB1 = if (polar) math.signum(lat0Deg) else math.sin(beta1)
+    private val cosB1 = if (polar) 0.0 else math.cos(beta1)
+    private val dd = if (polar) 1.0 else ell.a * aux.m(phi1) / (rq * cosB1)
 
     def fromLonLat(lonDeg: Double, latDeg: Double): (Double, Double) = {
       val phi = math.toRadians(latDeg)
       var dLon = math.toRadians(lonDeg) - lon0
       if (dLon > math.Pi) dLon -= 2 * math.Pi
       if (dLon < -math.Pi) dLon += 2 * math.Pi
-      val beta = math.asin(math.min(1.0, math.max(-1.0, q(phi) / qp)))
-      val sinB = math.sin(beta); val cosB = math.cos(beta)
+      val sinB = math.min(1.0, math.max(-1.0, aux.q(phi) / qp))
+      val cosB = math.sqrt((1 - sinB) * (1 + sinB))
       val b = rq * math.sqrt(2.0 / (1 + sinB1 * sinB + cosB1 * cosB * math.cos(dLon)))
       val x = falseEasting + b * dd * cosB * math.sin(dLon)
       val y = falseNorthing + (b / dd) * (cosB1 * sinB - sinB1 * cosB * math.cos(dLon))
@@ -362,32 +472,26 @@ object Crs {
       val yr = y - falseNorthing
       val rho = math.sqrt((xr / dd) * (xr / dd) + (dd * yr) * (dd * yr))
       if (rho < 1e-12) return (lon0Deg, lat0Deg)
-      val ce = 2 * math.asin(math.min(1.0, rho / (2 * rq)))
-      val sinCe = math.sin(ce); val cosCe = math.cos(ce)
-      val qv = qp * (cosCe * sinB1 + (dd * yr * sinCe * cosB1) / rho)
-      val lon = lon0 + math.atan2(
-        xr * sinCe,
-        dd * rho * cosB1 * cosCe - dd * dd * yr * sinB1 * sinCe)
-      // iterate phi from q (Snyder eq. 3-16); on the sphere q = 2 sin
-      // phi so the asin seed is already exact (and the correction term
-      // would be 0/0)
-      var phi = math.asin(math.min(1.0, math.max(-1.0, qv / 2)))
-      var i = 0
-      while (i < 10 && e >= 1e-12) {
-        val s = math.sin(phi)
-        val oneMinus = 1 - e2 * s * s
-        val corr = (oneMinus * oneMinus) / (2 * math.cos(phi)) *
-          (qv / (1 - e2) - s / oneMinus + (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-        phi += corr
-        if (math.abs(corr) < 1e-13) i = 10 else i += 1
-      }
+      // the angular distance c = 2 asin(sh): sin c and cos c by the
+      // double-angle identities
+      val sh = math.min(1.0, rho / (2 * rq))
+      val sinCe = 2 * sh * math.sqrt((1 - sh) * (1 + sh))
+      val cosCe = 1 - 2 * sh * sh
+      // authalic latitude by the spherical triangle at the centre
+      // (azimuth sin xr/(dd rho), cos dd yr/rho): cos xi is the length
+      // of (cos xi sin dLon, cos xi cos dLon), exact up to the poles
+      val u = sinCe * xr / (dd * rho)
+      val v = cosB1 * cosCe - sinB1 * sinCe * dd * yr / rho
+      val sinXi = sinB1 * cosCe + cosB1 * sinCe * dd * yr / rho
+      val lon = lon0 + math.atan2(u, v)
+      val phi = aux.phiOfAuthalic(sinXi, math.sqrt(u * u + v * v))
       (math.toDegrees(lon), math.toDegrees(phi))
     }
   }
 
   /** Lambert Cylindrical Equal-Area on the ellipsoid, normal aspect
-    * (Snyder 1987, USGS PP 1395 eqs. 10-13/10-14/10-16 + the 3-16
-    * authalic-latitude iteration shared with [[LambertAzimuthalEqualArea]]):
+    * (Snyder 1987, USGS PP 1395 eqs. 10-13/10-14/10-16, inverted through
+    * the authalic series of [[AuxLatitude]]):
     * the projection family of the NSIDC EASE grids that remote-sensing
     * swath resampling lands on (EPSG:6933 EASE-Grid 2.0 Global on
     * WGS84, EPSG:3410 EASE-Grid Global on the 6371228 m sphere), both
@@ -403,46 +507,24 @@ object Crs {
     val isGeographic = false
     override def ellipsoid: Ellipsoid = ell
 
-    private val e = ell.e
-    private val e2 = ell.e2
+    private val aux = ell.aux
     private val lon0 = math.toRadians(lon0Deg)
     private val phiS = math.toRadians(latTsDeg)
-    private val k0 =
-      math.cos(phiS) / math.sqrt(1 - e2 * math.sin(phiS) * math.sin(phiS))
-
-    private def q(phi: Double): Double = {
-      val s = math.sin(phi)
-      if (e < 1e-12) 2 * s
-      else (1 - e2) * (s / (1 - e2 * s * s) -
-        (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-    }
+    private val k0 = aux.m(phiS)
 
     def fromLonLat(lonDeg: Double, latDeg: Double): (Double, Double) = {
       var dLon = math.toRadians(lonDeg) - lon0
       if (dLon > math.Pi) dLon -= 2 * math.Pi
       if (dLon < -math.Pi) dLon += 2 * math.Pi
       val x = falseEasting + ell.a * k0 * dLon
-      val y = falseNorthing + ell.a * q(math.toRadians(latDeg)) / (2 * k0)
+      val y = falseNorthing + ell.a * aux.q(math.toRadians(latDeg)) / (2 * k0)
       (x, y)
     }
 
     def toLonLat(x: Double, y: Double): (Double, Double) = {
       val lon = lon0 + (x - falseEasting) / (ell.a * k0)
       val qv = 2 * (y - falseNorthing) * k0 / ell.a
-      // iterate phi from q (Snyder eq. 3-16), exactly as in LAEA; on
-      // the sphere q = 2 sin phi and the asin seed is already exact
-      var phi = math.asin(math.min(1.0, math.max(-1.0, qv / 2)))
-      var i = 0
-      while (i < 10 && e >= 1e-12) {
-        val s = math.sin(phi)
-        val oneMinus = 1 - e2 * s * s
-        val corr = (oneMinus * oneMinus) / (2 * math.cos(phi)) *
-          (qv / (1 - e2) - s / oneMinus +
-            (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-        phi += corr
-        if (math.abs(corr) < 1e-13) i = 10 else i += 1
-      }
-      (math.toDegrees(lon), math.toDegrees(phi))
+      (math.toDegrees(lon), math.toDegrees(aux.phiOfAuthalic(qv / aux.qp)))
     }
   }
 
@@ -534,35 +616,23 @@ object Crs {
     val isGeographic = false
     override def ellipsoid: Ellipsoid = ell
 
-    private val e = ell.e
+    private val aux = ell.aux
     private val lon0 = math.toRadians(lon0Deg)
-
-    // t(phi) = tan(pi/4 - phi/2) / ((1 - e sin phi)/(1 + e sin phi))^(e/2)  (15-9)
-    private def tOf(phi: Double): Double = {
-      val s = math.sin(phi)
-      math.tan(math.Pi / 4 - phi / 2) /
-        math.pow((1 - e * s) / (1 + e * s), e / 2)
-    }
-    // m(phi) = cos phi / sqrt(1 - e^2 sin^2 phi)  (14-15)
-    private def mOf(phi: Double): Double = {
-      val s = math.sin(phi)
-      math.cos(phi) / math.sqrt(1 - ell.e2 * s * s)
-    }
     private val phi1 = math.toRadians(lat1Deg)
     private val phi2 = math.toRadians(lat2Deg)
-    private val m1 = mOf(phi1); private val m2 = mOf(phi2)
-    private val t1 = tOf(phi1); private val t2 = tOf(phi2)
+    private val m1 = aux.m(phi1); private val m2 = aux.m(phi2) // (14-15)
+    private val t1 = aux.t(phi1); private val t2 = aux.t(phi2) // (15-9)
     private val nCone =
       if (lat1Deg == lat2Deg) math.sin(phi1)
       else (math.log(m1) - math.log(m2)) / (math.log(t1) - math.log(t2)) // (15-8)
     private val bigF = m1 / (nCone * math.pow(t1, nCone)) // (15-10)
-    private val rho0 = ell.a * bigF * math.pow(tOf(math.toRadians(lat0Deg)), nCone) // (15-7a)
+    private val rho0 = ell.a * bigF * math.pow(aux.t(math.toRadians(lat0Deg)), nCone) // (15-7a)
 
     def fromLonLat(lonDeg: Double, latDeg: Double): (Double, Double) = {
       var dLon = math.toRadians(lonDeg) - lon0
       if (dLon > math.Pi) dLon -= 2 * math.Pi
       if (dLon < -math.Pi) dLon += 2 * math.Pi
-      val rho = ell.a * bigF * math.pow(tOf(math.toRadians(latDeg)), nCone) // (15-7)
+      val rho = ell.a * bigF * math.pow(aux.t(math.toRadians(latDeg)), nCone) // (15-7)
       val theta = nCone * dLon // (14-4)
       (falseEasting + rho * math.sin(theta),
         falseNorthing + rho0 - rho * math.cos(theta)) // (14-1, 14-2)
@@ -575,23 +645,14 @@ object Crs {
       val rho = sign * math.sqrt(xr * xr + yr * yr) // (14-10)
       val theta = math.atan2(sign * xr, sign * yr) // (14-11)
       val tP = math.pow(rho / (ell.a * bigF), 1.0 / nCone) // (15-11)
-      // phi from t by fixed-point iteration (7-9)
-      var phi = math.Pi / 2 - 2 * math.atan(tP)
-      var i = 0
-      while (i < 12) {
-        val s = math.sin(phi)
-        val next = math.Pi / 2 - 2 * math.atan(
-          tP * math.pow((1 - e * s) / (1 + e * s), e / 2))
-        if (math.abs(next - phi) < 1e-13) { phi = next; i = 12 } else { phi = next; i += 1 }
-      }
-      (math.toDegrees(theta / nCone + lon0), math.toDegrees(phi))
+      (math.toDegrees(theta / nCone + lon0), math.toDegrees(aux.phiOfT(tP)))
     }
   }
 
   /** Albers Equal-Area Conic on the ellipsoid (Snyder 1987, USGS PP
-    * 1395, pp. 98-103, eqs. 14-1..14-19 with the authalic-latitude
-    * series iteration 3-16) — the standard projection for US national
-    * products (EPSG:5070 CONUS Albers, the ESRI:102003 family).
+    * 1395, pp. 98-103, eqs. 14-1..14-19, inverted through the authalic
+    * series of [[AuxLatitude]]) — the standard projection for US
+    * national products (EPSG:5070 CONUS Albers, the ESRI:102003 family).
     */
   final case class AlbersEqualAreaConic(
       lat1Deg: Double, lat2Deg: Double, lat0Deg: Double, lon0Deg: Double,
@@ -600,39 +661,25 @@ object Crs {
     val isGeographic = false
     override def ellipsoid: Ellipsoid = ell
 
-    private val e = ell.e
-    private val e2 = ell.e2
+    private val aux = ell.aux
     private val lon0 = math.toRadians(lon0Deg)
-
-    // q(phi), Snyder eq. 3-12 (same authalic form as LAEA; sphere
-    // limit q = 2 sin phi)
-    private def qOf(phi: Double): Double = {
-      val s = math.sin(phi)
-      if (e < 1e-12) 2 * s
-      else (1 - e2) * (s / (1 - e2 * s * s) - (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-    }
-    // m(phi) = cos phi / sqrt(1 - e^2 sin^2 phi)  (14-15)
-    private def mOf(phi: Double): Double = {
-      val s = math.sin(phi)
-      math.cos(phi) / math.sqrt(1 - e2 * s * s)
-    }
     private val phi1 = math.toRadians(lat1Deg)
     private val phi2 = math.toRadians(lat2Deg)
-    private val m1 = mOf(phi1); private val m2 = mOf(phi2)
-    private val q1 = qOf(phi1); private val q2 = qOf(phi2)
+    private val m1 = aux.m(phi1); private val m2 = aux.m(phi2) // (14-15)
+    private val q1 = aux.q(phi1); private val q2 = aux.q(phi2) // (3-12)
     private val nCone =
       if (lat1Deg == lat2Deg) math.sin(phi1)
       else (m1 * m1 - m2 * m2) / (q2 - q1) // (14-14)
     private val bigC = m1 * m1 + nCone * q1 // (14-13)
     private def rhoOf(q: Double): Double =
       ell.a * math.sqrt(math.max(0.0, bigC - nCone * q)) / nCone // (14-12)
-    private val rho0 = rhoOf(qOf(math.toRadians(lat0Deg))) // (14-12a)
+    private val rho0 = rhoOf(aux.q(math.toRadians(lat0Deg))) // (14-12a)
 
     def fromLonLat(lonDeg: Double, latDeg: Double): (Double, Double) = {
       var dLon = math.toRadians(lonDeg) - lon0
       if (dLon > math.Pi) dLon -= 2 * math.Pi
       if (dLon < -math.Pi) dLon += 2 * math.Pi
-      val rho = rhoOf(qOf(math.toRadians(latDeg)))
+      val rho = rhoOf(aux.q(math.toRadians(latDeg)))
       val theta = nCone * dLon // (14-4)
       (falseEasting + rho * math.sin(theta),
         falseNorthing + rho0 - rho * math.cos(theta)) // (14-1, 14-2)
@@ -645,19 +692,7 @@ object Crs {
       val rho = sign * math.sqrt(xr * xr + yr * yr) // (14-10)
       val theta = math.atan2(sign * xr, sign * yr) // (14-11)
       val qv = (bigC - (rho * rho * nCone * nCone) / (ell.a * ell.a)) / nCone // (14-19)
-      // phi from q by the Snyder 3-16 iteration, seeded with asin(q/2)
-      // (exact already on the sphere)
-      var phi = math.asin(math.min(1.0, math.max(-1.0, qv / 2)))
-      var i = 0
-      while (i < 12 && e >= 1e-12) {
-        val s = math.sin(phi)
-        val oneMinus = 1 - e2 * s * s
-        val corr = (oneMinus * oneMinus) / (2 * math.cos(phi)) *
-          (qv / (1 - e2) - s / oneMinus + (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-        phi += corr
-        if (math.abs(corr) < 1e-13) i = 12 else i += 1
-      }
-      (math.toDegrees(theta / nCone + lon0), math.toDegrees(phi))
+      (math.toDegrees(theta / nCone + lon0), math.toDegrees(aux.phiOfAuthalic(qv / aux.qp)))
     }
   }
 
@@ -670,7 +705,7 @@ object Crs {
     * is what makes the construction exactly equal-area for ANY y
     * polynomial; the published A1..A4 fix the Robinson-like shape
     * (aspect ratio 2.0546). Inverse: Newton on theta, then the Snyder
-    * 3-16 authalic iteration back to geodetic latitude.
+    * authalic series of [[AuxLatitude]] back to geodetic latitude.
     */
   final case class EqualEarth(
       lon0Deg: Double, falseEasting: Double, falseNorthing: Double,
@@ -678,8 +713,7 @@ object Crs {
     val isGeographic = false
     override def ellipsoid: Ellipsoid = ell
 
-    private val e = ell.e
-    private val e2 = ell.e2
+    private val aux = ell.aux
     private val lon0 = math.toRadians(lon0Deg)
     private val A1 = 1.340264
     private val A2 = -0.081106
@@ -687,12 +721,7 @@ object Crs {
     private val A4 = 0.003796
     private val M = math.sqrt(3.0) / 2.0
 
-    private def qOf(phi: Double): Double = {
-      val s = math.sin(phi)
-      if (e < 1e-12) 2 * s // sphere limit
-      else (1 - e2) * (s / (1 - e2 * s * s) - (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-    }
-    private val qp = qOf(math.Pi / 2)
+    private val qp = aux.qp
     private val rq = ell.a * math.sqrt(qp / 2.0)
 
     private def yPoly(t: Double): Double = {
@@ -708,7 +737,7 @@ object Crs {
       var dLon = math.toRadians(lonDeg) - lon0
       if (dLon > math.Pi) dLon -= 2 * math.Pi
       if (dLon < -math.Pi) dLon += 2 * math.Pi
-      val sinBeta = math.min(1.0, math.max(-1.0, qOf(math.toRadians(latDeg)) / qp))
+      val sinBeta = math.min(1.0, math.max(-1.0, aux.q(math.toRadians(latDeg)) / qp))
       val theta = math.asin(M * sinBeta)
       (falseEasting + rq * dLon * math.cos(theta) / (M * dyPoly(theta)),
         falseNorthing + rq * yPoly(theta))
@@ -723,25 +752,7 @@ object Crs {
         theta -= corr
         if (math.abs(corr) < 1e-14) i = 20 else i += 1
       }
-      val sinBeta = math.min(1.0, math.max(-1.0, math.sin(theta) / M))
-      val qv = sinBeta * qp
-      // geodetic phi from authalic q (Snyder 3-16); exact pole
-      // short-circuit — the iteration divides by cos(phi)
-      val phi =
-        if (math.abs(qv) >= qp * (1 - 1e-12)) math.copySign(math.Pi / 2, qv)
-        else {
-          var ph = math.asin(math.min(1.0, math.max(-1.0, qv / 2)))
-          var k = 0
-          while (k < 12 && e >= 1e-12) {
-            val s = math.sin(ph)
-            val oneMinus = 1 - e2 * s * s
-            val corr = (oneMinus * oneMinus) / (2 * math.cos(ph)) *
-              (qv / (1 - e2) - s / oneMinus + (1 / (2 * e)) * math.log((1 - e * s) / (1 + e * s)))
-            ph += corr
-            if (math.abs(corr) < 1e-13) k = 12 else k += 1
-          }
-          ph
-        }
+      val phi = aux.phiOfAuthalic(math.sin(theta) / M)
       val dLon = (x - falseEasting) * M * dyPoly(theta) / (rq * math.cos(theta))
       // non-Greenwich aspects (8858/8859): fold back into [-180, 180]
       val lonDeg = math.toDegrees(lon0 + dLon)
@@ -751,7 +762,8 @@ object Crs {
   }
 
   /** Polar Stereographic, variant B (standard parallel `latTsDeg`;
-    * Snyder 1987, pp. 160-163, eqs. 21-33..21-41 and 7-9). `south`
+    * Snyder 1987, pp. 160-163, eqs. 21-33..21-41; t inverted by the
+    * conformal series of [[AuxLatitude]]). `south`
     * mirrors the north-aspect math through (phi, y) negation — the
     * EPSG:3031-style south aspect.
     */
@@ -762,19 +774,11 @@ object Crs {
     val isGeographic = false
     override def ellipsoid: Ellipsoid = ell
 
-    private val e = ell.e
+    private val aux = ell.aux
     private val lon0 = math.toRadians(lon0Deg)
-    private def tOf(phi: Double): Double = {
-      val s = math.sin(phi)
-      math.tan(math.Pi / 4 - phi / 2) /
-        math.pow((1 - e * s) / (1 + e * s), e / 2)
-    }
     private val phiTs = math.toRadians(math.abs(latTsDeg))
-    private val mc = {
-      val s = math.sin(phiTs)
-      math.cos(phiTs) / math.sqrt(1 - ell.e2 * s * s)
-    }
-    private val tc = tOf(phiTs)
+    private val mc = aux.m(phiTs)
+    private val tc = aux.t(phiTs)
 
     def fromLonLat(lonDeg: Double, latDeg: Double): (Double, Double) = {
       val phi = math.toRadians(if (south) -latDeg else latDeg)
@@ -782,7 +786,7 @@ object Crs {
       if (south) dLon = -dLon
       if (dLon > math.Pi) dLon -= 2 * math.Pi
       if (dLon < -math.Pi) dLon += 2 * math.Pi
-      val rho = ell.a * mc * tOf(phi) / tc // (21-34)
+      val rho = ell.a * mc * aux.t(phi) / tc // (21-34)
       val xP = rho * math.sin(dLon)
       val yP = -rho * math.cos(dLon) // north aspect: y opens toward lon0+180
       if (south) (falseEasting - xP, falseNorthing - yP)
@@ -794,15 +798,7 @@ object Crs {
       var yP = y - falseNorthing
       if (south) { xP = -xP; yP = -yP }
       val rho = math.sqrt(xP * xP + yP * yP)
-      val tP = rho * tc / (ell.a * mc) // (21-39)
-      var phi = math.Pi / 2 - 2 * math.atan(tP)
-      var i = 0
-      while (i < 12) {
-        val s = math.sin(phi)
-        val next = math.Pi / 2 - 2 * math.atan(
-          tP * math.pow((1 - e * s) / (1 + e * s), e / 2))
-        if (math.abs(next - phi) < 1e-13) { phi = next; i = 12 } else { phi = next; i += 1 }
-      }
+      val phi = aux.phiOfT(rho * tc / (ell.a * mc)) // (21-39)
       val dLon = if (rho < 1e-12) 0.0 else math.atan2(xP, -yP)
       val lon = math.toDegrees(lon0 + (if (south) -dLon else dLon))
       val lat = math.toDegrees(if (south) -phi else phi)
@@ -1678,17 +1674,6 @@ final case class CrsTransformer(src: Crs, dst: Crs) extends Serializable {
     else {
       val (lon, lat) = src.toLonLat(x, y)
       dst.fromLonLat(lon, lat)
-    }
-
-  /** In-place transform of parallel coordinate arrays (hot path). */
-  def transformArrays(xs: Array[Double], ys: Array[Double]): Unit =
-    if (!isIdentity) {
-      var i = 0
-      while (i < xs.length) {
-        val (px, py) = transformPoint(xs(i), ys(i))
-        xs(i) = px; ys(i) = py
-        i += 1
-      }
     }
 
   /** Transform a bbox by densifying its edges (same idea as pyproj's

@@ -665,6 +665,15 @@ object VectorOps {
       .orderBy(col("label_a"), col("label_b"))
   }
 
+  /** Throws for every input: the raise of `centroidOutliers`' component
+    * bound. A UDF's exception reaches the caller inside a SparkException
+    * however many stages fail; `raise_error`'s SparkRuntimeException is
+    * rethrown bare by Spark 4.1 when exactly one stage fails, so its type
+    * depended on task timing.
+    */
+  private val componentOverBound = udf[java.lang.Double, java.lang.Double](x =>
+    throw new IllegalArgumentException(s"centroidOutliers: |component| > MaxComponent=8, got $x"))
+
   /** CENTROID-DISTANCE MISLABEL SUSPECTS — the embedding-space data
     * cleaner: a vector sitting far from its OWN label's centroid,
     * measured against that label's robust spread (median/MAD modified
@@ -702,9 +711,7 @@ object VectorOps {
       // MaxComponent contract) — an unnormalized embedding must raise,
       // never produce a silently wrapped distance
       .withColumn("x", when(abs(col("x")) <= lit(8.0), col("x"))
-        .otherwise(raise_error(concat(
-          lit("centroidOutliers: |component| > MaxComponent=8, got "),
-          col("x").cast("string")))))
+        .otherwise(componentOverBound(col("x"))))
       .withColumn("p",
         floor(col("x") * lit(16777216.0) + lit(0.5)).cast("long"))
     // grid-unit centroid: round-half-away mean of the quantized
