@@ -162,7 +162,7 @@ object Bench {
     * denominator to show it. A same-code capture whose `calib_mt_ms`
     * is 2× its trend is a loud window, not a regression.
     */
-  private[graft] def calibProbe(threads: Int): (Long, Long) = {
+  private def calibProbe(threads: Int): (Long, Long) = {
     def spin(iters: Long): Long = {
       var x = 0x9e3779b97f4a7c15L
       var i = 0L
@@ -194,7 +194,7 @@ object Bench {
     * the full r17 capture — then gives the ContextCleaner a GC to find
     * dropped weak refs and a beat to process its reference queue.
     */
-  private[graft] def hygiene(): Unit = {
+  private def hygiene(): Unit = {
     graft.model.Lineage.drainRetired()
     System.gc()
     Thread.sleep(50)

@@ -2668,10 +2668,13 @@ object LlmQueries {
     "q_sketch_store_est" -> ((s, dir) => {
       val d = docs(s, dir)
       // one store per process: a path shared across processes lets a
-      // concurrent run replace the files under this one's read
+      // concurrent run replace the files under this one's read. The
+      // returned plan reads it lazily, so it is deleted at JVM exit.
       val st = s"${System.getProperty("java.io.tmpdir")}/graft-sketch-" +
         s"${ProcessHandle.current.pid}-${math.abs(dir.hashCode)}"
       graft.io.SketchIO.writeSketch(d.filter(col("doc_id") % 3 === 0), st, n = 3)
+      val stPath = new org.apache.hadoop.fs.Path(st)
+      stPath.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(stPath)
       graft.io.SketchIO.appendToSketch(d.filter(col("doc_id") % 3 === 1), st)
       graft.io.SketchIO.appendToSketch(d.filter(col("doc_id") % 3 === 2), st)
       graft.io.SketchIO.estimateFromStore(s, st)

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{broadcast, col}
 import graft.geom.{CrsTransformer, GridMapping}
-import graft.kernel.{TriangleRasterizer, Window}
+import graft.kernel.TriangleRasterizer
 import graft.model.Tile
 import graft.model.Policies.VarPolicy
 
@@ -24,9 +24,11 @@ import graft.model.Policies.VarPolicy
   *  4. per-variable gather through the lookup image
   *     (reference: rectify.py:579-734)
   *
-  * The lookup tiles are computed once and reused by every variable
-  * (the reference shares them across vars too, rectify.py:146-174);
-  * callers resampling many variables should `.cache()` the lookup.
+  * Both gathers (stages 3 and 4) run on [[TileGather]]'s cropped
+  * pieces, grouped by target tile. Stage 4 cogroups each lookup tile
+  * with every (var, band)'s pieces of that target tile, so the lookup
+  * is shipped and read once for all variables (the reference shares
+  * it across vars too, rectify.py:146-174).
   */
 object RectifyOp {
 
@@ -47,8 +49,6 @@ object RectifyOp {
     * explicit unpersist, so every rectify call in a long-lived session
     * would leak blocks forever — checkpoint blocks are instead freed by
     * the ContextCleaner as soon as the caller drops the result.
-    * Callers orchestrating many gathers over one swath can instead
-    * compose [[computeLookup]] + [[gatherVars]] and own the caching.
     */
   def rectify(
       tiles: Dataset[Tile],
@@ -144,7 +144,7 @@ object RectifyOp {
     * driver-side scales with tile count: windows, plan, and fill tiles
     * are all Datasets.
     */
-  def computeLookup(
+  private def computeLookup(
       coordTiles: Dataset[Tile],
       srcGm: GridMapping,
       dstGm: GridMapping): Dataset[LookupTile] = {
@@ -258,23 +258,20 @@ object RectifyOp {
           math.min(srcWd, i1 + 1 + 1), math.min(srcHt, j1 + 1 + 1))
       }
 
-    def rasterized(planDs: Dataset[TileGather.PlanRow]): Dataset[LookupTile] =
-      coordTiles.joinWith(
-          planDs,
-          coordTiles("tj") === planDs("srcTj") && coordTiles("ti") === planDs("srcTi"),
-          "inner")
-        .groupByKey { case (_, p) => (p.dtj, p.dti) }
-        .mapGroups { (key: (Int, Int), rows: Iterator[(Tile, TileGather.PlanRow)]) =>
-          val (dtj, dti) = key
-          val buf = rows.toArray
-          val p = buf.head._2
-          val xWin = TileGather.assembleWindow(p, buf.map(_._1).filter(_.varName == "x"), srcTw, srcTh)
-          val yWin = TileGather.assembleWindow(p, buf.map(_._1).filter(_.varName == "y"), srcTw, srcTh)
-          val h = math.min(dth, dH - dtj * dth)
-          val w = math.min(dtw, dW - dti * dtw)
-          val srcI = Array.fill(h * w)(Double.NaN)
-          val srcJ = Array.fill(h * w)(Double.NaN)
-          if (p.i0 >= 0) {
+    // each target tile's x and y windows, assembled from coord pieces
+    // (sorted by (varName, band): "x" before "y")
+    def rasterized(plan: Dataset[TileGather.PlanRow]): Dataset[LookupTile] =
+      TileGather.pieces(coordTiles, srcGm, plan)
+        .groupByKey(pc => (pc.dtj, pc.dti))
+        .flatMapSortedGroups(col("varName"), col("band")) {
+          (key: (Int, Int), pcs: Iterator[TileGather.Piece]) =>
+            val (dtj, dti) = key
+            val wins = TileGather.windowRuns(pcs).map { case (v, _, win) => v -> win }.toMap
+            val xWin = wins("x"); val yWin = wins("y")
+            val h = math.min(dth, dH - dtj * dth)
+            val w = math.min(dtw, dW - dti * dtw)
+            val srcI = Array.fill(h * w)(Double.NaN)
+            val srcJ = Array.fill(h * w)(Double.NaN)
             val dstXOffset = dXMin + dti * dtw * dXRes
             val (dstYOffset, dstYScale) =
               if (jUp) (dYMin + dtj * dth * dYRes, dYRes)
@@ -283,8 +280,7 @@ object RectifyOp {
               xWin.data, yWin.data, xWin.w, xWin.h, xWin.i0, xWin.j0,
               dstXOffset, dstYOffset, dXRes, dstYScale,
               w, h, UvDelta, srcI, srcJ)
-          }
-          LookupTile(dtj, dti, h, w, srcI, srcJ)
+            Iterator.single(LookupTile(dtj, dti, h, w, srcI, srcJ))
         }
 
     def nanLookup(dtj: Int, dti: Int): LookupTile = {
@@ -329,10 +325,13 @@ object RectifyOp {
 
   /** Stage 4: sample every variable through the lookup image. The source
     * window for a target tile is the lookup's own (i, j) extent
-    * (reference: rectify.py:622-630), so the plan derives from the
-    * lookup tiles (driver-collected min/max — numTiles rows).
+    * (reference: rectify.py:622-630), derived by a distributed map over
+    * the lookup tiles. One cogroup per target tile pairs its lookup
+    * tile with the cropped pieces of every (var, band), sorted by
+    * (var, band); target tiles with no window get their fill tiles
+    * from [[TileGather]]'s srcTj = -1 fill path.
     */
-  def gatherVars(
+  private def gatherVars(
       tiles: Dataset[Tile],
       lookup: Dataset[LookupTile],
       srcGm: GridMapping,
@@ -341,10 +340,7 @@ object RectifyOp {
     val spark = tiles.sparkSession
     import spark.implicits._
 
-    // per-target-tile source windows from the lookup extents — a
-    // distributed map over the (cached) lookup tiles; no driver collect
     val srcW = srcGm.width; val srcH = srcGm.height
-    val srcTw = srcGm.tileWidth; val srcTh = srcGm.tileHeight
     val windowRows = lookup.map { lt =>
       var i0 = Double.MaxValue; var j0 = Double.MaxValue
       var i1 = Double.MinValue; var j1 = Double.MinValue
@@ -362,49 +358,38 @@ object RectifyOp {
         i0.toInt, j0.toInt,
         math.min(i1.toInt + 2, srcW), math.min(j1.toInt + 2, srcH))
     }
-    val planDs0 = TileGather.planDs(srcGm, windowRows)
-    val planDs =
+    val plan0 = TileGather.planDs(srcGm, windowRows)
+    val plan =
       if (dstGm.numTilesX.toLong * dstGm.numTilesY <= TileGather.DriverPlanMaxTiles)
-        broadcast(planDs0) else planDs0
+        broadcast(plan0) else plan0
 
-    // (var, band) inventory — tiny metadata; the lookup tile is shipped
-    // once per (var, band, target tile), which is exactly the data each
-    // kernel needs. NO driver-side collection of pixel data.
-    val varsBands = tiles.map(t => (t.varName, t.band)).distinct().collect().toSeq
-    val vbDs = spark.createDataset(varsBands)
-    val lookupExpanded = lookup.crossJoin(broadcast(vbDs.toDF("v", "b")))
-      .as[(Int, Int, Int, Int, Array[Double], Array[Double], String, Int)]
-
-    val srcKeyed = tiles.joinWith(
-        planDs,
-        tiles("tj") === planDs("srcTj") && tiles("ti") === planDs("srcTi"),
-        "inner")
-      .groupByKey { case (t, p) => (t.varName, t.band, p.dtj, p.dti) }
-    val lookupKeyed = lookupExpanded
-      .groupByKey { case (tj, ti, _, _, _, _, v, b) => (v, b, tj, ti) }
-
-    lookupKeyed.cogroup(srcKeyed) {
-      (key: (String, Int, Int, Int),
-       lts: Iterator[(Int, Int, Int, Int, Array[Double], Array[Double], String, Int)],
-       rows: Iterator[(Tile, TileGather.PlanRow)]) =>
-        val (v, b, dtj, dti) = key
-        if (lts.isEmpty) Iterator.empty
-        else {
-          val (_, _, h, w, srcI, srcJ, _, _) = lts.next()
-          val pol = policies(v)
-          val out = new Array[Double](h * w)
-          val buf = rows.toArray
-          val win =
-            if (buf.isEmpty) new Window(0, 0, 0, 0, Array.empty)
-            else TileGather.assembleWindow(buf.head._2, buf.map(_._1), srcTw, srcTh)
-          var k = 0
-          while (k < out.length) {
-            out(k) = TriangleRasterizer.gatherValue(
-              win, srcW, srcH, srcI(k), srcJ(k), pol.interp, pol.fill)
-            k += 1
+    val sampled = lookup.groupByKey(lt => (lt.tj, lt.ti))
+      .cogroupSorted(TileGather.pieces(tiles, srcGm, plan).groupByKey(pc => (pc.dtj, pc.dti)))()(
+        col("varName"), col("band")) {
+        (_: (Int, Int), lts: Iterator[LookupTile], pcs: Iterator[TileGather.Piece]) =>
+          // every group has its lookup tile: the pieces' windows come from it
+          val lt = lts.next()
+          TileGather.windowRuns(pcs).map { case (v, b, win) =>
+            val pol = policies(v)
+            val out = new Array[Double](lt.h * lt.w)
+            var k = 0
+            while (k < out.length) {
+              out(k) = TriangleRasterizer.gatherValue(
+                win, srcW, srcH, lt.srcI(k), lt.srcJ(k), pol.interp, pol.fill)
+              k += 1
+            }
+            Tile(v, b, lt.tj, lt.ti, lt.h, lt.w, out)
           }
-          Iterator.single(Tile(v, b, dtj, dti, h, w, out))
-        }
+      }
+
+    // a window-less lookup is all NaN, so every pixel samples to fill
+    val dth = dstGm.tileHeight; val dtw = dstGm.tileWidth
+    val dH = dstGm.height; val dW = dstGm.width
+    val fill: TileGather.TileKernel = (dtj, dti) => {
+      val h = math.min(dth, dH - dtj * dth)
+      val w = math.min(dtw, dW - dti * dtw)
+      (v, b, _) => Tile(v, b, dtj, dti, h, w, Array.fill(h * w)(policies(v).fill))
     }
+    sampled.union(TileGather.fillTiles(tiles, plan, fill))
   }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 import graft.geom.GridMapping
 import graft.kernel.Window
@@ -19,7 +19,9 @@ import graft.model.Tile
   * `groupByKey(target tile).flatMapSortedGroups(assemble + kernel)`.
   * One group holds every (var, band) of a target tile, so the kernel's
   * per-tile work (the reference's `_transform_gridpoints`,
-  * reproject.py:472-496) runs once for all variables.
+  * reproject.py:472-496) runs once for all variables. Rectify builds
+  * both of its stages from the same parts ([[pieces]], [[windowRuns]],
+  * [[fillTiles]]), with its lookup tile as the per-tile work.
   *
   * Scale notes: the plan has numTargetTiles x overlap rows and is
   * GENERATED DISTRIBUTED (a Dataset flatMap over the target tile index
@@ -168,14 +170,7 @@ object TileGather {
     val spark = tiles.sparkSession
     import spark.implicits._
 
-    val realPlan = plan.filter(_.srcTj >= 0)
-    val srcTileW = srcGm.tileWidth; val srcTileH = srcGm.tileHeight
-    val pieces = tiles
-      .joinWith(realPlan,
-        tiles("tj") === realPlan("srcTj") && tiles("ti") === realPlan("srcTi"), "inner")
-      .map { case (t, p) => crop(t, p, srcTileW, srcTileH) }
-
-    val grouped = pieces
+    val grouped = pieces(tiles, srcGm, plan)
       .groupByKey(pc => (pc.dtj, pc.dti))
       .flatMapSortedGroups(col("varName"), col("band")) {
         (key: (Int, Int), rows: Iterator[Piece]) =>
@@ -183,18 +178,39 @@ object TileGather {
           windowRuns(rows).map { case (v, b, win) => sample(v, b, win) }
       }
 
-    if (!mayHaveFills) grouped
-    else {
-      // fill-only tasks (srcTj = -1 rows never join): cross with the
-      // (var, band) inventory — tiny — and emit fill tiles DISTRIBUTED
-      val fillPlans = plan.filter(_.srcTj < 0)
-      val varsBands = tiles.map(t => (t.varName, t.band)).distinct()
-      val empty = new Window(0, 0, 0, 0, Array.empty)
-      val fills = fillPlans
-        .joinWith(broadcast(varsBands), lit(true), "inner")
-        .map { case (p, (v, b)) => kernel(p.dtj, p.dti)(v, b, empty) }
-      grouped.union(fills)
-    }
+    if (!mayHaveFills) grouped else grouped.union(fillTiles(tiles, plan, kernel))
+  }
+
+  /** Every source tile joined to the plan rows that read it, cropped to
+    * each row's window: the pieces a gather groups by target tile.
+    * Fill-only rows (srcTj = -1) join nothing.
+    */
+  private[ops] def pieces(
+      tiles: Dataset[Tile], srcGm: GridMapping, plan: Dataset[PlanRow]): Dataset[Piece] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    val realPlan = plan.filter(_.srcTj >= 0)
+    val srcTileW = srcGm.tileWidth; val srcTileH = srcGm.tileHeight
+    tiles
+      .joinWith(realPlan,
+        tiles("tj") === realPlan("srcTj") && tiles("ti") === realPlan("srcTi"), "inner")
+      .map { case (t, p) => crop(t, p, srcTileW, srcTileH) }
+  }
+
+  /** Fill-only tasks: each srcTj = -1 plan row crossed with the (var,
+    * band) inventory of `tiles` — tiny — sampled from an empty window,
+    * all DISTRIBUTED.
+    */
+  private[ops] def fillTiles(
+      tiles: Dataset[Tile], plan: Dataset[PlanRow], kernel: TileKernel): Dataset[Tile] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    val fillPlans = plan.filter(_.srcTj < 0)
+    val varsBands = tiles.map(t => (t.varName, t.band)).distinct()
+    val empty = new Window(0, 0, 0, 0, Array.empty)
+    fillPlans
+      .joinWith(broadcast(varsBands), lit(true), "inner")
+      .map { case (p, (v, b)) => kernel(p.dtj, p.dti)(v, b, empty) }
   }
 
   /** One source tile cut down to a target tile's window: the source
@@ -223,7 +239,7 @@ object TileGather {
   }
 
   /** Copy pieces of one window into a dense window array; cells no
-    * piece covers stay NaN, as in [[assembleWindow]].
+    * piece covers stay NaN (kernels treat NaN / fill at sample time).
     */
   def assemblePieces(pieces: Seq[Piece]): Window = {
     val p = pieces.head
@@ -243,7 +259,7 @@ object TileGather {
     * arrive sorted by (var, band): only one window's pieces are held at
     * a time.
     */
-  private def windowRuns(rows: Iterator[Piece]): Iterator[(String, Int, Window)] = {
+  private[ops] def windowRuns(rows: Iterator[Piece]): Iterator[(String, Int, Window)] = {
     val it = rows.buffered
     new Iterator[(String, Int, Window)] {
       def hasNext: Boolean = it.hasNext
@@ -255,30 +271,5 @@ object TileGather {
         (first.varName, first.band, assemblePieces(run.toSeq))
       }
     }
-  }
-
-  /** Copy the overlapping parts of each source tile into a dense window
-    * array; cells no tile covers stay NaN (kernels treat NaN / fill at
-    * sample time).
-    */
-  def assembleWindow(
-      p: PlanRow, tiles: Array[Tile], srcTileW: Int, srcTileH: Int): Window = {
-    val w = p.i1 - p.i0; val h = p.j1 - p.j0
-    val data = Array.fill(math.max(0, w * h))(Double.NaN)
-    tiles.foreach { t =>
-      val tI0 = t.ti * srcTileW; val tJ0 = t.tj * srcTileH
-      val ci0 = math.max(p.i0, tI0); val ci1 = math.min(p.i1, tI0 + t.w)
-      val cj0 = math.max(p.j0, tJ0); val cj1 = math.min(p.j1, tJ0 + t.h)
-      var j = cj0
-      while (j < cj1) {
-        var i = ci0
-        while (i < ci1) {
-          data((j - p.j0) * w + (i - p.i0)) = t.data((j - tJ0) * t.w + (i - tI0))
-          i += 1
-        }
-        j += 1
-      }
-    }
-    new Window(p.i0, p.j0, math.max(0, w), math.max(0, h), data)
   }
 }

@@ -4,7 +4,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark._
 import graft.geom.{Crs, CrsTransformer, GridMapping}
-import graft.kernel.{Interp, Reducers}
+import graft.kernel.{Interp, Reducers, Window}
 import graft.model.Policies.{F64, VarPolicy}
 import graft.model.Tile
 
@@ -12,9 +12,36 @@ import graft.model.Tile
   * kernel call and ships source tiles cropped to their windows. These
   * specs pin that neither changes a pixel: variables never leak into
   * each other's tiles, and windows assembled from cropped pieces equal
-  * windows assembled from whole tiles.
+  * windows assembled from whole tiles. Rectify runs both of its stages
+  * on the same pieces; its specs pin the per-variable results and the
+  * plan shape (the lookup is shipped once, not once per variable).
   */
 class TileGatherSpec extends AnyFunSuite {
+
+  /** Reference window assembly from whole source tiles: copy the
+    * overlapping part of each tile into a dense window array; cells no
+    * tile covers stay NaN.
+    */
+  private def assembleWindow(
+      p: TileGather.PlanRow, tiles: Array[Tile], srcTileW: Int, srcTileH: Int): Window = {
+    val w = p.i1 - p.i0; val h = p.j1 - p.j0
+    val data = Array.fill(math.max(0, w * h))(Double.NaN)
+    tiles.foreach { t =>
+      val tI0 = t.ti * srcTileW; val tJ0 = t.tj * srcTileH
+      val ci0 = math.max(p.i0, tI0); val ci1 = math.min(p.i1, tI0 + t.w)
+      val cj0 = math.max(p.j0, tJ0); val cj1 = math.min(p.j1, tJ0 + t.h)
+      var j = cj0
+      while (j < cj1) {
+        var i = ci0
+        while (i < ci1) {
+          data((j - p.j0) * w + (i - p.i0)) = t.data((j - tJ0) * t.w + (i - tI0))
+          i += 1
+        }
+        j += 1
+      }
+    }
+    new Window(p.i0, p.j0, math.max(0, w), math.max(0, h), data)
+  }
 
   private def sameBits(a: Seq[Tile], b: Seq[Tile]): Unit = {
     def key(t: Tile) = (t.varName, t.band, t.tj, t.ti)
@@ -82,7 +109,7 @@ class TileGatherSpec extends AnyFunSuite {
       val rows = TileGather.planRowsOf(tw, th, gm.numTilesX, gm.numTilesY,
         TileGather.WindowRow(3, 4, i0, j0, i1, j1))
       val srcTiles = rows.map(p => tiles.find(t => t.tj == p.srcTj && t.ti == p.srcTi).get).toArray
-      val whole = TileGather.assembleWindow(rows.head, srcTiles, tw, th)
+      val whole = assembleWindow(rows.head, srcTiles, tw, th)
       val pieces = rows.zip(srcTiles).map { case (p, t) => TileGather.crop(t, p, tw, th) }
       assert(pieces.forall(pc => pc.dtj == 3 && pc.dti == 4))
       assert(pieces.map(_.data.length).sum <= (i1 - i0) * (j1 - j0))
@@ -107,5 +134,102 @@ class TileGatherSpec extends AnyFunSuite {
       val i1 = i0 + 1 + rnd.nextInt(srcW - i0); val j1 = j0 + 1 + rnd.nextInt(srcH - j0)
       check(i0, j0, i1, j1)
     }
+  }
+
+  // a rotated 8 x 8 swath in 4 x 4 tiles; the 140 x 140 targets overrun
+  // it, so most of their tiles see no source at all
+  private val swathGm = GridMapping.regular(8, 8, 10.0, 40.0, 0.1, 0.1, Crs.Geographic, Some((4, 4)))
+    .copy(isRegular = false)
+  private def swathCoords = {
+    val c = math.cos(0.2); val s = math.sin(0.2)
+    val lon = Array.tabulate(8, 8)((j, i) => 10.0 + (i + 0.5) * c * 0.1 - (j + 0.5) * s * 0.1)
+    val lat = Array.tabulate(8, 8)((j, i) => 40.8 - (j + 0.5) * c * 0.1 - (i + 0.5) * s * 0.1)
+    toDs(tilesFrom("x", lon, swathGm) ++ tilesFrom("y", lat, swathGm))
+  }
+  private def swathDst(tile: Int) = GridMapping.regular(
+    140, 140, 9.0, 39.0, 0.02, 0.02, Crs.Geographic, Some((tile, tile)))
+  // two variables with different interpolation and fill, two bands each
+  private val swathPol = Map(
+    "a" -> VarPolicy(Interp.NEAREST, Reducers.Mean, false, Double.NaN, F64),
+    "b" -> VarPolicy(Interp.BILINEAR, Reducers.Mean, false, -1.0, F64))
+  private val swathTiles = for {
+    (v, k) <- Seq("a" -> 1, "b" -> 2); band <- 0 to 1
+  } yield tilesFrom(v, Array.tabulate(8, 8)((j, i) => k * 1000.0 + band * 100.0 + j * 8 + i + 0.5 * (i % 3)),
+    swathGm, band = band)
+
+  test("rectify: 2 vars x 2 bands together == each var alone, one tile per (var, band) and target tile, on the driver and distributed plans") {
+    val tiles = swathTiles.flatten
+    for (tile <- Seq(35, 2)) {
+      val d = swathDst(tile)
+      val distributed = d.numTilesX.toLong * d.numTilesY > TileGather.DriverPlanMaxTiles
+      assert(distributed == (tile == 2))
+      val all = RectifyOp.rectify(toDs(tiles), swathCoords, swathGm, d, swathPol).collect().toSeq
+      val alone = Seq("a", "b").flatMap { v =>
+        RectifyOp.rectify(toDs(tiles.filter(_.varName == v)), swathCoords, swathGm, d, Map(v -> swathPol(v)))
+          .collect().toSeq
+      }
+      assert(all.size == d.numTiles * 4)
+      assert(all.map(t => (t.varName, t.band, t.tj, t.ti)).distinct.size == d.numTiles * 4)
+      sameBits(all, alone)
+      // fill-only target tiles carry each variable's own fill ...
+      val byTile = all.groupBy(t => (t.tj, t.ti)).values
+      assert(byTile.exists(ts => ts.forall(t =>
+        if (t.varName == "a") t.data.forall(_.isNaN) else t.data.forall(_ == -1.0))), s"tile $tile: no fill-only tile")
+      // ... and each band samples its own source image
+      for (v <- Seq("a", "b"); band <- 0 to 1) {
+        val lo = (if (v == "a") 1000.0 else 2000.0) + band * 100.0
+        assert(all.exists(t => t.varName == v && t.band == band && t.data.exists(x => x >= lo && x < lo + 70)),
+          s"tile $tile: no source value in ($v, $band)")
+      }
+    }
+  }
+
+  test("rectify plan: no cross join of the lookup, the variable stage exchanges on the target tile only, no extra job") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{CoGroupExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.types.IntegerType
+    object H extends AdaptiveSparkPlanHelper
+    val tiles = toDs(swathTiles.flatten)
+    val d = swathDst(35)
+    val plan: SparkPlan = RectifyOp.rectify(tiles, swathCoords, swathGm, d, swathPol).queryExecution.executedPlan
+    assert(!plan.toString.contains("CartesianProduct"), s"cartesian:\n$plan")
+    // the one nested-loop join left is the fill path's: srcTj = -1 plan
+    // rows crossed with the (var, band) inventory, never a lookup tile
+    val crossed = H.collect(plan) { case j: BroadcastNestedLoopJoinExec => j.output.map(_.name) }
+    assert(crossed.forall(!_.contains("srcI")), s"a lookup tile is crossed:\n$plan")
+    val cogroups = H.collect(plan) { case c: CoGroupExec => c }
+    assert(cogroups.size == 1, s"${cogroups.size} cogroups:\n$plan")
+    def feeding(p: SparkPlan): Seq[ShuffleExchangeLike] = p match {
+      case e: ShuffleExchangeLike => Seq(e)
+      case o => o.children.flatMap(feeding)
+    }
+    val exchanges = cogroups.head.children.flatMap(feeding)
+    assert(exchanges.size == 2, s"cogroup inputs:\n$plan")
+    exchanges.foreach { e =>
+      val keyTypes = e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map(_.dataType)
+        case other => fail(s"cogroup input partitioned by $other")
+      }
+      assert(keyTypes == Seq(IntegerType, IntegerType), s"variable stage keyed on $keyTypes:\n$plan")
+    }
+    // one call and its count(): the whole-tile gather with its (var,
+    // band) collect started 14 jobs on this shape; sharing the pieces
+    // must not add any
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      RectifyOp.rectify(tiles, swathCoords, swathGm, d, swathPol).count()
+      // the listener bus is async; give it a moment to drain
+      Thread.sleep(500)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 14, s"${jobs.get} jobs")
   }
 }
