@@ -1,7 +1,8 @@
 package graft.io
 
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geom.{CfConv, Crs, GridMapping}
 import graft.model.Tile
@@ -17,42 +18,81 @@ import graft.model.Tile
   *                                      directory-level pruning for
   *                                      clip/window reads)
   *   <path>/gridmapping.json           (geometry + CF CRS attrs)
+  *
+  * Each row is one tile: (varName, band, tj, ti, h, w) and `data`, the
+  * tile's row-major h x w float64 values as ONE raw little-endian
+  * `binary` chunk of 8·h·w bytes — as Zarr stores a chunk as one blob.
+  * Dictionary encoding is off for `data` alone: parquet would otherwise
+  * try to dictionary-encode every float64 of every tile before falling
+  * back to plain. Reading decodes each chunk with one bulk copy, and
+  * keeps every value's bits (NaN payloads, -0.0) as written.
   */
 object TileIO {
 
+  /** A stored tile row: `data` is the raw chunk of [[Tile.data]].
+    * Package-private, not private: Spark's generated encoder code must
+    * reach its accessors.
+    */
+  private[io] final case class Chunk(
+      varName: String, band: Int, tj: Int, ti: Int, h: Int, w: Int, data: Array[Byte])
+
+  private def encode(t: Tile): Chunk = {
+    val buf = ByteBuffer.allocate(8 * t.data.length).order(ByteOrder.LITTLE_ENDIAN)
+    buf.asDoubleBuffer().put(t.data)
+    Chunk(t.varName, t.band, t.tj, t.ti, t.h, t.w, buf.array())
+  }
+
+  private def decode(c: Chunk): Tile = {
+    val n = c.h * c.w
+    require(c.data.length == 8 * n,
+      s"tile (${c.varName}, ${c.band}, ${c.tj}, ${c.ti}): ${c.data.length} bytes for $n values")
+    val data = new Array[Double](n)
+    ByteBuffer.wrap(c.data).order(ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().get(data)
+    Tile(c.varName, c.band, c.tj, c.ti, c.h, c.w, data)
+  }
+
   def writeTiles(tiles: Dataset[Tile], path: String, gm: GridMapping): Unit = {
-    tiles.write
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    tiles.map(encode).write
       .mode(SaveMode.Overwrite)
+      .option("parquet.enable.dictionary#data", "false")
       .partitionBy("tj")
       .parquet(s"$path/tiles")
     Files.createDirectories(Paths.get(path))
     Sidecars.writeAtomic(Paths.get(s"$path/gridmapping.json"), gridMappingToJson(gm))
   }
 
-  def readTiles(spark: SparkSession, path: String): (Dataset[Tile], GridMapping) = {
-    import spark.implicits._
-    val gm = gridMappingFromJson(Files.readString(Paths.get(s"$path/gridmapping.json")))
-    val ds = spark.read.parquet(s"$path/tiles")
-      .select("varName", "band", "tj", "ti", "h", "w", "data").as[Tile]
-    (ds, gm)
-  }
+  def readTiles(spark: SparkSession, path: String): (Dataset[Tile], GridMapping) =
+    (decoded(spark.read.parquet(s"$path/tiles")), readGridMapping(path))
 
   /** Read only the tiles intersecting an xy bbox — the partition-pruned
     * clip path (`WHERE tj BETWEEN ...` prunes directories before any
-    * file is opened; reference clip: utils.py:77-124).
+    * file is opened; reference clip: utils.py:77-124). The filters run
+    * on the stored columns, so pruned rows never reach the decoder.
     */
   def readTilesClipped(
       spark: SparkSession, path: String,
       x0: Double, y0: Double, x1: Double, y1: Double): (Dataset[Tile], GridMapping) = {
-    val (ds, gm) = readTiles(spark, path)
+    val gm = readGridMapping(path)
+    val stored = spark.read.parquet(s"$path/tiles")
     val (i0, j0, i1, j1) = gm.ijBboxFromXyBbox(x0, y0, x1, y1)
-    if (i0 < 0) (ds.filter(lit(false)), gm)
+    if (i0 < 0) (decoded(stored.filter(lit(false))), gm)
     else {
       val tj0 = j0 / gm.tileHeight; val tj1 = (j1 - 1) / gm.tileHeight
       val ti0 = i0 / gm.tileWidth; val ti1 = (i1 - 1) / gm.tileWidth
-      (ds.filter(col("tj") >= tj0 && col("tj") <= tj1 &&
-                 col("ti") >= ti0 && col("ti") <= ti1), gm)
+      (decoded(stored.filter(col("tj") >= tj0 && col("tj") <= tj1 &&
+                             col("ti") >= ti0 && col("ti") <= ti1)), gm)
     }
+  }
+
+  private def readGridMapping(path: String): GridMapping =
+    gridMappingFromJson(Files.readString(Paths.get(s"$path/gridmapping.json")))
+
+  private def decoded(stored: DataFrame): Dataset[Tile] = {
+    val spark = stored.sparkSession
+    import spark.implicits._
+    stored.select("varName", "band", "tj", "ti", "h", "w", "data").as[Chunk].map(decode)
   }
 
   /** Write CF CRS metadata INTO AN EXISTING store — the analog of the

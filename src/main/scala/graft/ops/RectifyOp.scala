@@ -261,26 +261,23 @@ object RectifyOp {
     // each target tile's x and y windows, assembled from coord pieces
     // (sorted by (varName, band): "x" before "y")
     def rasterized(plan: Dataset[TileGather.PlanRow]): Dataset[LookupTile] =
-      TileGather.pieces(coordTiles, srcGm, plan)
-        .groupByKey(pc => (pc.dtj, pc.dti))
-        .flatMapSortedGroups(col("varName"), col("band")) {
-          (key: (Int, Int), pcs: Iterator[TileGather.Piece]) =>
-            val (dtj, dti) = key
-            val wins = TileGather.windowRuns(pcs).map { case (v, _, win) => v -> win }.toMap
-            val xWin = wins("x"); val yWin = wins("y")
-            val h = math.min(dth, dH - dtj * dth)
-            val w = math.min(dtw, dW - dti * dtw)
-            val srcI = Array.fill(h * w)(Double.NaN)
-            val srcJ = Array.fill(h * w)(Double.NaN)
-            val dstXOffset = dXMin + dti * dtw * dXRes
-            val (dstYOffset, dstYScale) =
-              if (jUp) (dYMin + dtj * dth * dYRes, dYRes)
-              else (dYMax - dtj * dth * dYRes, -dYRes)
-            TriangleRasterizer.rasterize(
-              xWin.data, yWin.data, xWin.w, xWin.h, xWin.i0, xWin.j0,
-              dstXOffset, dstYOffset, dXRes, dstYScale,
-              w, h, UvDelta, srcI, srcJ)
-            Iterator.single(LookupTile(dtj, dti, h, w, srcI, srcJ))
+      TileGather.byTargetTile(TileGather.pieces(coordTiles, srcGm, plan), nTx, nTx.toLong * nTy) {
+        (dtj, dti, pcs) =>
+          val wins = TileGather.windowRuns(pcs).map { case (v, _, win) => v -> win }.toMap
+          val xWin = wins("x"); val yWin = wins("y")
+          val h = math.min(dth, dH - dtj * dth)
+          val w = math.min(dtw, dW - dti * dtw)
+          val srcI = Array.fill(h * w)(Double.NaN)
+          val srcJ = Array.fill(h * w)(Double.NaN)
+          val dstXOffset = dXMin + dti * dtw * dXRes
+          val (dstYOffset, dstYScale) =
+            if (jUp) (dYMin + dtj * dth * dYRes, dYRes)
+            else (dYMax - dtj * dth * dYRes, -dYRes)
+          TriangleRasterizer.rasterize(
+            xWin.data, yWin.data, xWin.w, xWin.h, xWin.i0, xWin.j0,
+            dstXOffset, dstYOffset, dXRes, dstYScale,
+            w, h, UvDelta, srcI, srcJ)
+          Iterator.single(LookupTile(dtj, dti, h, w, srcI, srcJ))
         }
 
     def nanLookup(dtj: Int, dti: Int): LookupTile = {

@@ -1,8 +1,9 @@
 package graft.ops
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.geom.GridMapping
 import graft.kernel.Window
 import graft.model.Tile
@@ -16,21 +17,30 @@ import graft.model.Tile
   * that concatenates each target tile's source window into one dense
   * array. Here it is a join of the tile->window plan against the source
   * tile table, a narrow crop of each joined tile to its window, then
-  * `groupByKey(target tile).flatMapSortedGroups(assemble + kernel)`.
-  * One group holds every (var, band) of a target tile, so the kernel's
-  * per-tile work (the reference's `_transform_gridpoints`,
-  * reproject.py:472-496) runs once for all variables. Rectify builds
-  * both of its stages from the same parts ([[pieces]], [[windowRuns]],
-  * [[fillTiles]]), with its lookup tile as the per-tile work.
+  * one exchange that deals whole target tiles over the partitions
+  * ([[byTargetTile]]) and a sorted pass that assembles each window and
+  * runs the kernel. One run holds every (var, band) of a target tile,
+  * so the kernel's per-tile work (the reference's
+  * `_transform_gridpoints`, reproject.py:472-496) runs once for all
+  * variables. Rectify builds both of its stages from the same parts
+  * ([[pieces]], [[byTargetTile]], [[windowRuns]], [[fillTiles]]), with
+  * its lookup tile as the per-tile work.
   *
-  * Scale notes: the plan has numTargetTiles x overlap rows and is
-  * GENERATED DISTRIBUTED (a Dataset flatMap over the target tile index
-  * range) — nothing driver-side scales with tile count. The plan⋈tiles
-  * join is a plain equi-join on (srcTj, srcTi): AQE broadcasts the plan
-  * side when it is small and falls back to a shuffle join at large tile
-  * counts, so a 10^7-tile image never materializes a multi-GB plan on
-  * the driver. Each source tile is cut down to the part each reading
-  * target tile needs before the exchange, so shuffle volume is
+  * Scale notes: below [[DriverPlanMaxTiles]] target tiles the plan is
+  * built on the driver and HINTED as the broadcast side of the
+  * plan⋈tiles equi-join on (srcTj, srcTi). Unhinted, the planner picks
+  * the side with the smaller size estimate, and a source raster can
+  * look tiny: a cut (`Lineage.cutDs`) of tiles made from `spark.range`
+  * inherits the range's estimate of 8 bytes per row, whatever each
+  * tile's `array<double>` payload holds. The planner then ships the
+  * whole raster from the driver to every executor (32 MiB, estimated
+  * at 256 B, on the `reproject` benchmark).
+  * Above [[DriverPlanMaxTiles]] the plan (numTargetTiles x overlap
+  * rows) is GENERATED DISTRIBUTED (a Dataset flatMap over the target
+  * tile index range) and shuffle-joined, so nothing driver-side scales
+  * with tile count and a 10^7-tile image never materializes a multi-GB
+  * plan on the driver. Each source tile is cut down to the part each
+  * reading target tile needs before the exchange, so shuffle volume is
   * O(source bytes) (plus the windows' small overlap), not O(source
   * bytes x overlap). Empty windows (plan rows with srcTj = -1) still
   * produce a fill-only tile — matching the reference's `-1`-bbox fill
@@ -89,8 +99,9 @@ object TileGather {
 
   /** Below this many TARGET tiles the plan is built on the driver and
     * broadcast (a few MB at most — lower latency for small grids and
-    * tests); above it, the plan is generated distributed and joined, so
-    * a 10^7-tile raster never materializes its plan on the driver.
+    * tests); above it, the plan is generated distributed and shuffle-
+    * joined, so a 10^7-tile raster never materializes its plan on the
+    * driver.
     */
   val DriverPlanMaxTiles: Long = 4096L
 
@@ -114,17 +125,20 @@ object TileGather {
       dstNumTilesX: Int, dstNumTilesY: Int,
       windowOf: (Int, Int) => WindowRow,
       kernel: TileKernel): Dataset[Tile] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
     val n = dstNumTilesX.toLong * dstNumTilesY
     if (n <= DriverPlanMaxTiles) {
       val windows = for (dtj <- 0 until dstNumTilesY; dti <- 0 until dstNumTilesX)
         yield { val w = windowOf(dtj, dti); (w.dtj, w.dti, (w.i0, w.j0, w.i1, w.j1)) }
-      gather(tiles, srcGm, planFromWindows(srcGm, windows), kernel)
+      val plan = planFromWindows(srcGm, windows)
+      // the driver knows whether fill tasks exist: skip their stages if not
+      gatherDs(tiles, srcGm, broadcast(spark.createDataset(plan)), dstNumTilesX, n, kernel,
+        mayHaveFills = plan.exists(_.srcTj < 0))
     } else {
-      val spark = tiles.sparkSession
-      import spark.implicits._
       val nTx = dstNumTilesX
       val windowsDs = spark.range(n).map(id => windowOf((id / nTx).toInt, (id % nTx).toInt))
-      gatherDs(tiles, srcGm, planDs(srcGm, windowsDs), kernel)
+      gatherDs(tiles, srcGm, planDs(srcGm, windowsDs), dstNumTilesX, n, kernel, mayHaveFills = true)
     }
   }
 
@@ -138,47 +152,57 @@ object TileGather {
     gatherWithWindows(tiles, srcGm, dstNumTilesX, dstNumTilesY, windowOf,
       (dtj: Int, dti: Int) => (v: String, b: Int, win: Window) => kernel(v, b, dtj, dti, win))
 
-  /** Run `kernel` once per target tile, and its sampler once per
-    * (var, band) over the source window assembled from the joined
-    * source tiles. The window is never null; it is zero-sized for
-    * fill-only tiles.
+  /** Run `kernel` once per target tile of a `dstNumTilesX`-wide grid of
+    * `dstNumTiles` tiles, and its sampler once per (var, band) over the
+    * source window assembled from the cropped source pieces, streamed
+    * one window at a time. The window is never null; it is zero-sized
+    * for fill-only tiles. `mayHaveFills = false` skips the fill-task
+    * stages when the caller knows no srcTj = -1 rows exist.
     */
-  def gather(
-      tiles: Dataset[Tile],
-      srcGm: GridMapping,
-      plan: Seq[PlanRow],
-      kernel: TileKernel): Dataset[Tile] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    // driver knows whether fill tasks exist — skip their stages if not
-    gatherDs(tiles, srcGm, spark.createDataset(plan), kernel,
-      mayHaveFills = plan.exists(_.srcTj < 0))
-  }
-
-  /** Dataset-plan gather — the scale path. Each joined source tile is
-    * cropped to its target window before the exchange; the group of a
-    * target tile arrives sorted by (var, band) and is streamed one
-    * assembled window at a time. `mayHaveFills = false` skips the
-    * fill-task stages when the caller knows no srcTj = -1 rows exist.
-    */
-  def gatherDs(
+  private def gatherDs(
       tiles: Dataset[Tile],
       srcGm: GridMapping,
       plan: Dataset[PlanRow],
+      dstNumTilesX: Int, dstNumTiles: Long,
       kernel: TileKernel,
-      mayHaveFills: Boolean = true): Dataset[Tile] = {
+      mayHaveFills: Boolean): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
+    val gathered = byTargetTile(pieces(tiles, srcGm, plan), dstNumTilesX, dstNumTiles) {
+      (dtj, dti, rows) =>
+        val sample = kernel(dtj, dti)
+        windowRuns(rows).map { case (v, b, win) => sample(v, b, win) }
+    }
+    if (!mayHaveFills) gathered else gathered.union(fillTiles(tiles, plan, kernel))
+  }
 
-    val grouped = pieces(tiles, srcGm, plan)
-      .groupByKey(pc => (pc.dtj, pc.dti))
-      .flatMapSortedGroups(col("varName"), col("band")) {
-        (key: (Int, Int), rows: Iterator[Piece]) =>
-          val sample = kernel(key._1, key._2)
-          windowRuns(rows).map { case (v, b, win) => sample(v, b, win) }
+  /** The gathers' one grouping exchange. Target tiles are dealt round-
+    * robin by row-major index over n = min(target tiles, shuffle
+    * partitions) partitions (`repartitionById`, so no hash can pile
+    * tiles into one task), each partition is sorted by (dtj, dti,
+    * varName, band), and `perTile` runs once per target tile on its
+    * pieces in (var, band) order. `perTile` may leave pieces unread.
+    */
+  private[ops] def byTargetTile[T: Encoder](
+      pieces: Dataset[Piece], dstNumTilesX: Int, dstNumTiles: Long)(
+      perTile: (Int, Int, Iterator[Piece]) => Iterator[T]): Dataset[T] = {
+    val n = math.max(1L,
+      math.min(dstNumTiles, pieces.sparkSession.sessionState.conf.numShufflePartitions.toLong))
+    val partitionId = ((col("dtj").cast(LongType) * dstNumTilesX + col("dti")) % n).cast(IntegerType)
+    pieces
+      .repartitionById(n.toInt, partitionId)
+      .sortWithinPartitions("dtj", "dti", "varName", "band")
+      .mapPartitions { rows =>
+        val it = rows.buffered
+        Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+          val dtj = it.head.dtj; val dti = it.head.dti
+          val run = new Iterator[Piece] {
+            def hasNext: Boolean = it.hasNext && it.head.dtj == dtj && it.head.dti == dti
+            def next(): Piece = it.next()
+          }
+          perTile(dtj, dti, run) ++ { run.foreach(_ => ()); Iterator.empty[T] }
+        }
       }
-
-    if (!mayHaveFills) grouped else grouped.union(fillTiles(tiles, plan, kernel))
   }
 
   /** Every source tile joined to the plan rows that read it, cropped to
@@ -206,7 +230,7 @@ object TileGather {
     val spark = tiles.sparkSession
     import spark.implicits._
     val fillPlans = plan.filter(_.srcTj < 0)
-    val varsBands = tiles.map(t => (t.varName, t.band)).distinct()
+    val varsBands = tiles.select("varName", "band").distinct().as[(String, Int)]
     val empty = new Window(0, 0, 0, 0, Array.empty)
     fillPlans
       .joinWith(broadcast(varsBands), lit(true), "inner")

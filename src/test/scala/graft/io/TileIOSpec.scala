@@ -35,6 +35,76 @@ class TileIOSpec extends AnyFunSuite {
     assert(p.contains("PartitionFilters") && p.contains("tj"), p.take(1500))
   }
 
+  // 7 x 5 in 3 x 2 tiles: ragged last tile column (1 px) and row (1 px)
+  private val raggedGm = GridMapping.regular(7, 5, 50.0, 10.0, 0.1, 0.1, Crs.Geographic,
+    tileSize = Some((3, 2)))
+  private val oddBits: Array[Long] = Array(
+    0x7ff8000000000123L, // quiet NaN with a payload
+    0xfff0000000000001L, // signalling NaN, sign bit set
+    java.lang.Double.doubleToRawLongBits(-0.0),
+    java.lang.Double.doubleToRawLongBits(Double.PositiveInfinity),
+    java.lang.Double.doubleToRawLongBits(Double.NegativeInfinity),
+    1L, // smallest subnormal
+    0x000fffffffffffffL, // largest subnormal
+    0x800123456789abcdL) // negative subnormal
+  private def oddImage(band: Int) = Array.tabulate(5, 7) { (j, i) =>
+    val k = j * 7 + i + band
+    if (k % 3 == 0) java.lang.Double.longBitsToDouble(oddBits(k % oddBits.length))
+    else k * 1.5 - 20.0
+  }
+
+  test("round trip keeps every value's raw bits: NaN payloads, -0.0, Inf, subnormals, ragged tiles, two bands") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-io-bits").toString
+    val tiles = tilesFrom("v", oddImage(0), raggedGm) ++ tilesFrom("v", oddImage(1), raggedGm, band = 1) ++
+      tilesFrom("w", oddImage(2), raggedGm)
+    TileIO.writeTiles(toDs(tiles), dir, raggedGm)
+    val back = TileIO.readTiles(spark, dir)._1.collect()
+    def key(t: graft.model.Tile) = (t.varName, t.band, t.tj, t.ti)
+    assert(back.map(key).sorted.toSeq == tiles.map(key).sorted)
+    val byKey = back.map(t => key(t) -> t).toMap
+    tiles.foreach { t =>
+      val u = byKey(key(t))
+      assert((u.h, u.w) == (t.h, t.w), s"shape of ${key(t)}")
+      assert(u.data.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+        t.data.map(java.lang.Double.doubleToRawLongBits).toSeq, s"bits of ${key(t)}")
+    }
+    // every odd value made it into the written tiles
+    val written = tiles.flatMap(_.data.map(java.lang.Double.doubleToRawLongBits)).toSet
+    assert(oddBits.forall(written), "an odd value is missing from the fixture")
+    assert(tiles.exists(t => t.w == 1) && tiles.exists(t => t.h == 1), "no ragged tile")
+  }
+
+  test("each tile is stored as one binary chunk of 8·h·w bytes, data not dictionary-encoded") {
+    import org.apache.spark.sql.functions.{col, length}
+    import org.apache.spark.sql.types.BinaryType
+    val dir = java.nio.file.Files.createTempDirectory("graft-io-chunk").toString
+    // one task, so each tile-row file holds 6 tiles
+    TileIO.writeTiles(toDs(tilesFrom("v", oddImage(0), raggedGm) ++
+      tilesFrom("v", oddImage(1), raggedGm, band = 1)).coalesce(1), dir, raggedGm)
+    val stored = spark.read.parquet(s"$dir/tiles")
+    assert(stored.schema("data").dataType == BinaryType, stored.schema.treeString)
+    val sizes = stored.select(length(col("data")), col("h"), col("w")).collect()
+    assert(sizes.length == 2 * raggedGm.numTilesX * raggedGm.numTilesY)
+    sizes.foreach(r => assert(r.getInt(0) == 8 * r.getInt(1) * r.getInt(2), r.toString))
+    // the footers: `data` is plain, the small columns keep their dictionary
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/tiles")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+    assert(files.size == raggedGm.numTilesY)
+    val chunks = files.flatMap { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+      finally reader.close()
+    }
+    val byName = chunks.groupBy(_.getPath.toDotString)
+    assert(byName("data").forall(!_.hasDictionaryPage), "data has a dictionary page")
+    assert(byName("varName").forall(_.hasDictionaryPage), "varName lost its dictionary")
+  }
+
   test("addSpatialRef rewrites the CRS of an existing store in place (cfconv.py:320-358)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-io3").toString
     TileIO.writeTiles(toDs(tilesFrom("refl", img, gm)), dir, gm)

@@ -97,6 +97,82 @@ class TileGatherSpec extends AnyFunSuite {
     }
   }
 
+  private val utm64 = GridMapping.regular(64, 64, 565000.0, 5930000.0, 100.0, 100.0,
+    Crs.utm(32, north = true), Some((16, 16)))
+
+  test("driver-path gather broadcasts the plan rows, never a relation holding tile data, over a cut with tiny stats") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    object H extends AdaptiveSparkPlanHelper
+    val s = spark
+    import s.implicits._
+    // the source as a generator makes it: tiles mapped from spark.range,
+    // then cut, so the cut inherits the range's row-count estimate
+    val whole = tilesFrom("a", Array.tabulate(64, 64)((j, i) => j * 64.0 + i), utm64).toArray
+    val cut = graft.model.Lineage.cutDs(
+      spark.range(0L, whole.length.toLong, 1L, 4).map(id => whole(id.toInt)), reliable = false)
+    val payload = whole.map(_.data.length * 8L).sum
+    assert(cut.queryExecution.optimizedPlan.stats.sizeInBytes < payload,
+      "premise: the cut's estimate is smaller than its payload")
+    val (bx0, by0, _, by1) = CrsTransformer(utm64.crs, Crs.laea3035)
+      .transformBounds(utm64.xMin, utm64.yMin, utm64.xMax, utm64.yMax)
+    val dst = GridMapping.regular(140, 140, bx0, by0, 100.0, (by1 - by0) / 140, Crs.laea3035, Some((35, 35)))
+    assert(dst.numTiles <= TileGather.DriverPlanMaxTiles)
+    val out = ReprojectOp.reproject(cut, utm64, dst,
+      Map("a" -> VarPolicy(Interp.BILINEAR, Reducers.Mean, false, Double.NaN, F64)))
+    assert(out.count() == dst.numTiles)
+    val broadcasts = H.collect(out.queryExecution.executedPlan) {
+      case b: BroadcastExchangeLike => b.output.map(_.name)
+    }
+    assert(broadcasts.exists(_.contains("srcTj")), s"no plan-row broadcast:\n${out.queryExecution.executedPlan}")
+    assert(broadcasts.forall(!_.contains("data")),
+      s"a relation holding tile data is broadcast:\n${out.queryExecution.executedPlan}")
+    graft.model.Lineage.release(cut)
+  }
+
+  /** Gather a fully covered `nTx` x `nTy` target grid (16 x 16 target
+    * tiles over the 64 x 64 source) with a kernel that ignores its
+    * window; returns the output's (partition id, dtj, dti) rows and
+    * its number of partitions.
+    */
+  private def tilePartitions(nTx: Int, nTy: Int): (Seq[(Int, Int, Int)], Int) = {
+    val s = spark
+    import s.implicits._
+    val src = toDs(tilesFrom("a", Array.tabulate(64, 64)((j, i) => j * 64.0 + i), utm64) ++
+      tilesFrom("b", Array.tabulate(64, 64)((j, i) => -j * 64.0 - i), utm64))
+    val out = TileGather.gatherWithWindows(src, utm64, nTx, nTy,
+      (dtj: Int, dti: Int) => TileGather.WindowRow(dtj, dti, dti * 4, dtj * 4, dti * 4 + 8, dtj * 4 + 8),
+      (v: String, b: Int, dtj: Int, dti: Int, win: Window) => Tile(v, b, dtj, dti, 1, 1, Array(win.data.sum)))
+    val tagged = out.toDF().select(org.apache.spark.sql.functions.spark_partition_id(), $"tj", $"ti")
+      .as[(Int, Int, Int)]
+    (tagged.collect().toSeq, tagged.rdd.getNumPartitions)
+  }
+
+  test("target tiles are dealt evenly over the partitions: 25 tiles over 4 partitions, 6 or 7 each") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val (rows, numPartitions) = tilePartitions(5, 5)
+    assert(numPartitions == 4)
+    assert(rows.size == 25 * 2)
+    // each target tile, with both its variables, in one partition
+    val pidOf = rows.groupBy(r => (r._2, r._3)).map { case (t, rs) =>
+      assert(rs.map(_._1).distinct.size == 1, s"tile $t split over partitions"); t -> rs.head._1 }
+    assert(pidOf.size == 25)
+    val perPartition = pidOf.groupBy(_._2).map { case (p, ts) => p -> ts.size }
+    assert(perPartition.keySet == Set(0, 1, 2, 3), perPartition.toString)
+    assert(perPartition.values.forall(n => n == 6 || n == 7), perPartition.toString)
+  }
+
+  test("more partitions than target tiles: one tile per task, no task empty") {
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try {
+      val (rows, numPartitions) = tilePartitions(3, 2)
+      assert(numPartitions == 6)
+      val perPartition = rows.groupBy(_._1).map { case (p, rs) => p -> rs.map(r => (r._2, r._3)).distinct.size }
+      assert(perPartition.keySet == (0 until 6).toSet, perPartition.toString)
+      assert(perPartition.values.forall(_ == 1), perPartition.toString)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+  }
+
   test("windows assembled from cropped pieces == assembleWindow over the whole tiles") {
     // 50 x 37 source in 16 x 16 tiles: the last tile column is 2 px
     // wide, the last tile row 5 px tall
