@@ -162,6 +162,16 @@ object GridMappingInference {
     FoldedEdge(d0, minD, maxD, minV, maxV, hasNaN, nDiffs)
   }
 
+  /** The "x" and "y" tiles among one coord tile position's tiles. A
+    * coordinate set missing either one is input error, named by tile.
+    */
+  def xyPair(tj: Int, ti: Int, ts: Iterator[Tile]): (Tile, Tile) = {
+    val arr = ts.toArray
+    val xt = arr.find(_.varName == "x"); val yt = arr.find(_.varName == "y")
+    require(xt.isDefined && yt.isDefined, s"missing x or y coord tile at ($tj,$ti)")
+    (xt.get, yt.get)
+  }
+
   /** 2D coord images (vars "x"/"y" in `coordTiles`, tiled per
     * (tileW, tileH)) -> grid mapping. Returns an irregular mapping with
     * the reference's area-blend resolution estimate
@@ -236,10 +246,8 @@ object GridMappingInference {
       // with the last-row/column duplication applied tile-locally
       val geographic = crs.isGeographic
       val (amin, amax) = tiles.groupByKey(t => (t.tj, t.ti))
-        .mapGroups { (_: (Int, Int), ts: Iterator[Tile]) =>
-          val arr = ts.toArray
-          val xt = arr.find(_.varName == "x").get
-          val yt = arr.find(_.varName == "y").get
+        .mapGroups { (key: (Int, Int), ts: Iterator[Tile]) =>
+          val (xt, yt) = xyPair(key._1, key._2, ts)
           val h = xt.h; val w = xt.w
           var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
           // diff arrays extended by duplicating the LAST DIFF row/col
@@ -411,10 +419,7 @@ object GridMappingInference {
           .groupByKey(t => (t.tj, t.ti))
           .flatMapGroups { (key: (Int, Int), it: Iterator[graft.model.Tile]) =>
             val (tj, ti) = key
-            var xt: graft.model.Tile = null
-            var yt: graft.model.Tile = null
-            it.foreach { t => if (t.varName == "x") xt = t else yt = t }
-            require(xt != null && yt != null, s"missing x or y coord tile at ($tj,$ti)")
+            val (xt, yt) = xyPair(tj, ti, it)
             val out = new Array[(Int, Int, Double, Double)](xt.h * xt.w)
             var k = 0
             var r = 0

@@ -86,7 +86,8 @@ object RasterOps {
     import graft.kernel.{Interp, Reducers}
     val spark = tiles.sparkSession
     import spark.implicits._
-    tiles.map(_.varName).distinct().collect().map { v =>
+    // the varName column alone: a typed map would deserialize every payload
+    tiles.select("varName").distinct().as[String].collect().map { v =>
       v -> VarPolicy(Interp.NEAREST, Reducers.Center, recoverNan = false,
         fill = Double.NaN, dtype = Policies.F64)
     }.toMap

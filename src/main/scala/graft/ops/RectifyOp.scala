@@ -1,8 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.functions.{broadcast, col}
-import graft.geom.{CrsTransformer, GridMapping}
+import graft.geom.{CrsTransformer, GridMapping, GridMappingInference}
 import graft.kernel.TriangleRasterizer
 import graft.model.Tile
 import graft.model.Policies.VarPolicy
@@ -24,20 +23,26 @@ import graft.model.Policies.VarPolicy
   *  4. per-variable gather through the lookup image
   *     (reference: rectify.py:579-734)
   *
-  * Both gathers (stages 3 and 4) run on [[TileGather]]'s cropped
-  * pieces, grouped by target tile. Stage 4 cogroups each lookup tile
-  * with every (var, band)'s pieces of that target tile, so the lookup
-  * is shipped and read once for all variables (the reference shares
-  * it across vars too, rectify.py:146-174).
+  * Both stages plan with [[TileGather.plan]] and gather on
+  * [[TileGather.byTargetTile]], the exchange affine and reproject run
+  * on. In stage 4 each lookup tile travels through that exchange as a
+  * [[TileGather.Piece]] named [[LookupName]], ahead of the (var, band)
+  * pieces of its target tile, so the lookup is shipped and read once for
+  * all variables (the reference shares it across vars too,
+  * rectify.py:146-174). Only target tiles with a non-empty lookup are
+  * gathered; every other target tile gets its fill from
+  * [[TileGather.withFillTiles]].
   */
 object RectifyOp {
 
   val UvDelta = 1e-3 // reference: constants.py:80
 
-  /** A lookup tile: fractional source (i, j) per target pixel. */
-  final case class LookupTile(
-      tj: Int, ti: Int, h: Int, w: Int,
-      srcI: Array[Double], srcJ: Array[Double])
+  /** The varName of a lookup piece. The empty string sorts ahead of
+    * every variable, so a lookup heads its target tile's run. Its piece
+    * holds the target tile's srcI ++ srcJ (pw x ph each) and, as its
+    * window, the source extent the lookup reads.
+    */
+  private val LookupName = ""
 
   /** Rectify `tiles` (vars on the irregular source grid) given coord
     * tiles holding 2D x/y images (varName "x" and "y" on the SAME
@@ -56,6 +61,7 @@ object RectifyOp {
       srcGm: GridMapping,
       dstGm: GridMapping,
       policies: Map[String, VarPolicy]): Dataset[Tile] = {
+    require(!policies.contains(LookupName), "rectify: no variable may be named \"\", the lookup tiles' name")
     val (tiles2, coords2, srcGm2) =
       downscaleSource(tiles, coordTiles, srcGm, dstGm, policies)
     val lookup = computeLookup(coords2, srcGm2, dstGm).localCheckpoint()
@@ -104,7 +110,7 @@ object RectifyOp {
           graft.model.Policies.F64))
       val tiles2 = AffineOp.resampleWithMatrix(tiles, srcGm, gmSmall, m, dataPolicies)
       val coords2 = AffineOp.resampleWithMatrix(coordTiles, srcGm, gmSmall, m, coordPolicies)
-      val srcGm2 = graft.geom.GridMappingInference.fromCoords2D(
+      val srcGm2 = GridMappingInference.fromCoords2D(
         coords2, w, h, gmSmall.tileWidth, gmSmall.tileHeight, srcGm.crs)
       (tiles2, coords2, srcGm2)
     }
@@ -123,9 +129,7 @@ object RectifyOp {
     else coordTiles
       .groupByKey(c => (c.band, c.tj, c.ti))
       .flatMapGroups { (key: (Int, Int, Int), ts: Iterator[Tile]) =>
-        val arr = ts.toArray
-        val xs = arr.find(_.varName == "x").get
-        val ys = arr.find(_.varName == "y").get
+        val (xs, ys) = GridMappingInference.xyPair(key._2, key._3, ts)
         val nx = xs.data.clone(); val ny = ys.data.clone()
         var k = 0
         while (k < nx.length) {
@@ -140,14 +144,15 @@ object RectifyOp {
   /** Stage 2+3: per-target-tile source bbox plan (one aggregate job over
     * the coord tiles — each pixel bins ANALYTICALLY into the few target
     * tiles whose grown bbox can contain it, O(1) per pixel instead of a
-    * loop over every tile), then the rasterization gather. Nothing
-    * driver-side scales with tile count: windows, plan, and fill tiles
-    * are all Datasets.
+    * loop over every tile), then the rasterization gather. Only target
+    * tiles that some triangle reaches get a lookup piece. On large
+    * grids [[TileGather.plan]] keeps the windows and plan as Datasets,
+    * so nothing driver-side scales with tile count.
     */
-  private def computeLookup(
+  private[ops] def computeLookup(
       coordTiles: Dataset[Tile],
       srcGm: GridMapping,
-      dstGm: GridMapping): Dataset[LookupTile] = {
+      dstGm: GridMapping): Dataset[TileGather.Piece] = {
     val spark = coordTiles.sparkSession
     import spark.implicits._
 
@@ -174,10 +179,8 @@ object RectifyOp {
     // arithmetic on the regular target grid, not a scan of all boxes)
     val partials = coordTiles
       .groupByKey(c => (c.tj, c.ti))
-      .flatMapGroups { (_: (Int, Int), ts: Iterator[Tile]) =>
-        val arr = ts.toArray
-        val xs = arr.find(_.varName == "x").get
-        val ys = arr.find(_.varName == "y").get
+      .flatMapGroups { (key: (Int, Int), ts: Iterator[Tile]) =>
+        val (xs, ys) = GridMappingInference.xyPair(key._1, key._2, ts)
         val acc = new java.util.HashMap[Long, Array[Int]]()
         val spanX = dtw * dXRes; val spanY = dth * dYRes
         var j = 0
@@ -260,126 +263,90 @@ object RectifyOp {
 
     // each target tile's x and y windows, assembled from coord pieces
     // (sorted by (varName, band): "x" before "y")
-    def rasterized(plan: Dataset[TileGather.PlanRow]): Dataset[LookupTile] =
-      TileGather.byTargetTile(TileGather.pieces(coordTiles, srcGm, plan), nTx, nTx.toLong * nTy) {
-        (dtj, dti, pcs) =>
-          val wins = TileGather.windowRuns(pcs).map { case (v, _, win) => v -> win }.toMap
-          val xWin = wins("x"); val yWin = wins("y")
-          val h = math.min(dth, dH - dtj * dth)
-          val w = math.min(dtw, dW - dti * dtw)
-          val srcI = Array.fill(h * w)(Double.NaN)
-          val srcJ = Array.fill(h * w)(Double.NaN)
-          val dstXOffset = dXMin + dti * dtw * dXRes
-          val (dstYOffset, dstYScale) =
-            if (jUp) (dYMin + dtj * dth * dYRes, dYRes)
-            else (dYMax - dtj * dth * dYRes, -dYRes)
-          TriangleRasterizer.rasterize(
-            xWin.data, yWin.data, xWin.w, xWin.h, xWin.i0, xWin.j0,
-            dstXOffset, dstYOffset, dXRes, dstYScale,
-            w, h, UvDelta, srcI, srcJ)
-          Iterator.single(LookupTile(dtj, dti, h, w, srcI, srcJ))
-        }
-
-    def nanLookup(dtj: Int, dti: Int): LookupTile = {
-      val h = math.min(dth, dH - dtj * dth)
-      val w = math.min(dtw, dW - dti * dtw)
-      LookupTile(dtj, dti, h, w,
-        Array.fill(h * w)(Double.NaN), Array.fill(h * w)(Double.NaN))
-    }
-
-    // target tiles with NO source coverage never match the inner join —
-    // they still get all-NaN lookup tiles so gathers produce fill tiles,
-    // like the reference's -1-bbox blocks (reference: rectify.py:393-396).
-    // Small grids: one bounded collect (<= DriverPlanMaxTiles rows of
-    // 24 B) buys a broadcast plan + driver-computed fill tiles — far
-    // fewer stages. At scale everything stays distributed and nothing
-    // on the driver grows with tile count.
-    if (nTx.toLong * nTy <= TileGather.DriverPlanMaxTiles) {
-      val wr = windowRows0.collect().toSeq
-      val plan = broadcast(spark.createDataset(wr.flatMap(w =>
-        TileGather.planRowsOf(srcTw, srcTh, srcGm.numTilesX, srcGm.numTilesY, w))))
-      val coveredSet = wr.map(w => (w.dtj, w.dti)).toSet
-      val fills = for {
-        dtj <- 0 until nTy; dti <- 0 until nTx if !coveredSet((dtj, dti))
-      } yield nanLookup(dtj, dti)
-      if (fills.isEmpty) rasterized(plan)
-      else rasterized(plan).union(spark.createDataset(fills))
-    } else {
-      // localCheckpoint, not persist: the checkpoint blocks are freed
-      // by the ContextCleaner once the lookup plan is garbage
-      // collected, where an explicit persist() would leak cached
-      // blocks for the session lifetime on every rectify call
-      val wr = windowRows0.localCheckpoint()
-      graft.model.Lineage.retire(wr)
-      val plan = TileGather.planDs(srcGm, wr)
-      val uncovered = spark.range(nTx.toLong * nTy)
-        .map(id => ((id / nTx).toInt, (id % nTx).toInt))
-        .except(wr.map(w => (w.dtj, w.dti)))
-        .map { case (dtj, dti) => nanLookup(dtj, dti) }
-      rasterized(plan).union(uncovered)
+    val reads = TileGather.plan(srcGm, nTx, nTy, windowRows0).reads
+    TileGather.byTargetTile(TileGather.pieces(coordTiles, srcGm, reads), nTx, nTx.toLong * nTy) {
+      (dtj, dti, pcs) =>
+        val wins = TileGather.windowRuns(pcs).map { case (v, _, win) => v -> win }.toMap
+        val xWin = wins("x"); val yWin = wins("y")
+        val h = math.min(dth, dH - dtj * dth)
+        val w = math.min(dtw, dW - dti * dtw)
+        val srcI = Array.fill(h * w)(Double.NaN)
+        val srcJ = Array.fill(h * w)(Double.NaN)
+        val dstXOffset = dXMin + dti * dtw * dXRes
+        val (dstYOffset, dstYScale) =
+          if (jUp) (dYMin + dtj * dth * dYRes, dYRes)
+          else (dYMax - dtj * dth * dYRes, -dYRes)
+        TriangleRasterizer.rasterize(
+          xWin.data, yWin.data, xWin.w, xWin.h, xWin.i0, xWin.j0,
+          dstXOffset, dstYOffset, dXRes, dstYScale,
+          w, h, UvDelta, srcI, srcJ)
+        lookupPiece(dtj, dti, h, w, srcI, srcJ, srcWd, srcHt).iterator
     }
   }
 
-  /** Stage 4: sample every variable through the lookup image. The source
-    * window for a target tile is the lookup's own (i, j) extent
-    * (reference: rectify.py:622-630), derived by a distributed map over
-    * the lookup tiles. One cogroup per target tile pairs its lookup
-    * tile with the cropped pieces of every (var, band), sorted by
-    * (var, band); target tiles with no window get their fill tiles
-    * from [[TileGather]]'s srcTj = -1 fill path.
+  /** The lookup piece of target tile (dtj, dti). Its window is the
+    * source (i, j) extent the lookup reads (reference:
+    * rectify.py:622-630); None when no lookup pixel is set, so a
+    * target tile no triangle reaches gets no lookup.
+    */
+  private def lookupPiece(
+      dtj: Int, dti: Int, h: Int, w: Int, srcI: Array[Double], srcJ: Array[Double],
+      srcW: Int, srcH: Int): Option[TileGather.Piece] = {
+    var i0 = Double.MaxValue; var j0 = Double.MaxValue
+    var i1 = Double.MinValue; var j1 = Double.MinValue
+    var k = 0
+    while (k < srcI.length) {
+      val fi = srcI(k); val fj = srcJ(k)
+      if (!fi.isNaN) {
+        if (fi < i0) i0 = fi; if (fi > i1) i1 = fi
+        if (fj < j0) j0 = fj; if (fj > j1) j1 = fj
+      }
+      k += 1
+    }
+    if (i1 < i0) None
+    else Some(TileGather.Piece(LookupName, 0, dtj, dti,
+      i0.toInt, j0.toInt, math.min(i1.toInt + 2, srcW), math.min(j1.toInt + 2, srcH),
+      0, 0, w, h, srcI ++ srcJ))
+  }
+
+  /** Stage 4: sample every variable through the lookup image. Each
+    * lookup's window plans the variable pieces of its target tile; one
+    * [[TileGather.byTargetTile]] exchange carries the lookup pieces and
+    * the variable pieces, and each run samples every (var, band) of its
+    * target tile through the lookup at its head. Target tiles with no
+    * lookup get their fill tiles from [[TileGather.withFillTiles]].
     */
   private def gatherVars(
       tiles: Dataset[Tile],
-      lookup: Dataset[LookupTile],
+      lookup: Dataset[TileGather.Piece],
       srcGm: GridMapping,
       dstGm: GridMapping,
       policies: Map[String, VarPolicy]): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
 
+    val nTx = dstGm.numTilesX; val nTy = dstGm.numTilesY
+    val plan = TileGather.plan(srcGm, nTx, nTy,
+      lookup.select("dtj", "dti", "i0", "j0", "i1", "j1").as[TileGather.WindowRow])
     val srcW = srcGm.width; val srcH = srcGm.height
-    val windowRows = lookup.map { lt =>
-      var i0 = Double.MaxValue; var j0 = Double.MaxValue
-      var i1 = Double.MinValue; var j1 = Double.MinValue
-      var k = 0
-      while (k < lt.srcI.length) {
-        val fi = lt.srcI(k); val fj = lt.srcJ(k)
-        if (!fi.isNaN) {
-          if (fi < i0) i0 = fi; if (fi > i1) i1 = fi
-          if (fj < j0) j0 = fj; if (fj > j1) j1 = fj
+    val pieces = lookup.union(TileGather.pieces(tiles, srcGm, plan.reads))
+    val sampled = TileGather.byTargetTile(pieces, nTx, nTx.toLong * nTy) { (_, _, run) =>
+      val lt = run.next() // LookupName sorts first; only tiles with a lookup have pieces
+      val n = lt.pw * lt.ph
+      TileGather.windowRuns(run).map { case (v, b, win) =>
+        val pol = policies(v)
+        val out = new Array[Double](n)
+        var k = 0
+        while (k < n) {
+          out(k) = TriangleRasterizer.gatherValue(
+            win, srcW, srcH, lt.data(k), lt.data(n + k), pol.interp, pol.fill)
+          k += 1
         }
-        k += 1
+        Tile(v, b, lt.dtj, lt.dti, lt.ph, lt.pw, out)
       }
-      if (i1 < i0) TileGather.WindowRow(lt.tj, lt.ti, -1, -1, -1, -1)
-      else TileGather.WindowRow(lt.tj, lt.ti,
-        i0.toInt, j0.toInt,
-        math.min(i1.toInt + 2, srcW), math.min(j1.toInt + 2, srcH))
     }
-    val plan0 = TileGather.planDs(srcGm, windowRows)
-    val plan =
-      if (dstGm.numTilesX.toLong * dstGm.numTilesY <= TileGather.DriverPlanMaxTiles)
-        broadcast(plan0) else plan0
 
-    val sampled = lookup.groupByKey(lt => (lt.tj, lt.ti))
-      .cogroupSorted(TileGather.pieces(tiles, srcGm, plan).groupByKey(pc => (pc.dtj, pc.dti)))()(
-        col("varName"), col("band")) {
-        (_: (Int, Int), lts: Iterator[LookupTile], pcs: Iterator[TileGather.Piece]) =>
-          // every group has its lookup tile: the pieces' windows come from it
-          val lt = lts.next()
-          TileGather.windowRuns(pcs).map { case (v, b, win) =>
-            val pol = policies(v)
-            val out = new Array[Double](lt.h * lt.w)
-            var k = 0
-            while (k < out.length) {
-              out(k) = TriangleRasterizer.gatherValue(
-                win, srcW, srcH, lt.srcI(k), lt.srcJ(k), pol.interp, pol.fill)
-              k += 1
-            }
-            Tile(v, b, lt.tj, lt.ti, lt.h, lt.w, out)
-          }
-      }
-
-    // a window-less lookup is all NaN, so every pixel samples to fill
+    // gatherValue samples a NaN lookup to fill: so does a missing one
     val dth = dstGm.tileHeight; val dtw = dstGm.tileWidth
     val dH = dstGm.height; val dW = dstGm.width
     val fill: TileGather.TileKernel = (dtj, dti) => {
@@ -387,6 +354,6 @@ object RectifyOp {
       val w = math.min(dtw, dW - dti * dtw)
       (v, b, _) => Tile(v, b, dtj, dti, h, w, Array.fill(h * w)(policies(v).fill))
     }
-    sampled.union(TileGather.fillTiles(tiles, plan, fill))
+    TileGather.withFillTiles(sampled, tiles, plan, fill)
   }
 }

@@ -15,18 +15,21 @@ import graft.model.Tile
   * The reference does this as `_reorganize_data_array_slice`
   * (reference: xcube_resampling/reproject.py:499-530) — a dask gather
   * that concatenates each target tile's source window into one dense
-  * array. Here it is a join of the tile->window plan against the source
-  * tile table, a narrow crop of each joined tile to its window, then
-  * one exchange that deals whole target tiles over the partitions
-  * ([[byTargetTile]]) and a sorted pass that assembles each window and
-  * runs the kernel. One run holds every (var, band) of a target tile,
-  * so the kernel's per-tile work (the reference's
+  * array. Here it is a join of the tile->window plan ([[plan]]) against
+  * the source tile table, a narrow crop of each joined tile to its
+  * window, then one exchange that deals whole target tiles over the
+  * partitions ([[byTargetTile]]) and a sorted pass that assembles each
+  * window and runs the kernel. One run holds every (var, band) of a
+  * target tile, so the kernel's per-tile work (the reference's
   * `_transform_gridpoints`, reproject.py:472-496) runs once for all
   * variables. Rectify builds both of its stages from the same parts
-  * ([[pieces]], [[byTargetTile]], [[windowRuns]], [[fillTiles]]), with
-  * its lookup tile as the per-tile work.
+  * ([[plan]], [[pieces]], [[byTargetTile]], [[windowRuns]],
+  * [[withFillTiles]]); its lookup tile rides the same exchange at the
+  * head of its target tile's run. Every raster gather of the engine
+  * therefore groups target tiles in [[byTargetTile]] and plans in
+  * [[plan]].
   *
-  * Scale notes: below [[DriverPlanMaxTiles]] target tiles the plan is
+  * Scale notes: up to [[DriverPlanMaxTiles]] target tiles the plan is
   * built on the driver and HINTED as the broadcast side of the
   * plan⋈tiles equi-join on (srcTj, srcTi). Unhinted, the planner picks
   * the side with the smaller size estimate, and a source raster can
@@ -36,15 +39,16 @@ import graft.model.Tile
   * whole raster from the driver to every executor (32 MiB, estimated
   * at 256 B, on the `reproject` benchmark).
   * Above [[DriverPlanMaxTiles]] the plan (numTargetTiles x overlap
-  * rows) is GENERATED DISTRIBUTED (a Dataset flatMap over the target
-  * tile index range) and shuffle-joined, so nothing driver-side scales
-  * with tile count and a 10^7-tile image never materializes a multi-GB
-  * plan on the driver. Each source tile is cut down to the part each
-  * reading target tile needs before the exchange, so shuffle volume is
+  * rows) is GENERATED DISTRIBUTED (a Dataset flatMap over the windows)
+  * and shuffle-joined, so nothing driver-side scales with tile count
+  * and a 10^7-tile image never materializes a multi-GB plan on the
+  * driver. Each source tile is cut down to the part each reading
+  * target tile needs before the exchange, so shuffle volume is
   * O(source bytes) (plus the windows' small overlap), not O(source
-  * bytes x overlap). Empty windows (plan rows with srcTj = -1) still
-  * produce a fill-only tile — matching the reference's `-1`-bbox fill
-  * blocks (reference: reproject.py:415-423, rectify.py:393-396).
+  * bytes x overlap). Target tiles with no window produce fill-only
+  * tiles ([[withFillTiles]]), and nothing else does — matching the
+  * reference's `-1`-bbox fill blocks (reference: reproject.py:415-423,
+  * rectify.py:393-396).
   */
 object TileGather {
 
@@ -61,40 +65,17 @@ object TileGather {
   final case class WindowRow(dtj: Int, dti: Int, i0: Int, j0: Int, i1: Int, j1: Int)
 
   /** Expand one target-tile window into its (target tile, source tile)
-    * plan rows. A window with i0 < 0 yields a single srcTj = -1
-    * (fill-only) row.
+    * plan rows.
     */
   def planRowsOf(
       srcTileW: Int, srcTileH: Int, srcNumTilesX: Int, srcNumTilesY: Int,
-      w: WindowRow): Seq[PlanRow] =
-    if (w.i0 < 0) Seq(PlanRow(w.dtj, w.dti, -1, -1, -1, -1, -1, -1))
-    else {
-      val stj0 = math.max(0, w.j0 / srcTileH)
-      val stj1 = math.min(srcNumTilesY - 1, (w.j1 - 1) / srcTileH)
-      val sti0 = math.max(0, w.i0 / srcTileW)
-      val sti1 = math.min(srcNumTilesX - 1, (w.i1 - 1) / srcTileW)
-      for (stj <- stj0 to stj1; sti <- sti0 to sti1)
-        yield PlanRow(w.dtj, w.dti, w.i0, w.j0, w.i1, w.j1, stj, sti)
-    }
-
-  /** Driver-side plan expansion (small tile counts / tests). */
-  def planFromWindows(
-      srcGm: GridMapping,
-      windows: Seq[(Int, Int, (Int, Int, Int, Int))]): Seq[PlanRow] =
-    windows.flatMap { case (dtj, dti, (i0, j0, i1, j1)) =>
-      planRowsOf(srcGm.tileWidth, srcGm.tileHeight, srcGm.numTilesX, srcGm.numTilesY,
-        WindowRow(dtj, dti, i0, j0, i1, j1))
-    }
-
-  /** Distributed plan expansion: the scale path — plan rows never touch
-    * the driver.
-    */
-  def planDs(srcGm: GridMapping, windows: Dataset[WindowRow]): Dataset[PlanRow] = {
-    val spark = windows.sparkSession
-    import spark.implicits._
-    val tw = srcGm.tileWidth; val th = srcGm.tileHeight
-    val ntx = srcGm.numTilesX; val nty = srcGm.numTilesY
-    windows.flatMap(w => planRowsOf(tw, th, ntx, nty, w))
+      w: WindowRow): Seq[PlanRow] = {
+    val stj0 = math.max(0, w.j0 / srcTileH)
+    val stj1 = math.min(srcNumTilesY - 1, (w.j1 - 1) / srcTileH)
+    val sti0 = math.max(0, w.i0 / srcTileW)
+    val sti1 = math.min(srcNumTilesX - 1, (w.i1 - 1) / srcTileW)
+    for (stj <- stj0 to stj1; sti <- sti0 to sti1)
+      yield PlanRow(w.dtj, w.dti, w.i0, w.j0, w.i1, w.j1, stj, sti)
   }
 
   /** Below this many TARGET tiles the plan is built on the driver and
@@ -104,6 +85,49 @@ object TileGather {
     * driver.
     */
   val DriverPlanMaxTiles: Long = 4096L
+
+  /** A gather's plan: `reads`, the rows that join source tiles, and
+    * `fills`, the (dtj, dti) of every target tile with no window (None
+    * when the driver knows there is none).
+    */
+  private[ops] final case class Plan(reads: Dataset[PlanRow], fills: Option[Dataset[(Int, Int)]])
+
+  /** The gathers' one plan builder, for a `dstNumTilesX` x
+    * `dstNumTilesY` target grid. `windows` holds at most one row per
+    * target tile; a tile with no row, or with i0 < 0, has no window.
+    * Up to [[DriverPlanMaxTiles]] target tiles the windows are collected
+    * (no job when they are a local relation) and the plan is built on
+    * the driver, hinted as the broadcast side of the pieces join.
+    * Above it, reads and fills are Datasets, the fills an anti-join of
+    * the target tile index range against the windows.
+    */
+  private[ops] def plan(
+      srcGm: GridMapping, dstNumTilesX: Int, dstNumTilesY: Int,
+      windows: Dataset[WindowRow]): Plan = {
+    val spark = windows.sparkSession
+    import spark.implicits._
+    val tw = srcGm.tileWidth; val th = srcGm.tileHeight
+    val ntx = srcGm.numTilesX; val nty = srcGm.numTilesY
+    val nTx = dstNumTilesX
+    val n = nTx.toLong * dstNumTilesY
+    if (n <= DriverPlanMaxTiles) {
+      val covered = windows.collect().filter(_.i0 >= 0)
+      val reads = covered.toSeq.flatMap(w => planRowsOf(tw, th, ntx, nty, w))
+      val hasWindow = covered.map(w => (w.dtj, w.dti)).toSet
+      val fills = for {
+        dtj <- 0 until dstNumTilesY; dti <- 0 until nTx if !hasWindow((dtj, dti))
+      } yield (dtj, dti)
+      Plan(broadcast(spark.createDataset(reads)),
+        if (fills.isEmpty) None else Some(spark.createDataset(fills)))
+    } else {
+      val covered = windows.filter(col("i0") >= 0)
+      val fills = spark.range(n)
+        .select((col("id") / nTx).cast(IntegerType).as("dtj"), (col("id") % nTx).cast(IntegerType).as("dti"))
+        .join(covered.select("dtj", "dti"), Seq("dtj", "dti"), "left_anti")
+        .as[(Int, Int)]
+      Plan(covered.flatMap(w => planRowsOf(tw, th, ntx, nty, w)), Some(fills))
+    }
+  }
 
   /** A kernel of the shared gather, called once per target tile
     * (dtj, dti). It returns the sampler that turns each (var, band)'s
@@ -115,9 +139,9 @@ object TileGather {
     */
   type TileKernel = (Int, Int) => (String, Int, Window) => Tile
 
-  /** Plan + gather for window functions of the target tile index: picks
-    * the driver/broadcast path for small grids, the distributed path at
-    * scale. `windowOf` must be pure (it runs in executors at scale).
+  /** Plan + gather for window functions of the target tile index. The
+    * windows are computed where [[plan]] builds the plan: on the driver
+    * for small grids, in executors at scale, so `windowOf` must be pure.
     */
   def gatherWithWindows(
       tiles: Dataset[Tile],
@@ -127,19 +151,18 @@ object TileGather {
       kernel: TileKernel): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val n = dstNumTilesX.toLong * dstNumTilesY
-    if (n <= DriverPlanMaxTiles) {
-      val windows = for (dtj <- 0 until dstNumTilesY; dti <- 0 until dstNumTilesX)
-        yield { val w = windowOf(dtj, dti); (w.dtj, w.dti, (w.i0, w.j0, w.i1, w.j1)) }
-      val plan = planFromWindows(srcGm, windows)
-      // the driver knows whether fill tasks exist: skip their stages if not
-      gatherDs(tiles, srcGm, broadcast(spark.createDataset(plan)), dstNumTilesX, n, kernel,
-        mayHaveFills = plan.exists(_.srcTj < 0))
-    } else {
-      val nTx = dstNumTilesX
-      val windowsDs = spark.range(n).map(id => windowOf((id / nTx).toInt, (id % nTx).toInt))
-      gatherDs(tiles, srcGm, planDs(srcGm, windowsDs), dstNumTilesX, n, kernel, mayHaveFills = true)
+    val nTx = dstNumTilesX
+    val n = nTx.toLong * dstNumTilesY
+    val windows =
+      if (n <= DriverPlanMaxTiles)
+        spark.createDataset(for (dtj <- 0 until dstNumTilesY; dti <- 0 until nTx) yield windowOf(dtj, dti))
+      else spark.range(n).map(id => windowOf((id / nTx).toInt, (id % nTx).toInt))
+    val p = plan(srcGm, dstNumTilesX, dstNumTilesY, windows)
+    val gathered = byTargetTile(pieces(tiles, srcGm, p.reads), nTx, n) { (dtj, dti, rows) =>
+      val sample = kernel(dtj, dti)
+      windowRuns(rows).map { case (v, b, win) => sample(v, b, win) }
     }
+    withFillTiles(gathered, tiles, p, kernel)
   }
 
   /** The same gather for a kernel of one (var, band, target tile). */
@@ -151,30 +174,6 @@ object TileGather {
       kernel: (String, Int, Int, Int, Window) => Tile): Dataset[Tile] =
     gatherWithWindows(tiles, srcGm, dstNumTilesX, dstNumTilesY, windowOf,
       (dtj: Int, dti: Int) => (v: String, b: Int, win: Window) => kernel(v, b, dtj, dti, win))
-
-  /** Run `kernel` once per target tile of a `dstNumTilesX`-wide grid of
-    * `dstNumTiles` tiles, and its sampler once per (var, band) over the
-    * source window assembled from the cropped source pieces, streamed
-    * one window at a time. The window is never null; it is zero-sized
-    * for fill-only tiles. `mayHaveFills = false` skips the fill-task
-    * stages when the caller knows no srcTj = -1 rows exist.
-    */
-  private def gatherDs(
-      tiles: Dataset[Tile],
-      srcGm: GridMapping,
-      plan: Dataset[PlanRow],
-      dstNumTilesX: Int, dstNumTiles: Long,
-      kernel: TileKernel,
-      mayHaveFills: Boolean): Dataset[Tile] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    val gathered = byTargetTile(pieces(tiles, srcGm, plan), dstNumTilesX, dstNumTiles) {
-      (dtj, dti, rows) =>
-        val sample = kernel(dtj, dti)
-        windowRuns(rows).map { case (v, b, win) => sample(v, b, win) }
-    }
-    if (!mayHaveFills) gathered else gathered.union(fillTiles(tiles, plan, kernel))
-  }
 
   /** The gathers' one grouping exchange. Target tiles are dealt round-
     * robin by row-major index over n = min(target tiles, shuffle
@@ -207,35 +206,33 @@ object TileGather {
 
   /** Every source tile joined to the plan rows that read it, cropped to
     * each row's window: the pieces a gather groups by target tile.
-    * Fill-only rows (srcTj = -1) join nothing.
     */
   private[ops] def pieces(
-      tiles: Dataset[Tile], srcGm: GridMapping, plan: Dataset[PlanRow]): Dataset[Piece] = {
+      tiles: Dataset[Tile], srcGm: GridMapping, reads: Dataset[PlanRow]): Dataset[Piece] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val realPlan = plan.filter(_.srcTj >= 0)
     val srcTileW = srcGm.tileWidth; val srcTileH = srcGm.tileHeight
     tiles
-      .joinWith(realPlan,
-        tiles("tj") === realPlan("srcTj") && tiles("ti") === realPlan("srcTi"), "inner")
+      .joinWith(reads, tiles("tj") === reads("srcTj") && tiles("ti") === reads("srcTi"), "inner")
       .map { case (t, p) => crop(t, p, srcTileW, srcTileH) }
   }
 
-  /** Fill-only tasks: each srcTj = -1 plan row crossed with the (var,
-    * band) inventory of `tiles` — tiny — sampled from an empty window,
-    * all DISTRIBUTED.
+  /** `gathered` plus the fill-only tiles of the plan's window-less
+    * target tiles: each crossed with the (var, band) inventory of
+    * `tiles` — tiny — and sampled from an empty window, all
+    * DISTRIBUTED. These are the only fill-only tiles of a gather.
     */
-  private[ops] def fillTiles(
-      tiles: Dataset[Tile], plan: Dataset[PlanRow], kernel: TileKernel): Dataset[Tile] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    val fillPlans = plan.filter(_.srcTj < 0)
-    val varsBands = tiles.select("varName", "band").distinct().as[(String, Int)]
-    val empty = new Window(0, 0, 0, 0, Array.empty)
-    fillPlans
-      .joinWith(broadcast(varsBands), lit(true), "inner")
-      .map { case (p, (v, b)) => kernel(p.dtj, p.dti)(v, b, empty) }
-  }
+  private[ops] def withFillTiles(
+      gathered: Dataset[Tile], tiles: Dataset[Tile], plan: Plan, kernel: TileKernel): Dataset[Tile] =
+    plan.fills.fold(gathered) { fills =>
+      val spark = tiles.sparkSession
+      import spark.implicits._
+      val varsBands = tiles.select("varName", "band").distinct().as[(String, Int)]
+      val empty = new Window(0, 0, 0, 0, Array.empty)
+      gathered.union(fills
+        .joinWith(broadcast(varsBands), lit(true), "inner")
+        .map { case ((dtj, dti), (v, b)) => kernel(dtj, dti)(v, b, empty) })
+    }
 
   /** One source tile cut down to a target tile's window: the source
     * pixels `[pi0, pi0 + pw) x [pj0, pj0 + ph)`, row-major, bound for

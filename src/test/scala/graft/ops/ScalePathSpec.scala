@@ -13,8 +13,8 @@ import graft.model.Raster
   * threshold with tiny tiles and assert pixel-for-pixel equality with
   * the driver/broadcast path on the SAME grid geometry tiled coarsely —
   * proving the scale path (Dataset windows, plan flatMap, shuffle join,
-  * distributed fill tasks / except-based NaN lookups) computes exactly
-  * what the small path does.
+  * distributed fill tasks from an anti-join of the target tile range)
+  * computes exactly what the small path does.
   */
 class ScalePathSpec extends AnyFunSuite {
   val nan = Double.NaN
@@ -75,7 +75,7 @@ class ScalePathSpec extends AnyFunSuite {
 
   test("rectify: distributed lookup plan (4900 tiles) == broadcast plan, incl. NaN fill tiles") {
     // small rotated swath rectified onto a larger target so many target
-    // tiles have NO source coverage (exercises the except-based fills)
+    // tiles have NO source coverage (exercises the anti-join fills)
     val srcGm = GridMapping.regular(8, 8, 10.0, 40.0, 0.1, 0.1, Crs.Geographic, Some((4, 4)))
       .copy(isRegular = false)
     val ang = 0.2; val c = math.cos(ang); val s = math.sin(ang)

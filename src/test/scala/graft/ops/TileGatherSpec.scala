@@ -13,8 +13,9 @@ import graft.model.Tile
   * specs pin that neither changes a pixel: variables never leak into
   * each other's tiles, and windows assembled from cropped pieces equal
   * windows assembled from whole tiles. Rectify runs both of its stages
-  * on the same pieces; its specs pin the per-variable results and the
-  * plan shape (the lookup is shipped once, not once per variable).
+  * on the same pieces; its specs pin the per-variable results, the fill
+  * of uncovered target tiles and the plan shape (the lookup is shipped
+  * once, not once per variable, in the one target-tile exchange).
   */
 class TileGatherSpec extends AnyFunSuite {
 
@@ -260,40 +261,88 @@ class TileGatherSpec extends AnyFunSuite {
     }
   }
 
+  test("rectify onto a target the swath misses: every (var, band, target tile) once, holding its fill, on the driver and distributed plans") {
+    val tiles = swathTiles.flatten
+    for (tile <- Seq(35, 2)) {
+      // 10 degrees east of the swath, beyond any xy border
+      val d = GridMapping.regular(140, 140, 20.0, 39.0, 0.02, 0.02, Crs.Geographic, Some((tile, tile)))
+      assert((d.numTilesX.toLong * d.numTilesY > TileGather.DriverPlanMaxTiles) == (tile == 2))
+      assert(RectifyOp.computeLookup(swathCoords, swathGm, d).count() == 0)
+      val all = RectifyOp.rectify(toDs(tiles), swathCoords, swathGm, d, swathPol).collect().toSeq
+      assert(all.map(t => (t.varName, t.band, t.tj, t.ti)).sorted ==
+        (for (v <- Seq("a", "b"); b <- 0 to 1; tj <- 0 until d.numTilesY; ti <- 0 until d.numTilesX)
+          yield (v, b, tj, ti)).sorted)
+      all.foreach { t =>
+        assert(t.h == d.tileH(t.tj) && t.w == d.tileW(t.ti))
+        val f = swathPol(t.varName).fill
+        assert(t.data.forall(x => if (f.isNaN) x.isNaN else x == f), s"tile $tile: ${(t.varName, t.band, t.tj, t.ti)}")
+      }
+    }
+  }
+
+  test("rectify builds a lookup tile only for the target tiles it covers") {
+    for (tile <- Seq(35, 2)) {
+      val d = swathDst(tile)
+      // "a" is nearest with NaN fill over NaN-free data: a target tile
+      // holds a number iff some lookup pixel of it is set
+      val covered = RectifyOp.rectify(toDs(swathTiles.flatten), swathCoords, swathGm, d, swathPol)
+        .collect().filter(t => t.varName == "a" && t.band == 0 && t.data.exists(!_.isNaN))
+        .map(t => (t.tj, t.ti)).toSet
+      assert(covered.nonEmpty && covered.size < d.numTiles)
+      val lookups = RectifyOp.computeLookup(swathCoords, swathGm, d).collect()
+      assert(lookups.map(p => (p.dtj, p.dti)).toSet == covered, s"tile $tile")
+      assert(lookups.length == covered.size, s"tile $tile")
+    }
+  }
+
+  test("rectify with a coordinate tile missing names the tile") {
+    val coords = swathCoords.filter(t => !(t.varName == "y" && t.tj == 1 && t.ti == 0))
+    val e = intercept[Exception] {
+      RectifyOp.rectify(toDs(swathTiles.flatten), coords, swathGm, swathDst(35), swathPol).collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toList
+    assert(messages.exists(m => m != null && m.contains("missing x or y coord tile at (1,0)")), messages.mkString("\n"))
+  }
+
   test("rectify plan: no cross join of the lookup, the variable stage exchanges on the target tile only, no extra job") {
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{CoGroupExec, SparkPlan}
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.{CoGroupExec, RDDScanExec, SparkPlan, UnionExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    import org.apache.spark.sql.types.IntegerType
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
     object H extends AdaptiveSparkPlanHelper
     val tiles = toDs(swathTiles.flatten)
     val d = swathDst(35)
     val plan: SparkPlan = RectifyOp.rectify(tiles, swathCoords, swathGm, d, swathPol).queryExecution.executedPlan
     assert(!plan.toString.contains("CartesianProduct"), s"cartesian:\n$plan")
-    // the one nested-loop join left is the fill path's: srcTj = -1 plan
-    // rows crossed with the (var, band) inventory, never a lookup tile
+    // the one nested-loop join left is the fill path's: window-less
+    // target tiles crossed with the (var, band) inventory, never a
+    // lookup tile or any other tile data
     val crossed = H.collect(plan) { case j: BroadcastNestedLoopJoinExec => j.output.map(_.name) }
-    assert(crossed.forall(!_.contains("srcI")), s"a lookup tile is crossed:\n$plan")
-    val cogroups = H.collect(plan) { case c: CoGroupExec => c }
-    assert(cogroups.size == 1, s"${cogroups.size} cogroups:\n$plan")
-    def feeding(p: SparkPlan): Seq[ShuffleExchangeLike] = p match {
-      case e: ShuffleExchangeLike => Seq(e)
-      case o => o.children.flatMap(feeding)
+    assert(crossed.forall(!_.contains("data")), s"tile data is crossed:\n$plan")
+    assert(H.collect(plan) { case c: CoGroupExec => c }.isEmpty, s"a cogroup:\n$plan")
+    // the variable stage is fed by one exchange, the target-tile deal of
+    // byTargetTile, carrying the checkpointed lookup and the variable
+    // pieces together
+    def readsLookup(p: SparkPlan): Boolean = H.find(p)(_.isInstanceOf[RDDScanExec]).isDefined
+    val lookupExchanges = H.collect(plan) { case e: ShuffleExchangeLike if readsLookup(e) => e }
+    assert(lookupExchanges.size == 1, s"${lookupExchanges.size} exchanges read the lookup:\n$plan")
+    val e = lookupExchanges.head
+    e.outputPartitioning match {
+      case p: ShufflePartitionIdPassThrough =>
+        assert(p.expr.references.map(_.name).toSet == Set("dtj", "dti"), s"variable stage keyed on ${p.expr}:\n$plan")
+      case other => fail(s"variable stage partitioned by $other:\n$plan")
     }
-    val exchanges = cogroups.head.children.flatMap(feeding)
-    assert(exchanges.size == 2, s"cogroup inputs:\n$plan")
-    exchanges.foreach { e =>
-      val keyTypes = e.outputPartitioning match {
-        case h: HashPartitioning => h.expressions.map(_.dataType)
-        case other => fail(s"cogroup input partitioned by $other")
-      }
-      assert(keyTypes == Seq(IntegerType, IntegerType), s"variable stage keyed on $keyTypes:\n$plan")
-    }
-    // one call and its count(): the whole-tile gather with its (var,
-    // band) collect started 14 jobs on this shape; sharing the pieces
-    // must not add any
+    val union = H.collect(e) { case u: UnionExec => u }
+    assert(union.size == 1 && union.head.children.size == 2, s"exchange input:\n$plan")
+    assert(union.head.children.count(readsLookup) == 1 &&
+      union.head.children.count(c => H.find(c)(_.isInstanceOf[BaseJoinExec]).isDefined) == 1,
+      s"exchange input:\n$plan")
+    assert(H.find(e.child)(_.isInstanceOf[ShuffleExchangeLike]).isEmpty,
+      s"a second exchange feeds the variable stage:\n$plan")
+    // one call and its count(): with the variable stage on a cogroup of
+    // two exchanges this shape started 13 jobs; one exchange must not
+    // add any
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -306,6 +355,6 @@ class TileGatherSpec extends AnyFunSuite {
       // the listener bus is async; give it a moment to drain
       Thread.sleep(500)
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get <= 14, s"${jobs.get} jobs")
+    assert(jobs.get <= 13, s"${jobs.get} jobs")
   }
 }
