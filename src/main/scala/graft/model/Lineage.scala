@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftCutBridge}
 
 /** Lineage cutting for iterative operators (CC rounds, k-core peel,
   * label propagation, the BPE merge loop, the sorted-prefix passes):
@@ -27,95 +27,25 @@ object Lineage {
       "reliable=true requires sparkContext.setCheckpointDir(...) pointing at " +
         "storage that survives executor loss (HDFS/object store on a cluster)")
 
-  /** Cap applied to the statistics a checkpoint INHERITS from its
-    * origin plan: 1 EiB / 2^60 rows. Spark's `LogicalRDD.fromDataset`
-    * copies the origin's estimated `sizeInBytes` onto the cut
-    * (`rewriteStatsAndConstraints`), and Catalyst's size-only stats
-    * visitor MULTIPLIES child sizes through joins — so an iterative
+  /** The one cut body. A cut is materialized when it is made, so its
+    * statistics are its measured size (block bytes of a local
+    * checkpoint, file bytes of a reliable one), not the estimate
+    * Spark copies over from the origin plan. That estimate can be far
+    * too small (a cut of tiles mapped from `spark.range` keeps the
+    * range's 8 bytes per row, and an unhinted join then broadcasts a
+    * whole raster) or far too large: Catalyst's size-only stats
+    * visitor MULTIPLIES child sizes through joins, so an iterative
     * operator whose round joins cut frames to cut frames (pointer
-    * jumping joins labels to labels) SQUARES the inherited stat every
-    * round. That is exponential growth in the BigInt's bit length: by
-    * round r the number carries 2^r × base bits, and the stats walk
-    * of the next cut degenerates into Karatsuba/Toom-Cook multiplies
-    * of million-digit integers — measured as 35+ minutes of driver
-    * CPU inside `BigInteger.multiply` on the 10x audio CC bench
-    * before any data moved. A cut is a materialized table whose
-    * history is irrelevant by definition, and every value at or over
-    * the cap plans identically (broadcast thresholds live in the
-    * megabytes), so capping changes no planning decision — it only
-    * bounds the arithmetic.
+    * jumping joins labels to labels) squared the inherited size every
+    * round, and the next cut's stats walk ran million-digit BigInt
+    * multiplies (35+ min of driver CPU on the 10x audio CC bench).
+    * A measured size starts every round from truth.
     */
-  private val StatCap = BigInt(1L) << 60
-
-  /** Cap the cut's inherited stats in place. `originStats` is the
-    * constructor-carried field (`otherCopyArgs`), so the capped value
-    * survives optimizer copies; the per-instance `statsCache` is
-    * invalidated so the current node recomputes from the capped
-    * value. Reflection because the field is private and Spark offers
-    * no public stats override — the alternative (rebuilding the
-    * Dataset from `rdd`+schema) pays a per-row Row conversion on
-    * every iterative hot path.
-    */
-  // Resolved inside Try: the cap is a planning-arithmetic optimization,
-  // not a correctness requirement, and cut() sits on every iterative hot
-  // path — a Spark upgrade that renames the private field must degrade
-  // to uncapped stats (with one loud warning), never fail the engine.
-  // LineageSpec pins that the cap still takes effect on this Spark
-  // version, so a silent no-op here turns into a red canary test.
-  private[model] lazy val originStatsField: Option[java.lang.reflect.Field] =
-    scala.util.Try {
-      val f = classOf[org.apache.spark.sql.execution.LogicalRDD]
-        .getDeclaredField("originStats")
-      f.setAccessible(true)
-      f
-    }.toOption
-
-  @volatile private var warnedNoField = false
-
-  private def capCutStats[T](cut: Dataset[T]): Dataset[T] =
-    capCutStatsWith(originStatsField, cut)
-
-  /** Package-private seam so the missing-field degradation (a future
-    * Spark renaming `originStats`) is testable without a classloader
-    * trick: `None` must be a warn-once no-op, never a throw.
-    */
-  private[model] def capCutStatsWith[T](
-      fieldOpt: Option[java.lang.reflect.Field], cut: Dataset[T]): Dataset[T] = {
-    fieldOpt match {
-      case None =>
-        if (!warnedNoField) {
-          warnedNoField = true
-          org.apache.log4j.Logger.getLogger(getClass).warn(
-            "LogicalRDD.originStats not found on this Spark version; " +
-              "checkpoint stat capping disabled — iterative plans with " +
-              "join-multiplied stats may plan slowly")
-        }
-      case Some(field) => cut.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          import org.apache.spark.sql.catalyst.plans.logical.Statistics
-          val cur = field.get(lr).asInstanceOf[Option[Statistics]]
-          val needsCap = cur.exists(s =>
-            s.sizeInBytes > StatCap || s.rowCount.exists(_ > StatCap))
-          if (needsCap) {
-            val capped = cur.map(s => Statistics(
-              s.sizeInBytes.min(StatCap), s.rowCount.map(_.min(StatCap)),
-              s.attributeStats, s.isRuntime))
-            field.set(lr, capped)
-            lr.invalidateStatsCache()
-          }
-        case _ => ()
-      }
-    }
-    cut
-  }
-
-  def cut(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) { requireDir(df); capCutStats(df.checkpoint()) }
-    else capCutStats(df.localCheckpoint())
-
   def cutDs[T](ds: Dataset[T], reliable: Boolean): Dataset[T] =
-    if (reliable) { requireDir(ds); capCutStats(ds.checkpoint()) }
-    else capCutStats(ds.localCheckpoint())
+    GraftCutBridge.withMeasuredSize(
+      if (reliable) { requireDir(ds); ds.checkpoint() } else ds.localCheckpoint())
+
+  def cut(df: DataFrame, reliable: Boolean): DataFrame = cutDs(df, reliable)
 
   /** EAGER release of a [[cut]] frame's blocks, for iterative loops
     * where round r's cut makes round r-1's blocks dead the moment it

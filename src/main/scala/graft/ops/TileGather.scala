@@ -32,12 +32,13 @@ import graft.model.Tile
   * Scale notes: up to [[DriverPlanMaxTiles]] target tiles the plan is
   * built on the driver and HINTED as the broadcast side of the
   * plan⋈tiles equi-join on (srcTj, srcTi). Unhinted, the planner picks
-  * the side with the smaller size estimate, and a source raster can
-  * look tiny: a cut (`Lineage.cutDs`) of tiles made from `spark.range`
-  * inherits the range's estimate of 8 bytes per row, whatever each
-  * tile's `array<double>` payload holds. The planner then ships the
-  * whole raster from the driver to every executor (32 MiB, estimated
-  * at 256 B, on the `reproject` benchmark).
+  * the side with the smaller size estimate. A `Lineage` cut reports its
+  * measured bytes, but a source that is not a cut need not: tiles
+  * mapped from `spark.range` (or any generator) keep the range's
+  * estimate of 8 bytes per row, whatever each tile's `array<double>`
+  * payload holds, and would look smaller than the plan. The hint keeps
+  * the broadcast side the plan rows for every source, so the raster is
+  * never shipped from the driver to every executor.
   * Above [[DriverPlanMaxTiles]] the plan (numTargetTiles x overlap
   * rows) is GENERATED DISTRIBUTED (a Dataset flatMap over the windows)
   * and shuffle-joined, so nothing driver-side scales with tile count

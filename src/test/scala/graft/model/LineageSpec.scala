@@ -1,6 +1,10 @@
 package graft.model
 
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.GraftBlockProbe
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
@@ -9,7 +13,9 @@ import graft.TestSpark
   * must actually be gone, a later read must fail LOUDLY (local
   * checkpoints have no recompute path — a silent recompute would hide
   * a use-after-release), and non-cut frames must pass through as
-  * no-ops so release can be called unconditionally in loops.
+  * no-ops so release can be called unconditionally in loops. A cut's
+  * statistics are its measured bytes, so a chain of cut-to-cut joins
+  * starts every round from the true size.
   */
 class LineageSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -54,20 +60,55 @@ class LineageSpec extends AnyFunSuite {
     assert(labels.count() == 100) // the cut chain still reads correctly
   }
 
-  test("stat-cap reflection resolves on this Spark version (canary) and " +
-      "degrades to a no-op when the field is missing") {
-    // canary: a Spark upgrade that renames LogicalRDD.originStats makes
-    // this assert red instead of silently shipping uncapped iterative
-    // stats (the cap test above would then also fail, loudly)
-    assert(Lineage.originStatsField.isDefined,
-      "LogicalRDD.originStats no longer resolvable — stat capping is " +
-        "silently disabled; update the reflection in Lineage.capCutStats")
-    // missing-field path: must return the cut unchanged, never throw —
-    // the cap is a planning optimization, and cut() is on every
-    // iterative hot path
-    val cut = (1 to 20).toDF("x").localCheckpoint()
-    val out = Lineage.capCutStatsWith(None, cut)
-    assert(out.count() == 20)
+  private def logicalRdds(df: org.apache.spark.sql.Dataset[_]) =
+    df.queryExecution.optimizedPlan.collect { case lr: LogicalRDD => lr }
+
+  test("a local cut's stats are its rdd's block bytes") {
+    val cut = Lineage.cut((1 to 1000).toDF("x").withColumn("s", concat(lit("row-"), col("x"))),
+      reliable = false)
+    val Seq(lr) = logicalRdds(cut)
+    val bytes = GraftBlockProbe.blockBytes(lr.rdd)
+    assert(bytes > 0, "the cut's blocks are in the block manager")
+    assert(cut.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(bytes))
+    assert(cut.count() == 1000)
+    Lineage.release(cut)
+  }
+
+  test("a reliable cut's stats are its checkpoint files' bytes") {
+    val sc = spark.sparkContext
+    val prior = sc.getCheckpointDir
+    sc.setCheckpointDir(Files.createTempDirectory("graft-ckpt").toString)
+    try {
+      val cut = Lineage.cut((1 to 1000).toDF("x"), reliable = true)
+      val Seq(lr) = logicalRdds(cut)
+      val dir = Paths.get(new java.net.URI(lr.rdd.getCheckpointFile.get))
+      // the local file system keeps a hidden .crc file next to each part
+      val bytes = Files.walk(dir).iterator().asScala
+        .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.endsWith(".crc"))
+        .map(Files.size(_)).sum
+      assert(bytes > 0, s"no checkpoint files under $dir")
+      assert(cut.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(bytes))
+      assert(cut.count() == 1000)
+    } finally prior.foreach(sc.setCheckpointDir)
+  }
+
+  test("measured stats survive a self-join (newInstance); an empty cut plans and reads") {
+    val cut = Lineage.cut((1 to 200).toDF("x"), reliable = false)
+    val bytes = cut.queryExecution.optimizedPlan.stats.sizeInBytes
+    val self = cut.as("a").join(cut.as("b"), col("a.x") === col("b.x"))
+    val sides = logicalRdds(self)
+    assert(sides.size == 2 && sides.map(_.output.head.exprId).distinct.size == 2,
+      "the self-join re-instances one side")
+    assert(sides.forall(_.stats.sizeInBytes == bytes), sides.map(_.stats).toString)
+    assert(self.count() == 200)
+
+    val empty = Lineage.cut((1 to 200).toDF("x").filter(col("x") < 0), reliable = false)
+    assert(empty.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(GraftBlockProbe.blockBytes(logicalRdds(empty).head.rdd)))
+    val joined = empty.join(cut, "x")
+    assert(joined.queryExecution.executedPlan != null)
+    assert(joined.count() == 0 && empty.count() == 0)
+    Lineage.release(cut); Lineage.release(empty)
   }
 
   test("release of a non-cut frame is a no-op") {

@@ -101,20 +101,21 @@ class TileGatherSpec extends AnyFunSuite {
   private val utm64 = GridMapping.regular(64, 64, 565000.0, 5930000.0, 100.0, 100.0,
     Crs.utm(32, north = true), Some((16, 16)))
 
-  test("driver-path gather broadcasts the plan rows, never a relation holding tile data, over a cut with tiny stats") {
+  test("driver-path gather broadcasts the plan rows, never a relation holding tile data, over a cut of range-mapped tiles") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
     object H extends AdaptiveSparkPlanHelper
     val s = spark
     import s.implicits._
     // the source as a generator makes it: tiles mapped from spark.range,
-    // then cut, so the cut inherits the range's row-count estimate
+    // then cut; the range's estimate is 8 bytes per row, the cut's stats
+    // are its measured bytes
     val whole = tilesFrom("a", Array.tabulate(64, 64)((j, i) => j * 64.0 + i), utm64).toArray
     val cut = graft.model.Lineage.cutDs(
       spark.range(0L, whole.length.toLong, 1L, 4).map(id => whole(id.toInt)), reliable = false)
     val payload = whole.map(_.data.length * 8L).sum
-    assert(cut.queryExecution.optimizedPlan.stats.sizeInBytes < payload,
-      "premise: the cut's estimate is smaller than its payload")
+    assert(cut.queryExecution.optimizedPlan.stats.sizeInBytes >= payload,
+      "premise: the cut's stats are at least its payload")
     val (bx0, by0, _, by1) = CrsTransformer(utm64.crs, Crs.laea3035)
       .transformBounds(utm64.xMin, utm64.yMin, utm64.xMax, utm64.yMax)
     val dst = GridMapping.regular(140, 140, bx0, by0, 100.0, (by1 - by0) / 140, Crs.laea3035, Some((35, 35)))
@@ -129,6 +130,39 @@ class TileGatherSpec extends AnyFunSuite {
     assert(broadcasts.forall(!_.contains("data")),
       s"a relation holding tile data is broadcast:\n${out.queryExecution.executedPlan}")
     graft.model.Lineage.release(cut)
+  }
+
+  test("distributed-plan gather never broadcasts a cut source whose payload exceeds the threshold") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    object H extends AdaptiveSparkPlanHelper
+    val s = spark
+    import s.implicits._
+    val whole = tilesFrom("a", Array.tabulate(64, 64)((j, i) => j * 64.0 + i), utm64).toArray
+    val cut = graft.model.Lineage.cutDs(
+      spark.range(0L, whole.length.toLong, 1L, 4).map(id => whole(id.toInt)), reliable = false)
+    val payload = whole.map(_.data.length * 8L).sum
+    // 65 x 65 target tiles: above the driver-plan limit, so the plan rows
+    // are a distributed Dataset and the pieces join carries no hint
+    val nT = 65
+    assert(nT.toLong * nT > TileGather.DriverPlanMaxTiles)
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(threshold)
+    spark.conf.set(threshold, (payload / 2).toString)
+    try {
+      val out = TileGather.gatherWithWindows(cut, utm64, nT, nT,
+        (dtj: Int, dti: Int) => TileGather.WindowRow(dtj, dti, dti % 60, dtj % 60, dti % 60 + 4, dtj % 60 + 4),
+        (v: String, b: Int, dtj: Int, dti: Int, win: Window) => Tile(v, b, dtj, dti, 1, 1, Array(win.data.sum)))
+      assert(out.count() == nT * nT)
+      val broadcasts = H.collect(out.queryExecution.executedPlan) {
+        case b: BroadcastExchangeLike => b.output.map(_.name)
+      }
+      assert(broadcasts.forall(!_.contains("data")),
+        s"a relation holding tile data is broadcast:\n${out.queryExecution.executedPlan}")
+    } finally {
+      spark.conf.set(threshold, prior)
+      graft.model.Lineage.release(cut)
+    }
   }
 
   /** Gather a fully covered `nTx` x `nTy` target grid (16 x 16 target
