@@ -5,7 +5,7 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.RDDBlockId
 
 /** Bridge for constructing `Column`s from custom Catalyst expressions:
@@ -18,25 +18,42 @@ object GraftExpressionBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }
 
-/** Bridge for a `Lineage` cut's statistics. `Dataset.checkpoint` and
+/** Bridge for a `Lineage` cut. `Dataset.checkpoint` and
   * `localCheckpoint` copy the origin plan's ESTIMATED statistics onto
-  * the `LogicalRDD` they return; the node's constructor, the typed
-  * Dataset factory and the block manager's status are package-private,
-  * so the rebuild over measured bytes lives in this package.
+  * the `LogicalRDD` they return, and the eager checkpoint job counts
+  * each partition's rows only to drop the count. The rdd checkpoint
+  * calls, the node's constructor, the typed Dataset factory and the
+  * block manager's status are package-private, so the cut body lives
+  * in this package.
   */
 object GraftCutBridge {
 
-  /** `cut`, a just-materialized checkpoint, rebuilt over the same
-    * `LogicalRDD` (output, rdd, partitioning, ordering, constraints)
-    * with its measured size as its only statistic. Runs no job.
+  /** `ds` checkpointed eagerly, as `Dataset.checkpoint` (`reliable`)
+    * or `Dataset.localCheckpoint` does it, with its measured size and
+    * its row count as its only statistics. The rows are counted while
+    * the checkpoint's one materializing job writes them, by an
+    * accumulator that only that job's result tasks update, so Spark
+    * merges it once per partition (a failed, retried or speculative
+    * task's updates are not counted twice). No second job runs.
     */
-  def withMeasuredSize[T](cut: Dataset[T]): Dataset[T] = {
-    val ds = cut.asInstanceOf[classic.Dataset[T]]
-    val lr = ds.queryExecution.analyzed.asInstanceOf[LogicalRDD]
-    val node = LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-      lr.isStreaming, lr.stream)(ds.sparkSession,
-      Some(Statistics(sizeInBytes = measuredBytes(lr.rdd))), Some(lr.constraints))
-    classic.Dataset(ds.sparkSession, node)(ds.encoder)
+  def cut[T](ds: Dataset[T], reliable: Boolean): Dataset[T] = {
+    val d = ds.asInstanceOf[classic.Dataset[T]]
+    val qe = d.queryExecution
+    val rows = d.sparkSession.sparkContext.longAccumulator
+    val rdd = SQLExecution.withNewExecutionId(qe,
+        Some(if (reliable) "checkpoint" else "localCheckpoint")) {
+      qe.executedPlan.resetMetrics()
+      val r = qe.executedPlan.execute().map { row => rows.add(1L); row.copy() }
+      if (reliable) r.checkpoint() else r.localCheckpoint()
+      r.doCheckpoint()
+      r
+    }
+    val lr = LogicalRDD.fromDataset(rdd, d, d.isStreaming)
+    val node = LogicalRDD(lr.output, rdd, lr.outputPartitioning, lr.outputOrdering,
+      lr.isStreaming, lr.stream)(d.sparkSession,
+      Some(Statistics(sizeInBytes = measuredBytes(rdd), rowCount = Some(BigInt(rows.sum)))),
+      Some(lr.constraints))
+    classic.Dataset(d.sparkSession, node)(d.encoder)
   }
 
   /** A reliable checkpoint's file bytes; else the bytes, in memory and

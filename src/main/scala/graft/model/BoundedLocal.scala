@@ -1,12 +1,15 @@
 package graft.model
 
+import org.apache.spark.sql.Dataset
+
 /** The bounded-local gate shared by every hybrid iterative operator
   * (CC union-find, the BPE merge loop, unigram seed + EM, the
   * Bradley-Terry MM fit, the kNN-graph analytics). The operator
   * materializes its small input (an edge cut, a distinct-word table,
-  * a duel table), counts it in one cheap job, and when the count
-  * [[fits]] it collects the rows and runs every round on the driver;
-  * otherwise the distributed rounds run unchanged.
+  * a duel table) as a [[Lineage]] cut, which counts its rows in the
+  * job that makes it. [[collectIfFits]] reads that count, and when it
+  * fits collects the rows so every round runs on the driver; otherwise
+  * the distributed rounds run unchanged. The decision runs no job.
   *
   * Why 2^17 rows: that is ~2 MB of driver memory for an edge array (a
   * few MB for a vocabulary table), bounded by construction, while each
@@ -25,11 +28,17 @@ object BoundedLocal {
   private val moved = new java.util.concurrent.atomic.AtomicInteger
 
   /** Whether `rows` rows may be collected and processed on the driver. */
-  def fits(rows: Long): Boolean = {
+  private def fits(rows: Long): Boolean = {
     val local = rows <= bound
     if (local != (rows <= Bound)) moved.incrementAndGet()
     local
   }
+
+  /** The rows of `cut` (a [[Lineage]] cut, or a typed view of one) when
+    * its counted row count fits, else None: stay distributed.
+    */
+  def collectIfFits[T](cut: Dataset[T]): Option[Array[T]] =
+    if (fits(Lineage.rowCount(cut))) Some(cut.collect()) else None
 
   /** Test-only: run `body` with `testBound` in place of [[Bound]]
     * (0 forces every non-empty input onto the distributed path).

@@ -1,6 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, Dataset, GraftCutBridge}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage cutting for iterative operators (CC rounds, k-core peel,
   * label propagation, the BPE merge loop, the sorted-prefix passes):
@@ -28,24 +29,38 @@ object Lineage {
         "storage that survives executor loss (HDFS/object store on a cluster)")
 
   /** The one cut body. A cut is materialized when it is made, so its
-    * statistics are its measured size (block bytes of a local
-    * checkpoint, file bytes of a reliable one), not the estimate
-    * Spark copies over from the origin plan. That estimate can be far
-    * too small (a cut of tiles mapped from `spark.range` keeps the
-    * range's 8 bytes per row, and an unhinted join then broadcasts a
-    * whole raster) or far too large: Catalyst's size-only stats
-    * visitor MULTIPLIES child sizes through joins, so an iterative
-    * operator whose round joins cut frames to cut frames (pointer
-    * jumping joins labels to labels) squared the inherited size every
-    * round, and the next cut's stats walk ran million-digit BigInt
-    * multiplies (35+ min of driver CPU on the 10x audio CC bench).
-    * A measured size starts every round from truth.
+    * statistics are measured, not the estimate Spark copies over from
+    * the origin plan: its size (block bytes of a local checkpoint, file
+    * bytes of a reliable one) and its row count, counted by the same
+    * job that materializes it ([[rowCount]]; a bounded-local gate reads
+    * it and runs no count job). The inherited estimate can be far too
+    * small (a cut of tiles mapped from `spark.range` keeps the range's
+    * 8 bytes per row, and an unhinted join then broadcasts a whole
+    * raster) or far too large: Catalyst's size-only stats visitor
+    * MULTIPLIES child sizes through joins, so an iterative operator
+    * whose round joins cut frames to cut frames (pointer jumping joins
+    * labels to labels) squared the inherited size every round, and the
+    * next cut's stats walk ran million-digit BigInt multiplies (35+ min
+    * of driver CPU on the 10x audio CC bench). A measured size starts
+    * every round from truth.
     */
-  def cutDs[T](ds: Dataset[T], reliable: Boolean): Dataset[T] =
-    GraftCutBridge.withMeasuredSize(
-      if (reliable) { requireDir(ds); ds.checkpoint() } else ds.localCheckpoint())
+  def cutDs[T](ds: Dataset[T], reliable: Boolean): Dataset[T] = {
+    if (reliable) requireDir(ds)
+    GraftCutBridge.cut(ds, reliable)
+  }
 
   def cut(df: DataFrame, reliable: Boolean): DataFrame = cutDs(df, reliable)
+
+  /** The number of rows of a [[cut]], as its making job counted them;
+    * runs no job. `cut` is the cut itself or a typed view of it
+    * (`cut.as[U]`), whose analyzed plan is the cut's node; a plan with
+    * no row count there is refused.
+    */
+  def rowCount(cut: Dataset[_]): Long = cut.queryExecution.analyzed match {
+    case lr: LogicalRDD if lr.stats.rowCount.isDefined => lr.stats.rowCount.get.toLong
+    case p => throw new IllegalArgumentException(
+      s"not a Lineage cut, so its rows are not counted: ${p.nodeName}")
+  }
 
   /** EAGER release of a [[cut]] frame's blocks, for iterative loops
     * where round r's cut makes round r-1's blocks dead the moment it
@@ -69,7 +84,7 @@ object Lineage {
 
   def release(df: Dataset[_]): Unit =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      case lr: LogicalRDD =>
         silenceUnpersistWarn
         // blocking: async removal would overlap (and so time-pollute)
         // the rounds that follow — removal in local mode is a block-
@@ -147,7 +162,7 @@ object Lineage {
   def releaseAll(df: Dataset[_]): Unit = {
     silenceUnpersistWarn
     df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      case lr: LogicalRDD =>
         lr.rdd.unpersist(blocking = true); ()
       case _ => ()
     }

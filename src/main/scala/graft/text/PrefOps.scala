@@ -86,13 +86,10 @@ object PrefOps {
     * BIGINT overflow behavior, `/` on non-negative longs mirrors
     * `div`), pinned identical by a forced-bound A/B spec.
     */
-  private def mmCoreLocal(
-      duelAgg: DataFrame, iters: Int): (DataFrame, DataFrame, DataFrame) = {
-    val spark = duelAgg.sparkSession
+  private def mmCoreLocal(spark: org.apache.spark.sql.SparkSession,
+      rows: Array[(String, String, String, Long)],
+      iters: Int): (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    val rows = duelAgg.select(col("i").cast("string"), col("j").cast("string"),
-        col("winner").cast("string"), col("n").cast("long"))
-      .as[(String, String, String, Long)].collect()
     val nij = scala.collection.mutable.HashMap.empty[(String, String), Long]
     rows.foreach { case (i, j, _, n) =>
       nij.updateWith((i, j))(o => Some(Math.addExact(o.getOrElse(0L), n))) }
@@ -127,15 +124,20 @@ object PrefOps {
   /** The shared MM core over a prebuilt [[duelCut]] table:
     * (games, wins, p_final); p_final is the strength table after
     * `iters` rounds. HYBRID: duel tables that pass the
-    * [[graft.model.BoundedLocal]] gate fit locally (one count job on
-    * the materialized cut decides); larger ones keep the distributed
+    * [[graft.model.BoundedLocal]] gate fit locally (the cut's counted
+    * rows decide, with no job); larger ones keep the distributed
     * rounds.
     */
   private def mmCore(
       duelAgg: DataFrame, iters: Int): (DataFrame, DataFrame, DataFrame) = {
     require(iters >= 1 && iters <= 8, s"iters must be in [1,8], got $iters")
-    if (graft.model.BoundedLocal.fits(duelAgg.count()))
-      return mmCoreLocal(duelAgg, iters)
+    val spark = duelAgg.sparkSession
+    import spark.implicits._
+    // the encoder up-casts i, j and winner to string
+    graft.model.BoundedLocal.collectIfFits(duelAgg.as[(String, String, String, Long)]) match {
+      case Some(rows) => return mmCoreLocal(spark, rows, iters)
+      case None =>
+    }
     val pairs = duelAgg.groupBy(col("i"), col("j"))
       .agg(sum(col("n")).cast("long").as("nij"))
     // both directions of every pair: the denominator sums over a

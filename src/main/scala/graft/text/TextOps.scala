@@ -26,15 +26,17 @@ object TextOps {
     */
   private[graft] def tokenSet(text: String): Array[String] = {
     val ws = text.split(" ")
-    java.util.Arrays.sort(ws, utf8Order)
-    // sorted, so empty pieces lead and duplicates are adjacent
+    // drop empty pieces and repeats first, so the sort sees each token
+    // once (a Zipf document repeats its common words many times)
+    val seen = new java.util.HashSet[String](ws.length * 2)
     var n = 0
     var i = 0
     while (i < ws.length) {
       val w = ws(i)
-      if (w.nonEmpty && (n == 0 || w != ws(n - 1))) { ws(n) = w; n += 1 }
+      if (w.nonEmpty && seen.add(w)) { ws(n) = w; n += 1 }
       i += 1
     }
+    java.util.Arrays.sort(ws, 0, n, utf8Order)
     java.util.Arrays.copyOf(ws, n)
   }
 
@@ -1109,15 +1111,34 @@ object TextOps {
       reliable: Boolean = false): DataFrame = {
     val docIds = docs.select(col(idCol).cast("long").as("id"))
     val e = initialEdgeCut(docIds, pairs, reliable)
-    // the cut is already materialized — counting it is one cheap job,
-    // far below a single contraction round (2 joins + cut + release)
-    if (graft.model.BoundedLocal.fits(e.count())) {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val edges = e.select(col("lo"), col("hi")).as[(Long, Long)].collect()
-      // union-find with union-to-min: every union links the larger
-      // root under the smaller, so each final root IS its component's
-      // minimum id (exactly the star contraction's label)
+    localLabels(e) match {
+      case Some(labelRows) =>
+        val spark = docs.sparkSession
+        import spark.implicits._
+        val labelsDf = broadcast(spark.createDataset(labelRows).toDF("id", "root"))
+        graft.model.Lineage.cut(
+          docIds.join(labelsDf, Seq("id"), "left")
+            .select(col("id").as(idCol),
+              coalesce(col("root"), col("id")).as("cluster_id")),
+          reliable)
+      case None => starContractionFromCut(docIds, e, idCol, maxIterations, reliable)._1
+    }
+  }
+
+  /** The bounded-local path of the CC operators: when the edge cut
+    * passes the [[graft.model.BoundedLocal]] gate, a driver-side
+    * union-find over its rows gives every edge endpoint's (id, root)
+    * label, and the cut's blocks are freed; None = stay distributed.
+    * Union-to-min: every union links the larger root under the
+    * smaller, so each final root IS its component's minimum id
+    * (exactly the star contraction's label).
+    */
+  private def localLabels(e: DataFrame): Option[Seq[(Long, Long)]] = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    // the cut's columns are (hi, lo); union-find is symmetric in them
+    graft.model.BoundedLocal.collectIfFits(e.as[(Long, Long)]).map { edges =>
+      graft.model.Lineage.release(e)
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -1133,16 +1154,8 @@ object TextOps {
         if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
       }
       val nodes = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
-      val labelRows = nodes.iterator.map(n => (n, find(n))).toSeq
-      val labelsDf = broadcast(spark.createDataset(labelRows).toDF("id", "root"))
-      val labels = graft.model.Lineage.cut(
-        docIds.join(labelsDf, Seq("id"), "left")
-          .select(col("id").as(idCol),
-            coalesce(col("root"), col("id")).as("cluster_id")),
-        reliable)
-      graft.model.Lineage.release(e)
-      labels
-    } else starContractionFromCut(docIds, e, idCol, maxIterations, reliable)._1
+      nodes.iterator.map(n => (n, find(n))).toSeq
+    }
   }
 
   /** [[dedupClusters]] through an EXACT-DUPLICATE QUOTIENT — exact
@@ -1306,7 +1319,7 @@ object TextOps {
         .select(col("x"), least(col("x"), col("mn")).as("m"))
     var e = e0
     var iter = 0
-    var converged = e.isEmpty
+    var converged = graft.model.Lineage.rowCount(e) == 0L
     var prevN = -1L
     var prevH: java.math.BigDecimal = null
     while (!converged && iter < maxIterations) {
@@ -1370,17 +1383,34 @@ object TextOps {
 
   /** End-to-end dedup ENDPOINT: the ids a training pipeline actually
     * keeps — one representative (the min id) per near-duplicate
-    * cluster, singletons included. Composes [[dedupClusters]] with the
-    * keeper filter.
+    * cluster, singletons included. On the distributed path it filters
+    * [[dedupClusters]]' labels to their roots; on the bounded-local
+    * path it makes no label cut: the docs whose id the union-find did
+    * not put under another root.
     */
   def dedupKeepers(
       docs: DataFrame, pairs: DataFrame, idCol: String = "doc_id",
       maxIterations: Int = 50, reliable: Boolean = false): DataFrame = {
-    val labels = dedupClusters(docs, pairs, idCol, maxIterations, reliable)
-    graft.model.Lineage.retire(labels) // internal: dead after the keeper filter executes
-    labels
-      .filter(col(idCol) === col("cluster_id"))
-      .select(col(idCol))
+    val docIds = docs.select(col(idCol).cast("long").as("id"))
+    val e = initialEdgeCut(docIds, pairs, reliable)
+    localLabels(e) match {
+      case Some(labelRows) =>
+        // the keepers are the docs that are no other doc's member. The
+        // ids ship as a broadcast variable, which costs no job (a
+        // broadcast join of a driver-side table runs one to collect
+        // it). The plan reads the caller's docs, so nothing is retired.
+        val members = docs.sparkSession.sparkContext.broadcast(
+          labelRows.collect { case (n, root) if n != root => n }.toSet)
+        val kept = udf((id: Long) => !members.value.contains(id))
+        docIds.where(col("id").isNotNull && kept(col("id")))
+          .select(col("id").as(idCol))
+      case None =>
+        val labels = starContractionFromCut(docIds, e, idCol, maxIterations, reliable)._1
+        graft.model.Lineage.retire(labels) // internal: dead after the keeper filter executes
+        labels
+          .filter(col(idCol) === col("cluster_id"))
+          .select(col(idCol))
+    }
   }
 
   /** WINNOWING document fingerprints (Schleimer, Wilkerson & Aiken,
@@ -3077,7 +3107,7 @@ object TextOps {
     // (An equivalent per-symbol-row window formulation — the one the
     // DuckDB oracle replays — measured ~3x slower: four shuffles per
     // round against vocabulary-sized data buys nothing.)
-    var words = docs.select(explode(tokens(col(textCol))).as("w"))
+    var words = graft.model.Lineage.cutDs(docs.select(explode(tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wc"))
       .as[(String, Long)]
       .map { case (w, c) =>
@@ -3085,17 +3115,16 @@ object TextOps {
         // character semantics as substring() in both engines
         val syms = w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
         (w, syms, c)
-      }
-      .localCheckpoint()
-    // bounded-local gate: the vocabulary is already materialized, so
-    // counting it is one cheap job; under the bound the whole merge
-    // loop runs on the driver (sequential reference semantics) and
-    // the per-round Spark jobs disappear
-    if (graft.model.BoundedLocal.fits(words.count())) {
-      val collected = words.collect()
-      graft.model.Lineage.release(words) // dead: the loop is local now
-      val (learnedL, finalWords) = bpeLearnLocal(collected, merges)
-      return (learnedL, () => spark.createDataset(finalWords.toSeq))
+      }, reliable = false)
+    // bounded-local gate: the vocabulary cut counted its rows; under
+    // the bound the whole merge loop runs on the driver (sequential
+    // reference semantics) and the per-round Spark jobs disappear
+    graft.model.BoundedLocal.collectIfFits(words) match {
+      case Some(collected) =>
+        graft.model.Lineage.release(words) // dead: the loop is local now
+        val (learnedL, finalWords) = bpeLearnLocal(collected, merges)
+        return (learnedL, () => spark.createDataset(finalWords.toSeq))
+      case None =>
     }
     // driver-side symbol inventory for guard 3 — initial alphabet
     // (bounded by distinct code points) + merged strings as learned

@@ -203,10 +203,10 @@ object UnigramOps {
     val spark = docs.sparkSession
     import spark.implicits._
     // one corpus scan; every later job runs on the distinct words
-    val words = wordTable(docs, textCol).localCheckpoint()
+    val words = graft.model.Lineage.cutDs(wordTable(docs, textCol), reliable = false)
 
     // bounded-local gate (graft.model.BoundedLocal): the vocabulary
-    // is already materialized, so counting it is one cheap job; under
+    // cut counted its rows, so the decision runs no job; under
     // the bound the seed pass and every EM round run on the driver
     // over the collected distinct-word table — the seed explosion, the
     // two seed collects and one flatMap+aggregate job per round all
@@ -218,9 +218,11 @@ object UnigramOps {
     // like Spark's `length`, and `words` (the returned artifact the
     // encode/segment faces reuse) stays the same checkpoint either
     // way.
-    if (graft.model.BoundedLocal.fits(words.count()))
-      return (unigramLearnLocal(words.collect(), maxPieceLen, seedMulti, iters),
-        words)
+    graft.model.BoundedLocal.collectIfFits(words) match {
+      case Some(collected) =>
+        return (unigramLearnLocal(collected, maxPieceLen, seedMulti, iters), words)
+      case None =>
+    }
 
     // SEED: substring occurrence frequencies over the distinct words,
     // weighted by word frequency. All single characters kept; top

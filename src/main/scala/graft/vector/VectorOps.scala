@@ -1518,21 +1518,18 @@ object VectorOps {
       .distinct()
 
   /** Collect a MATERIALIZED edge cut when it passes the
-    * [[graft.model.BoundedLocal]] gate — one cheap count job on the cut
-    * decides (the dedupClusters gate). None = stay distributed. The
+    * [[graft.model.BoundedLocal]] gate — the cut's counted rows decide,
+    * with no job (the dedupClusters gate). None = stay distributed. The
     * iterative kNN-graph analytics (LPA, modularity, BFS, k-core peel)
     * then run their rounds on the collected array; results are pinned
     * identical to the distributed rounds by forced-bound A/B specs.
     */
-  private def boundedEdges(edges: DataFrame): Option[Array[(Long, Long)]] =
-    if (!graft.model.BoundedLocal.fits(edges.count())) None
-    else {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val arr = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-      if (arr.isEmpty) None else Some(arr)
-    }
+  private def boundedEdges(edges: DataFrame): Option[Array[(Long, Long)]] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // (src, dst): the encoder up-casts integral ids to long
+    graft.model.BoundedLocal.collectIfFits(edges.as[(Long, Long)]).filter(_.nonEmpty)
+  }
 
   /** Synchronous LPA on a collected edge array — the exact local
     * mirror of the [[lpaLabels]] rounds: per round every dst node's

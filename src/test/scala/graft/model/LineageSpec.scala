@@ -3,7 +3,7 @@ package graft.model
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.GraftBlockProbe
+import org.apache.spark.sql.{GraftBlockProbe, GraftJobProbe}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.TestSpark
@@ -14,8 +14,9 @@ import graft.TestSpark
   * checkpoints have no recompute path — a silent recompute would hide
   * a use-after-release), and non-cut frames must pass through as
   * no-ops so release can be called unconditionally in loops. A cut's
-  * statistics are its measured bytes, so a chain of cut-to-cut joins
-  * starts every round from the true size.
+  * statistics are its measured bytes and its counted rows, so a chain
+  * of cut-to-cut joins starts every round from the true size, and a
+  * bounded-local gate decides with no job.
   */
 class LineageSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -109,6 +110,50 @@ class LineageSpec extends AnyFunSuite {
     assert(joined.queryExecution.executedPlan != null)
     assert(joined.count() == 0 && empty.count() == 0)
     Lineage.release(cut); Lineage.release(empty)
+  }
+
+  test("a cut counts its rows: local, shuffled, reliable, empty and self-joined cuts") {
+    def counted(c: org.apache.spark.sql.Dataset[_], rows: Long): Unit = {
+      assert(Lineage.rowCount(c) == rows && c.count() == rows)
+      assert(c.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(rows)))
+    }
+    val local = Lineage.cut((1 to 1000).toDF("x"), reliable = false)
+    counted(local, 1000)
+    // an AQE map stage runs before the cut's job; only the cut's rows count
+    val shuffled = Lineage.cut(spark.range(0, 5000, 1, 4).toDF("id")
+      .groupBy((col("id") % 37).as("k")).count(), reliable = false)
+    counted(shuffled, 37)
+    val empty = Lineage.cut((1 to 10).toDF("x").filter(col("x") < 0), reliable = false)
+    counted(empty, 0)
+    val base = (1 to 50).toDF("x")
+    val selfJoined = Lineage.cut(base.as("a").join(base.as("b"), col("a.x") <= col("b.x"))
+      .select(col("a.x").as("a"), col("b.x").as("b")), reliable = false)
+    counted(selfJoined, 1275)
+    // the re-instanced side of a cut's self-join keeps the count
+    val self = local.as("l").join(local.as("r"), col("l.x") === col("r.x"))
+    assert(logicalRdds(self).map(_.stats.rowCount) == Seq(Some(BigInt(1000)), Some(BigInt(1000))))
+
+    val sc = spark.sparkContext
+    val prior = sc.getCheckpointDir
+    sc.setCheckpointDir(Files.createTempDirectory("graft-ckpt").toString)
+    try counted(Lineage.cut(spark.range(0, 3000, 1, 3).toDF("id")
+      .where(col("id") % 3 === 0), reliable = true), 1000)
+    finally prior.foreach(sc.setCheckpointDir)
+    Seq(local, shuffled, empty, selfJoined).foreach(Lineage.release)
+  }
+
+  test("a local cut runs one job; the gate's decision on it runs none") {
+    val (cut, jobs) = GraftJobProbe.jobs(spark)(
+      Lineage.cut((1 to 500).toDF("x").withColumn("y", col("x") * 2), reliable = false))
+    assert(jobs == 1, s"a local cut of a narrow plan ran $jobs jobs")
+    val ((fits, moved), gateJobs) = GraftJobProbe.jobs(spark)(
+      BoundedLocal.forcing(0L)(BoundedLocal.collectIfFits(cut)))
+    assert(fits.isEmpty && moved == 1 && gateJobs == 0, s"($fits, $moved, $gateJobs)")
+    val (rows, collectJobs) = GraftJobProbe.jobs(spark)(BoundedLocal.collectIfFits(cut))
+    assert(rows.map(_.length).contains(500) && collectJobs == 1)
+    // a plan that is not a cut carries no counted rows: refused, not counted
+    intercept[IllegalArgumentException](BoundedLocal.collectIfFits(cut.select(col("x"))))
+    Lineage.release(cut)
   }
 
   test("release of a non-cut frame is a no-op") {
