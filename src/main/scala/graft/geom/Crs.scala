@@ -166,6 +166,9 @@ object Crs {
       sum(authalic, s, math.sqrt((1 - s) * (1 + s)))
     }
 
+    /** geodetic φ (radians) of the conformal latitude χ = atan2(sinChi, cosChi) */
+    def phiOfConformal(sinChi: Double, cosChi: Double): Double = sum(conformal, sinChi, cosChi)
+
     /** geodetic φ of t; sin χ = (1 − t²)/(1 + t²), cos χ = 2t/(1 + t²),
       * written in 1/t past t = 1 so neither square overflows
       */
@@ -351,6 +354,7 @@ object Crs {
       20648693 * n6 / 638668800)
     private val lon0 = math.toRadians(lon0Deg)
     private val e = ell.e
+    private val aux = ell.aux
     // meridian arc from equator to lat0 (= forward northing of (lon0, lat0))
     private val m0 = if (lat0Deg == 0.0) 0.0 else rawNorthing(math.toRadians(lat0Deg))
 
@@ -410,22 +414,11 @@ object Crs {
       val (xiP, etaP) = sinSeries(beta, -1.0, xi, eta)
       val sinhEtaP = math.sinh(etaP)
       val cosXiP = math.cos(xiP)
-      val tauP = math.sin(xiP) / math.sqrt(sinhEtaP * sinhEtaP + cosXiP * cosXiP)
       val lon = lon0 + math.atan2(sinhEtaP, cosXiP)
-      // Newton-invert the conformal latitude (Karney 2011 eq. 19-21)
-      var tau = tauP
-      var i = 0
-      var delta = 1.0
-      while (i < 8 && math.abs(delta) > 1e-14 * (1 + math.abs(tauP))) {
-        val sigma = math.sinh(e * atanh(e * tau / math.sqrt(1 + tau * tau)))
-        val tauPi = tau * math.sqrt(1 + sigma * sigma) - sigma * math.sqrt(1 + tau * tau)
-        val dTau = (tauP - tauPi) * (1 + (1 - ell.e2) * tau * tau) /
-          ((1 - ell.e2) * math.sqrt((1 + tauPi * tauPi) * (1 + tau * tau)))
-        tau += dTau
-        delta = dTau
-        i += 1
-      }
-      (math.toDegrees(lon), math.toDegrees(math.atan(tau)))
+      // conformal latitude χ: tan χ = sin ξ' / √(sinh² η' + cos² ξ')
+      // (Karney 2011), then φ from the conformal series, with no loop
+      val phi = aux.phiOfConformal(math.sin(xiP), math.sqrt(sinhEtaP * sinhEtaP + cosXiP * cosXiP))
+      (math.toDegrees(lon), math.toDegrees(phi))
     }
   }
 
@@ -1702,5 +1695,183 @@ final case class CrsTransformer(src: Crs, dst: Crs) extends Serializable {
       i += 1
     }
     (oxMin, oyMin, oxMax, oyMax)
+  }
+}
+
+/** The fractional source pixel indices of one target tile's pixel
+  * centres, from a sparse lattice of exact transforms. The reference
+  * transforms every target pixel centre
+  * (xcube_resampling/reproject.py:472-496); this is a deviation from it
+  * that moves no index by more than [[IndexLattice.Tol]].
+  *
+  * The exact inverse transform runs at every `step`-th pixel of each
+  * axis, plus one ring of nodes outside the tile so that every pixel
+  * has a full stencil: nodes at tile-local m·step for
+  * m = −1 .. (n − 1)/step + 2. A pixel's (i, j) is the 4-point Lagrange
+  * cubic through the nodes around it, first along x on every node row,
+  * then along y. GDAL's approximate transformer also interpolates
+  * between exact transforms and checks midpoints, linearly along each
+  * row and at a default tolerance of 0.125 px.
+  *
+  * The guard runs the exact transform once more at the centre of every
+  * lattice cell, clamped into the tile so that the partial cells at the
+  * right and bottom edges are checked too. A cubic's error through
+  * smooth data peaks at a cell's centre ((t+1)t(t−1)(t−2) is largest at
+  * t = ½), and for a partial cell at the clamped point, its last pixel.
+  * A step is accepted only if every node and check is finite and every
+  * check lies within `Tol` of the interpolant in both i and j;
+  * otherwise the next of [[IndexLattice.Steps]] is tried, and after the
+  * last the tile takes the per-pixel exact loop. An identity
+  * transformer and a tile with a side shorter than 2 steps also take
+  * the per-pixel loop, so their indices are the exact ones, bit for
+  * bit. The result depends on the target tile alone, never on the
+  * source tiling or the plan.
+  */
+object IndexLattice {
+
+  /** 1e-9 source px: 0.1 µm at 100 m pixels, 100× below the 1e-5 m to
+    * which `TransformSpec` pins the exact transforms against pyproj.
+    */
+  final val Tol = 1e-9
+
+  /** Lattice steps in px, tried in turn. 16 holds UTM 32N → EPSG:3035 at
+    * 100 m to 6e-11 px, the exact path's own rounding; transforms that
+    * bend faster need 8 (UTM 900 km off its central meridian at 1 km) or
+    * 4 (EPSG:4326 at 0.01° → UTM). At 4 the nodes and checks already
+    * cost 1/8 of the per-pixel transforms, so no finer step is tried.
+    */
+  final val Steps: Seq[Int] = Seq(16, 8, 4)
+
+  /** A tile's source indices, row-major, and the step that made them
+    * (0: every pixel transformed exactly).
+    */
+  final class Indices(val i: Array[Double], val j: Array[Double], val step: Int)
+
+  /** The exact fractional source index (i, j) of tile-local pixel
+    * (i, j), which may lie outside the tile.
+    */
+  trait Exact { def apply(i: Int, j: Int): (Double, Double) }
+
+  /** Source indices of the pixel centres of target tile (dtj, dti) of
+    * `dst` in `src` (whose j axis points down), through `inv`
+    * (`dst.crs` → `src.crs`).
+    */
+  def ofTile(inv: CrsTransformer, src: GridMapping, dst: GridMapping, dtj: Int, dti: Int): Indices = {
+    val gi0 = dti * dst.tileWidth; val gj0 = dtj * dst.tileHeight
+    val dXMin = dst.xMin; val dYMin = dst.yMin; val dYMax = dst.yMax
+    val dXRes = dst.xRes; val dYRes = dst.yRes; val jUp = dst.isJAxisUp
+    val sXMin = src.xMin; val sYMax = src.yMax; val sXRes = src.xRes; val sYRes = src.yRes
+    val exact: Exact = (i, j) => {
+      val gi = gi0 + i; val gj = gj0 + j
+      val dy = if (jUp) dYMin + (gj + 0.5) * dYRes else dYMax - (gj + 0.5) * dYRes
+      val (sx, sy) = inv.transformPoint(dXMin + (gi + 0.5) * dXRes, dy)
+      ((sx - sXMin) / sXRes - 0.5, (sYMax - sy) / sYRes - 0.5)
+    }
+    val w = dst.tileW(dti); val h = dst.tileH(dtj)
+    if (inv.isIdentity) perPixel(w, h, exact) else interpolated(w, h, exact)
+  }
+
+  /** The first step of [[Steps]] whose lattice passes the guard, else
+    * the per-pixel loop.
+    */
+  private[geom] def interpolated(w: Int, h: Int, exact: Exact): Indices =
+    Steps.iterator.filter(s => w >= 2 * s && h >= 2 * s)
+      .flatMap(s => atStep(w, h, s, exact)).nextOption()
+      .getOrElse(perPixel(w, h, exact))
+
+  private[geom] def perPixel(w: Int, h: Int, exact: Exact): Indices = {
+    val si = new Array[Double](w * h); val sj = new Array[Double](w * h)
+    var j = 0
+    while (j < h) {
+      var i = 0
+      while (i < w) {
+        val (a, b) = exact(i, j)
+        si(j * w + i) = a; sj(j * w + i) = b
+        i += 1
+      }
+      j += 1
+    }
+    new Indices(si, sj, 0)
+  }
+
+  /** Lagrange weights of the nodes at −1, 0, 1, 2 for t = r/s, four per
+    * offset r in 0 until s; at r = 0 they are exactly (0, 1, 0, 0).
+    */
+  private def weights(s: Int): Array[Double] = {
+    val wt = new Array[Double](4 * s)
+    for (r <- 0 until s) {
+      val t = r.toDouble / s
+      wt(4 * r) = -t * (t - 1) * (t - 2) / 6
+      wt(4 * r + 1) = (t + 1) * (t - 1) * (t - 2) / 2
+      wt(4 * r + 2) = -(t + 1) * t * (t - 2) / 2
+      wt(4 * r + 3) = (t + 1) * t * (t - 1) / 6
+    }
+    wt
+  }
+
+  private def finite(a: Double, b: Double): Boolean =
+    java.lang.Double.isFinite(a) && java.lang.Double.isFinite(b)
+
+  /** The tile's indices from the lattice of step `s`, or None where the
+    * guard rejects it.
+    */
+  private def atStep(w: Int, h: Int, s: Int, exact: Exact): Option[Indices] = {
+    val nx = (w - 1) / s + 4; val ny = (h - 1) / s + 4
+    val ni = new Array[Double](nx * ny); val nj = new Array[Double](nx * ny)
+    var b = 0
+    while (b < ny) {
+      var a = 0
+      while (a < nx) {
+        val (x, y) = exact((a - 1) * s, (b - 1) * s)
+        if (!finite(x, y)) return None
+        ni(b * nx + a) = x; nj(b * nx + a) = y
+        a += 1
+      }
+      b += 1
+    }
+    val wt = weights(s)
+    // along x on every node row: row b, pixel column i
+    val ri = new Array[Double](ny * w); val rj = new Array[Double](ny * w)
+    b = 0
+    while (b < ny) {
+      var i = 0
+      while (i < w) {
+        val c = i / s; val r = 4 * (i - c * s); val n = b * nx + c
+        ri(b * w + i) = wt(r) * ni(n) + wt(r + 1) * ni(n + 1) + wt(r + 2) * ni(n + 2) + wt(r + 3) * ni(n + 3)
+        rj(b * w + i) = wt(r) * nj(n) + wt(r + 1) * nj(n + 1) + wt(r + 2) * nj(n + 2) + wt(r + 3) * nj(n + 3)
+        i += 1
+      }
+      b += 1
+    }
+    // then along y
+    val si = new Array[Double](w * h); val sj = new Array[Double](w * h)
+    var j = 0
+    while (j < h) {
+      val c = j / s; val r = 4 * (j - c * s)
+      val w0 = wt(r); val w1 = wt(r + 1); val w2 = wt(r + 2); val w3 = wt(r + 3)
+      val r0 = c * w; val r1 = r0 + w; val r2 = r1 + w; val r3 = r2 + w
+      var i = 0
+      while (i < w) {
+        si(j * w + i) = w0 * ri(r0 + i) + w1 * ri(r1 + i) + w2 * ri(r2 + i) + w3 * ri(r3 + i)
+        sj(j * w + i) = w0 * rj(r0 + i) + w1 * rj(r1 + i) + w2 * rj(r2 + i) + w3 * rj(r3 + i)
+        i += 1
+      }
+      j += 1
+    }
+    // the guard: every cell's centre, clamped into the tile
+    var cy = 0
+    while (cy * s < h) {
+      val jc = math.min(cy * s + s / 2, h - 1)
+      var cx = 0
+      while (cx * s < w) {
+        val ic = math.min(cx * s + s / 2, w - 1)
+        val (x, y) = exact(ic, jc)
+        val k = jc * w + ic
+        if (!finite(x, y) || !(math.abs(x - si(k)) <= Tol) || !(math.abs(y - sj(k)) <= Tol)) return None
+        cx += 1
+      }
+      cy += 1
+    }
+    Some(new Indices(si, sj, s))
   }
 }

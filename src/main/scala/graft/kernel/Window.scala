@@ -39,43 +39,67 @@ object Interp {
       s"interp_methods must be one of 0, 1, 'nearest', 'bilinear', 'triangular', was '$other'")
   }
 
-  /** Sample `win` at fractional source index (fx, fy).
-    * - nearest: np.rint rounding (half-to-even), reference:
-    *   reproject.py:281-284
-    * - triangular: two-triangle blend split on `u + v < 1`, reference:
-    *   reproject.py:285-314
-    * - bilinear: 4-neighbor blend, reference: reproject.py:315-328
+  /** Sample `win` at fractional source index (fx, fy) with `method`,
+    * chosen per call; the reproject kernel samples whole tiles through
+    * [[sampleAll]].
     */
   def sample(win: Window, fx: Double, fy: Double, method: Int, fill: Double): Double =
     method match {
-      case NEAREST =>
-        win.get(math.rint(fx).toInt, math.rint(fy).toInt, fill)
-      case TRIANGULAR =>
-        val ixF = math.floor(fx).toInt; val ixC = math.ceil(fx).toInt
-        val iyF = math.floor(fy).toInt; val iyC = math.ceil(fy).toInt
-        val u = fx - ixF; val v = fy - iyF
-        if (u + v < 1.0) {
-          val v00 = win.get(ixF, iyF, fill)
-          val v01 = win.get(ixC, iyF, fill)
-          val v10 = win.get(ixF, iyC, fill)
-          v00 + u * (v01 - v00) + v * (v10 - v00)
-        } else {
-          val v11 = win.get(ixC, iyC, fill)
-          val v10 = win.get(ixF, iyC, fill)
-          val v01 = win.get(ixC, iyF, fill)
-          v11 + (1.0 - u) * (v10 - v11) + (1.0 - v) * (v01 - v11)
-        }
-      case BILINEAR =>
-        val ixF = math.floor(fx).toInt; val ixC = math.ceil(fx).toInt
-        val iyF = math.floor(fy).toInt; val iyC = math.ceil(fy).toInt
-        val u = fx - ixF; val v = fy - iyF
-        val v00 = win.get(ixF, iyF, fill)
-        val v01 = win.get(ixC, iyF, fill)
-        val v10 = win.get(ixF, iyC, fill)
-        val v11 = win.get(ixC, iyC, fill)
-        val vu0 = v00 + u * (v01 - v00)
-        val vu1 = v10 + u * (v11 - v10)
-        vu0 + v * (vu1 - vu0)
+      case NEAREST => nearest(win, fx, fy, fill)
+      case TRIANGULAR => triangular(win, fx, fy, fill)
+      case BILINEAR => bilinear(win, fx, fy, fill)
       case other => throw new IllegalArgumentException(s"unknown interp method id $other")
     }
+
+  /** Sample `win` at every (fx(k), fy(k)) with `method`. The method is
+    * chosen once here, so each loop calls one sampler that is small
+    * enough for the JIT to inline; a single sampler holding all three
+    * methods is past C2's inline size and stays an out-of-line call per
+    * pixel.
+    */
+  def sampleAll(win: Window, fx: Array[Double], fy: Array[Double], method: Int, fill: Double): Array[Double] = {
+    val out = new Array[Double](fx.length)
+    var k = 0
+    method match {
+      case NEAREST => while (k < out.length) { out(k) = nearest(win, fx(k), fy(k), fill); k += 1 }
+      case TRIANGULAR => while (k < out.length) { out(k) = triangular(win, fx(k), fy(k), fill); k += 1 }
+      case BILINEAR => while (k < out.length) { out(k) = bilinear(win, fx(k), fy(k), fill); k += 1 }
+      case other => throw new IllegalArgumentException(s"unknown interp method id $other")
+    }
+    out
+  }
+
+  /** np.rint rounding (half-to-even), reference: reproject.py:281-284 */
+  def nearest(win: Window, fx: Double, fy: Double, fill: Double): Double =
+    win.get(math.rint(fx).toInt, math.rint(fy).toInt, fill)
+
+  /** Two-triangle blend split on `u + v < 1`, reference: reproject.py:285-314 */
+  def triangular(win: Window, fx: Double, fy: Double, fill: Double): Double = {
+    val ixF = math.floor(fx).toInt; val ixC = math.ceil(fx).toInt
+    val iyF = math.floor(fy).toInt; val iyC = math.ceil(fy).toInt
+    val u = fx - ixF; val v = fy - iyF
+    val v10 = win.get(ixF, iyC, fill)
+    val v01 = win.get(ixC, iyF, fill)
+    if (u + v < 1.0) {
+      val v00 = win.get(ixF, iyF, fill)
+      v00 + u * (v01 - v00) + v * (v10 - v00)
+    } else {
+      val v11 = win.get(ixC, iyC, fill)
+      v11 + (1.0 - u) * (v10 - v11) + (1.0 - v) * (v01 - v11)
+    }
+  }
+
+  /** 4-neighbor blend, reference: reproject.py:315-328 */
+  def bilinear(win: Window, fx: Double, fy: Double, fill: Double): Double = {
+    val ixF = math.floor(fx).toInt; val ixC = math.ceil(fx).toInt
+    val iyF = math.floor(fy).toInt; val iyC = math.ceil(fy).toInt
+    val u = fx - ixF; val v = fy - iyF
+    val v00 = win.get(ixF, iyF, fill)
+    val v01 = win.get(ixC, iyF, fill)
+    val v10 = win.get(ixF, iyC, fill)
+    val v11 = win.get(ixC, iyC, fill)
+    val vu0 = v00 + u * (v01 - v00)
+    val vu1 = v10 + u * (v11 - v10)
+    vu0 + v * (vu1 - vu0)
+  }
 }

@@ -247,6 +247,55 @@ class AuxLatitudeSpec extends AnyFunSuite {
     }
   }
 
+  /** The TM inverse with its old Newton loop on τ (Karney 2011 eq.
+    * 19-21) after the Krueger series, summed term by term.
+    */
+  private def oldTm(c: TransverseMercator): Inverse = new Inverse {
+    private val ell = c.ell; private val e = ell.e
+    private val n = ell.n
+    private val n2 = n * n; private val n3 = n2 * n; private val n4 = n3 * n
+    private val n5 = n4 * n; private val n6 = n5 * n
+    private val bigA = ell.a / (1 + n) * (1 + n2 / 4 + n4 / 64 + n6 / 256)
+    private val beta = Array(
+      n / 2 - 2 * n2 / 3 + 37 * n3 / 96 - n4 / 360 - 81 * n5 / 512 + 96199 * n6 / 604800,
+      n2 / 48 + n3 / 15 - 437 * n4 / 1440 + 46 * n5 / 105 - 1118711 * n6 / 3870720,
+      17 * n3 / 480 - 37 * n4 / 840 - 209 * n5 / 4480 + 5569 * n6 / 90720,
+      4397 * n4 / 161280 - 11 * n5 / 504 - 830251 * n6 / 7257600,
+      4583 * n5 / 161280 - 108847 * n6 / 3991680,
+      20648693 * n6 / 638668800)
+    // meridian arc to lat0: the northing of (lon0, lat0) with lat0 = 0
+    private val m0 = TransverseMercator(c.lon0Deg, 0.0, 1.0, 0.0, 0.0, ell, "tm-0")
+      .fromLonLat(c.lon0Deg, c.lat0Deg)._2
+    private def atanh(x: Double): Double = 0.5 * math.log((1 + x) / (1 - x))
+    def toLonLat(x: Double, y: Double): (Double, Double) = {
+      val xi = (y - c.falseNorthing + c.k0 * m0) / (c.k0 * bigA)
+      val eta = (x - c.falseEasting) / (c.k0 * bigA)
+      var xiP = xi; var etaP = eta
+      for (j <- 0 until 6) {
+        val k = 2.0 * (j + 1)
+        xiP -= beta(j) * math.sin(k * xi) * math.cosh(k * eta)
+        etaP -= beta(j) * math.cos(k * xi) * math.sinh(k * eta)
+      }
+      val sinhEtaP = math.sinh(etaP)
+      val cosXiP = math.cos(xiP)
+      val tauP = math.sin(xiP) / math.sqrt(sinhEtaP * sinhEtaP + cosXiP * cosXiP)
+      val lon = math.toRadians(c.lon0Deg) + math.atan2(sinhEtaP, cosXiP)
+      var tau = tauP
+      var i = 0
+      var delta = 1.0
+      while (i < 8 && math.abs(delta) > 1e-14 * (1 + math.abs(tauP))) {
+        val sigma = math.sinh(e * atanh(e * tau / math.sqrt(1 + tau * tau)))
+        val tauPi = tau * math.sqrt(1 + sigma * sigma) - sigma * math.sqrt(1 + tau * tau)
+        val dTau = (tauP - tauPi) * (1 + (1 - ell.e2) * tau * tau) /
+          ((1 - ell.e2) * math.sqrt((1 + tauPi * tauPi) * (1 + tau * tau)))
+        tau += dTau
+        delta = dTau
+        i += 1
+      }
+      (math.toDegrees(lon), math.toDegrees(math.atan(tau)))
+    }
+  }
+
   private def lonDiff(a: Double, b: Double): Double = {
     val d = math.abs(a - b) % 360.0
     math.min(d, 360.0 - d)
@@ -317,6 +366,26 @@ class AuxLatitudeSpec extends AnyFunSuite {
       val c = fromString(code).asInstanceOf[PolarStereographic]
       val lats = if (c.south) steps(-89.9, 30.0, 0.6) else steps(-30.0, 89.9, 0.6)
       matchesOld(c, oldPolar(c), lats, allLons)
+    }
+  }
+
+  test("TransverseMercator toLonLat equals its old Newton loop: UTM 32N, 33S, tm-49, 27700 (Airy)") {
+    val tms = Seq(Crs.utm(32, north = true), Crs.utm(33, north = false),
+      TransverseMercator(-2.0, 49.0, 0.9996012717, 400000.0, -100000.0, WGS84, "tm-49"),
+      fromString("EPSG:27700").asInstanceOf[DatumShifted].base)
+    for (crs <- tms) {
+      val c = crs.asInstanceOf[TransverseMercator]
+      val old = oldTm(c)
+      var n = 0
+      for (lat <- steps(-80.0, 84.0, 0.37); dLon <- steps(-6.0, 6.0, 0.25)) {
+        val (x, y) = c.fromLonLat(c.lon0Deg + dLon, lat)
+        val (lo, la) = c.toLonLat(x, y)
+        val (rlo, rla) = old.toLonLat(x, y)
+        assert(math.abs(la - rla) <= 1e-11 && lonDiff(lo, rlo) <= 1e-11,
+          s"${c.name} (${c.lon0Deg + dLon}, $lat): ($lo, $la) vs old ($rlo, $rla)")
+        n += 1
+      }
+      assert(n > 20000)
     }
   }
 

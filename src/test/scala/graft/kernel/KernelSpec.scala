@@ -113,4 +113,71 @@ class KernelSpec extends AnyFunSuite {
     val withNan = Array(1e8 + 1, Double.NaN, 1e8 + 3, 1e8 + 5)
     assert(Reducers.reduce(withNan, 2, 2, Reducers.Var, isIntType = false) == 8.0 / 3.0)
   }
+
+  /** `Interp.sample` before it was split into one sampler per method. */
+  private def oldSample(win: Window, fx: Double, fy: Double, method: Int, fill: Double): Double =
+    method match {
+      case Interp.NEAREST =>
+        win.get(math.rint(fx).toInt, math.rint(fy).toInt, fill)
+      case Interp.TRIANGULAR =>
+        val ixF = math.floor(fx).toInt; val ixC = math.ceil(fx).toInt
+        val iyF = math.floor(fy).toInt; val iyC = math.ceil(fy).toInt
+        val u = fx - ixF; val v = fy - iyF
+        if (u + v < 1.0) {
+          val v00 = win.get(ixF, iyF, fill)
+          val v01 = win.get(ixC, iyF, fill)
+          val v10 = win.get(ixF, iyC, fill)
+          v00 + u * (v01 - v00) + v * (v10 - v00)
+        } else {
+          val v11 = win.get(ixC, iyC, fill)
+          val v10 = win.get(ixF, iyC, fill)
+          val v01 = win.get(ixC, iyF, fill)
+          v11 + (1.0 - u) * (v10 - v11) + (1.0 - v) * (v01 - v11)
+        }
+      case Interp.BILINEAR =>
+        val ixF = math.floor(fx).toInt; val ixC = math.ceil(fx).toInt
+        val iyF = math.floor(fy).toInt; val iyC = math.ceil(fy).toInt
+        val u = fx - ixF; val v = fy - iyF
+        val v00 = win.get(ixF, iyF, fill)
+        val v01 = win.get(ixC, iyF, fill)
+        val v10 = win.get(ixF, iyC, fill)
+        val v11 = win.get(ixC, iyC, fill)
+        val vu0 = v00 + u * (v01 - v00)
+        val vu1 = v10 + u * (v11 - v10)
+        vu0 + v * (vu1 - vu0)
+    }
+
+  test("the per-method samplers equal the old one-method sample bit for bit") {
+    val rnd = new scala.util.Random(7)
+    def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+    var compared = 0
+    for (_ <- 0 until 50) {
+      val w = 1 + rnd.nextInt(9); val h = 1 + rnd.nextInt(9)
+      val i0 = rnd.nextInt(21) - 10; val j0 = rnd.nextInt(21) - 10
+      // values with NaN, and some equal to the fill
+      val fill = if (rnd.nextBoolean()) Double.NaN else -1.0
+      val data = Array.fill(w * h)(rnd.nextInt(10) match {
+        case 0 => Double.NaN
+        case 1 => fill
+        case _ => rnd.nextGaussian() * 100
+      })
+      val win = new Window(i0, j0, w, h, data)
+      // indices inside, on the edge of and outside the window, some integral
+      val n = 200
+      val fx = Array.fill(n)(if (rnd.nextInt(5) == 0) (i0 + rnd.nextInt(w + 4) - 2).toDouble
+        else i0 - 2 + rnd.nextDouble() * (w + 3))
+      val fy = Array.fill(n)(if (rnd.nextInt(5) == 0) (j0 + rnd.nextInt(h + 4) - 2).toDouble
+        else j0 - 2 + rnd.nextDouble() * (h + 3))
+      for (m <- Seq(Interp.NEAREST, Interp.BILINEAR, Interp.TRIANGULAR)) {
+        val all = Interp.sampleAll(win, fx, fy, m, fill)
+        for (k <- 0 until n) {
+          val want = bits(oldSample(win, fx(k), fy(k), m, fill))
+          assert(bits(Interp.sample(win, fx(k), fy(k), m, fill)) == want && bits(all(k)) == want,
+            s"method $m at (${fx(k)}, ${fy(k)}) in window $i0,$j0 ${w}x$h")
+          compared += 1
+        }
+      }
+    }
+    assert(compared == 30000)
+  }
 }
