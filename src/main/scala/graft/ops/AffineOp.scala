@@ -20,10 +20,11 @@ import graft.model.Policies.VarPolicy
   *   - else a single inverse-mapping warp (reference: affine.py:316-362)
   *
   * The warp is a TileGather: a driver-computed tile->source-window plan
-  * (pure affine math, no data pass), one broadcast join + one shuffle
-  * keyed by target tile, then a tight per-tile kernel. The coarsen step
-  * after an upscale is tile-local (intermediate tiling is chosen
-  * divisor-aligned), so a downscale costs the SAME single shuffle.
+  * (pure affine math, no data pass), a narrow crop of each source tile
+  * to the windows that read it + one shuffle keyed by target tile, then
+  * a tight per-tile kernel. The coarsen step after an upscale is
+  * tile-local (intermediate tiling is chosen divisor-aligned), so a
+  * downscale costs the SAME single shuffle.
   */
 object AffineOp {
 
@@ -109,8 +110,7 @@ object AffineOp {
     val srcW = srcGm.width; val srcH = srcGm.height
     val dstTileW = dstGm.tileWidth; val dstTileH = dstGm.tileHeight
     val dstW = dstGm.width; val dstH = dstGm.height
-    TileGather.gatherWithWindows(tiles, srcGm, dstGm.numTilesX, dstGm.numTilesY,
-      windowOf, (dtj: Int, dti: Int) => {
+    TileGather.gatherWithWindows(tiles, srcGm, dstGm, windowOf, (dtj: Int, dti: Int) => {
       val h = math.min(dstTileH, dstH - dtj * dstTileH)
       val w = math.min(dstTileW, dstW - dti * dstTileW)
       (v: String, b: Int, win: Window) => {

@@ -263,15 +263,15 @@ object RectifyOp {
 
     // each target tile's x and y windows, assembled from coord pieces
     // (sorted by (varName, band): "x" before "y")
-    val reads = TileGather.plan(srcGm, nTx, nTy, windowRows0).reads
-    TileGather.byTargetTile(TileGather.pieces(coordTiles, srcGm, reads), nTx, nTx.toLong * nTy) {
+    val plan = TileGather.plan(srcGm, nTx, nTy, windowRows0)
+    TileGather.byTargetTile(TileGather.pieces(coordTiles, srcGm, plan), TileGather.TargetTiles.of(dstGm)) {
       (dtj, dti, pcs) =>
         val wins = TileGather.windowRuns(pcs).map { case (v, _, win) => v -> win }.toMap
         val xWin = wins("x"); val yWin = wins("y")
         val h = math.min(dth, dH - dtj * dth)
         val w = math.min(dtw, dW - dti * dtw)
-        val srcI = Array.fill(h * w)(Double.NaN)
-        val srcJ = Array.fill(h * w)(Double.NaN)
+        val srcI = TileGather.filled(h * w, Double.NaN)
+        val srcJ = TileGather.filled(h * w, Double.NaN)
         val dstXOffset = dXMin + dti * dtw * dXRes
         val (dstYOffset, dstYScale) =
           if (jUp) (dYMin + dtj * dth * dYRes, dYRes)
@@ -329,8 +329,8 @@ object RectifyOp {
     val plan = TileGather.plan(srcGm, nTx, nTy,
       lookup.select("dtj", "dti", "i0", "j0", "i1", "j1").as[TileGather.WindowRow])
     val srcW = srcGm.width; val srcH = srcGm.height
-    val pieces = lookup.union(TileGather.pieces(tiles, srcGm, plan.reads))
-    val sampled = TileGather.byTargetTile(pieces, nTx, nTx.toLong * nTy) { (_, _, run) =>
+    val pieces = lookup.union(TileGather.pieces(tiles, srcGm, plan))
+    val sampled = TileGather.byTargetTile(pieces, TileGather.TargetTiles.of(dstGm)) { (_, _, run) =>
       val lt = run.next() // LookupName sorts first; only tiles with a lookup have pieces
       val n = lt.pw * lt.ph
       TileGather.windowRuns(run).map { case (v, b, win) =>
@@ -352,7 +352,7 @@ object RectifyOp {
     val fill: TileGather.TileKernel = (dtj, dti) => {
       val h = math.min(dth, dH - dtj * dth)
       val w = math.min(dtw, dW - dti * dtw)
-      (v, b, _) => Tile(v, b, dtj, dti, h, w, Array.fill(h * w)(policies(v).fill))
+      (v, b, _) => Tile(v, b, dtj, dti, h, w, TileGather.filled(h * w, policies(v).fill))
     }
     TileGather.withFillTiles(sampled, tiles, plan, fill)
   }

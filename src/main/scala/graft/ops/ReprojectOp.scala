@@ -72,8 +72,7 @@ object ReprojectOp {
     }
 
     // 4. gather + kernel
-    TileGather.gatherWithWindows(tiles2, srcGm2, dstGm.numTilesX, dstGm.numTilesY,
-      windowOf, (dtj: Int, dti: Int) => {
+    TileGather.gatherWithWindows(tiles2, srcGm2, dstGm, windowOf, (dtj: Int, dti: Int) => {
       val h = dstGmP.tileH(dtj); val w = dstGmP.tileW(dti)
       // fractional source indices of the tile's pixel centres, shared by
       // every (var, band)
@@ -82,7 +81,7 @@ object ReprojectOp {
         val p = policies(v)
         // an empty window samples to fill everywhere: skip the transform
         val out =
-          if (win.w == 0 || win.h == 0) Array.fill(h * w)(p.fill)
+          if (win.w == 0 || win.h == 0) TileGather.filled(h * w, p.fill)
           else Interp.sampleAll(win, srcIdx.i, srcIdx.j, p.interp, p.fill)
         Tile(v, b, dtj, dti, h, w, out)
       }

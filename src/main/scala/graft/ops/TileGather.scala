@@ -1,8 +1,8 @@
 package graft.ops
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, call_function, col, least, lit}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.geom.GridMapping
 import graft.kernel.Window
@@ -15,41 +15,42 @@ import graft.model.Tile
   * The reference does this as `_reorganize_data_array_slice`
   * (reference: xcube_resampling/reproject.py:499-530) — a dask gather
   * that concatenates each target tile's source window into one dense
-  * array. Here it is a join of the tile->window plan ([[plan]]) against
-  * the source tile table, a narrow crop of each joined tile to its
-  * window, then one exchange that deals whole target tiles over the
-  * partitions ([[byTargetTile]]) and a sorted pass that assembles each
-  * window and runs the kernel. One run holds every (var, band) of a
-  * target tile, so the kernel's per-tile work (the reference's
-  * `_transform_gridpoints`, reproject.py:472-496) runs once for all
-  * variables. Rectify builds both of its stages from the same parts
-  * ([[plan]], [[pieces]], [[byTargetTile]], [[windowRuns]],
-  * [[withFillTiles]]); its lookup tile rides the same exchange at the
-  * head of its target tile's run. Every raster gather of the engine
-  * therefore groups target tiles in [[byTargetTile]] and plans in
-  * [[plan]].
+  * array. Here it is the tile->window plan ([[plan]]) applied to the
+  * source tile table, a narrow crop of each source tile to every window
+  * that reads it ([[pieces]]), then one exchange that deals contiguous
+  * runs of whole target tiles over the partitions ([[byTargetTile]])
+  * and a sorted pass that assembles each window and runs the kernel.
+  * One run holds every (var, band) of a target tile, so the kernel's
+  * per-tile work (the reference's `_transform_gridpoints`,
+  * reproject.py:472-496) runs once for all variables. Rectify builds
+  * both of its stages from the same parts ([[plan]], [[pieces]],
+  * [[byTargetTile]], [[windowRuns]], [[withFillTiles]]); its lookup
+  * tile rides the same exchange at the head of its target tile's run.
+  * Every raster gather of the engine therefore groups target tiles in
+  * [[byTargetTile]] and plans in [[plan]].
   *
   * Scale notes: up to [[DriverPlanMaxTiles]] target tiles the plan is
-  * built on the driver and HINTED as the broadcast side of the
-  * plan⋈tiles equi-join on (srcTj, srcTi). Unhinted, the planner picks
-  * the side with the smaller size estimate. A `Lineage` cut reports its
-  * measured bytes, but a source that is not a cut need not: tiles
-  * mapped from `spark.range` (or any generator) keep the range's
-  * estimate of 8 bytes per row, whatever each tile's `array<double>`
-  * payload holds, and would look smaller than the plan. The hint keeps
-  * the broadcast side the plan rows for every source, so the raster is
-  * never shipped from the driver to every executor.
+  * built on the driver as a map from source tile to the plan rows that
+  * read it. [[pieces]] captures it in one `flatMap` over the source
+  * tiles, coalesced (narrow, no exchange) to at most the shuffle
+  * partitions: no join, no broadcast job, and one map task per shuffle
+  * partition rather than one per source partition. Nothing is ever
+  * broadcast from the driver, so no size estimate can make the planner
+  * ship the raster (a source mapped from `spark.range` keeps the
+  * range's estimate of 8 bytes per row, whatever its payload holds).
   * Above [[DriverPlanMaxTiles]] the plan (numTargetTiles x overlap
   * rows) is GENERATED DISTRIBUTED (a Dataset flatMap over the windows)
-  * and shuffle-joined, so nothing driver-side scales with tile count
-  * and a 10^7-tile image never materializes a multi-GB plan on the
-  * driver. Each source tile is cut down to the part each reading
-  * target tile needs before the exchange, so shuffle volume is
-  * O(source bytes) (plus the windows' small overlap), not O(source
-  * bytes x overlap). Target tiles with no window produce fill-only
-  * tiles ([[withFillTiles]]), and nothing else does — matching the
-  * reference's `-1`-bbox fill blocks (reference: reproject.py:415-423,
-  * rectify.py:393-396).
+  * and joined to the source tiles, so nothing driver-side scales with
+  * tile count and a 10^7-tile image never materializes a multi-GB plan
+  * on the driver. Each source tile is cut down to the part each reading
+  * target tile needs before the exchange, so shuffle volume is the
+  * source bytes times the windows' overlap: close to O(source bytes)
+  * when windows hug their tiles (affine, reproject), but not for
+  * rectify's lookup windows, which `xyBorder` grows with the target
+  * tile count until each is most of the swath. Target tiles with no
+  * window produce fill-only tiles ([[withFillTiles]]), and nothing else
+  * does — matching the reference's `-1`-bbox fill blocks (reference:
+  * reproject.py:415-423, rectify.py:393-396).
   */
 object TileGather {
 
@@ -80,54 +81,105 @@ object TileGather {
   }
 
   /** Below this many TARGET tiles the plan is built on the driver and
-    * broadcast (a few MB at most — lower latency for small grids and
-    * tests); above it, the plan is generated distributed and shuffle-
-    * joined, so a 10^7-tile raster never materializes its plan on the
-    * driver.
+    * captured in the pieces' closure (a few MB at most — lower latency
+    * for small grids and tests); above it, the plan is generated
+    * distributed and joined, so a 10^7-tile raster never materializes
+    * its plan on the driver.
     */
   val DriverPlanMaxTiles: Long = 4096L
 
-  /** A gather's plan: `reads`, the rows that join source tiles, and
-    * `fills`, the (dtj, dti) of every target tile with no window (None
-    * when the driver knows there is none).
+  /** The plan rows that read each source tile, keyed by (srcTj, srcTi):
+    * either built on the driver or a distributed Dataset.
     */
-  private[ops] final case class Plan(reads: Dataset[PlanRow], fills: Option[Dataset[(Int, Int)]])
+  private[ops] sealed trait Reads
+  private[ops] final case class DriverReads(bySource: Map[(Int, Int), Array[PlanRow]]) extends Reads
+  private[ops] final case class DistributedReads(rows: Dataset[PlanRow]) extends Reads
+
+  /** A gather's plan: `reads`, the rows that pick and crop source
+    * tiles, and `fills`, the (dtj, dti) of every target tile with no
+    * window (None when the driver knows there is none).
+    */
+  private[ops] final case class Plan(reads: Reads, fills: Option[Dataset[(Int, Int)]])
 
   /** The gathers' one plan builder, for a `dstNumTilesX` x
     * `dstNumTilesY` target grid. `windows` holds at most one row per
     * target tile; a tile with no row, or with i0 < 0, has no window.
     * Up to [[DriverPlanMaxTiles]] target tiles the windows are collected
     * (no job when they are a local relation) and the plan is built on
-    * the driver, hinted as the broadcast side of the pieces join.
-    * Above it, reads and fills are Datasets, the fills an anti-join of
-    * the target tile index range against the windows.
+    * the driver ([[driverPlan]]). Above it, reads and fills are
+    * Datasets, the fills an anti-join of the target tile index range
+    * against the windows.
     */
   private[ops] def plan(
       srcGm: GridMapping, dstNumTilesX: Int, dstNumTilesY: Int,
       windows: Dataset[WindowRow]): Plan = {
     val spark = windows.sparkSession
     import spark.implicits._
-    val tw = srcGm.tileWidth; val th = srcGm.tileHeight
-    val ntx = srcGm.numTilesX; val nty = srcGm.numTilesY
     val nTx = dstNumTilesX
     val n = nTx.toLong * dstNumTilesY
-    if (n <= DriverPlanMaxTiles) {
-      val covered = windows.collect().filter(_.i0 >= 0)
-      val reads = covered.toSeq.flatMap(w => planRowsOf(tw, th, ntx, nty, w))
-      val hasWindow = covered.map(w => (w.dtj, w.dti)).toSet
-      val fills = for {
-        dtj <- 0 until dstNumTilesY; dti <- 0 until nTx if !hasWindow((dtj, dti))
-      } yield (dtj, dti)
-      Plan(broadcast(spark.createDataset(reads)),
-        if (fills.isEmpty) None else Some(spark.createDataset(fills)))
-    } else {
+    if (n <= DriverPlanMaxTiles) driverPlan(spark, srcGm, dstNumTilesX, dstNumTilesY, windows.collect().toSeq)
+    else {
+      val tw = srcGm.tileWidth; val th = srcGm.tileHeight
+      val ntx = srcGm.numTilesX; val nty = srcGm.numTilesY
       val covered = windows.filter(col("i0") >= 0)
       val fills = spark.range(n)
         .select((col("id") / nTx).cast(IntegerType).as("dtj"), (col("id") % nTx).cast(IntegerType).as("dti"))
         .join(covered.select("dtj", "dti"), Seq("dtj", "dti"), "left_anti")
         .as[(Int, Int)]
-      Plan(covered.flatMap(w => planRowsOf(tw, th, ntx, nty, w)), Some(fills))
+      Plan(DistributedReads(covered.flatMap(w => planRowsOf(tw, th, ntx, nty, w))), Some(fills))
     }
+  }
+
+  /** The plan of a grid of at most [[DriverPlanMaxTiles]] target tiles,
+    * built on the driver from its windows.
+    */
+  private def driverPlan(
+      spark: SparkSession, srcGm: GridMapping, dstNumTilesX: Int, dstNumTilesY: Int,
+      windows: Seq[WindowRow]): Plan = {
+    import spark.implicits._
+    val covered = windows.filter(_.i0 >= 0)
+    val bySource = covered
+      .flatMap(w => planRowsOf(srcGm.tileWidth, srcGm.tileHeight, srcGm.numTilesX, srcGm.numTilesY, w))
+      .groupBy(p => (p.srcTj, p.srcTi))
+      .map { case (k, ps) => k -> ps.toArray }
+    val hasWindow = covered.map(w => (w.dtj, w.dti)).toSet
+    val fills = for {
+      dtj <- 0 until dstNumTilesY; dti <- 0 until dstNumTilesX if !hasWindow((dtj, dti))
+    } yield (dtj, dti)
+    Plan(DriverReads(bySource), if (fills.isEmpty) None else Some(spark.createDataset(fills)))
+  }
+
+  /** The target grid as [[byTargetTile]] deals it: `width` x `height`
+    * pixels in `tileW` x `tileH` tiles, the last row and column possibly
+    * smaller. Each target tile weighs its pixel count.
+    */
+  private[ops] final case class TargetTiles(width: Int, height: Int, tileW: Int, tileH: Int) {
+    val numTilesX: Int = (width + tileW - 1) / tileW
+    val numTilesY: Int = (height + tileH - 1) / tileH
+    def numTiles: Long = numTilesX.toLong * numTilesY
+
+    /** The partition of target tile (dtj, dti) among `n`, as a Column
+      * of the pieces' dtj and dti: tiles in row-major order fill the
+      * partitions in contiguous runs of about equal pixel count. Tile k
+      * goes to floor((pixels before k + half of k's) · n / all pixels),
+      * in exact integer arithmetic. Every row above dtj is full height
+      * and every column left of dti full width, so the pixels before
+      * the tile are dtj·tileH·width + (its row's height)·dti·tileW.
+      */
+    def partitionOf(n: Int): Column = {
+      val dtj = col("dtj").cast(LongType); val dti = col("dti").cast(LongType)
+      val rowH = least(lit(tileH.toLong), lit(height.toLong) - dtj * tileH)
+      val colW = least(lit(tileW.toLong), lit(width.toLong) - dti * tileW)
+      val twiceCentre = (dtj * (tileH.toLong * width) + rowH * dti * tileW) * 2 + rowH * colW
+      call_function("div", twiceCentre * n.toLong, lit(2L * width * height)).cast(IntegerType)
+    }
+  }
+
+  private[ops] object TargetTiles {
+    def of(gm: GridMapping): TargetTiles = TargetTiles(gm.width, gm.height, gm.tileWidth, gm.tileHeight)
+
+    /** A `numTilesX` x `numTilesY` grid whose tiles all weigh the same. */
+    def equal(numTilesX: Int, numTilesY: Int): TargetTiles = TargetTiles(numTilesX, numTilesY, 1, 1)
   }
 
   /** A kernel of the shared gather, called once per target tile
@@ -140,26 +192,44 @@ object TileGather {
     */
   type TileKernel = (Int, Int) => (String, Int, Window) => Tile
 
-  /** Plan + gather for window functions of the target tile index. The
-    * windows are computed where [[plan]] builds the plan: on the driver
-    * for small grids, in executors at scale, so `windowOf` must be pure.
+  /** Plan + gather for window functions of the target tile index onto
+    * the target grid `dstGm`. The windows are computed where [[plan]]
+    * builds the plan: on the driver for small grids, in executors at
+    * scale, so `windowOf` must be pure.
+    */
+  def gatherWithWindows(
+      tiles: Dataset[Tile],
+      srcGm: GridMapping,
+      dstGm: GridMapping,
+      windowOf: (Int, Int) => WindowRow,
+      kernel: TileKernel): Dataset[Tile] =
+    gather(tiles, srcGm, TargetTiles.of(dstGm), windowOf, kernel)
+
+  /** The same gather onto a `dstNumTilesX` x `dstNumTilesY` grid of
+    * target tiles of unknown size, dealt as if all were the same size.
     */
   def gatherWithWindows(
       tiles: Dataset[Tile],
       srcGm: GridMapping,
       dstNumTilesX: Int, dstNumTilesY: Int,
       windowOf: (Int, Int) => WindowRow,
+      kernel: TileKernel): Dataset[Tile] =
+    gather(tiles, srcGm, TargetTiles.equal(dstNumTilesX, dstNumTilesY), windowOf, kernel)
+
+  private def gather(
+      tiles: Dataset[Tile],
+      srcGm: GridMapping,
+      target: TargetTiles,
+      windowOf: (Int, Int) => WindowRow,
       kernel: TileKernel): Dataset[Tile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val nTx = dstNumTilesX
-    val n = nTx.toLong * dstNumTilesY
-    val windows =
-      if (n <= DriverPlanMaxTiles)
-        spark.createDataset(for (dtj <- 0 until dstNumTilesY; dti <- 0 until nTx) yield windowOf(dtj, dti))
-      else spark.range(n).map(id => windowOf((id / nTx).toInt, (id % nTx).toInt))
-    val p = plan(srcGm, dstNumTilesX, dstNumTilesY, windows)
-    val gathered = byTargetTile(pieces(tiles, srcGm, p.reads), nTx, n) { (dtj, dti, rows) =>
+    val nTx = target.numTilesX; val nTy = target.numTilesY
+    val p =
+      if (target.numTiles <= DriverPlanMaxTiles)
+        driverPlan(spark, srcGm, nTx, nTy, for (dtj <- 0 until nTy; dti <- 0 until nTx) yield windowOf(dtj, dti))
+      else plan(srcGm, nTx, nTy, spark.range(target.numTiles).map(id => windowOf((id / nTx).toInt, (id % nTx).toInt)))
+    val gathered = byTargetTile(pieces(tiles, srcGm, p), target) { (dtj, dti, rows) =>
       val sample = kernel(dtj, dti)
       windowRuns(rows).map { case (v, b, win) => sample(v, b, win) }
     }
@@ -176,21 +246,22 @@ object TileGather {
     gatherWithWindows(tiles, srcGm, dstNumTilesX, dstNumTilesY, windowOf,
       (dtj: Int, dti: Int) => (v: String, b: Int, win: Window) => kernel(v, b, dtj, dti, win))
 
-  /** The gathers' one grouping exchange. Target tiles are dealt round-
-    * robin by row-major index over n = min(target tiles, shuffle
-    * partitions) partitions (`repartitionById`, so no hash can pile
-    * tiles into one task), each partition is sorted by (dtj, dti,
+  /** The gathers' one grouping exchange. Target tiles are dealt over
+    * n = min(target tiles, shuffle partitions) partitions in contiguous
+    * row-major runs of about equal pixel count
+    * ([[TargetTiles.partitionOf]]; `repartitionById`, so no hash can
+    * pile tiles into one task), each partition is sorted by (dtj, dti,
     * varName, band), and `perTile` runs once per target tile on its
-    * pieces in (var, band) order. `perTile` may leave pieces unread.
+    * pieces in (var, band) order. `perTile` may leave pieces unread. A
+    * partition holds about rows/n + 1 tile rows, so a write partitioned
+    * by tile row opens at most rows + n files.
     */
-  private[ops] def byTargetTile[T: Encoder](
-      pieces: Dataset[Piece], dstNumTilesX: Int, dstNumTiles: Long)(
+  private[ops] def byTargetTile[T: Encoder](pieces: Dataset[Piece], target: TargetTiles)(
       perTile: (Int, Int, Iterator[Piece]) => Iterator[T]): Dataset[T] = {
     val n = math.max(1L,
-      math.min(dstNumTiles, pieces.sparkSession.sessionState.conf.numShufflePartitions.toLong))
-    val partitionId = ((col("dtj").cast(LongType) * dstNumTilesX + col("dti")) % n).cast(IntegerType)
+      math.min(target.numTiles, pieces.sparkSession.sessionState.conf.numShufflePartitions.toLong)).toInt
     pieces
-      .repartitionById(n.toInt, partitionId)
+      .repartitionById(n, target.partitionOf(n))
       .sortWithinPartitions("dtj", "dti", "varName", "band")
       .mapPartitions { rows =>
         val it = rows.buffered
@@ -205,17 +276,27 @@ object TileGather {
       }
   }
 
-  /** Every source tile joined to the plan rows that read it, cropped to
-    * each row's window: the pieces a gather groups by target tile.
+  /** Every source tile cropped to the window of each plan row that
+    * reads it: the pieces a gather groups by target tile. A driver plan
+    * is looked up per source tile in one `flatMap`, over the source
+    * coalesced to at most the shuffle partitions (narrow, so the map
+    * side runs no more tasks than the exchange's reduce side); a
+    * distributed plan is joined on (srcTj, srcTi).
     */
-  private[ops] def pieces(
-      tiles: Dataset[Tile], srcGm: GridMapping, reads: Dataset[PlanRow]): Dataset[Piece] = {
+  private[ops] def pieces(tiles: Dataset[Tile], srcGm: GridMapping, plan: Plan): Dataset[Piece] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val srcTileW = srcGm.tileWidth; val srcTileH = srcGm.tileHeight
-    tiles
-      .joinWith(reads, tiles("tj") === reads("srcTj") && tiles("ti") === reads("srcTi"), "inner")
-      .map { case (t, p) => crop(t, p, srcTileW, srcTileH) }
+    plan.reads match {
+      case DriverReads(bySource) =>
+        tiles.coalesce(spark.sessionState.conf.numShufflePartitions).flatMap { t =>
+          bySource.getOrElse((t.tj, t.ti), Array.empty[PlanRow]).iterator.map(p => crop(t, p, srcTileW, srcTileH))
+        }
+      case DistributedReads(reads) =>
+        tiles
+          .joinWith(reads, tiles("tj") === reads("srcTj") && tiles("ti") === reads("srcTi"), "inner")
+          .map { case (t, p) => crop(t, p, srcTileW, srcTileH) }
+    }
   }
 
   /** `gathered` plus the fill-only tiles of the plan's window-less
@@ -266,7 +347,7 @@ object TileGather {
   def assemblePieces(pieces: Seq[Piece]): Window = {
     val p = pieces.head
     val w = p.i1 - p.i0; val h = p.j1 - p.j0
-    val data = Array.fill(w * h)(Double.NaN)
+    val data = filled(w * h, Double.NaN)
     pieces.foreach { pc =>
       var r = 0
       while (r < pc.ph) {
@@ -275,6 +356,15 @@ object TileGather {
       }
     }
     new Window(p.i0, p.j0, w, h, data)
+  }
+
+  /** A new array of `n` copies of `x`, stored unboxed (`Array.fill`
+    * boxes every element through its ClassTag).
+    */
+  private[ops] def filled(n: Int, x: Double): Array[Double] = {
+    val a = new Array[Double](n)
+    java.util.Arrays.fill(a, x)
+    a
   }
 
   /** Stream the (var, band) windows of one target tile's pieces, which

@@ -1097,9 +1097,10 @@ object TextOps {
     *
     * HYBRID execution, sized from the materialized edge cut: graphs
     * that pass the [[graft.model.BoundedLocal]] gate are solved with a
-    * driver-side union-find and the labels broadcast-joined back — the
-    * class-quotient graphs the dedup endpoints actually cluster (audio
-    * 10x: 12.2k class pairs; image 10x: 3.2k classes) are this size.
+    * driver-side union-find and the labels read back from a broadcast
+    * variable — the class-quotient graphs the dedup endpoints actually
+    * cluster (audio 10x: 12.2k class pairs; image 10x: 3.2k classes)
+    * are this size.
     * Larger graphs run the alternating large-star/small-star
     * contraction (Kiveris et al., SoCC 2014), O(log n) rounds on any
     * shape — the 100 TB path. Labels are identical either way
@@ -1113,13 +1114,14 @@ object TextOps {
     val e = initialEdgeCut(docIds, pairs, reliable)
     localLabels(e) match {
       case Some(labelRows) =>
-        val spark = docs.sparkSession
-        import spark.implicits._
-        val labelsDf = broadcast(spark.createDataset(labelRows).toDF("id", "root"))
+        // the labels ship as a broadcast variable, which costs no job (a
+        // broadcast join of a driver-side table runs one to collect it);
+        // an id with no label is its own root
+        val roots = docs.sparkSession.sparkContext.broadcast(labelRows.toMap)
+        val rootOf = udf((id: Long) => roots.value.get(id).map(java.lang.Long.valueOf).orNull)
         graft.model.Lineage.cut(
-          docIds.join(labelsDf, Seq("id"), "left")
-            .select(col("id").as(idCol),
-              coalesce(col("root"), col("id")).as("cluster_id")),
+          docIds.select(col("id").as(idCol),
+            coalesce(rootOf(col("id")), col("id")).as("cluster_id")),
           reliable)
       case None => starContractionFromCut(docIds, e, idCol, maxIterations, reliable)._1
     }

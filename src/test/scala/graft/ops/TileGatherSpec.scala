@@ -101,9 +101,11 @@ class TileGatherSpec extends AnyFunSuite {
   private val utm64 = GridMapping.regular(64, 64, 565000.0, 5930000.0, 100.0, 100.0,
     Crs.utm(32, north = true), Some((16, 16)))
 
-  test("driver-path gather broadcasts the plan rows, never a relation holding tile data, over a cut of range-mapped tiles") {
+  test("driver-path gather: its pieces read no broadcast and no join, no tile data or plan row is broadcast, over a cut of range-mapped tiles") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     object H extends AdaptiveSparkPlanHelper
     val s = spark
     import s.implicits._
@@ -123,12 +125,19 @@ class TileGatherSpec extends AnyFunSuite {
     val out = ReprojectOp.reproject(cut, utm64, dst,
       Map("a" -> VarPolicy(Interp.BILINEAR, Reducers.Mean, false, Double.NaN, F64)))
     assert(out.count() == dst.numTiles)
-    val broadcasts = H.collect(out.queryExecution.executedPlan) {
-      case b: BroadcastExchangeLike => b.output.map(_.name)
+    // the driver's plan rows travel in the pieces' closure: nothing
+    // feeding the target-tile exchange is broadcast or joined
+    val plan = out.queryExecution.executedPlan
+    val deals = H.collect(plan) {
+      case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough] => e
     }
-    assert(broadcasts.exists(_.contains("srcTj")), s"no plan-row broadcast:\n${out.queryExecution.executedPlan}")
-    assert(broadcasts.forall(!_.contains("data")),
-      s"a relation holding tile data is broadcast:\n${out.queryExecution.executedPlan}")
+    assert(deals.size == 1, s"${deals.size} target-tile exchanges:\n$plan")
+    assert(H.find(deals.head.child)(_.isInstanceOf[BroadcastExchangeLike]).isEmpty, s"the pieces read a broadcast:\n$plan")
+    assert(H.find(deals.head.child)(_.isInstanceOf[BaseJoinExec]).isEmpty, s"the pieces are joined:\n$plan")
+    // the one broadcast left is the fill path's (var, band) inventory
+    val broadcasts = H.collect(plan) { case b: BroadcastExchangeLike => b.output.map(_.name) }
+    assert(broadcasts.forall(b => !b.contains("data") && !b.contains("srcTj")),
+      s"a relation holding tile data or plan rows is broadcast:\n$plan")
     graft.model.Lineage.release(cut)
   }
 
@@ -171,13 +180,24 @@ class TileGatherSpec extends AnyFunSuite {
     * its number of partitions.
     */
   private def tilePartitions(nTx: Int, nTy: Int): (Seq[(Int, Int, Int)], Int) = {
-    val s = spark
-    import s.implicits._
     val src = toDs(tilesFrom("a", Array.tabulate(64, 64)((j, i) => j * 64.0 + i), utm64) ++
       tilesFrom("b", Array.tabulate(64, 64)((j, i) => -j * 64.0 - i), utm64))
-    val out = TileGather.gatherWithWindows(src, utm64, nTx, nTy,
-      (dtj: Int, dti: Int) => TileGather.WindowRow(dtj, dti, dti * 4, dtj * 4, dti * 4 + 8, dtj * 4 + 8),
-      (v: String, b: Int, dtj: Int, dti: Int, win: Window) => Tile(v, b, dtj, dti, 1, 1, Array(win.data.sum)))
+    partitionsOf(TileGather.gatherWithWindows(src, utm64, nTx, nTy, window8,
+      (v: String, b: Int, dtj: Int, dti: Int, win: Window) => Tile(v, b, dtj, dti, 1, 1, Array(win.data.sum))))
+  }
+
+  /** An 8 x 8 px window at (4 dti, 4 dtj), inside the 64 x 64 source
+    * for the first 15 x 15 target tiles.
+    */
+  private val window8 = (dtj: Int, dti: Int) =>
+    TileGather.WindowRow(dtj, dti, dti * 4, dtj * 4, dti * 4 + 8, dtj * 4 + 8)
+
+  /** The (partition id, dtj, dti) rows of a gather's output and its
+    * number of partitions.
+    */
+  private def partitionsOf(out: org.apache.spark.sql.Dataset[Tile]): (Seq[(Int, Int, Int)], Int) = {
+    val s = spark
+    import s.implicits._
     val tagged = out.toDF().select(org.apache.spark.sql.functions.spark_partition_id(), $"tj", $"ti")
       .as[(Int, Int, Int)]
     (tagged.collect().toSeq, tagged.rdd.getNumPartitions)
@@ -206,6 +226,31 @@ class TileGatherSpec extends AnyFunSuite {
       assert(perPartition.keySet == (0 until 6).toSet, perPartition.toString)
       assert(perPartition.values.forall(_ == 1), perPartition.toString)
     } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+  }
+
+  test("1039^2 target in 256^2 tiles over 4 partitions: contiguous row-major runs of about a quarter of the pixels each") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    // 1039 = 4 * 256 + 15: the last tile row and column are 15 px
+    val dst = GridMapping.regular(1039, 1039, 565000.0, 5930000.0, 100.0, 100.0, Crs.utm(32, north = true), Some((256, 256)))
+    val (rows, numPartitions) = partitionsOf(TileGather.gatherWithWindows(
+      toDs(tilesFrom("a", Array.tabulate(64, 64)((j, i) => j * 64.0 + i), utm64)), utm64, dst, window8,
+      (dtj: Int, dti: Int) => (v: String, b: Int, win: Window) => Tile(v, b, dtj, dti, 1, 1, Array(win.data.sum))))
+    assert(numPartitions == 4)
+    assert(rows.map(r => (r._2, r._3)).sorted == (for (tj <- 0 until 5; ti <- 0 until 5) yield (tj, ti)))
+    val byPartition = rows.groupBy(_._1).map { case (p, rs) => p -> rs.map(r => r._2 * 5 + r._3).sorted }
+    assert(byPartition.keySet == Set(0, 1, 2, 3), byPartition.toString)
+    // partition p holds the row-major indices right after partition p - 1's
+    val runs = (0 until 4).map(byPartition)
+    runs.foreach(r => assert(r == (r.head to r.last), s"not contiguous: $r"))
+    assert(runs.head.head == 0 && runs.last.last == 24 &&
+      runs.sliding(2).forall { case Seq(a, b) => b.head == a.last + 1 }, runs.toString)
+    val maxTile = 256L * 256
+    val total = 1039L * 1039
+    runs.foreach { r =>
+      val px = r.map(k => dst.tileH(k / 5).toLong * dst.tileW(k % 5)).sum
+      assert(math.abs(px * 4 - total) <= 4 * maxTile, s"run $r holds $px of $total px")
+      assert(r.map(_ / 5).distinct.size <= 2, s"run $r spans more than 2 tile rows")
+    }
   }
 
   test("windows assembled from cropped pieces == assembleWindow over the whole tiles") {
@@ -357,7 +402,8 @@ class TileGatherSpec extends AnyFunSuite {
     assert(H.collect(plan) { case c: CoGroupExec => c }.isEmpty, s"a cogroup:\n$plan")
     // the variable stage is fed by one exchange, the target-tile deal of
     // byTargetTile, carrying the checkpointed lookup and the variable
-    // pieces together
+    // pieces together; on this driver plan the variable pieces are one
+    // flatMap of the source tiles, with no join
     def readsLookup(p: SparkPlan): Boolean = H.find(p)(_.isInstanceOf[RDDScanExec]).isDefined
     val lookupExchanges = H.collect(plan) { case e: ShuffleExchangeLike if readsLookup(e) => e }
     assert(lookupExchanges.size == 1, s"${lookupExchanges.size} exchanges read the lookup:\n$plan")
@@ -370,7 +416,7 @@ class TileGatherSpec extends AnyFunSuite {
     val union = H.collect(e) { case u: UnionExec => u }
     assert(union.size == 1 && union.head.children.size == 2, s"exchange input:\n$plan")
     assert(union.head.children.count(readsLookup) == 1 &&
-      union.head.children.count(c => H.find(c)(_.isInstanceOf[BaseJoinExec]).isDefined) == 1,
+      union.head.children.count(c => !readsLookup(c) && H.find(c)(_.isInstanceOf[BaseJoinExec]).isEmpty) == 1,
       s"exchange input:\n$plan")
     assert(H.find(e.child)(_.isInstanceOf[ShuffleExchangeLike]).isEmpty,
       s"a second exchange feeds the variable stage:\n$plan")

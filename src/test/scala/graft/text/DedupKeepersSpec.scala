@@ -9,6 +9,8 @@ import graft.model.{BoundedLocal, Lineage}
   * filters the caller's docs by the union-find's member ids. That
   * plan reads the caller's docs, so it must never be retired (a drain
   * would free the caller's cut), and the path must keep its job count.
+  * `dedupClusters` on the same path reads its labels from a broadcast
+  * variable, which runs no job.
   */
 class DedupKeepersSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -53,6 +55,24 @@ class DedupKeepersSpec extends AnyFunSuite {
     // and the keeper read. A count job (2) and a label cut over a
     // broadcast join of the labels (2) would make it 9.
     assert(jobs <= 5, s"dedupKeepers ran $jobs jobs")
+    Lineage.release(docs)
+  }
+
+  test("dedupClusters' local path ships its labels without a job") {
+    val (docs, pairs) = fixture()
+    val (labels, jobs) = GraftJobProbe.jobs(spark) {
+      val out = TextOps.dedupClusters(docs, pairs)
+      val rows = out.as[(Long, Long)].collect().toMap
+      Lineage.release(out)
+      rows
+    }
+    val roots = Map(1L -> 0L, 2L -> 0L, 6L -> 4L, 30L -> 9L, 31L -> 9L)
+    assert(labels == (0L until 40L).map(id => id -> roots.getOrElse(id, id)).toMap)
+    // the edge cut (3, as in dedupKeepers), the edge collect, the label
+    // cut's materializing job and the label read. A broadcast join of
+    // the labels as a driver-side table would add the job that collects
+    // it for the broadcast.
+    assert(jobs <= 6, s"dedupClusters ran $jobs jobs")
     Lineage.release(docs)
   }
 }

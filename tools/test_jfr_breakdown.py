@@ -65,7 +65,52 @@ SNIPPET = "\n".join([
 ])
 
 
+def process_start(thread, command):
+    return "\n".join([
+        "jdk.ProcessStart {",
+        "  startTime = 13:50:13.001 (2026-10-20)",
+        "  pid = 4242",
+        "  directory = N/A",
+        f'  command = "{command}"',
+        f"  eventThread = {thread}",
+        "  stackTrace = [",
+        "    java.lang.ProcessBuilder.start() line: 1073",
+        "    org.apache.hadoop.util.Shell.runCommand() line: 998",
+        "    ...",
+        "  ]",
+        "}",
+        ""])
+
+
+# a partitioned write without libhadoop: each part file, its directory
+# and its .crc fork chmod on the task thread; the driver forks one more
+PROCESSES = "\n".join([
+    process_start(WORKER, "chmod 755 /tmp/out/tiles/_temporary/0/_temporary/attempt_1/tj=0"),
+    process_start(WORKER, "chmod 644 /tmp/out/tiles/_temporary/0/_temporary/attempt_1/tj=0/part-00000.parquet"),
+    process_start('"Executor task launch worker for task 2.0 in stage 3.0 (TID 13)" (javaThreadId = 72)',
+                  "/bin/chmod 644 /tmp/out/tiles/tj=0/.part-00001.parquet.crc"),
+    process_start('"main" (javaThreadId = 1)', "/bin/ls -ld /tmp/out"),
+    process_start('"shuffle-server-3-1" (javaThreadId = 90)', "chmod 600 /tmp/x"),
+    # an execution sample in between is not a process start
+    event(WORKER, ["graft.geom.IndexLattice$.atStep(int, int, int, graft.geom.IndexLattice$Exact) line: 1840"]),
+])
+
+
 class JfrBreakdownTest(unittest.TestCase):
+    def test_process_starts_by_command_word_and_thread_kind(self):
+        total, words, kinds = jfr_breakdown.process_summary(PROCESSES)
+        self.assertEqual(total, 5)
+        self.assertEqual(dict(words), {"chmod": 4, "ls": 1})
+        self.assertEqual(dict(kinds), {"executor": 3, "main": 1, "shuffle-server": 1})
+        lines = jfr_breakdown.process_report(total, words, kinds).splitlines()
+        self.assertEqual(lines[0], "process starts: 5")
+        self.assertEqual(lines[1].split(), ["command", "chmod", "4"])
+        self.assertEqual(lines[3].split(), ["thread", "executor", "3"])
+
+    def test_process_starts_ignore_samples(self):
+        self.assertEqual(jfr_breakdown.process_summary(SNIPPET)[0], 0)
+        self.assertEqual(jfr_breakdown.breakdown(PROCESSES)[0], 1)
+
     def test_innermost_recognized_frame_decides_on_executor_threads_only(self):
         total, counts = jfr_breakdown.breakdown(SNIPPET)
         self.assertEqual(total, 10)
