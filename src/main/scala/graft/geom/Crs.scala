@@ -857,6 +857,7 @@ object Crs {
     override def ellipsoid: Ellipsoid = ell
     private val e = ell.e
     private val e2 = ell.e2
+    private val aux = ell.aux
     private val phi0 = math.toRadians(lat0Deg)
     private val lam0 = math.toRadians(lon0Deg)
     private val sinPhi0 = math.sin(phi0)
@@ -899,18 +900,10 @@ object Crs {
       val l = math.atan2(math.sin(lBar),
         math.cos(b0) * math.cos(lBar) - math.sin(b0) * math.tan(bBar))
       val lamDeg = math.toDegrees(lam0 + l / alpha)
-      // invert S = alpha*q(phi) + K for phi (fixed point on the
-      // ellipsoidal correction term; converges in a handful of rounds)
-      val qT = (math.log(math.tan(math.Pi / 4 + b / 2)) - bigK) / alpha
-      var phi = b
-      var i = 0
-      while (i < 30) {
-        val s = math.sin(phi)
-        val next = 2 * math.atan(math.exp(
-          qT + (e / 2) * math.log((1 + e * s) / (1 - e * s)))) - math.Pi / 2
-        if (math.abs(next - phi) < 1e-14) { phi = next; i = 30 }
-        else { phi = next; i += 1 }
-      }
+      // S = alpha*q(phi) + K: q is the isometric latitude ψ, so the
+      // conformal latitude χ = gd(ψ) has sin χ = tanh ψ, cos χ = 1/cosh ψ
+      val psi = (math.log(math.tan(math.Pi / 4 + b / 2)) - bigK) / alpha
+      val phi = aux.phiOfConformal(math.tanh(psi), 1 / math.cosh(psi))
       (if (lamDeg > 180) lamDeg - 360 else if (lamDeg < -180) lamDeg + 360 else lamDeg,
         math.toDegrees(phi))
     }
@@ -934,6 +927,7 @@ object Crs {
     override def ellipsoid: Ellipsoid = ell
     private val e = ell.e
     private val e2 = ell.e2
+    private val aux = ell.aux
     private val phiC = math.toRadians(latCDeg)
     private val lam0 = math.toRadians(lonCDeg)
     private val alphaC = math.toRadians(azimuthDeg)
@@ -981,19 +975,11 @@ object Crs {
         math.sin(alphaC) * math.cos(t) * math.cos(d))
       val v = math.asin(math.cos(t) * math.sin(d) / math.cos(u))
       val lam = lam0 - v / bigB
-      // invert the conformal-latitude relation for phi (fixed point on
-      // the ellipsoidal term, same shape as the Swiss inverse)
-      var phi = u
-      var i = 0
-      while (i < 30) {
-        val s = math.sin(phi)
-        val next = 2 * (math.atan(
-          math.pow(1.0 / t0, 1.0 / bigB) *
-            math.pow(math.tan(u / 2 + math.Pi / 4), 1.0 / bigB) *
-            math.pow((1 + e * s) / (1 - e * s), e / 2)) - math.Pi / 4)
-        if (math.abs(next - phi) < 1e-14) { phi = next; i = 30 }
-        else { phi = next; i += 1 }
-      }
+      // the forward's u is the Gauss-sphere image of the isometric
+      // latitude ψ(φ) = (ln tan(u/2 + π/4) − ln t0) / B; φ follows from
+      // the conformal latitude χ = gd(ψ), as in the Swiss inverse
+      val psi = (math.log(math.tan(u / 2 + math.Pi / 4)) - math.log(t0)) / bigB
+      val phi = aux.phiOfConformal(math.tanh(psi), 1 / math.cosh(psi))
       (math.toDegrees(lam), math.toDegrees(phi))
     }
   }

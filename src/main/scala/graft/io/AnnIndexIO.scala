@@ -73,19 +73,8 @@ object AnnIndexIO {
 
   /** Validated sidecar read → (nlist, dims). */
   def storedParams(path: String): (Int, Int) = {
-    val p = Paths.get(s"$path/ann_index.json")
-    require(Files.exists(p),
-      s"missing ann-index sidecar $p — not an index directory " +
-        "(or an interrupted writeIndex)")
-    val s = Files.readString(p)
-    def field(k: String): Option[Int] =
-      (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(s).map(_.group(1).toInt)
-    require(field("format").contains(1),
-      s"unsupported ann-index format ${field("format").getOrElse("<absent>")} " +
-        s"in $p (this reader understands format 1)")
-    val n = field("nlist"); val d = field("dims")
-    require(n.isDefined && d.isDefined, s"ann-index sidecar $p lacks nlist/dims")
-    (n.get, d.get)
+    val f = Sidecars.readInts(Paths.get(s"$path/ann_index.json"), "ann-index", "nlist", "dims")
+    (f("nlist"), f("dims"))
   }
 
   /** The stored quantizer as a driver array (id-sorted, nlist-bounded

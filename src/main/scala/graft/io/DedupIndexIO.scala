@@ -74,20 +74,8 @@ object DedupIndexIO {
 
   /** Validated sidecar read → (numHashes, bands). */
   def storedParams(path: String): (Int, Int) = {
-    val p = Paths.get(s"$path/dedup_index.json")
-    require(Files.exists(p),
-      s"missing dedup-index sidecar $p — not an index directory " +
-        "(or an interrupted writeIndex)")
-    val s = Files.readString(p)
-    def field(k: String): Option[Int] =
-      (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(s).map(_.group(1).toInt)
-    require(field("format").contains(1),
-      s"unsupported dedup-index format ${field("format").getOrElse("<absent>")} " +
-        s"in $p (this reader understands format 1)")
-    val h = field("num_hashes"); val b = field("bands")
-    require(h.isDefined && b.isDefined,
-      s"dedup-index sidecar $p lacks num_hashes/bands")
-    (h.get, b.get)
+    val f = Sidecars.readInts(Paths.get(s"$path/dedup_index.json"), "dedup-index", "num_hashes", "bands")
+    (f("num_hashes"), f("bands"))
   }
 
   /** Probe the stored index with an arriving shard: the shard's band

@@ -39,13 +39,6 @@ object MvIO {
 
   private def sidecar(path: String) = Paths.get(s"$path/mv.json")
 
-  /** Marker/sidecar writes go through temp-file + ATOMIC_MOVE
-    * ([[Sidecars.writeAtomic]]): with the atomic rename the marker is
-    * either absent or complete, never torn.
-    */
-  private def writeAtomic(target: java.nio.file.Path, content: String): Unit =
-    Sidecars.writeAtomic(target, content)
-
   /** Create the store from the initial shard's rows; sidecar last. */
   def createMv(
       rows: DataFrame, path: String, keys: Seq[String],
@@ -54,9 +47,9 @@ object MvIO {
     Files.createDirectories(Paths.get(path))
     RelOps.distributiveAgg(rows, keys, valueCol)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/v0/state")
-    writeAtomic(Paths.get(s"$path/v0/commit.json"),
+    Sidecars.writeAtomic(Paths.get(s"$path/v0/commit.json"),
       """{"batch_id": -1}""")
-    writeAtomic(sidecar(path),
+    Sidecars.writeAtomic(sidecar(path),
       s"""{"format": 1, "keys": "${keys.mkString(",")}", "value": "$valueCol"}""")
   }
 
@@ -81,7 +74,7 @@ object MvIO {
   /** Latest COMMITTED version and its producing batch id. A state dir
     * without a commit marker (torn applyDelta) is never returned; an
     * EMPTY or clearly-truncated marker (a legacy torn write, predating
-    * [[writeAtomic]]) is treated as UNCOMMITTED rather than wedging
+    * [[Sidecars.writeAtomic]]) is treated as UNCOMMITTED rather than wedging
     * the store — the replay heals it. But a marker that parses as a
     * complete JSON object yet carries no batch_id is NOT healed: that
     * is a future format this reader does not understand (commit.json
@@ -135,7 +128,7 @@ object MvIO {
       spark.read.parquet(s"$path/v$k/state"),
       RelOps.distributiveAgg(deltaRows, keys, valueCol), keys)
     merged.write.mode(SaveMode.Overwrite).parquet(s"$path/v${k + 1}/state")
-    writeAtomic(Paths.get(s"$path/v${k + 1}/commit.json"),
+    Sidecars.writeAtomic(Paths.get(s"$path/v${k + 1}/commit.json"),
       s"""{"batch_id": $batchId}""")
     pruneBelow(path, k) // keep k (rollback margin) and k+1
     true

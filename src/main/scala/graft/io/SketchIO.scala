@@ -65,21 +65,10 @@ object SketchIO {
   /** Validated sidecar read → the pinned n-gram size. */
   def storedNgram(path: String): Int = {
     val p = Paths.get(s"$path/sketch.json")
-    require(Files.exists(p),
-      s"missing sketch sidecar $p — not a sketch store " +
-        "(or an interrupted writeSketch)")
-    val s = Files.readString(p)
-    def field(k: String): Option[Int] =
-      (s""""$k"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(s).map(_.group(1).toInt)
-    require(field("format").contains(1),
-      s"unsupported sketch format ${field("format").getOrElse("<absent>")} " +
-        s"in $p (this reader understands format 1)")
-    require(field("p").contains(8),
-      s"unsupported register precision ${field("p").getOrElse("<absent>")} " +
-        s"in $p (this reader understands p = 8)")
-    val n = field("ngram")
-    require(n.isDefined, s"sketch sidecar $p lacks ngram")
-    n.get
+    val f = Sidecars.readInts(p, "sketch", "p", "ngram")
+    require(f("p") == 8,
+      s"unsupported register precision ${f("p")} in $p (this reader understands p = 8)")
+    f("ngram")
   }
 
   /** The merged register table: `max(m_reg)` over every stored row —

@@ -52,20 +52,8 @@ object TokenizerIO {
     * fail loudly HERE, not as silently-wrong encodings downstream.
     * Returns the stored merge count.
     */
-  def storedMergeCount(path: String): Int = {
-    val p = Paths.get(s"$path/tokenizer.json")
-    require(Files.exists(p),
-      s"missing tokenizer sidecar $p — not a tokenizer artifact directory " +
-        "(or an interrupted writeTokenizer)")
-    val s = Files.readString(p)
-    val fmt = """"format"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-    require(fmt.contains(1),
-      s"unsupported tokenizer format ${fmt.map(_.toString).getOrElse("<absent>")} " +
-        s"in $p (this reader understands format 1)")
-    val m = """"merges"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-    require(m.isDefined, s"tokenizer sidecar $p has no \"merges\" entry")
-    m.get
-  }
+  def storedMergeCount(path: String): Int =
+    Sidecars.readInts(Paths.get(s"$path/tokenizer.json"), "tokenizer", "merges")("merges")
 
   def readMerges(spark: SparkSession, path: String): DataFrame = {
     storedMergeCount(path)
@@ -231,20 +219,8 @@ object TokenizerIO {
     * one parameter the DP NEEDS at encode time: costs alone cannot
     * tell the kernel how far back to look).
     */
-  def storedUnigramMaxLen(path: String): Int = {
-    val p = Paths.get(s"$path/unigram.json")
-    require(Files.exists(p),
-      s"missing unigram sidecar $p — not a unigram artifact directory " +
-        "(or an interrupted writeUnigram)")
-    val s = Files.readString(p)
-    val fmt = """"format"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-    require(fmt.contains(1),
-      s"unsupported unigram format ${fmt.map(_.toString).getOrElse("<absent>")} " +
-        s"in $p (this reader understands format 1)")
-    val m = """"max_piece_len"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-    require(m.isDefined, s"unigram sidecar $p has no \"max_piece_len\" entry")
-    m.get
-  }
+  def storedUnigramMaxLen(path: String): Int =
+    Sidecars.readInts(Paths.get(s"$path/unigram.json"), "unigram", "max_piece_len")("max_piece_len")
 
   def readUnigramPieces(spark: SparkSession, path: String): DataFrame = {
     storedUnigramMaxLen(path)

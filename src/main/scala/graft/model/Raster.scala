@@ -12,6 +12,13 @@ import graft.geom.GridMapping
   * xcube_resampling/dask.py:41-135 builds per-chunk graphs; here a tile
   * is simply a row and kernels run inside mapPartitions/mapGroups).
   * NaN encodes missing.
+  *
+  * A tile table is dense: every (varName, band) it holds has a tile at
+  * every (tj, ti) of its grid, as every dask chunk of a variable exists.
+  * `TestSpark.tilesFrom`, [[Raster.pixelsToTiles]] of a full grid,
+  * `TileIO` stores and every gather's own output meet this. The gathers
+  * rely on it: a target tile with no source window takes its (var, band)
+  * inventory from one source tile.
   */
 final case class Tile(
     varName: String, band: Int, tj: Int, ti: Int,

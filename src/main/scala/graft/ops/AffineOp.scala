@@ -85,11 +85,10 @@ object AffineOp {
     }
   }
 
-  /** Single inverse-mapping warp (reference: affine.py:316-362). The
-    * tile->window plan is generated distributed from the target tile
-    * index range (pure affine math per tile); a driver-side O(1) check
-    * of the global corner box decides whether fill-only tasks can exist
-    * at all, so the common fully-covered case skips their stages.
+  /** Single inverse-mapping warp (reference: affine.py:316-362). Each
+    * target tile's window is pure affine math on its index; a tile the
+    * warp maps outside the source gets no window and is sampled to fill
+    * in the same gather.
     */
   def upscale(
       tiles: Dataset[Tile],
@@ -107,12 +106,8 @@ object AffineOp {
       val (a, b, c, d) = warpWindow(m, srcWd, srcHt, i0, j0, i1, j1)
       TileGather.WindowRow(dtj, dti, a, b, c, d)
     }
-    val srcW = srcGm.width; val srcH = srcGm.height
-    val dstTileW = dstGm.tileWidth; val dstTileH = dstGm.tileHeight
-    val dstW = dstGm.width; val dstH = dstGm.height
     TileGather.gatherWithWindows(tiles, srcGm, dstGm, windowOf, (dtj: Int, dti: Int) => {
-      val h = math.min(dstTileH, dstH - dtj * dstTileH)
-      val w = math.min(dstTileW, dstW - dti * dstTileW)
+      val h = dstGm.tileH(dtj); val w = dstGm.tileW(dti)
       (v: String, b: Int, win: Window) => {
         val p = policies(v)
         val order = p.interp match {
@@ -124,7 +119,7 @@ object AffineOp {
             "as it causes unintended blending across the non-spatial (e.g., time) dimension.")
         }
         val data = AffineWarp.warpTile(
-          win, srcW, srcH, dti * dstTileW, dtj * dstTileH, w, h,
+          win, srcWd, srcHt, dti * dTw, dtj * dTh, w, h,
           matrix, order, p.fill, p.recoverNan)
         Tile(v, b, dtj, dti, h, w, data)
       }

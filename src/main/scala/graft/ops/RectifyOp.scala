@@ -29,9 +29,9 @@ import graft.model.Policies.VarPolicy
   * [[TileGather.Piece]] named [[LookupName]], ahead of the (var, band)
   * pieces of its target tile, so the lookup is shipped and read once for
   * all variables (the reference shares it across vars too,
-  * rectify.py:146-174). Only target tiles with a non-empty lookup are
-  * gathered; every other target tile gets its fill from
-  * [[TileGather.withFillTiles]].
+  * rectify.py:146-174). A target tile with no lookup reads its (var,
+  * band)s through empty windows in the same exchange, and its run,
+  * having no lookup at its head, is sampled to fill.
   */
 object RectifyOp {
 
@@ -145,7 +145,8 @@ object RectifyOp {
     * the coord tiles — each pixel bins ANALYTICALLY into the few target
     * tiles whose grown bbox can contain it, O(1) per pixel instead of a
     * loop over every tile), then the rasterization gather. Only target
-    * tiles that some triangle reaches get a lookup piece. On large
+    * tiles that some triangle reaches get a lookup piece: a tile with no
+    * window gets empty x/y windows, which hold no quad. On large
     * grids [[TileGather.plan]] keeps the windows and plan as Datasets,
     * so nothing driver-side scales with tile count.
     */
@@ -263,13 +264,12 @@ object RectifyOp {
 
     // each target tile's x and y windows, assembled from coord pieces
     // (sorted by (varName, band): "x" before "y")
-    val plan = TileGather.plan(srcGm, nTx, nTy, windowRows0)
-    TileGather.byTargetTile(TileGather.pieces(coordTiles, srcGm, plan), TileGather.TargetTiles.of(dstGm)) {
+    val reads = TileGather.plan(srcGm, nTx, nTy, windowRows0)
+    TileGather.byTargetTile(TileGather.pieces(coordTiles, srcGm, reads), TileGather.TargetTiles.of(dstGm)) {
       (dtj, dti, pcs) =>
         val wins = TileGather.windowRuns(pcs).map { case (v, _, win) => v -> win }.toMap
         val xWin = wins("x"); val yWin = wins("y")
-        val h = math.min(dth, dH - dtj * dth)
-        val w = math.min(dtw, dW - dti * dtw)
+        val h = dstGm.tileH(dtj); val w = dstGm.tileW(dti)
         val srcI = TileGather.filled(h * w, Double.NaN)
         val srcJ = TileGather.filled(h * w, Double.NaN)
         val dstXOffset = dXMin + dti * dtw * dXRes
@@ -313,8 +313,10 @@ object RectifyOp {
     * lookup's window plans the variable pieces of its target tile; one
     * [[TileGather.byTargetTile]] exchange carries the lookup pieces and
     * the variable pieces, and each run samples every (var, band) of its
-    * target tile through the lookup at its head. Target tiles with no
-    * lookup get their fill tiles from [[TileGather.withFillTiles]].
+    * target tile through the lookup at its head. A target tile with no
+    * lookup has no window, so its (var, band)s arrive as empty pieces
+    * with no lookup ahead of them and are filled, as `gatherValue`
+    * samples a NaN lookup.
     */
   private def gatherVars(
       tiles: Dataset[Tile],
@@ -325,35 +327,32 @@ object RectifyOp {
     val spark = tiles.sparkSession
     import spark.implicits._
 
-    val nTx = dstGm.numTilesX; val nTy = dstGm.numTilesY
-    val plan = TileGather.plan(srcGm, nTx, nTy,
+    val reads = TileGather.plan(srcGm, dstGm.numTilesX, dstGm.numTilesY,
       lookup.select("dtj", "dti", "i0", "j0", "i1", "j1").as[TileGather.WindowRow])
     val srcW = srcGm.width; val srcH = srcGm.height
-    val pieces = lookup.union(TileGather.pieces(tiles, srcGm, plan))
-    val sampled = TileGather.byTargetTile(pieces, TileGather.TargetTiles.of(dstGm)) { (_, _, run) =>
-      val lt = run.next() // LookupName sorts first; only tiles with a lookup have pieces
-      val n = lt.pw * lt.ph
-      TileGather.windowRuns(run).map { case (v, b, win) =>
-        val pol = policies(v)
-        val out = new Array[Double](n)
-        var k = 0
-        while (k < n) {
-          out(k) = TriangleRasterizer.gatherValue(
-            win, srcW, srcH, lt.data(k), lt.data(n + k), pol.interp, pol.fill)
-          k += 1
+    val pieces = lookup.union(TileGather.pieces(tiles, srcGm, reads))
+    TileGather.byTargetTile(pieces, TileGather.TargetTiles.of(dstGm)) { (dtj, dti, pcs) =>
+      val run = pcs.buffered
+      if (run.head.varName != LookupName) {
+        val h = dstGm.tileH(dtj); val w = dstGm.tileW(dti)
+        TileGather.windowRuns(run).map { case (v, b, _) =>
+          Tile(v, b, dtj, dti, h, w, TileGather.filled(h * w, policies(v).fill))
         }
-        Tile(v, b, lt.dtj, lt.dti, lt.ph, lt.pw, out)
+      } else {
+        val lt = run.next() // LookupName sorts first
+        val n = lt.pw * lt.ph
+        TileGather.windowRuns(run).map { case (v, b, win) =>
+          val pol = policies(v)
+          val out = new Array[Double](n)
+          var k = 0
+          while (k < n) {
+            out(k) = TriangleRasterizer.gatherValue(
+              win, srcW, srcH, lt.data(k), lt.data(n + k), pol.interp, pol.fill)
+            k += 1
+          }
+          Tile(v, b, dtj, dti, lt.ph, lt.pw, out)
+        }
       }
     }
-
-    // gatherValue samples a NaN lookup to fill: so does a missing one
-    val dth = dstGm.tileHeight; val dtw = dstGm.tileWidth
-    val dH = dstGm.height; val dW = dstGm.width
-    val fill: TileGather.TileKernel = (dtj, dti) => {
-      val h = math.min(dth, dH - dtj * dth)
-      val w = math.min(dtw, dW - dti * dtw)
-      (v, b, _) => Tile(v, b, dtj, dti, h, w, TileGather.filled(h * w, policies(v).fill))
-    }
-    TileGather.withFillTiles(sampled, tiles, plan, fill)
   }
 }

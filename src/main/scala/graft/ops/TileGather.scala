@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, call_function, col, least, lit}
+import org.apache.spark.sql.functions.{call_function, col, least, lit}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.geom.GridMapping
 import graft.kernel.Window
@@ -24,12 +24,14 @@ import graft.model.Tile
   * per-tile work (the reference's `_transform_gridpoints`,
   * reproject.py:472-496) runs once for all variables. Rectify builds
   * both of its stages from the same parts ([[plan]], [[pieces]],
-  * [[byTargetTile]], [[windowRuns]], [[withFillTiles]]); its lookup
-  * tile rides the same exchange at the head of its target tile's run.
+  * [[byTargetTile]], [[windowRuns]]); its lookup tile rides the same
+  * exchange at the head of its target tile's run.
   * Every raster gather of the engine therefore groups target tiles in
   * [[byTargetTile]] and plans in [[plan]].
   *
-  * Scale notes: up to [[DriverPlanMaxTiles]] target tiles the plan is
+  * Scale notes: every target tile has at least one plan row, so the
+  * one exchange carries every output tile and no second branch joins
+  * it after. Up to [[DriverPlanMaxTiles]] target tiles the plan is
   * built on the driver as a map from source tile to the plan rows that
   * read it. [[pieces]] captures it in one `flatMap` over the source
   * tiles, coalesced (narrow, no exchange) to at most the shuffle
@@ -47,38 +49,59 @@ import graft.model.Tile
   * source bytes times the windows' overlap: close to O(source bytes)
   * when windows hug their tiles (affine, reproject), but not for
   * rectify's lookup windows, which `xyBorder` grows with the target
-  * tile count until each is most of the swath. Target tiles with no
-  * window produce fill-only tiles ([[withFillTiles]]), and nothing else
-  * does — matching the reference's `-1`-bbox fill blocks (reference:
-  * reproject.py:415-423, rectify.py:393-396).
+  * tile count until each is most of the swath. A target tile with no
+  * window reads one source tile through an empty window
+  * ([[planRowsOf]]): its empty (var, band) pieces cross the same
+  * exchange and the kernel samples them to fill, as the reference's
+  * per-block task does for a `-1` bbox (reference: reproject.py:415-423,
+  * rectify.py:393-396). Only rectify's windows leave a tile without a
+  * row; [[plan]] finds those, with an anti-join at scale. The source
+  * must be densely tiled (see [[graft.model.Tile]]): a (var, band)
+  * missing the source tile that a window or fill row reads gets no
+  * output there.
   */
 object TileGather {
 
   /** One plan row: target tile (dtj, dti) reads source window
-    * [i0, i1) x [j0, j1); srcTj/srcTi name a source tile overlapping it.
+    * [i0, i1) x [j0, j1); srcTj/srcTi name a source tile overlapping it
+    * (any source tile when the window is empty, i0 = -1).
     */
   final case class PlanRow(
       dtj: Int, dti: Int, i0: Int, j0: Int, i1: Int, j1: Int,
       srcTj: Int, srcTi: Int)
 
   /** One source window per target tile; i0 < 0 means "no source
-    * coverage" (fill-only task).
+    * coverage" (the tile samples every (var, band) to its fill).
     */
   final case class WindowRow(dtj: Int, dti: Int, i0: Int, j0: Int, i1: Int, j1: Int)
 
   /** Expand one target-tile window into its (target tile, source tile)
-    * plan rows.
+    * plan rows. A tile with no window (i0 < 0) gets one row with an
+    * empty window that reads source tile k mod (source tiles), k =
+    * dtj · dstNumTilesX + dti: its (var, band) pieces are empty and
+    * still cross [[byTargetTile]], so the kernel samples each from an
+    * empty window, like the reference's `-1`-bbox blocks (reference:
+    * reproject.py:415-423, rectify.py:393-396). A source with no tiles
+    * has nothing to read, so such a tile gets no row.
     */
   def planRowsOf(
-      srcTileW: Int, srcTileH: Int, srcNumTilesX: Int, srcNumTilesY: Int,
-      w: WindowRow): Seq[PlanRow] = {
-    val stj0 = math.max(0, w.j0 / srcTileH)
-    val stj1 = math.min(srcNumTilesY - 1, (w.j1 - 1) / srcTileH)
-    val sti0 = math.max(0, w.i0 / srcTileW)
-    val sti1 = math.min(srcNumTilesX - 1, (w.i1 - 1) / srcTileW)
-    for (stj <- stj0 to stj1; sti <- sti0 to sti1)
-      yield PlanRow(w.dtj, w.dti, w.i0, w.j0, w.i1, w.j1, stj, sti)
-  }
+      srcTileW: Int, srcTileH: Int, srcNumTilesX: Int, srcNumTilesY: Int, dstNumTilesX: Int,
+      w: WindowRow): Seq[PlanRow] =
+    if (w.i0 < 0) {
+      val numSrc = srcNumTilesX.toLong * srcNumTilesY
+      if (numSrc == 0) Nil
+      else {
+        val k = ((w.dtj.toLong * dstNumTilesX + w.dti) % numSrc).toInt
+        Seq(PlanRow(w.dtj, w.dti, -1, -1, -1, -1, k / srcNumTilesX, k % srcNumTilesX))
+      }
+    } else {
+      val stj0 = math.max(0, w.j0 / srcTileH)
+      val stj1 = math.min(srcNumTilesY - 1, (w.j1 - 1) / srcTileH)
+      val sti0 = math.max(0, w.i0 / srcTileW)
+      val sti1 = math.min(srcNumTilesX - 1, (w.i1 - 1) / srcTileW)
+      for (stj <- stj0 to stj1; sti <- sti0 to sti1)
+        yield PlanRow(w.dtj, w.dti, w.i0, w.j0, w.i1, w.j1, stj, sti)
+    }
 
   /** Below this many TARGET tiles the plan is built on the driver and
     * captured in the pieces' closure (a few MB at most — lower latency
@@ -88,65 +111,62 @@ object TileGather {
     */
   val DriverPlanMaxTiles: Long = 4096L
 
-  /** The plan rows that read each source tile, keyed by (srcTj, srcTi):
-    * either built on the driver or a distributed Dataset.
+  /** A gather's plan: the rows that read each source tile, keyed by
+    * (srcTj, srcTi), either built on the driver or a distributed
+    * Dataset. Every target tile has at least one row.
     */
   private[ops] sealed trait Reads
   private[ops] final case class DriverReads(bySource: Map[(Int, Int), Array[PlanRow]]) extends Reads
   private[ops] final case class DistributedReads(rows: Dataset[PlanRow]) extends Reads
 
-  /** A gather's plan: `reads`, the rows that pick and crop source
-    * tiles, and `fills`, the (dtj, dti) of every target tile with no
-    * window (None when the driver knows there is none).
-    */
-  private[ops] final case class Plan(reads: Reads, fills: Option[Dataset[(Int, Int)]])
-
-  /** The gathers' one plan builder, for a `dstNumTilesX` x
-    * `dstNumTilesY` target grid. `windows` holds at most one row per
-    * target tile; a tile with no row, or with i0 < 0, has no window.
-    * Up to [[DriverPlanMaxTiles]] target tiles the windows are collected
-    * (no job when they are a local relation) and the plan is built on
-    * the driver ([[driverPlan]]). Above it, reads and fills are
-    * Datasets, the fills an anti-join of the target tile index range
-    * against the windows.
+  /** The plan for a `dstNumTilesX` x `dstNumTilesY` target grid whose
+    * `windows` hold at most one row per target tile and may have none
+    * for a tile without a window (rectify's). Up to
+    * [[DriverPlanMaxTiles]] target tiles the windows are collected (no
+    * job when they are a local relation) and the plan is built on the
+    * driver; above it, the tiles with no row are an anti-join of the
+    * target tile index range against the windows. Either way a tile
+    * with no row reads like one whose window has i0 < 0.
     */
   private[ops] def plan(
       srcGm: GridMapping, dstNumTilesX: Int, dstNumTilesY: Int,
-      windows: Dataset[WindowRow]): Plan = {
+      windows: Dataset[WindowRow]): Reads = {
     val spark = windows.sparkSession
     import spark.implicits._
     val nTx = dstNumTilesX
     val n = nTx.toLong * dstNumTilesY
-    if (n <= DriverPlanMaxTiles) driverPlan(spark, srcGm, dstNumTilesX, dstNumTilesY, windows.collect().toSeq)
-    else {
-      val tw = srcGm.tileWidth; val th = srcGm.tileHeight
-      val ntx = srcGm.numTilesX; val nty = srcGm.numTilesY
-      val covered = windows.filter(col("i0") >= 0)
-      val fills = spark.range(n)
+    if (n <= DriverPlanMaxTiles) {
+      val byTile = windows.collect().map(w => (w.dtj, w.dti) -> w).toMap
+      readsOnDriver(srcGm, nTx, for (dtj <- 0 until dstNumTilesY; dti <- 0 until nTx)
+        yield byTile.getOrElse((dtj, dti), WindowRow(dtj, dti, -1, -1, -1, -1)))
+    } else {
+      val noRow = spark.range(n)
         .select((col("id") / nTx).cast(IntegerType).as("dtj"), (col("id") % nTx).cast(IntegerType).as("dti"))
-        .join(covered.select("dtj", "dti"), Seq("dtj", "dti"), "left_anti")
-        .as[(Int, Int)]
-      Plan(DistributedReads(covered.flatMap(w => planRowsOf(tw, th, ntx, nty, w))), Some(fills))
+        .join(windows.select("dtj", "dti"), Seq("dtj", "dti"), "left_anti")
+        .select(col("dtj"), col("dti"), lit(-1).as("i0"), lit(-1).as("j0"), lit(-1).as("i1"), lit(-1).as("j1"))
+        .as[WindowRow]
+      readsDistributed(srcGm, nTx, windows.unionByName(noRow))
     }
   }
 
-  /** The plan of a grid of at most [[DriverPlanMaxTiles]] target tiles,
-    * built on the driver from its windows.
+  /** The plan of at most [[DriverPlanMaxTiles]] target tiles, built on
+    * the driver from one window per target tile.
     */
-  private def driverPlan(
-      spark: SparkSession, srcGm: GridMapping, dstNumTilesX: Int, dstNumTilesY: Int,
-      windows: Seq[WindowRow]): Plan = {
-    import spark.implicits._
-    val covered = windows.filter(_.i0 >= 0)
-    val bySource = covered
-      .flatMap(w => planRowsOf(srcGm.tileWidth, srcGm.tileHeight, srcGm.numTilesX, srcGm.numTilesY, w))
+  private def readsOnDriver(srcGm: GridMapping, dstNumTilesX: Int, windows: Seq[WindowRow]): Reads =
+    DriverReads(windows
+      .flatMap(w => planRowsOf(srcGm.tileWidth, srcGm.tileHeight, srcGm.numTilesX, srcGm.numTilesY, dstNumTilesX, w))
       .groupBy(p => (p.srcTj, p.srcTi))
-      .map { case (k, ps) => k -> ps.toArray }
-    val hasWindow = covered.map(w => (w.dtj, w.dti)).toSet
-    val fills = for {
-      dtj <- 0 until dstNumTilesY; dti <- 0 until dstNumTilesX if !hasWindow((dtj, dti))
-    } yield (dtj, dti)
-    Plan(DriverReads(bySource), if (fills.isEmpty) None else Some(spark.createDataset(fills)))
+      .map { case (k, ps) => k -> ps.toArray })
+
+  /** The plan of a Dataset of one window per target tile, expanded in
+    * the executors.
+    */
+  private def readsDistributed(srcGm: GridMapping, dstNumTilesX: Int, windows: Dataset[WindowRow]): Reads = {
+    val spark = windows.sparkSession
+    import spark.implicits._
+    val tw = srcGm.tileWidth; val th = srcGm.tileHeight
+    val ntx = srcGm.numTilesX; val nty = srcGm.numTilesY
+    DistributedReads(windows.flatMap(w => planRowsOf(tw, th, ntx, nty, dstNumTilesX, w)))
   }
 
   /** The target grid as [[byTargetTile]] deals it: `width` x `height`
@@ -186,9 +206,10 @@ object TileGather {
     * (dtj, dti). It returns the sampler that turns each (var, band)'s
     * assembled source window into that variable's output tile, so work
     * that depends only on the target tile (the CRS transform of its
-    * pixel centres) is done once for all variables. The outer call must
-    * stay cheap: fill-only tiles call it once per (var, band) with an
-    * empty window, so per-tile work belongs in a lazy value.
+    * pixel centres) is done once for all variables. A target tile with
+    * no window is called once too, and each (var, band) is sampled from
+    * an empty window (w = h = 0), so per-tile work that an empty window
+    * does not need belongs in a lazy value.
     */
   type TileKernel = (Int, Int) => (String, Int, Window) => Tile
 
@@ -225,15 +246,14 @@ object TileGather {
     val spark = tiles.sparkSession
     import spark.implicits._
     val nTx = target.numTilesX; val nTy = target.numTilesY
-    val p =
+    val reads =
       if (target.numTiles <= DriverPlanMaxTiles)
-        driverPlan(spark, srcGm, nTx, nTy, for (dtj <- 0 until nTy; dti <- 0 until nTx) yield windowOf(dtj, dti))
-      else plan(srcGm, nTx, nTy, spark.range(target.numTiles).map(id => windowOf((id / nTx).toInt, (id % nTx).toInt)))
-    val gathered = byTargetTile(pieces(tiles, srcGm, p), target) { (dtj, dti, rows) =>
+        readsOnDriver(srcGm, nTx, for (dtj <- 0 until nTy; dti <- 0 until nTx) yield windowOf(dtj, dti))
+      else readsDistributed(srcGm, nTx, spark.range(target.numTiles).map(id => windowOf((id / nTx).toInt, (id % nTx).toInt)))
+    byTargetTile(pieces(tiles, srcGm, reads), target) { (dtj, dti, rows) =>
       val sample = kernel(dtj, dti)
       windowRuns(rows).map { case (v, b, win) => sample(v, b, win) }
     }
-    withFillTiles(gathered, tiles, p, kernel)
   }
 
   /** The same gather for a kernel of one (var, band, target tile). */
@@ -283,11 +303,11 @@ object TileGather {
     * side runs no more tasks than the exchange's reduce side); a
     * distributed plan is joined on (srcTj, srcTi).
     */
-  private[ops] def pieces(tiles: Dataset[Tile], srcGm: GridMapping, plan: Plan): Dataset[Piece] = {
+  private[ops] def pieces(tiles: Dataset[Tile], srcGm: GridMapping, reads: Reads): Dataset[Piece] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val srcTileW = srcGm.tileWidth; val srcTileH = srcGm.tileHeight
-    plan.reads match {
+    reads match {
       case DriverReads(bySource) =>
         tiles.coalesce(spark.sessionState.conf.numShufflePartitions).flatMap { t =>
           bySource.getOrElse((t.tj, t.ti), Array.empty[PlanRow]).iterator.map(p => crop(t, p, srcTileW, srcTileH))
@@ -298,23 +318,6 @@ object TileGather {
           .map { case (t, p) => crop(t, p, srcTileW, srcTileH) }
     }
   }
-
-  /** `gathered` plus the fill-only tiles of the plan's window-less
-    * target tiles: each crossed with the (var, band) inventory of
-    * `tiles` — tiny — and sampled from an empty window, all
-    * DISTRIBUTED. These are the only fill-only tiles of a gather.
-    */
-  private[ops] def withFillTiles(
-      gathered: Dataset[Tile], tiles: Dataset[Tile], plan: Plan, kernel: TileKernel): Dataset[Tile] =
-    plan.fills.fold(gathered) { fills =>
-      val spark = tiles.sparkSession
-      import spark.implicits._
-      val varsBands = tiles.select("varName", "band").distinct().as[(String, Int)]
-      val empty = new Window(0, 0, 0, 0, Array.empty)
-      gathered.union(fills
-        .joinWith(broadcast(varsBands), lit(true), "inner")
-        .map { case ((dtj, dti), (v, b)) => kernel(dtj, dti)(v, b, empty) })
-    }
 
   /** One source tile cut down to a target tile's window: the source
     * pixels `[pi0, pi0 + pw) x [pj0, pj0 + ph)`, row-major, bound for

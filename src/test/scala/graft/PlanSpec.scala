@@ -1056,22 +1056,12 @@ class PlanSpec extends AnyFunSuite {
     // each endpoint's build+collect; the bound separates the two
     // regimes with slack for AQE stage jobs.
     LlmQueries.all("q_unigram_train")(spark, dir).collect()
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = org.apache.spark.sql.GraftJobProbe.jobs(spark) {
       LlmQueries.all("q_unigram_segment")(spark, dir).collect()
       LlmQueries.all("q_unigram_encode")(spark, dir).collect()
-      // the listener bus is async; give it a moment to drain
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(counter.get <= 6,
-      s"segment+encode ran ${counter.get} jobs after training — " +
+    }
+    assert(jobs <= 6,
+      s"segment+encode ran $jobs jobs after training — " +
         "a re-training leak (the EM loop alone is >= 5 jobs)")
     // and segment's plan proves it: no parquet scan at all — the word
     // table is the checkpointed training artifact, not a corpus read

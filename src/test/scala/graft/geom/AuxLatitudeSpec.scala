@@ -296,6 +296,84 @@ class AuxLatitudeSpec extends AnyFunSuite {
     }
   }
 
+  /** The Swiss oblique Mercator inverse with its old 30-round fixed
+    * point on the isometric latitude.
+    */
+  private def oldSwiss(c: SwissObliqueMercator): Inverse = new Inverse {
+    private val e = c.ell.e; private val e2 = c.ell.e2
+    private val phi0 = math.toRadians(c.lat0Deg)
+    private val lam0 = math.toRadians(c.lon0Deg)
+    private val sinPhi0 = math.sin(phi0)
+    private val alpha = { val k = math.cos(phi0); math.sqrt(1 + e2 / (1 - e2) * k * k * k * k) }
+    private val bigR = c.k0 * c.ell.a * math.sqrt(1 - e2) / (1 - e2 * sinPhi0 * sinPhi0)
+    private val b0 = math.asin(sinPhi0 / alpha)
+    private val q0 = math.log(math.tan(math.Pi / 4 + phi0 / 2)) -
+      (e / 2) * math.log((1 + e * sinPhi0) / (1 - e * sinPhi0))
+    private val bigK = math.log(math.tan(math.Pi / 4 + b0 / 2)) - alpha * q0
+    def toLonLat(x: Double, y: Double): (Double, Double) = {
+      val lBar = (x - c.falseEasting) / bigR
+      val bBar = 2 * math.atan(math.exp((y - c.falseNorthing) / bigR)) - math.Pi / 2
+      val b = math.asin(math.cos(b0) * math.sin(bBar) +
+        math.sin(b0) * math.cos(bBar) * math.cos(lBar))
+      val l = math.atan2(math.sin(lBar),
+        math.cos(b0) * math.cos(lBar) - math.sin(b0) * math.tan(bBar))
+      val lamDeg = math.toDegrees(lam0 + l / alpha)
+      val qT = (math.log(math.tan(math.Pi / 4 + b / 2)) - bigK) / alpha
+      var phi = b
+      var i = 0
+      while (i < 30) {
+        val s = math.sin(phi)
+        val next = 2 * math.atan(math.exp(
+          qT + (e / 2) * math.log((1 + e * s) / (1 - e * s)))) - math.Pi / 2
+        if (math.abs(next - phi) < 1e-14) { phi = next; i = 30 }
+        else { phi = next; i += 1 }
+      }
+      (if (lamDeg > 180) lamDeg - 360 else if (lamDeg < -180) lamDeg + 360 else lamDeg,
+        math.toDegrees(phi))
+    }
+  }
+
+  /** The Krovak inverse with its old 30-round fixed point. */
+  private def oldKrovak(c: Krovak): Inverse = new Inverse {
+    private val e = c.ell.e; private val e2 = c.ell.e2
+    private val phiC = math.toRadians(c.latCDeg)
+    private val lam0 = math.toRadians(c.lonCDeg)
+    private val alphaC = math.toRadians(c.azimuthDeg)
+    private val phiP = math.toRadians(c.latPseudoDeg)
+    private val bigA = c.ell.a * math.sqrt(1 - e2) / (1 - e2 * math.sin(phiC) * math.sin(phiC))
+    private val bigB = { val k = math.cos(phiC); math.sqrt(1 + e2 * k * k * k * k / (1 - e2)) }
+    private val gamma0 = math.asin(math.sin(phiC) / bigB)
+    private val t0 = math.tan(math.Pi / 4 + gamma0 / 2) *
+      math.pow((1 + e * math.sin(phiC)) / (1 - e * math.sin(phiC)), e * bigB / 2) /
+      math.pow(math.tan(math.Pi / 4 + phiC / 2), bigB)
+    private val n = math.sin(phiP)
+    private val r0 = c.kP * bigA / math.tan(phiP)
+    def toLonLat(x: Double, y: Double): (Double, Double) = {
+      val westing = c.falseEasting - x
+      val southing = c.falseNorthing - y
+      val r = math.hypot(southing, westing)
+      val d = math.atan2(westing, southing) / n
+      val t = 2 * (math.atan(
+        math.pow(r0 / r, 1.0 / n) * math.tan(phiP / 2 + math.Pi / 4)) - math.Pi / 4)
+      val u = math.asin(math.cos(alphaC) * math.sin(t) -
+        math.sin(alphaC) * math.cos(t) * math.cos(d))
+      val v = math.asin(math.cos(t) * math.sin(d) / math.cos(u))
+      val lam = lam0 - v / bigB
+      var phi = u
+      var i = 0
+      while (i < 30) {
+        val s = math.sin(phi)
+        val next = 2 * (math.atan(
+          math.pow(1.0 / t0, 1.0 / bigB) *
+            math.pow(math.tan(u / 2 + math.Pi / 4), 1.0 / bigB) *
+            math.pow((1 + e * s) / (1 - e * s), e / 2)) - math.Pi / 4)
+        if (math.abs(next - phi) < 1e-14) { phi = next; i = 30 }
+        else { phi = next; i += 1 }
+      }
+      (math.toDegrees(lam), math.toDegrees(phi))
+    }
+  }
+
   private def lonDiff(a: Double, b: Double): Double = {
     val d = math.abs(a - b) % 360.0
     math.min(d, 360.0 - d)
@@ -387,6 +465,18 @@ class AuxLatitudeSpec extends AnyFunSuite {
       }
       assert(n > 20000)
     }
+  }
+
+  test("SwissObliqueMercator toLonLat equals its old loop: EPSG:21781, 2056") {
+    for (code <- Seq("EPSG:21781", "EPSG:2056")) {
+      val c = fromString(code).asInstanceOf[DatumShifted].base.asInstanceOf[SwissObliqueMercator]
+      matchesOld(c, oldSwiss(c), steps(20.0, 75.0, 0.5), steps(-20.0, 35.0, 1.1))
+    }
+  }
+
+  test("Krovak toLonLat equals its old loop: EPSG:5514") {
+    val c = fromString("EPSG:5514").asInstanceOf[DatumShifted].base.asInstanceOf[Krovak]
+    matchesOld(c, oldKrovak(c), steps(30.0, 70.0, 0.4), steps(-5.0, 45.0, 1.1))
   }
 
   // ---- near the poles

@@ -112,26 +112,32 @@ class TileIOSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     val src = GridMapping.regular(64, 64, 565000.0, 5930000.0, 100.0, 100.0, Crs.utm(32, north = true), tileSize = Some((16, 16)))
     val dst = GridMapping.regular(1039, 1039, 565000.0, 5930000.0, 100.0, 100.0, Crs.utm(32, north = true), tileSize = Some((256, 256)))
-    val out = TileGather.gatherWithWindows(toDs(tilesFrom("v", Array.tabulate(64, 64)((j, i) => j * 64.0 + i), src)),
-      src, dst,
-      (dtj: Int, dti: Int) => TileGather.WindowRow(dtj, dti, 0, 0, 16, 16),
-      (dtj: Int, dti: Int) => (v: String, b: Int, _: Window) => {
-        val h = dst.tileH(dtj); val w = dst.tileW(dti)
-        Tile(v, b, dtj, dti, h, w, Array.tabulate(h * w)(k => (dtj * 256 + k / w) * 1039.0 + dti * 256 + k % w))
-      })
-    assert(out.rdd.getNumPartitions == 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-io-parts").toString
-    TileIO.writeTiles(out, dir, dst)
-    val parts = {
-      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "tiles"))
-      try st.filter(p => p.getFileName.toString.startsWith("part-")).count() finally st.close()
+    // every target tile reads a window, or the tiles right of column 2
+    // read none and are fill tiles: both ride the same contiguous runs
+    val everyTile = (dtj: Int, dti: Int) => TileGather.WindowRow(dtj, dti, 0, 0, 16, 16)
+    val withFills = (dtj: Int, dti: Int) =>
+      if (dti > 2) TileGather.WindowRow(dtj, dti, -1, -1, -1, -1) else everyTile(dtj, dti)
+    for (windowOf <- Seq(everyTile, withFills)) {
+      val out = TileGather.gatherWithWindows(toDs(tilesFrom("v", Array.tabulate(64, 64)((j, i) => j * 64.0 + i), src)),
+        src, dst, windowOf,
+        (dtj: Int, dti: Int) => (v: String, b: Int, _: Window) => {
+          val h = dst.tileH(dtj); val w = dst.tileW(dti)
+          Tile(v, b, dtj, dti, h, w, Array.tabulate(h * w)(k => (dtj * 256 + k / w) * 1039.0 + dti * 256 + k % w))
+        })
+      assert(out.rdd.getNumPartitions == 4)
+      val dir = java.nio.file.Files.createTempDirectory("graft-io-parts").toString
+      TileIO.writeTiles(out, dir, dst)
+      val parts = {
+        val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "tiles"))
+        try st.filter(p => p.getFileName.toString.startsWith("part-")).count() finally st.close()
+      }
+      // contiguous runs hold 1, 1, 1 and 2 tile rows: 5 files, where
+      // dealing tiles from every row to every task would write 20
+      assert(parts <= dst.numTilesY + 4, s"$parts part files")
+      val (back, _) = TileIO.readTiles(spark, dir)
+      assert(toArray(back.collect().toSeq, dst, "v").flatten.sameElements(Array.tabulate(1039 * 1039)(_.toDouble)),
+        "the store does not read back the image")
     }
-    // contiguous runs hold 1, 1, 1 and 2 tile rows: 5 files, where
-    // dealing tiles from every row to every task would write 20
-    assert(parts <= dst.numTilesY + 4, s"$parts part files")
-    val (back, _) = TileIO.readTiles(spark, dir)
-    assert(toArray(back.collect().toSeq, dst, "v").flatten.sameElements(Array.tabulate(1039 * 1039)(_.toDouble)),
-      "the store does not read back the image")
   }
 
   test("addSpatialRef rewrites the CRS of an existing store in place (cfconv.py:320-358)") {

@@ -134,11 +134,50 @@ class TileGatherSpec extends AnyFunSuite {
     assert(deals.size == 1, s"${deals.size} target-tile exchanges:\n$plan")
     assert(H.find(deals.head.child)(_.isInstanceOf[BroadcastExchangeLike]).isEmpty, s"the pieces read a broadcast:\n$plan")
     assert(H.find(deals.head.child)(_.isInstanceOf[BaseJoinExec]).isEmpty, s"the pieces are joined:\n$plan")
-    // the one broadcast left is the fill path's (var, band) inventory
-    val broadcasts = H.collect(plan) { case b: BroadcastExchangeLike => b.output.map(_.name) }
-    assert(broadcasts.forall(b => !b.contains("data") && !b.contains("srcTj")),
-      s"a relation holding tile data or plan rows is broadcast:\n$plan")
+    // this target has fill tiles, and they cross the same exchange:
+    // nothing is broadcast
+    assert(H.collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty, s"a broadcast:\n$plan")
     graft.model.Lineage.release(cut)
+  }
+
+  test("a gather with fill tiles runs one exchange and 2 jobs: no broadcast, no aggregate") {
+    import org.apache.spark.sql.GraftJobProbe
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    object H extends AdaptiveSparkPlanHelper
+    val (bx0, by0, _, by1) = CrsTransformer(utm64.crs, Crs.laea3035)
+      .transformBounds(utm64.xMin, utm64.yMin, utm64.xMax, utm64.yMax)
+    val dst = GridMapping.regular(140, 140, bx0, by0, 100.0, (by1 - by0) / 140, Crs.laea3035, Some((35, 35)))
+    val src = toDs(tilesFrom("a", Array.tabulate(64, 64)((j, i) => j * 64.0 + i), utm64))
+    val pol = Map("a" -> VarPolicy(Interp.BILINEAR, Reducers.Mean, false, Double.NaN, F64))
+    val out = ReprojectOp.reproject(src, utm64, dst, pol)
+    val (tiles, jobs) = GraftJobProbe.jobs(spark)(out.collect())
+    assert(tiles.length == dst.numTiles)
+    // premise: the target's eastern tiles see no source
+    assert(tiles.exists(_.data.forall(_.isNaN)), "no fill tile")
+    // a second fill branch (a distinct of the source's (var, band)s,
+    // broadcast into a nested-loop join and unioned after the exchange)
+    // ran 4 jobs here: the aggregate, the broadcast, the map side and
+    // the result; the pieces' map side and the result are left
+    assert(jobs <= 2, s"$jobs jobs")
+    val plan = out.queryExecution.executedPlan
+    assert(H.collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty, s"a broadcast:\n$plan")
+    assert(H.collect(plan) { case a: BaseAggregateExec => a }.isEmpty, s"an aggregate:\n$plan")
+  }
+
+  test("a gather over a source with no tiles returns no tiles and does not throw, on the driver and distributed plans") {
+    val s = spark
+    import s.implicits._
+    val none = utm64.copy(width = 0, height = 0)
+    assert(none.numTiles == 0)
+    for (nT <- Seq(4, 65)) {
+      assert((nT.toLong * nT > TileGather.DriverPlanMaxTiles) == (nT == 65))
+      val out = TileGather.gatherWithWindows(s.emptyDataset[Tile], none, nT, nT,
+        (dtj: Int, dti: Int) => TileGather.WindowRow(dtj, dti, -1, -1, -1, -1),
+        (v: String, b: Int, dtj: Int, dti: Int, win: Window) => Tile(v, b, dtj, dti, 0, 0, win.data))
+      assert(out.collect().isEmpty, s"$nT x $nT target tiles")
+    }
   }
 
   test("distributed-plan gather never broadcasts a cut source whose payload exceeds the threshold") {
@@ -262,7 +301,7 @@ class TileGatherSpec extends AnyFunSuite {
     val tiles = tilesFrom("v", img, gm)
     val rnd = new Random(7)
     def check(i0: Int, j0: Int, i1: Int, j1: Int): Int = {
-      val rows = TileGather.planRowsOf(tw, th, gm.numTilesX, gm.numTilesY,
+      val rows = TileGather.planRowsOf(tw, th, gm.numTilesX, gm.numTilesY, 5,
         TileGather.WindowRow(3, 4, i0, j0, i1, j1))
       val srcTiles = rows.map(p => tiles.find(t => t.tj == p.srcTj && t.ti == p.srcTi).get).toArray
       val whole = assembleWindow(rows.head, srcTiles, tw, th)
@@ -394,11 +433,9 @@ class TileGatherSpec extends AnyFunSuite {
     val d = swathDst(35)
     val plan: SparkPlan = RectifyOp.rectify(tiles, swathCoords, swathGm, d, swathPol).queryExecution.executedPlan
     assert(!plan.toString.contains("CartesianProduct"), s"cartesian:\n$plan")
-    // the one nested-loop join left is the fill path's: window-less
-    // target tiles crossed with the (var, band) inventory, never a
-    // lookup tile or any other tile data
-    val crossed = H.collect(plan) { case j: BroadcastNestedLoopJoinExec => j.output.map(_.name) }
-    assert(crossed.forall(!_.contains("data")), s"tile data is crossed:\n$plan")
+    // no nested-loop join: the window-less target tiles' fills ride the
+    // target-tile exchange with every other piece
+    assert(H.collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, s"a nested-loop join:\n$plan")
     assert(H.collect(plan) { case c: CoGroupExec => c }.isEmpty, s"a cogroup:\n$plan")
     // the variable stage is fed by one exchange, the target-tile deal of
     // byTargetTile, carrying the checkpointed lookup and the variable
@@ -420,21 +457,11 @@ class TileGatherSpec extends AnyFunSuite {
       s"exchange input:\n$plan")
     assert(H.find(e.child)(_.isInstanceOf[ShuffleExchangeLike]).isEmpty,
       s"a second exchange feeds the variable stage:\n$plan")
-    // one call and its count(): with the variable stage on a cogroup of
-    // two exchanges this shape started 13 jobs; one exchange must not
-    // add any
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      RectifyOp.rectify(tiles, swathCoords, swathGm, d, swathPol).count()
-      // the listener bus is async; give it a moment to drain
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get <= 13, s"${jobs.get} jobs")
+    // one call and its count(): with the fills on a second branch (an
+    // inventory aggregate, its broadcast and a union) this shape started
+    // 11 jobs; with the fills crossing the target-tile exchange, 9
+    val (_, jobs) = org.apache.spark.sql.GraftJobProbe.jobs(spark)(
+      RectifyOp.rectify(tiles, swathCoords, swathGm, d, swathPol).count())
+    assert(jobs <= 9, s"$jobs jobs")
   }
 }
